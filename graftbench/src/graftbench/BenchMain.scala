@@ -43,6 +43,12 @@ object BenchMain {
   /** Reads per committed snapshot in a timed op; each is one sample of read_p50_s. */
   val Reads = 3
 
+  /** Columns every snapshot hash is taken over (as `GraphTables.write` does). */
+  val HashCols = Seq("subj", "pred", "obj", "docId")
+
+  /** Files in the single-thread kernel loop of a traced run. */
+  val KernelFiles = 400
+
   /** Read `n` times: (row count of the first read, seconds of each). */
   def reads(n: Int)(f: => Long): (Long, Seq[Double]) = {
     val xs = Seq.fill(n)(Trace.timed(f))
@@ -94,8 +100,8 @@ object BenchMain {
     val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime / 1e3
     val spark = session(o)
     val sessionS = System.currentTimeMillis() / 1e3 - jvmStart
+    // a workload registers the listener only once its untraced ops are done
     val tracer = if (o.trace) Some(new LayerListener) else None
-    tracer.foreach(spark.sparkContext.addSparkListener)
     val stat0 = Trace.procStat()
     val out = o.workload match {
       case "build" => BuildWorkload.run(spark, o, tracer)

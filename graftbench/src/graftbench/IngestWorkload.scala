@@ -15,14 +15,14 @@ import scala.collection.mutable
   * `GraphTables.readSnapshot` reads it back. Publish state, overlays and
   * table reads carry the work; the kernel sees only the small deltas. */
 object IngestWorkload {
-  val BaseFiles = 500
+  val BaseFiles = 250
   val DeltaFiles = 100
   /** Share of each delta that re-ingests already-published docs under a
     * new commit with unchanged content (the superseded-version path). */
   val ReingestShare = 0.2
-  val SetupReps = 1
-  val KernelFiles = 400
-  val HashCols = Seq("subj", "pred", "obj", "docId")
+  /** A run times one op, so its snapshot is read more often than a build
+    * op's to give `read_p50_s` a steady median. */
+  val Reads = 5
 
   /** One ingest instance: its directories, stream and publish history. */
   final class State(spark: SparkSession, val dir: String, seed: Long, firstId: Long) {
@@ -89,31 +89,31 @@ object IngestWorkload {
     val out = new Outcome
     val sc = spark.sparkContext
     val firstId = 5000000L + math.floorMod(o.seed, 1000L) * 100000L
-    var st: State = null
-    // set-up: base accumulation + its first (full) publish, in fresh dirs
-    (0 until SetupReps).foreach { k =>
-      if (st != null) st.query.stop()
-      val (s, sec) = Trace.timed {
-        val s = new State(spark, s"${o.work}/ingest-$k", o.seed, firstId)
-        s.land(BaseFiles, 0.0)
-        val p = s.publish(maxChain = 8)
-        out.check(!p.incremental, s"first publish should be full: ${p.note}")
-        val n = GraphTables.readSnapshot(spark, s.table, s.snapshotId).count()
-        out.check(n == p.rows, s"read ${s.snapshotId}: $n rows != published ${p.rows}")
-        s
-      }
-      st = s
-      out.setupReps += sec
-      BenchMain.note(f"setup $k: $sec%.3f s")
+    // set-up, once: base accumulation + its first (full) publish, in fresh
+    // dirs. A second repetition would cost a further ~10 s of the run budget.
+    val (st, setupSec) = Trace.timed {
+      val s = new State(spark, s"${o.work}/ingest", o.seed, firstId)
+      s.land(BaseFiles, 0.0)
+      val p = s.publish(maxChain = 8)
+      out.check(!p.incremental, s"first publish should be full: ${p.note}")
+      val n = GraphTables.readSnapshot(spark, s.table, s.snapshotId).count()
+      out.check(n == p.rows, s"read ${s.snapshotId}: $n rows != published ${p.rows}")
+      s
     }
-    // one op: land a delta; stream batch + publish (freshness); read back
-    def op(materialize: Boolean): Op = {
+    out.setupReps += setupSec
+    BenchMain.note(f"setup: $setupSec%.3f s")
+    def readBack(n: Int): (Long, Seq[Double]) =
+      BenchMain.reads(n)(GraphTables.readSnapshot(spark, st.table, st.snapshotId).count())
+    // one op: land a delta; stream batch + publish (freshness); read back.
+    // Only a traced op sets job groups and drains the listener bus.
+    def op(traced: Boolean, materialize: Boolean = false): Op = {
+      def span[A](group: String)(f: => A): (A, Double) =
+        if (traced) Trace.span(sc, group)(f) else Trace.timed(f)
       st.land(DeltaFiles, ReingestShare)
-      tracer.foreach { t => BenchBus.drain(sc); t.reset() }
+      if (traced) { BenchBus.drain(sc); tracer.get.reset() }
       val t0 = Trace.now()
-      val (_, stream) = Trace.span(sc, "ingest.stream")(st.query.processAllAvailable())
-      val (p, pub) = Trace.span(sc, "ingest.publish")(
-        st.publish(if (materialize) st.depth else 8))
+      val (_, stream) = span("ingest.stream")(st.query.processAllAvailable())
+      val (p, pub) = span("ingest.publish")(st.publish(if (materialize) st.depth else 8))
       val fresh = Trace.now() - t0
       val kind = if (p.note.contains("overlay")) "overlay"
         else if (p.note.contains("materialized")) "materialized" else "full"
@@ -121,74 +121,82 @@ object IngestWorkload {
       val expect = if (materialize) "materialized" else "overlay"
       out.check(p.incremental && kind == expect,
         s"publish ${st.snapshotId}: expected $expect, got incremental=${p.incremental} (${p.note})")
-      val (n, reads) = Trace.span(sc, "ingest.read")(BenchMain.reads(if (o.trace) 1 else BenchMain.Reads)(
-        GraphTables.readSnapshot(spark, st.table, st.snapshotId).count()))._1
+      val (n, reads) = span("ingest.read")(readBack(if (traced) 1 else Reads))._1
       out.check(n == p.rows, s"read ${st.snapshotId}: $n rows != published ${p.rows}")
       BenchMain.note(f"ingest ${st.snapshotId} $kind depth ${st.depth}: " +
         f"stream $stream%.3f publish $pub%.3f reads ${reads.map(x => f"$x%.3f").mkString(" ")}")
       val base = Op(fresh, stream, pub, reads, kind)
-      tracer match {
-        case Some(t) =>
-          BenchBus.drain(sc)
-          val s = t.total(_ == "ingest.publish")
-          base.copy(pubJobs = s.jobs.toDouble, pubBusy = s.runMs / 1e3 / (pub * o.cores),
-            written = GraphTables.readOwnData(spark, st.table, st.snapshotId).count().toDouble,
-            files = BuildWorkload.parquetFiles(
-              new java.io.File(s"${st.table}/data/snap=${st.snapshotId}")).toDouble,
-            all = t.total(_ => true))
-        case None => base
+      if (!traced) base
+      else {
+        BenchBus.drain(sc)
+        val s = tracer.get.total(_ == "ingest.publish")
+        base.copy(pubJobs = s.jobs.toDouble, pubBusy = s.runMs / 1e3 / (pub * o.cores),
+          written = GraphTables.readOwnData(spark, st.table, st.snapshotId).count().toDouble,
+          files = BuildWorkload.parquetFiles(
+            new java.io.File(s"${st.table}/data/snap=${st.snapshotId}")).toDouble,
+          all = tracer.get.total(_ => true))
       }
-    }
-    def ops(seconds: Double, min: Int): Seq[Op] = {
-      val t0 = Trace.now()
-      val xs = mutable.ArrayBuffer[Op]()
-      while (xs.size < min || Trace.now() - t0 < seconds) {
-        xs += op(materialize = false)
-        spark.catalog.clearCache()
-        System.gc()
-      }
-      xs.toSeq
     }
     // the set-up already ran every call an op makes (stream batch, publish,
     // read); a separate overlay warm-up op would cost ~15 s of the run
     // budget and measured only ~5% above later overlay publishes
-    val timed = ops(if (o.trace) 0 else o.seconds, 1)
+    val timed = mutable.ArrayBuffer[Op]()
+    BenchMain.closedLoop(if (o.trace) 0 else o.seconds, 1, BuildWorkload.between(spark)) { _ =>
+      timed += op(traced = false)
+      timed.last.fresh
+    }
     def med(xs: Seq[Double]) = BenchMain.median(xs)
     if (!o.trace) {
-      out.put("op_p50_s", med(timed.map(_.fresh)))
-      out.put("read_p50_s", med(timed.flatMap(_.reads)))
+      out.put("op_p50_s", med(timed.map(_.fresh).toSeq))
+      out.put("read_p50_s", med(timed.flatMap(_.reads).toSeq))
     } else {
+      // depth 1 now. A traced op at depth 1 would need another
+      // materializing publish first (~25 s), so the trace's own cost is
+      // measured on reads of this same snapshot, untraced and traced in
+      // ABBA order so that the reads' own warm-up cancels.
+      val t = tracer.get
+      def untracedRead(): Double = readBack(1)._2.head
+      def tracedRead(): Double = {
+        sc.addSparkListener(t)
+        try Trace.span(sc, "ingest.read")(readBack(1))._1._2.head
+        finally sc.removeSparkListener(t)
+      }
+      val (u1, t1, t2, u2) = (untracedRead(), tracedRead(), tracedRead(), untracedRead())
+      out.put("trace_overhead", (t1 + t2) / (u1 + u2))
+      out.put("read_s.depth1", med(timed.last.reads))
+      sc.addSparkListener(t)
       val gc0 = Trace.gcSeconds()
-      val traced = ops(0, 1) :+ op(materialize = true)
-      val gcPerOp = (Trace.gcSeconds() - gc0) / traced.size
-      val ov = traced.filter(_.kind == "overlay")
-      val mat = traced.filter(_.kind == "materialized")
+      val ov = op(traced = true)
+      out.put("read_s.depth2", med(ov.reads))
+      val mat = op(traced = true, materialize = true)
+      out.put("read_s.depth0", med(mat.reads))
+      val traced = Seq(ov, mat)
+      out.put("gc_s", (Trace.gcSeconds() - gc0) / traced.size)
       out.put("stream_batch_s", med(traced.map(_.stream)))
-      out.put("publish_s", med(ov.map(_.publish)))
-      out.put("materialize_s", med(mat.map(_.publish)))
-      out.put("read_s.overlay", med(ov.flatMap(_.reads)))
-      out.put("read_s.depth0", med(mat.flatMap(_.reads)))
-      out.put("unattributed_s", med(ov.map(x => x.fresh - x.stream - x.publish)))
-      out.put("publish_jobs", med(ov.map(_.pubJobs)))
-      out.put("publish_busy_share", med(ov.map(_.pubBusy)))
-      out.put("rows_written", med(ov.map(_.written)))
-      out.put("files_written", med(ov.map(_.files)))
-      out.put("jobs", med(ov.map(_.all.jobs.toDouble)))
-      out.put("shuffle_bytes", med(ov.map(_.all.shuffleBytes.toDouble)))
-      out.put("spill_bytes", med(ov.map(_.all.spillBytes.toDouble)))
-      out.put("busy_share", med(ov.map(x => x.all.runMs / 1e3 / (x.fresh + x.reads.sum) / o.cores)))
+      out.put("publish_s", ov.publish)
+      out.put("materialize_s", mat.publish)
+      out.put("unattributed_s", ov.fresh - ov.stream - ov.publish)
+      out.put("publish_jobs", ov.pubJobs)
+      out.put("publish_busy_share", ov.pubBusy)
+      out.put("rows_written", ov.written)
+      out.put("files_written", ov.files)
+      out.put("jobs", ov.all.jobs.toDouble)
+      out.put("shuffle_bytes", ov.all.shuffleBytes.toDouble)
+      out.put("spill_bytes", ov.all.spillBytes.toDouble)
+      out.put("busy_share", ov.all.runMs / 1e3 / (ov.fresh + ov.reads.sum) / o.cores)
       out.put("snapshot_rows", st.last.rows.toDouble)
-      out.put("gc_s", gcPerOp)
       out.put("table_bytes", BuildWorkload.du(new java.io.File(st.table)).toDouble)
       out.put("state_bytes", BuildWorkload.du(new java.io.File(st.stateDir)).toDouble)
+      val paths = timed.toSeq ++ traced
       Seq("overlay", "materialized", "full").foreach { k =>
-        out.put(s"publish_paths.$k", traced.count(_.kind == k).toDouble)
+        out.put(s"publish_paths.$k", paths.count(_.kind == k).toDouble)
       }
-      out.put("trace_overhead", med(ov.map(_.fresh)) / med(timed.map(_.fresh)))
-      KernelLoop.run(st.ingested.keys.take(KernelFiles).map(id => CorpusGen.file(id).source).toSeq, out)
+      KernelLoop.run(st.ingested.keys.take(BenchMain.KernelFiles)
+        .map(id => CorpusGen.file(id).source).toSeq, out)
     }
     st.query.stop()
-    goldGate(spark, o, st, out)
+    val (_, goldSec) = Trace.timed(goldGate(spark, o, st, out))
+    BenchMain.note(f"gold gate: $goldSec%.3f s")
     out
   }
 
@@ -201,7 +209,7 @@ object IngestWorkload {
       val f = CorpusGen.file(id).source
       if (c.isEmpty) f else f.copy(commit = c)
     }.toDS().write.parquet(src)
-    val gold = ContentHash.hex(Pipeline.runFromTableDynamic(spark, src).triples, HashCols)
+    val gold = ContentHash.hex(Pipeline.runFromTableDynamic(spark, src).triples, BenchMain.HashCols)
     out.check(gold == (st.last.rows, st.last.hash),
       s"ingest snapshot (${st.last.rows}, ${st.last.hash}) != batch pipeline $gold")
   }

@@ -31,7 +31,8 @@ object Metrics {
     "publish_s" -> "s",
     "materialize_s" -> "s",
     "read_s.depth0" -> "s",
-    "read_s.overlay" -> "s",
+    "read_s.depth1" -> "s",
+    "read_s.depth2" -> "s",
     "unattributed_s" -> "s",
     "canon_rows" -> "count",
     "rows_written" -> "count",
