@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Round-6 optimization harness (guide §1: measure first; §1.4 noop
   * sink; §1.5 job labels). NOT part of the frozen driver contract —
@@ -13,12 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    best-of-N (SPARK_GRAFT_TRIALS, default 3), plus an
   *    explain("formatted") dump to plans/r06/<name>_<tag>.txt
   *    (tag = SPARK_GRAFT_PLAN_TAG, default "probe").
-  *  - pipeline: stage-by-stage breakdown of the dynamic-canon pipeline
-  *    over the materialized bench corpus (SPARK_GRAFT_CORPUS, default
-  *    the standard /tmp key) — extract+link, persist-materialize,
-  *    alias mining, CC canon map, canon join + fused emit.
   *  - gen: corpus-generation / tokenize / kernel cost split at the
   *    kg-query scale (15k files).
+  *  - cached: cold slice vs frozen-encoder cache path, with the warm
+  *    path's scan/link split.
+  *  - minhash: dedup_minhash stage split (signatures, band join, full).
+  *  - cc: driver union-find vs distributed star rounds on chain graphs.
+  * The per-layer split of the pipeline itself (scan, extract, link,
+  * canon, emit, publish) comes from graftbench's traced `build` run,
+  * the per-file tokenize/kernel split from its `KernelLoop`.
   */
 object BenchExtra {
 
@@ -72,61 +75,6 @@ object BenchExtra {
         }
         println(s"""EXTRA_JSON {"mode":"queries","sf":"$sfDir",${rows.mkString(",")}}""")
 
-      case "pipeline" =>
-        import spark.implicits._
-        val corpus = sys.env.getOrElse("SPARK_GRAFT_CORPUS",
-          "/tmp/graft_bench_corpus_320000_f2c65731")
-        def files = spark.read.parquet(corpus).as[graft.core.SourceFileHashed]
-        // warm
-        sc.setJobDescription("warm")
-        Pipeline.runFromTableDynamic(spark, corpus).triples.count()
-        spark.catalog.clearCache(); System.gc()
-
-        // stage A: raw scan
-        sc.setJobDescription("scan only")
-        val tScan = bestOf(2)(noop(files.toDF()))
-        // stage B: extract (fused tokenize+kernel), no link
-        sc.setJobDescription("extract only")
-        val tExtract = bestOf(2)(noop(graft.extract.Extract.mentionsFused(files).toDF()))
-        // stage C: extract+link noop (what the persist has to materialize)
-        sc.setJobDescription("extract+link")
-        val tLink = bestOf(2)(noop(graft.link.Linker.link(graft.extract.Extract.mentionsFused(files)).toDF()))
-        // stage D: the dynamic chain piecewise
-        spark.catalog.clearCache(); System.gc()
-        sc.setJobDescription("persist materialize")
-        val linked = graft.link.Linker.link(graft.extract.Extract.mentionsFused(files)).toDF().persist()
-        val tPersist = time(noop(linked))._2
-        sc.setJobDescription("alias mining")
-        val (edges, tMine) = time(graft.canon.AliasMining.mentionAliasEdges(linked))
-        sc.setJobDescription("cc canon map")
-        val (canonMap, tCC) = time {
-          val m = graft.canon.ConnectedComponents.canonicalMap(
-            graft.link.Linker.aliasDf(spark), Some(edges)).localCheckpoint()
-          m.count(); m
-        }
-        sc.setJobDescription("canon join + emit")
-        val tEmit = bestOf(2) {
-          val canon = Pipeline.canonicalize(linked, canonMap, hintBroadcast = true)
-          graft.triples.TripleEmit.emitFused(
-            canon.as[graft.triples.TripleEmit.CanonMention]).toDF().count()
-        }
-        sc.setJobDescription("full dynamic (reference)")
-        spark.catalog.clearCache(); System.gc()
-        val tFull = bestOf(2) {
-          spark.catalog.clearCache(); System.gc()
-          Pipeline.runFromTableDynamic(spark, corpus).triples.count()
-        }
-        sc.setJobDescription("full static (reference)")
-        spark.catalog.clearCache(); System.gc()
-        val tStatic = bestOf(2) {
-          spark.catalog.clearCache(); System.gc()
-          Pipeline.runFromTable(spark, corpus).triples.count()
-        }
-        println(f"EXTRA scan=$tScan%.2f extract=$tExtract%.2f extract+link=$tLink%.2f")
-        println(f"EXTRA persistMat=$tPersist%.2f mine=$tMine%.2f cc=$tCC%.2f canonEmit=$tEmit%.2f")
-        println(f"EXTRA fullDynamic=$tFull%.2f fullStatic=$tStatic%.2f")
-        println(s"""EXTRA_JSON {"mode":"pipeline","scan":$tScan,"extract":$tExtract,"extract_link":$tLink,"persist":$tPersist,"mine":$tMine,"cc":$tCC,"canon_emit":$tEmit,"full_dynamic":$tFull,"full_static":$tStatic}""")
-
       case "gen" =>
         import spark.implicits._
         val n = 15000L
@@ -137,69 +85,13 @@ object BenchExtra {
           spark.range(n).map(id => graft.core.CorpusGen.file(id).source).toDF()))
         sc.setJobDescription("gen+tokenize")
         val tTok = bestOf(trials)(noop(
-          graft.extract.Extract.sentences(Extractish.corpus(spark, n)).toDF()))
+          graft.extract.Extract.sentences(graft.extract.Extract.corpus(spark, n)).toDF()))
         sc.setJobDescription("gen+tokenize+kernel (kg_mentions body)")
         val tKern = bestOf(trials)(noop(graft.extract.Extract.run(spark, n).toDF()))
         sc.setJobDescription("kg_triples body")
         val tTrip = bestOf(trials)(Pipeline.run(spark, n).triples.count())
         println(f"EXTRA gen=$tGen%.3f gen+tok=$tTok%.3f mentions=$tKern%.3f triples=$tTrip%.3f")
         println(s"""EXTRA_JSON {"mode":"gen","gen":$tGen,"gen_tok":$tTok,"mentions":$tKern,"triples":$tTrip}""")
-
-      case "tok320" =>
-        import spark.implicits._
-        val corpus = sys.env.getOrElse("SPARK_GRAFT_CORPUS",
-          "/tmp/graft_bench_corpus_320000_f2c65731")
-        def files = spark.read.parquet(corpus).as[graft.core.SourceFileHashed]
-        sc.setJobDescription("warm")
-        noop(graft.extract.Extract.mentionsFused(files).toDF())
-        sc.setJobDescription("tokenize only (sentences)")
-        val tTok = bestOf(2)(noop(graft.extract.Extract.sentences(files).toDF()))
-        sc.setJobDescription("tokenize+kernel (mentionsFused)")
-        val tKern = bestOf(2)(noop(graft.extract.Extract.mentionsFused(files).toDF()))
-        println(f"EXTRA tok320 sentences=$tTok%.2f mentionsFused=$tKern%.2f")
-
-      case "micro" =>
-        // single-threaded in-process phase split, no Spark jobs: gen /
-        // tokenize / kernel over nMicro files
-        val nMicro = args.lift(1).map(_.toInt).getOrElse(8000)
-        val w = graft.kernel.Weights.default
-        def genPass(): Long = {
-          var i = 0; var acc = 0L
-          while (i < nMicro) {
-            acc += graft.core.CorpusGen.file(i.toLong).source.content.length
-            i += 1
-          }
-          acc
-        }
-        def tokPass(): Long = {
-          var i = 0; var acc = 0L
-          while (i < nMicro) {
-            val f = graft.core.CorpusGen.file(i.toLong).source
-            acc += graft.extract.Tokenizer
-              .sentences(graft.core.DocId.of(f.repo, f.path), f.content).size
-            i += 1
-          }
-          acc
-        }
-        def kernPass(): Long = {
-          var i = 0; var acc = 0L
-          while (i < nMicro) {
-            val f = graft.core.CorpusGen.file(i.toLong).source
-            val sents = graft.extract.Tokenizer
-              .sentences(graft.core.DocId.of(f.repo, f.path), f.content)
-            acc += graft.kernel.TriaffineScorer.mentionsForFile(sents, w).size
-            i += 1
-          }
-          acc
-        }
-        // JIT warm-up
-        kernPass(); genPass(); tokPass()
-        val tGen = (1 to trials).map(_ => time(genPass())._2).min
-        val tTok = (1 to trials).map(_ => time(tokPass())._2).min
-        val tKern = (1 to trials).map(_ => time(kernPass())._2).min
-        println(f"EXTRA micro n=$nMicro gen=$tGen%.3f gen+tok=$tTok%.3f " +
-          f"gen+tok+kernel=$tKern%.3f  (tok=${tTok - tGen}%.3f " +
-          f"kernel=${tKern - tTok}%.3f)")
 
       case "cached" =>
         // isolate the frozen-encoder cache section (Bench 2b) with a
@@ -331,10 +223,5 @@ object BenchExtra {
         System.err.println(s"unknown mode $other")
     }
     spark.stop()
-  }
-
-  /** Tiny alias so the gen mode reads naturally. */
-  private object Extractish {
-    def corpus(s: SparkSession, n: Long) = graft.extract.Extract.corpus(s, n)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.canon.ConnectedComponents
+import graft.canon.{ConnectedComponents, UnionFind}
 import graft.core._
 import graft.extract.Extract
 import graft.link.Linker
@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline (the flagship query,
   * SURVEY §3.2): source table -> fused tokenize+triaffine extract ->
-  * broadcast link -> canonicalize -> triples.
+  * broadcast link -> canonicalize -> triples, as ONE stage chain
+  * ([[stagesFor]]) whose downstream tail ([[canonEmit]]) every batch,
+  * resumable, streaming and cache path shares.
   *
-  * The canonical-entity map is a pure function of the (static) alias
-  * dictionary — a dimension build. It is computed once per process and
-  * reused across jobs (`staticCanonMap`), exactly as a production
-  * pipeline materializes dimension tables; the corpus-proportional
-  * stages (extract, link, emit) are what scale with data volume.
+  * The canon map is either the static dictionary map — a dimension
+  * computed once per process (`staticCanonMap`) — or the map mined
+  * from the corpus itself ([[dynamicCanonMapGated]]).
   */
 object Pipeline {
 
@@ -41,16 +41,11 @@ object Pipeline {
   }
 
   /** THE canonicalization join — left-join on entity, unknown entities
-    * stay self-canonical. One definition shared by every pipeline
-    * variant (in-process, dynamic, from-table, resumable, streaming) so
-    * the null-fallback rule can never silently diverge between paths.
-    *
-    * `hintBroadcast` is true ONLY for the static dictionary-derived map
-    * (a genuine dimension, known tiny). The mention-MINED dynamic map
-    * grows with the observed corpus vocabulary — millions of entities
-    * at 100 TB, a multi-GB broadcast if hinted — so the dynamic path
-    * passes false and AQE picks broadcast vs shuffle from the map's
-    * ACTUAL runtime size (asserted in PlanSpec). */
+    * stay self-canonical. Called only from [[canonEmit]], so the
+    * null-fallback rule can never diverge between paths. Without
+    * `hintBroadcast` (a mined map above the [[BroadcastCanonMaxRows]]
+    * gate) AQE picks broadcast vs shuffle from the map's ACTUAL runtime
+    * size (asserted in PlanSpec). */
   def canonicalize(linked: DataFrame, canonMap: DataFrame,
       hintBroadcast: Boolean = true): DataFrame = {
     val cm = if (hintBroadcast) broadcast(canonMap) else canonMap
@@ -58,20 +53,6 @@ object Pipeline {
       linked("entity") === canonMap("entity"), "left")
       .select(linked("*"),
         coalesce(col("canonical"), linked("entity")).as("canonical"))
-  }
-
-  /** relationalEmit = true uses the 5-branch DataFrame emitter
-    * (operator showcase, needs a cache of the mention table);
-    * false (default) uses the fused single-shuffle emitter. */
-  def run(spark: SparkSession, nFiles: Long, verifySha: Boolean = false,
-      relationalEmit: Boolean = false): Stages = {
-    val files = Extract.corpus(spark, nFiles)
-    if (verifySha) Extract.verifyIntegrity(files)
-    // generated corpus: uniform range partitions, unique paths — the
-    // skew-control repartition would be a pure extra shuffle here
-    val st = stagesFor(files, repartitionByDoc = false)
-    if (relationalEmit) st.copy(triples = TripleEmit.emit(st.canonMentions))
-    else st
   }
 
   /** Canonical map from the static dictionary PLUS mention-derived
@@ -94,39 +75,76 @@ object Pipeline {
     * decides from runtime sizes. */
   val BroadcastCanonMaxRows = 4000000L
 
-  /** Dynamic-canon stage chain over an arbitrary file slice: the
-    * canonical map is mined from the corpus itself (AliasMining + CC
-    * below the [[DriverCanonMaxPairs]] gate, the distributed star
-    * rounds above it), making canonicalization a data-scale stage.
-    * The linked mention table is persisted because it feeds both the
-    * alias mining aggregation and the canon join (at cluster scale
-    * this is the stage boundary you would materialize anyway). */
-  /** Caching contract (same as DedupOps): the linked mention table is
-    * persisted (it feeds alias mining AND the canon+emit chain) and
-    * returned LAZY inside the Stages plans — the CALLER owns cleanup
-    * (`spark.catalog.clearCache()` between unrelated jobs, as Bench
-    * and Verify do). Round 2 instead localCheckpoint-ed the triples
-    * and unpersisted eagerly — one extra full materialization pass of
-    * the triple set per run, paid even by callers that consume the
-    * plan exactly once. */
-  def dynamicStagesFor(files: Dataset[SourceFileHashed],
+  /** The canon map a stage chain joins against, and whether that join
+    * is broadcast. The static dictionary map is the mined map with no
+    * mined edges: a parameter of the one stage chain, not a path. */
+  private[graft] final case class Canon(map: DataFrame, broadcast: Boolean)
+
+  private[graft] object Canon {
+    /** Dictionary-only map: a genuine dimension, always broadcast. */
+    def static(spark: SparkSession): Canon =
+      Canon(staticCanonMap(spark), broadcast = true)
+
+    /** THE size gate: a map of `rows` rows is broadcast iff it is at
+      * most [[BroadcastCanonMaxRows]]. */
+    def gated(map: DataFrame, rows: Long): Canon =
+      Canon(map, broadcast = rows <= BroadcastCanonMaxRows)
+
+    /** Corpus-mined map over a (persisted) linked mention table. */
+    def mined(linked: DataFrame): Canon = {
+      val (map, rows) = dynamicCanonMapGated(linked.sparkSession, linked)
+      gated(map, rows)
+    }
+  }
+
+  /** THE downstream tail of every stage chain: linked mentions + canon
+    * map -> (canonMentions, triples). The emitter is chosen here only:
+    *  - partition-local ([[TripleEmit.emitFusedLocal]]) when the canon
+    *    join is broadcast AND the mentions come straight from
+    *    `Extract.mentionsFused` (`docContiguous`): its repartition by
+    *    hash(repo, path) puts each doc in one partition, its flatMap
+    *    emits a file's mentions consecutively, and linking, a persisted
+    *    cache and a broadcast join keep that layout;
+    *  - grouped ([[TripleEmit.emitFused]], one shuffle on docId)
+    *    otherwise: parquet-read mention tables and the encoding cache
+    *    (a doc's rows can straddle a file split), or a mined map above
+    *    the gate (the join may shuffle by entity). */
+  private[graft] def canonEmit(linked: DataFrame, canon: Canon,
+      docContiguous: Boolean): (DataFrame, DataFrame) = {
+    import linked.sparkSession.implicits._
+    val canonMentions =
+      canonicalize(linked, canon.map, hintBroadcast = canon.broadcast)
+    val rows = canonMentions.as[TripleEmit.CanonMention]
+    val triples =
+      if (canon.broadcast && docContiguous) TripleEmit.emitFusedLocal(rows)
+      else TripleEmit.emitFused(rows)
+    (canonMentions, triples.toDF())
+  }
+
+  /** THE stage chain over a file slice: extract -> link -> canonicalize
+    * -> emit. Every batch entry point, the resumable buckets and the
+    * incremental splice ([[graft.incremental.IncrementalPipeline]]) go
+    * through here, so "re-extract this slice" can never diverge from
+    * the full pipeline. `minedCanon` picks the canon map: the static
+    * dictionary map, or the map mined from the corpus itself
+    * ([[dynamicCanonMapGated]]), making canonicalization a data-scale
+    * stage.
+    *
+    * Caching contract (same as DedupOps): with `minedCanon` the linked
+    * mention table is persisted (it feeds alias mining AND the
+    * canon+emit chain) and returned LAZY inside the Stages plans — the
+    * CALLER owns cleanup (`spark.catalog.clearCache()` between
+    * unrelated jobs, as Bench and Verify do). */
+  def stagesFor(files: Dataset[SourceFileHashed], minedCanon: Boolean = false,
       repartitionByDoc: Boolean = true): Stages = {
-    val spark = files.sparkSession
-    import spark.implicits._
     val ments = Extract.mentionsFused(files,
       repartitionByDoc = repartitionByDoc)
-    val linked = Linker.link(ments).toDF().persist()
-    val (canonMap, canonRows) = dynamicCanonMapGated(spark, linked)
-    val hint = canonRows <= BroadcastCanonMaxRows
-    val canon = canonicalize(linked, canonMap, hintBroadcast = hint)
-    // broadcast canon join => the cached linked table reaches the emit
-    // narrow and doc-contiguous, so the emit's mention shuffle can be
-    // dropped outright; above the gate the join may shuffle by entity
-    // and the grouped emitter is required
-    val triples =
-      if (hint) TripleEmit.emitFusedLocal(canon.as[TripleEmit.CanonMention]).toDF()
-      else TripleEmit.emitFused(canon.as[TripleEmit.CanonMention]).toDF()
-    Stages(files, ments, canon, triples)
+    val linked0 = Linker.link(ments).toDF()
+    val (linked, canon) =
+      if (minedCanon) { val l = linked0.persist(); (l, Canon.mined(l)) }
+      else (linked0, Canon.static(files.sparkSession))
+    val (canonMentions, triples) = canonEmit(linked, canon, docContiguous = true)
+    Stages(files, ments, canonMentions, triples)
   }
 
   /** Gate for the driver-side dynamic-canon fast path: at most this
@@ -166,87 +184,47 @@ object Pipeline {
       val m = dynamicCanonMap(spark, linked).localCheckpoint()
       (m, m.count())
     } else {
-      // ---- driver replay of canonicalMap(aliasDf, mined edges) ----
-      val parent = scala.collection.mutable.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = parent.getOrElseUpdate(x, x)
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
+      // driver replay of canonicalMap(aliasDf, mined edges): one star
+      // per dictionary alias and per mined key group (min member ->
+      // every other member)
+      def star(ents: Iterable[String]): Iterator[(String, String)] = {
+        val src = ents.min
+        ents.iterator.filter(_ != src).map(src -> _)
       }
-      def union(a: String, b: String): Unit = {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      // nodes that appear in SOME edge (dictionary star or mined star):
-      // exactly the node set the distributed CC labels; everything else
-      // joins as a self-canonical single
-      val edgeNodes = scala.collection.mutable.HashSet[String]()
-      def star(ents: Iterable[String]): Unit = {
-        val ds = ents.toVector.distinct
-        if (ds.size > 1) {
-          val src = ds.min
-          ds.foreach { d =>
-            if (d != src) { union(src, d); edgeNodes += src; edgeNodes += d }
-          }
-        }
-      }
-      Vocab.aliasToEntities.valuesIterator.foreach(star)
-      pairs.groupBy(_._1).valuesIterator.foreach(ps => star(ps.map(_._2)))
-      // singles = dictionary entities ∪ mined edge endpoints; label =
-      // min member of the component, self when edge-free
-      val singles = (Vocab.aliasRows.iterator.map(_._2) ++
-        edgeNodes.iterator).toSet
-      val minOf = scala.collection.mutable.HashMap[String, String]()
-      edgeNodes.foreach { m =>
-        val r = find(m)
-        val cur = minOf.getOrElse(r, m)
-        minOf(r) = if (m < cur) m else cur
-      }
-      val rows = singles.toSeq.sorted.map { e =>
-        val canon =
-          if (edgeNodes.contains(e)) minOf(find(e)) else e
-        (e, canon)
-      }
+      val label = UnionFind.minLabels(
+        Vocab.aliasToEntities.valuesIterator.flatMap(star) ++
+          pairs.groupBy(_._1).valuesIterator.flatMap(ps => star(ps.map(_._2))))
+      // members = dictionary entities ∪ edge endpoints (exactly the
+      // node set the distributed CC labels); an edge-free member is
+      // its own canonical
+      val rows = (Vocab.aliasRows.iterator.map(_._2) ++ label.keysIterator)
+        .toSet.toSeq.sorted.map(e => (e, label.getOrElse(e, e)))
       (rows.toDF("entity", "canonical"), rows.size.toLong)
     }
   }
 
+  /** Pipeline over the generated corpus: uniform range partitions,
+    * unique paths — the skew-control repartition would be a pure extra
+    * shuffle here. */
+  def run(spark: SparkSession, nFiles: Long): Stages =
+    stagesFor(Extract.corpus(spark, nFiles), repartitionByDoc = false)
+
   /** Like [[run]] but with the mention-derived dynamic canonical map. */
   def runDynamicCanon(spark: SparkSession, nFiles: Long): Stages =
-    dynamicStagesFor(Extract.corpus(spark, nFiles),
+    stagesFor(Extract.corpus(spark, nFiles), minedCanon = true,
       repartitionByDoc = false)
 
   /** Dynamic-canon pipeline over a materialized source table — the
     * BENCHED variant (Bench times this, so the measured number includes
     * canonicalization as a data-scale stage, not a prebuilt dimension). */
-  def runFromTableDynamic(spark: SparkSession, path: String): Stages = {
-    import spark.implicits._
-    dynamicStagesFor(spark.read.parquet(path).as[SourceFileHashed])
-  }
+  def runFromTableDynamic(spark: SparkSession, path: String): Stages =
+    stagesFor(sourceTable(spark, path), minedCanon = true)
 
-  /** THE standard stage chain over an arbitrary file slice: extract ->
-    * link -> canonicalize (static map) -> fused emit. Every batch entry
-    * point ([[run]], [[runFromTable]]) AND the incremental splice
-    * ([[graft.incremental.IncrementalPipeline]]) go through here, so
-    * "re-extract this slice" can never diverge from the full pipeline
-    * — structurally, not by convention. */
-  def stagesFor(files: Dataset[SourceFileHashed],
-      repartitionByDoc: Boolean = true): Stages = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val ments = Extract.mentionsFused(files,
-      repartitionByDoc = repartitionByDoc)
-    val linked = Linker.link(ments)
-    val canon = canonicalize(linked.toDF(), staticCanonMap(spark))
-    // static canon map is always broadcast (genuine dimension) => the
-    // mention stream is narrow and doc-contiguous end to end; the
-    // partition-local emitter removes the pipeline's only
-    // corpus-sized shuffle after the skew-control repartition
-    Stages(files, ments, canon,
-      TripleEmit.emitFusedLocal(canon.as[TripleEmit.CanonMention]).toDF())
-  }
+  /** Pipeline over a materialized source table (the production shape:
+    * north_star reads the Iceberg source-code table; synthesis is data
+    * prep, not pipeline). */
+  def runFromTable(spark: SparkSession, path: String): Stages =
+    stagesFor(sourceTable(spark, path))
 
   def triplesFor(files: Dataset[SourceFileHashed]): DataFrame =
     stagesFor(files).triples
@@ -254,27 +232,17 @@ object Pipeline {
   /** Warm re-score path: triples from a frozen-encoder cache
     * ([[graft.extract.EncodingCache]]) without touching the source
     * table — the S3 re-run shape (new scoring/linking weights, same
-    * encoder). Downstream stages are THE shared ones (link ->
-    * canonicalize -> fused emit), so a warm run can never diverge from
-    * the cold pipeline except by skipping the encode. */
-  def triplesFromCache(spark: SparkSession, cachePath: String): DataFrame = {
-    import spark.implicits._
-    val ments = graft.extract.EncodingCache.mentionsFromCache(spark, cachePath)
-    val linked = Linker.link(ments)
-    canonicalize(linked.toDF(), staticCanonMap(spark))
-      .as[TripleEmit.CanonMention]
-      .transform(TripleEmit.emitFused).toDF()
-  }
+    * encoder). Downstream stages are THE shared tail, so a warm run can
+    * never diverge from the cold pipeline except by skipping the
+    * encode. */
+  def triplesFromCache(spark: SparkSession, cachePath: String): DataFrame =
+    canonEmit(Linker.link(graft.extract.EncodingCache.mentionsFromCache(
+      spark, cachePath)).toDF(), Canon.static(spark), docContiguous = false)._2
 
-  /** Pipeline over a materialized source table (the production shape:
-    * north_star reads the Iceberg source-code table; synthesis is data
-    * prep, not pipeline). */
-  def runFromTable(spark: SparkSession, path: String,
-      verifySha: Boolean = false): Stages = {
+  private def sourceTable(spark: SparkSession,
+      path: String): Dataset[SourceFileHashed] = {
     import spark.implicits._
-    val files = spark.read.parquet(path).as[SourceFileHashed]
-    if (verifySha) Extract.verifyIntegrity(files)
-    stagesFor(files)
+    spark.read.parquet(path).as[SourceFileHashed]
   }
 
   /** Gold triples for the same corpus slice (closed-form). */

@@ -94,36 +94,11 @@ object ConnectedComponents {
     // to the loop it gates.
     val probe = eDist.limit(DriverSolveMaxEdges.toInt + 1).collect()
     if (probe.length <= DriverSolveMaxEdges) {
-      val es = probe.map(r => (r.getString(0), r.getString(1)))
-      // union-find with path compression; result (the component
-      // PARTITION) is independent of the collected edge order, and the
-      // final label = lexicographic min member — the same labeling the
-      // star rounds converge to
-      val parent = scala.collection.mutable.HashMap[String, String]()
-      // ITERATIVE find (walk to root, second pass compresses): with
-      // min-name union and no rank, an unluckily ordered edge set (a
-      // path component collected leaf-first) builds a parent chain up
-      // to DriverSolveMaxEdges deep — a recursive find would overflow
-      // the driver stack on its first walk. Labels are unchanged.
-      def find(x: String): String = {
-        var r = parent.getOrElseUpdate(x, x)
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      // min member per component (roots chosen min-ward above, but a
-      // late union can re-root: recompute the min explicitly)
-      val minOf = scala.collection.mutable.HashMap[String, String]()
-      parent.keys.foreach { m =>
-        val r = find(m)
-        val cur = minOf.getOrElse(r, m)
-        minOf(r) = if (m < cur) m else cur
-      }
+      // union-find (see UnionFind): the component PARTITION is
+      // independent of the collected edge order, and the label = min
+      // member — the same labeling the star rounds converge to
+      val label = UnionFind.minLabels(
+        probe.iterator.map(r => (r.getString(0), r.getString(1))))
       // labels fully on the driver too: the node set (incl. self-loop
       // -only nodes the edge filter dropped) is the same size class as
       // the collected edges, so one more small collect replaces the
@@ -133,9 +108,7 @@ object ConnectedComponents {
       // caller's planner then carries around.
       val nodeArr = edges.select(col("src")).union(edges.select(col("dst")))
         .distinct().collect().map(_.getString(0))
-      val rows = nodeArr.toSeq.map { n =>
-        if (parent.contains(n)) (n, minOf(find(n))) else (n, n)
-      }
+      val rows = nodeArr.toSeq.map(n => (n, label.getOrElse(n, n)))
       val labels = spark.sparkContext
         .parallelize(rows, math.max(1, spark.sparkContext.defaultParallelism))
         .toDF("node", "component")

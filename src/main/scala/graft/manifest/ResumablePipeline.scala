@@ -37,13 +37,7 @@ object ResumablePipeline {
         .filter(col("bucket").isin(todo: _*))
         .drop("bucket")
         .as[SourceFileHashed]
-      val ments = graft.extract.Extract.mentionsFused(files)
-      val linked = graft.link.Linker.link(ments)
-      val canon = Pipeline.canonicalize(linked.toDF(),
-        Pipeline.staticCanonMap(spark))
-      graft.triples.TripleEmit
-        .emitFused(canon.as[graft.triples.TripleEmit.CanonMention])
-        .toDF()
+      Pipeline.triplesFor(files)
         .withColumn("bucket",
           pmod(xxhash64(col("docId")), lit(nBuckets)).cast("int"))
     }

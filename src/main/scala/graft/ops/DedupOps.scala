@@ -149,9 +149,11 @@ object DedupOps {
       .join(hotArr.as("h1"), col("d1") === col("h1.doc"), "left")
       .join(hotArr.as("h2"), col("d2") === col("h2.doc"), "left")
       .select(col("d1"), col("d2"),
-        (col("c_cut") + coalesce(
-          size(array_intersect(col("h1.hots"), col("h2.hots")))
-            .cast("long"), lit(0L))).as("c"),
+        // a doc with no hot shingle has no hotArr row: empty array, not
+        // null — size(null) is -1 with ANSI off (null with it on)
+        (col("c_cut") + size(array_intersect(
+          coalesce(col("h1.hots"), array()),
+          coalesce(col("h2.hots"), array()))).cast("long")).as("c"),
         col("n1t.n").as("n1"), col("n2t.n").as("n2"))
       .select(col("d1"), col("d2"),
         (col("c").cast("double") /

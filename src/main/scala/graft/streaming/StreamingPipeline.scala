@@ -197,12 +197,11 @@ object StreamingPipeline {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batchId").parquet(rosterPath(mp))
           }
-          val canon = graft.Pipeline.canonicalize(linked,
-            graft.Pipeline.staticCanonMap(spark))
-          import spark.implicits._
-          val triples = graft.triples.TripleEmit
-            .emitFused(canon.as[graft.triples.TripleEmit.CanonMention])
-            .toDF()
+          // straight from mentionsFused (the cache keeps its layout):
+          // doc-contiguous, so the static map's broadcast join emits
+          // partition-locally
+          val (_, triples) = graft.Pipeline.canonEmit(linked,
+            graft.Pipeline.Canon.static(spark), docContiguous = true)
           commitBatch(triples, batchId, outPath, manifestPath)
         } finally {
           if (mentionsPath.isDefined) { linked.unpersist(); () }
@@ -260,11 +259,11 @@ object StreamingPipeline {
   }
 
   /** DYNAMIC-canon snapshot publish: re-runs the shared downstream
-    * stages ([[graft.Pipeline.dynamicCanonMap]] -> canonicalize ->
-    * fused emit) over the mention table accumulated by
-    * [[triplesStream]]'s `mentionsPath` — so a streamed backfill of a
-    * corpus with NOVEL surface-form aliases publishes exactly what the
-    * batch dynamic pipeline ([[graft.Pipeline.dynamicStagesFor]]) emits
+    * tail (mined canon map -> `Pipeline.canonEmit`) over the mention
+    * table accumulated by [[triplesStream]]'s `mentionsPath` — so a
+    * streamed backfill of a corpus with NOVEL surface-form aliases
+    * publishes exactly what the batch dynamic pipeline
+    * ([[graft.Pipeline.stagesFor]] with `minedCanon`) emits
     * (parity by shared code path, asserted in StreamingSpec), where the
     * per-batch static-canon triples cannot mine cross-corpus alias
     * edges. Extraction is NOT re-run — only canon+emit, over already-
@@ -301,14 +300,9 @@ object StreamingPipeline {
     val linked = all.join(latest, Seq("docId", "batchId"))
       .drop("batchId").persist()
     try {
-      // driver-gated fast path (see Pipeline.dynamicCanonMapGated):
-      // same rows, one job instead of the serial star-round chain
-      val (canonMap, canonRows) =
-        graft.Pipeline.dynamicCanonMapGated(spark, linked)
-      val canon = graft.Pipeline.canonicalize(linked, canonMap,
-        hintBroadcast = canonRows <= graft.Pipeline.BroadcastCanonMaxRows)
-      val triples = graft.triples.TripleEmit
-        .emitFused(canon.as[graft.triples.TripleEmit.CanonMention]).toDF()
+      // parquet-read accumulation: not doc-contiguous, grouped emit
+      val (_, triples) = graft.Pipeline.canonEmit(linked,
+        graft.Pipeline.Canon.mined(linked), docContiguous = false)
       graft.sources.GraphTables.write(triples, tablePath, snapshotId)
     } finally { linked.unpersist(); () }
   }
@@ -832,14 +826,9 @@ object StreamingPipeline {
     val linked = all.join(latest, Seq("docId", "batchId"))
       .drop("batchId").persist()
     try {
-      // driver-gated fast path (see Pipeline.dynamicCanonMapGated):
-      // same rows, one job instead of the serial star-round chain
-      val (canonMap, canonRows) =
-        graft.Pipeline.dynamicCanonMapGated(spark, linked)
-      val canon = graft.Pipeline.canonicalize(linked, canonMap,
-        hintBroadcast = canonRows <= graft.Pipeline.BroadcastCanonMaxRows)
-      val triples = graft.triples.TripleEmit
-        .emitFused(canon.as[graft.triples.TripleEmit.CanonMention]).toDF()
+      val canon = graft.Pipeline.Canon.mined(linked)
+      val (_, triples) =
+        graft.Pipeline.canonEmit(linked, canon, docContiguous = false)
       val lastB = latest.agg(max(col("batchId")).cast("long")).head() match {
         case r if r.isNullAt(0) => -1L
         case r => r.getLong(0)
@@ -852,7 +841,7 @@ object StreamingPipeline {
       // per-doc fingerprints of the data ACTUALLY WRITTEN (read back),
       // so the next overlay publish's removal algebra describes the
       // durable base, not a recomputation of the input plan
-      writeState(spark, statePath, snapshotId, canonMap,
+      writeState(spark, statePath, snapshotId, canon.map,
         graft.canon.IncrementalCanon.pairCounts(
           graft.canon.IncrementalCanon.docPairs(linked)),
         docsWithStats(latest, perDocStats(
@@ -1109,11 +1098,9 @@ object StreamingPipeline {
         .drop("batchId")
       val reMents = deltaLinked
         .unionByName(affMents.select(deltaLinked.columns.map(col): _*))
-      val canon = graft.Pipeline.canonicalize(reMents, newCanon,
-        hintBroadcast =
-          newCanon.count() <= graft.Pipeline.BroadcastCanonMaxRows)
-      val newTriples = graft.triples.TripleEmit
-        .emitFused(canon.as[graft.triples.TripleEmit.CanonMention]).toDF()
+      val newTriples = graft.Pipeline.canonEmit(reMents,
+          graft.Pipeline.Canon.gated(newCanon, newCanon.count()),
+          docContiguous = false)._2
         .select(col("subj"), col("pred"), col("obj"), col("docId"),
           col("score"))
       val reDocs = deltaLatest.select(col("docId"))

@@ -118,11 +118,6 @@ object TripleEmit {
       .agg(max($"score").as("score"))
   }
 
-  def asTriples(df: DataFrame): Dataset[Triple] = {
-    import df.sparkSession.implicits._
-    df.as[Triple]
-  }
-
   /** Canonical mention row (LinkedMention + post-CC canonical id). */
   final case class CanonMention(docId: String, sentId: Int, start: Int,
       end: Int, entType: String, surface: String, entity: String,
@@ -171,20 +166,11 @@ object TripleEmit {
     * table never crosses an exchange — the ONLY remaining wide op in
     * the pipeline is the extract stage's skew-control repartition.
     *
-    * The contiguity invariant holds STRUCTURALLY on the pipeline
-    * paths that use this: `Extract.mentionsFused` repartitions file
-    * rows by hash(repo, path) (one doc = rows of one (repo, path),
-    * all in one partition) and emits each file's mentions
-    * consecutively from one `flatMap` call; linking and a BROADCAST
-    * canon join are narrow and order-preserving, as is the
-    * InMemoryRelation cache read in the dynamic path. Callers whose
-    * canon join may shuffle (a mined map above the broadcast gate)
-    * or whose mention table comes from an arbitrary layout (streaming
-    * batch parquet, the encoding cache — a doc's rows can straddle a
-    * file split) must keep [[emitFused]]. The `require` turns a
-    * violated invariant into a loud failure instead of silently
-    * duplicated triples; memory is O(one document), same contract as
-    * [[emitFused]]'s per-group pass. */
+    * `Pipeline.canonEmit` is the one caller: it picks this emitter
+    * only where the invariant holds by construction (see its doc). The
+    * `require` turns a violated invariant into a loud failure instead
+    * of silently duplicated triples; memory is O(one document), same
+    * contract as [[emitFused]]'s per-group pass. */
   def emitFusedLocal(canonMentions: Dataset[CanonMention]): Dataset[Triple] = {
     import canonMentions.sparkSession.implicits._
     slimRows(canonMentions).mapPartitions { it =>

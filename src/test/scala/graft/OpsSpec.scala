@@ -55,6 +55,31 @@ class OpsSpec extends SparkSpec {
     sh.unpersist()
   }
 
+  test("jaccardPairs does not depend on ANSI mode (pairs with no hot shingle)") {
+    import spark.implicits._
+    // the hot-shingle fixture of the df-cut case, plus one near-dup:
+    // with maxDf = 50 the boilerplate trigram is hot, so docs carry hot
+    // shingles there; on the sf0.001 documents nothing is hot
+    val hot = "license header boilerplate"
+    val twin = ((0 until 100).map(i =>
+      (i.toLong, s"$hot unique$i word$i token$i extra$i more$i")) :+
+      ((1000L, s"$hot unique1 word1 token1 extra1 more1")))
+      .toDF("doc_id", "text")
+    def pairs(ansi: Boolean): Set[(Long, Long, Double)] = {
+      val before = spark.conf.get("spark.sql.ansi.enabled")
+      try {
+        spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+        (DedupOps.jaccardPairs(docs, "doc_id", "text", 0.5).collect() ++
+          DedupOps.jaccardPairs(twin, "doc_id", "text", 0.5, 50).collect())
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      } finally spark.conf.set("spark.sql.ansi.enabled", before)
+    }
+    val on = pairs(ansi = true)
+    assert(on.nonEmpty, "fixture must contain near-dup pairs")
+    val off = pairs(ansi = false)
+    assert(off == on, s"ANSI off drifts: +${(off -- on).take(3)} -${(on -- off).take(3)}")
+  }
+
   test("exact dedup groups partition the corpus") {
     val total = docs.count()
     val sum = DedupOps.exactGroups(docs, "doc_id", "text")

@@ -75,10 +75,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("fused triple emitter == relational 5-branch emitter") {
-    val a = Pipeline.run(spark, 120, relationalEmit = false).triples
+    val st = Pipeline.run(spark, 120)
+    val a = st.triples
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
-    val b = Pipeline.run(spark, 120, relationalEmit = true).triples
+    val b = graft.triples.TripleEmit.emit(st.canonMentions)
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)

@@ -358,6 +358,41 @@ class PipelinePlanSpec extends SparkSpec {
       s"expected 1 shuffle (skew-control repartition), got $shuffles:\n${p.take(3000)}")
   }
 
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    "Exchange hashpartitioning".r
+      .findAllIn(df.queryExecution.executedPlan.toString).length
+
+  test("emitter rule: mentionsFused input + broadcast canon emits without a shuffle") {
+    // default skew control: the linked table carries the one extract
+    // repartition; the broadcast canon join and the partition-local
+    // emit above it add none
+    val linked = graft.link.Linker.link(graft.extract.Extract.mentionsFused(
+      graft.extract.Extract.corpus(spark, 20))).toDF()
+    val below = exchanges(linked)
+    val (_, triples) = Pipeline.canonEmit(linked,
+      Pipeline.Canon.static(spark), docContiguous = true)
+    val p = triples.queryExecution.executedPlan.toString
+    assert(below == 1 && exchanges(triples) == below,
+      s"expected no exchange above the canon join, got " +
+        s"${exchanges(triples) - below}:\n${p.take(3000)}")
+  }
+
+  test("emitter rule: a parquet-read mention table keeps exactly the emit group shuffle") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("ments").toString
+    graft.link.Linker.link(graft.extract.Extract.run(spark, 20)).toDF()
+      .write.mode("overwrite").parquet(tmp)
+    val linked = spark.read.parquet(tmp)
+    val (_, triples) = Pipeline.canonEmit(linked,
+      Pipeline.Canon.static(spark), docContiguous = false)
+    val p = triples.queryExecution.executedPlan.toString
+    assert(exchanges(triples) == 1,
+      s"expected 1 shuffle (emit group), got ${exchanges(triples)}:\n${p.take(3000)}")
+    // the rows match the partition-local emit over the same mentions
+    val local = Pipeline.run(spark, 20).triples
+    assert(triples.collect().toSet == local.collect().toSet)
+  }
+
   test("runFromTable prunes the parquet scan to the needed columns") {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("scan").toString

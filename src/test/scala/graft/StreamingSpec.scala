@@ -265,7 +265,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable(); q.stop()
     def tset(df: org.apache.spark.sql.DataFrame) =
       df.select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
-    val batchDyn = tset(Pipeline.dynamicStagesFor(files).triples)
+    val batchDyn = tset(Pipeline.stagesFor(files, minedCanon = true).triples)
     val (nPub, _) = StreamingPipeline.publishSnapshotDynamic(spark, ments,
       table, "snap-dyn")
     val published = tset(graft.sources.GraphTables.read(spark, table))
@@ -300,8 +300,9 @@ class StreamingSpec extends SparkSpec {
     assert(!published2.exists(_.contains("novelrepo/N.scala")),
       "stale mentions of a re-ingested zero-mention doc leaked into the publish")
     // and it equals a batch dynamic run over the CURRENT corpus state
-    val batchDyn2 = tset(Pipeline.dynamicStagesFor(
-      Extract.corpus(spark, 30).union(Seq(novel2).toDS())).triples)
+    val batchDyn2 = tset(Pipeline.stagesFor(
+      Extract.corpus(spark, 30).union(Seq(novel2).toDS()),
+      minedCanon = true).triples)
     assert(published2 == batchDyn2)
   }
 
@@ -339,7 +340,7 @@ class StreamingSpec extends SparkSpec {
     val p1 = pub("inc-1")
     assert(!p1.incremental && p1.note.contains("first publish"))
     val files1 = Extract.corpus(spark, 30).union(Seq(a0).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files1).triples))
+    assert(published() == tset(Pipeline.stagesFor(files1, minedCanon = true).triples))
 
     // phase 2 (adds + a net-zero re-ingest): a NEW doc with the CAMEL
     // twin (novel cross-batch alias merge), a NEW plain corpus doc,
@@ -360,7 +361,7 @@ class StreamingSpec extends SparkSpec {
     // INDEX (p1's full publish rebuilt it with the completeness marker)
     assert(graft.sources.Fs.exists(spark, s"$state/entidx/_complete"))
     val files2 = Extract.corpus(spark, 31).union(Seq(a1, b).toDS())
-    val full2 = tset(Pipeline.dynamicStagesFor(files2).triples)
+    val full2 = tset(Pipeline.stagesFor(files2, minedCanon = true).triples)
     assert(published() == full2,
       s"+${(published() -- full2).take(3)} -${(full2 -- published()).take(3)}")
     // the cross-batch merge really happened: the phase-1 snake
@@ -386,7 +387,7 @@ class StreamingSpec extends SparkSpec {
     val p3 = pub("inc-3")
     assert(!p3.incremental && p3.note.contains("retracted"), p3.note)
     val files3 = Extract.corpus(spark, 31).union(Seq(a2, b).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files3).triples))
+    assert(published() == tset(Pipeline.stagesFor(files3, minedCanon = true).triples))
 
     // phase 4: the fallback rewrote fresh state — the next adds-only
     // delta is incremental again
@@ -397,12 +398,12 @@ class StreamingSpec extends SparkSpec {
     val p4 = pub("inc-4")
     assert(p4.incremental, s"expected incremental, got: ${p4.note}")
     val files4 = files3.union(Seq(c).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files4).triples))
+    assert(published() == tset(Pipeline.stagesFor(files4, minedCanon = true).triples))
 
     // phase 5: empty delta — publish is a pure copy-forward
     val p5 = pub("inc-5")
     assert(p5.incremental && p5.note.contains("empty delta"))
-    assert(published() == tset(Pipeline.dynamicStagesFor(files4).triples))
+    assert(published() == tset(Pipeline.stagesFor(files4, minedCanon = true).triples))
 
     // phase 6: compaction folds the re-ingested doc's superseded rows
     // away (strictly fewer accumulated rows), and publishes — both the
@@ -415,7 +416,7 @@ class StreamingSpec extends SparkSpec {
       s"compaction dropped nothing ($rowsBefore -> $rowsAfter)")
     val p6 = pub("inc-6")
     assert(p6.incremental && p6.note.contains("empty delta"))
-    assert(published() == tset(Pipeline.dynamicStagesFor(files4).triples))
+    assert(published() == tset(Pipeline.stagesFor(files4, minedCanon = true).triples))
     val d = doc("D.scala", "c0",
       "def runLast(a: Row): Txn = {", "val valveGammaQq = 3")
     Seq(d).toDS().write.mode("append").parquet(src)
@@ -423,7 +424,7 @@ class StreamingSpec extends SparkSpec {
     val p7 = pub("inc-7")
     assert(p7.incremental && p7.note.contains("adds-only"), p7.note)
     val files5 = files4.union(Seq(d).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files5).triples))
+    assert(published() == tset(Pipeline.stagesFor(files5, minedCanon = true).triples))
 
     // ---- overlay I/O: the incremental publishes above wrote DELTAS,
     // not corpus rewrites, and their derived manifest rows are exact
@@ -490,7 +491,7 @@ class StreamingSpec extends SparkSpec {
     // the gate flattens the STATE chain together with the data chain
     assert(baseSt("inc-8").isEmpty)
     val files6 = files5.union(Seq(e).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files6).triples))
+    assert(published() == tset(Pipeline.stagesFor(files6, minedCanon = true).triples))
 
     // phase 9: canon-state GC keeps the latest state — the next
     // publish is STILL incremental after expiry
@@ -505,7 +506,7 @@ class StreamingSpec extends SparkSpec {
     val p9 = pub("inc-9")
     assert(p9.incremental && p9.note.contains("overlay"), p9.note)
     val files7 = files6.union(Seq(f).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files7).triples))
+    assert(published() == tset(Pipeline.stagesFor(files7, minedCanon = true).triples))
 
     // phase 10: graph GC across a live chain — keepLast=1 keeps inc-9
     // plus its base inc-8; everything older (and the long inc-3 chain)
@@ -514,7 +515,7 @@ class StreamingSpec extends SparkSpec {
     assert(removed.toSet ==
       Set("inc-1", "inc-2", "inc-3", "inc-4", "inc-5", "inc-6", "inc-7"),
       s"removed $removed")
-    assert(published() == tset(Pipeline.dynamicStagesFor(files7).triples))
+    assert(published() == tset(Pipeline.stagesFor(files7, minedCanon = true).triples))
 
     // phase 11: index FALLBACK — plant a fresh snake form, delete the
     // completeness marker, then land its camel twin: the relabeling of
@@ -534,7 +535,7 @@ class StreamingSpec extends SparkSpec {
     val p11b = pub("inc-11b")
     assert(p11b.incremental, p11b.note)
     val files9 = files7.union(Seq(g, hh).toDS())
-    val full9 = tset(Pipeline.dynamicStagesFor(files9).triples)
+    val full9 = tset(Pipeline.stagesFor(files9, minedCanon = true).triples)
     assert(published() == full9,
       s"+${(published() -- full9).take(3)} -${(full9 -- published()).take(3)}")
     assert(published().exists(r =>
@@ -562,7 +563,7 @@ class StreamingSpec extends SparkSpec {
     assert(graft.sources.Fs.exists(spark, s"$state/entidx/_complete"),
       "full publish must rebuild the index with its marker")
     val files10 = files7.union(Seq(g2, hh).toDS())
-    assert(published() == tset(Pipeline.dynamicStagesFor(files10).triples))
+    assert(published() == tset(Pipeline.stagesFor(files10, minedCanon = true).triples))
   }
 
   test("compaction under UNPUBLISHED re-ingests cannot mask a retraction") {
@@ -625,7 +626,7 @@ class StreamingSpec extends SparkSpec {
         assert(p2.note.contains("decrements unverifiable"),
           s"$name: ${p2.note}")
       val files2 = Extract.corpus(spark, 10).union(Seq(a1, b0).toDS())
-      val want2 = tset(Pipeline.dynamicStagesFor(files2).triples)
+      val want2 = tset(Pipeline.stagesFor(files2, minedCanon = true).triples)
       val got2 = tset(GraphTables.read(spark, table))
       // exactness vs the batch ground truth IS the stale-merge probe:
       // under the stale canon, B's camel mention would still ride the
@@ -649,7 +650,7 @@ class StreamingSpec extends SparkSpec {
           s"$name: ${p3.note}")
         val files3 = Extract.corpus(spark, 10).union(Seq(a1, b1).toDS())
         assert(tset(GraphTables.read(spark, table)) ==
-          tset(Pipeline.dynamicStagesFor(files3).triples))
+          tset(Pipeline.stagesFor(files3, minedCanon = true).triples))
         // a crash mid-meta-write leaves a PRESENT but unreadable meta:
         // the contract routes the next publish to the full fallback —
         // it must not throw and wedge the stream's publish schedule
@@ -667,7 +668,7 @@ class StreamingSpec extends SparkSpec {
           s"$name: ${p4.note}")
         val files4 = files3.union(Seq(c1).toDS())
         assert(tset(GraphTables.read(spark, table)) ==
-          tset(Pipeline.dynamicStagesFor(files4).triples))
+          tset(Pipeline.stagesFor(files4, minedCanon = true).triples))
       }
     }
     scenario("bare", keepPublished = false)
@@ -690,7 +691,7 @@ class StreamingSpec extends SparkSpec {
     val (n0, _) = StreamingPipeline.publishSnapshotDynamic(spark, ments,
       table, "legacy-0")
     val pub0 = tset(graft.sources.GraphTables.read(spark, table))
-    assert(pub0 == tset(Pipeline.dynamicStagesFor(files0).triples) &&
+    assert(pub0 == tset(Pipeline.stagesFor(files0, minedCanon = true).triples) &&
       pub0.nonEmpty && n0 == pub0.size.toLong,
       "no-roster legacy accumulation must publish == batch dynamic")
     // batch 1 lands AFTER the roster upgrade (roster rows exist for it
@@ -709,8 +710,8 @@ class StreamingSpec extends SparkSpec {
       .parquet(StreamingPipeline.rosterPath(ments))
     StreamingPipeline.publishSnapshotDynamic(spark, ments, table, "legacy-1")
     val pub1 = tset(graft.sources.GraphTables.read(spark, table))
-    assert(pub1 == tset(Pipeline.dynamicStagesFor(
-      files0.union(Seq(extra).toDS())).triples),
+    assert(pub1 == tset(Pipeline.stagesFor(
+      files0.union(Seq(extra).toDS()), minedCanon = true).triples),
       "partial-roster accumulation must keep pre-roster docs AND the new batch")
     assert(pub1.exists(_.contains("legacyrepo/L.scala")) &&
       pub1.size > pub0.size)
