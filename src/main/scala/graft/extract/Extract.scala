@@ -92,7 +92,9 @@ object Extract {
     // repartitionByDoc = false skips the skew-control shuffle for
     // inputs that are ALREADY uniformly distributed with unique
     // (repo, path) per row — the in-process generated corpus
-    // (spark.range is uniform, the path embeds the fileId). A real
+    // (spark.range is uniform, the path embeds the fileId), or one
+    // version per doc already hash-partitioned by docId (the streaming
+    // micro-batch, StreamingPipeline.batchMentions). A real
     // source table keeps the default: the repartition both breaks a
     // hot repo across tasks and pins the doc-contiguity invariant
     // emitFusedLocal relies on when the table could carry duplicate

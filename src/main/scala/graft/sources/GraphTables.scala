@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * matching the north-star's "partitioned Iceberg graph tables
   * bucketed by canonical-entity hash".
   *
-  * Layout: `path/data/pred=<p>/bucket=<b>/` parquet files
+  * Layout: `path/data/snap=<id>/pred=<p>/bucket=<b>/`, one parquet
+  * file per (pred, bucket) dir, written by one task ([[writePartitioned]])
   *  - partition column `pred`: per-predicate partition PRUNING — a
   *    query over `calls` edges never touches `documented_as` files
   *    (asserted in PlanSpec);
@@ -36,6 +37,18 @@ object ContentHash {
       .head()
     (r.getLong(0), r.getLong(1))
   }
+
+  /** The row columns every graph-table fingerprint hashes. */
+  val TripleCols: Seq[String] = Seq("subj", "pred", "obj", "docId")
+
+  /** Per-doc `(docId, nTriples, h64)` of a triple set: the [[xorLong]]
+    * row hash over [[TripleCols]], xor-combined per doc. The xor of the
+    * h64s is the set's hash and the sum of nTriples its row count,
+    * which is what makes per-doc removal algebra exact. */
+  def perDoc(triples: DataFrame): DataFrame =
+    triples.withColumn("__h", xxhash64(TripleCols.map(col): _*))
+      .groupBy(col("docId"))
+      .agg(count(lit(1)).as("nTriples"), expr("bit_xor(__h)").as("h64"))
 
   def hex(df: DataFrame, cols: Seq[String]): (Long, String) = {
     val (n, x) = xorLong(df, cols)
@@ -114,6 +127,8 @@ object GraphTables {
       StructField("bucket", IntegerType)))
   }
 
+  private val PartCols = Seq("pred", "bucket")
+
   def bucketCol(subj: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(subj), lit(NumBuckets)).cast("int")
 
@@ -125,6 +140,23 @@ object GraphTables {
     * non-empty snapshots on HDFS/S3 — see [[Fs]].) */
   private def hasPartitions(spark: SparkSession, dir: String): Boolean =
     Fs.hasPartitions(spark, dir, "pred=")
+
+  /** THE partitioned parquet write of every graph-table-shaped dir
+    * (snapshot data, overlays, compactions, the entity index): rows are
+    * hash-repartitioned by `partCols` into one partition per task slot
+    * before `partitionBy`, so each partition dir is written by exactly
+    * one task — one file per dir instead of one per (writer task, dir)
+    * — and the dirs are shared out over all slots. The count is
+    * explicit: a count-less `repartition(cols)` is one AQE may coalesce
+    * back into a single task that writes every dir in turn. Static
+    * overwrite is a per-write option, immune to a dynamic-overwrite
+    * session conf set elsewhere. */
+  private[graft] def writePartitioned(df: DataFrame, dir: String, partCols: Seq[String],
+      mode: SaveMode): Unit =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        partCols.map(col): _*)
+      .write.mode(mode).option("partitionOverwriteMode", "static")
+      .partitionBy(partCols: _*).parquet(dir)
 
   /** Publish one snapshot into its OWN directory, THEN append the
     * manifest row. The previous snapshot's data is never touched, so a
@@ -139,14 +171,11 @@ object GraphTables {
   def write(triples: DataFrame, path: String,
       snapshotId: String): (Long, String) = {
     val spark = triples.sparkSession
-    val withB = triples.withColumn("bucket", bucketCol(col("subj")))
-    // explicit STATIC overwrite of THIS snapshot's dir: a republish of
-    // the same snapshotId replaces it wholesale, including (pred,
-    // bucket) partitions absent from the new data — immune to any
-    // dynamic-overwrite session conf set elsewhere
-    withB.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("pred", "bucket").parquet(snapDir(path, snapshotId))
+    // STATIC overwrite of THIS snapshot's dir: a republish of the same
+    // snapshotId replaces it wholesale, including (pred, bucket)
+    // partitions absent from the new data
+    writePartitioned(triples.withColumn("bucket", bucketCol(col("subj"))),
+      snapDir(path, snapshotId), PartCols, SaveMode.Overwrite)
     // fingerprint the data ACTUALLY WRITTEN (read back from disk), not
     // a recomputation of the input plan — recomputing would run the
     // whole upstream pipeline a second time and hash rows that were
@@ -159,8 +188,7 @@ object GraphTables {
     val (n, h) =
       if (!hasData) (0L, "%016x".format(0L))
       else ContentHash.hex(
-        spark.read.parquet(snapDir(path, snapshotId)),
-        Seq("subj", "pred", "obj", "docId"))
+        spark.read.parquet(snapDir(path, snapshotId)), ContentHash.TripleCols)
     Seq((n, h, snapshotId, System.currentTimeMillis()))
       .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
       .write.mode(SaveMode.Append).parquet(s"$path/manifest")
@@ -302,10 +330,13 @@ object GraphTables {
     * snapshots alive; a chain is flattened by [[compactSnapshot]] or
     * by the caller publishing full once depth exceeds its bound.
     * Same commit discipline as [[write]]: data + sidecar land before
-    * the manifest row; a crash mid-publish leaves an orphan dir. */
+    * the manifest row; a crash mid-publish leaves an orphan dir.
+    * Returns (rowCount, contentHash, ownStats): the resolved snapshot's
+    * manifest row plus the [[ContentHash.perDoc]] stats of the rows
+    * this overlay wrote, materialized from the same read-back. */
   def writeDelta(spark: SparkSession, path: String, snapshotId: String,
       baseSnapshotId: String, added: DataFrame, removedDocs: DataFrame,
-      removedRows: Long, removedHash: Long): (Long, String) = {
+      removedRows: Long, removedHash: Long): (Long, String, DataFrame) = {
     import spark.implicits._
     val base = spark.read.parquet(s"$path/manifest")
       .filter(col("snapshotId") === baseSnapshotId)
@@ -317,14 +348,18 @@ object GraphTables {
     // data FIRST (static Overwrite wipes the dir, sidecar included —
     // a republish of the same snapshotId replaces the overlay
     // wholesale), sidecar second, manifest row last
-    added.withColumn("bucket", bucketCol(col("subj")))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("pred", "bucket").parquet(dir)
-    val (addN, addH) =
-      if (!hasPartitions(spark, dir)) (0L, 0L)
-      else ContentHash.xorLong(spark.read.parquet(dir),
-        Seq("subj", "pred", "obj", "docId"))
+    writePartitioned(added.withColumn("bucket", bucketCol(col("subj"))),
+      dir, PartCols, SaveMode.Overwrite)
+    // ONE read-back serves both the manifest row (sum and xor of the
+    // per-doc stats) and the caller's per-doc publish state
+    val (ownStats, addN, addH) =
+      if (!hasPartitions(spark, dir))
+        (ContentHash.perDoc(readOwnData(spark, path, snapshotId)), 0L, 0L)
+      else {
+        val st = ContentHash.perDoc(spark.read.parquet(dir)).localCheckpoint()
+        val r = st.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
+        (st, r.getLong(0), r.getLong(1))
+      }
     val depth = chainDepth(spark, path, baseSnapshotId) + 1
     removedDocs.select(lit("removed").as("kind"), col("docId").as("value"))
       .unionByName(Seq(("base", baseSnapshotId),
@@ -339,7 +374,7 @@ object GraphTables {
     Seq((n, hex, snapshotId, System.currentTimeMillis()))
       .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
       .write.mode(SaveMode.Append).parquet(s"$path/manifest")
-    (n, hex)
+    (n, hex, ownStats)
   }
 
   /** A snapshot's OWN written rows, no chain resolution — for an
@@ -368,11 +403,9 @@ object GraphTables {
     val dir = snapDir(path, snapshotId)
     if (!Fs.exists(spark, baseMetaDir(dir))) return false
     val tmp = s"${dir}__compact"
-    readSnapshot(spark, path, snapshotId)
+    writePartitioned(readSnapshot(spark, path, snapshotId)
       .select(col("subj"), col("obj"), col("docId"), col("score"),
-        col("pred"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pred", "bucket").parquet(tmp)
+        col("pred"), col("bucket")), tmp, PartCols, SaveMode.Overwrite)
     Fs.swapInto(spark, tmp, dir)
     true
   }

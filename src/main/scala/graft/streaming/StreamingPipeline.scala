@@ -3,7 +3,7 @@ package graft.streaming
 import graft.core.{Mention, Sentence, SourceFileHashed}
 import graft.extract.Tokenizer
 import graft.kernel.{TriaffineScorer, Weights}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -71,7 +71,7 @@ object StreamingPipeline {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batchId").parquet(outPath)
       val (nRows, cHash) = graft.sources.ContentHash.hex(cached,
-        Seq("subj", "pred", "obj", "docId"))
+        graft.sources.ContentHash.TripleCols)
       Seq((f"batch$batchId%05d", nRows, cHash,
         System.currentTimeMillis(), batchId))
         .toDF("stage", "rowCount", "contentHash", "committedAt", "batchId")
@@ -96,6 +96,50 @@ object StreamingPipeline {
     * mentions, and the mention table alone cannot say the doc was seen
     * again. */
   def rosterPath(mentionsPath: String): String = s"${mentionsPath}_docs"
+
+  /** One micro-batch's files -> mentions, behind ONE hash exchange.
+    *
+    * ONE version per doc per batch: with maxFilesPerTrigger > 1 a doc
+    * re-ingested twice between triggers lands both versions in this
+    * micro-batch under a single batchId — the (docId, batchId)
+    * last-writer-wins at publish time cannot separate them, and the
+    * union of both versions' facts is wrong under any ordering. With
+    * `ingestTsCol` the ingest time orders first (a row missing the ts
+    * loses to any row carrying one: recency evidence beats absence) —
+    * last-writer semantics up to the timestamp's granularity; versions
+    * tied on the ts (same filesystem mtime tick) fall through to the
+    * deterministic rule below. Without it a file source gives no
+    * within-batch order, so the survivor is the deterministic max
+    * (commit, sha256) — determinism, not chronology: when the
+    * lexicographically larger (commit, sha256) is the OLDER version,
+    * the batch keeps the stale one; separate versions into distinct
+    * batches (maxFilesPerTrigger=1) if the source cannot carry a
+    * timestamp. Across batches the batchId ordering still governs.
+    *
+    * The file rows are hash-partitioned by docId once: that is the
+    * skew control [[graft.extract.Extract.mentionsFused]] would
+    * otherwise apply by (repo, path), and it already satisfies the
+    * survivor window's distribution, so the window runs inside those
+    * partitions and the kernel adds no second shuffle of the content.
+    * Every surviving doc sits whole in one partition — the doc
+    * contiguity the partition-local emitter requires. */
+  private[graft] def batchMentions(batch: Dataset[SourceFileHashed],
+      ingestTsCol: Option[String]): Dataset[Mention] = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val ord = ingestTsCol.map(c => col(c).desc_nulls_last).toSeq ++
+      Seq(col("commit").desc, col("sha256").desc)
+    val vw = org.apache.spark.sql.expressions.Window
+      .partitionBy(graft.core.DocId.column)
+      .orderBy(ord: _*)
+    val survivors = batch.toDF()
+      .repartition(spark.sessionState.conf.numShufflePartitions,
+        graft.core.DocId.column)
+      .withColumn("__rn", row_number().over(vw))
+      .filter(col("__rn") === 1).drop("__rn")
+      .as[SourceFileHashed]
+    graft.extract.Extract.mentionsFused(survivors, repartitionByDoc = false)
+  }
 
   /** Canon contract: each micro-batch canonicalizes against the STATIC
     * dictionary map — a batch sees only its own files, so it cannot
@@ -147,36 +191,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: Dataset[SourceFileHashed], batchId: Long) =>
         val spark = batch0.sparkSession
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        // ONE version per doc per batch: with maxFilesPerTrigger > 1 a
-        // doc re-ingested twice between triggers lands both versions in
-        // this micro-batch under a single batchId — the (docId,
-        // batchId) last-writer-wins at publish time cannot separate
-        // them, and the union of both versions' facts is wrong under
-        // any ordering. With `ingestTsCol` the ingest time orders
-        // first (a row missing the ts loses to any row carrying one:
-        // recency evidence beats absence) — last-writer semantics up
-        // to the timestamp's granularity; versions tied on the ts
-        // (same filesystem mtime tick) fall through to the
-        // deterministic rule below. Without it a file source gives no
-        // within-batch order, so the survivor is the deterministic
-        // max (commit, sha256) — determinism, not chronology: when
-        // the lexicographically larger (commit, sha256) is the OLDER
-        // version, the batch keeps the stale one; separate versions
-        // into distinct batches (maxFilesPerTrigger=1) if the source
-        // cannot carry a timestamp. Across batches the batchId
-        // ordering still governs.
-        val ord = ingestTsCol.map(c => col(c).desc_nulls_last).toSeq ++
-          Seq(col("commit").desc, col("sha256").desc)
-        val vw = org.apache.spark.sql.expressions.Window
-          .partitionBy(graft.core.DocId.column)
-          .orderBy(ord: _*)
-        val batch = batch0.toDF()
-          .withColumn("__rn", row_number().over(vw))
-          .filter(col("__rn") === 1).drop("__rn")
-          .as[SourceFileHashed]
-        val ments = graft.extract.Extract.mentionsFused(batch)
+        val ments = batchMentions(batch0, ingestTsCol)
         // persist when two actions read it (the mentions write + the
         // canon->triples commit): unpersisted, each would re-run the
         // extraction kernel — the dominant stage — once over
@@ -189,7 +204,9 @@ object StreamingPipeline {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batchId").parquet(mp)
-            batch.toDF()
+            // every doc of the batch keeps exactly one version, so the
+            // roster reads the docIds straight off the raw batch
+            batch0.toDF()
               .select(graft.core.DocId.column.as("docId"))
               .distinct()
               .withColumn("batchId", lit(batchId))
@@ -197,7 +214,7 @@ object StreamingPipeline {
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batchId").parquet(rosterPath(mp))
           }
-          // straight from mentionsFused (the cache keeps its layout):
+          // straight from batchMentions (the cache keeps its layout):
           // doc-contiguous, so the static map's broadcast join emits
           // partition-locally
           val (_, triples) = graft.Pipeline.canonEmit(linked,
@@ -460,12 +477,12 @@ object StreamingPipeline {
   /** Delta append — MUST run before the snapshot's manifest commit: a
     * crash in between leaves over-coverage (benign), never a committed
     * snapshot whose docs the index misses. */
-  private def appendEntIdx(spark: SparkSession, statePath: String,
+  private[graft] def appendEntIdx(spark: SparkSession, statePath: String,
       linked: DataFrame): Unit =
-    linked.select(col("entity"), col("docId")).distinct()
-      .withColumn("ebucket", ebucket(col("entity")))
-      .write.mode("append").partitionBy("ebucket")
-      .parquet(entIdxDir(statePath))
+    graft.sources.GraphTables.writePartitioned(
+      linked.select(col("entity"), col("docId")).distinct()
+        .withColumn("ebucket", ebucket(col("entity"))),
+      entIdxDir(statePath), Seq("ebucket"), SaveMode.Append)
 
   /** Full rebuild (full-publish path): distinct pairs through a tmp
     * dir + swap, the completeness marker written INTO the tmp so data
@@ -474,9 +491,10 @@ object StreamingPipeline {
   private def rebuildEntIdx(spark: SparkSession, statePath: String,
       linked: DataFrame): Unit = {
     val d = entIdxDir(statePath); val tmp = s"${d}__rebuild"
-    linked.select(col("entity"), col("docId")).distinct()
-      .withColumn("ebucket", ebucket(col("entity")))
-      .write.mode("overwrite").partitionBy("ebucket").parquet(tmp)
+    graft.sources.GraphTables.writePartitioned(
+      linked.select(col("entity"), col("docId")).distinct()
+        .withColumn("ebucket", ebucket(col("entity"))),
+      tmp, Seq("ebucket"), SaveMode.Overwrite)
     graft.sources.Fs.touch(spark, s"$tmp/_complete")
     graft.sources.Fs.swapInto(spark, tmp, d)
   }
@@ -776,18 +794,6 @@ object StreamingPipeline {
       case _ => false
     }
 
-  /** Per-doc content fingerprints of a written triple set — the same
-    * per-row hash [[graft.sources.ContentHash.xorLong]] xor-combines
-    * globally, grouped by doc: xor of the per-doc h64s == the
-    * snapshot's contentHash, which is what makes per-doc removal
-    * algebra exact. */
-  private def perDocStats(triples: DataFrame): DataFrame =
-    triples.withColumn("__h",
-        xxhash64(col("subj"), col("pred"), col("obj"), col("docId")))
-      .groupBy(col("docId"))
-      .agg(count(lit(1)).as("nTriples"),
-        expr("bit_xor(__h)").as("h64"))
-
   /** `docs` frame carrying (nTriples, h64) for every doc in `latest`,
     * zero-filled for docs that emitted no triples. */
   private def docsWithStats(latest: DataFrame, stats: DataFrame): DataFrame =
@@ -844,7 +850,7 @@ object StreamingPipeline {
       writeState(spark, statePath, snapshotId, canon.map,
         graft.canon.IncrementalCanon.pairCounts(
           graft.canon.IncrementalCanon.docPairs(linked)),
-        docsWithStats(latest, perDocStats(
+        docsWithStats(latest, graft.sources.ContentHash.perDoc(
           graft.sources.GraphTables.readOwnData(spark, tablePath,
             snapshotId))),
         lastB)
@@ -968,13 +974,14 @@ object StreamingPipeline {
         if (priorDepth + 1 <= maxChain) {
           // pure pointer forward in DATA and in STATE — an idle stream
           // publishing on a schedule costs O(1), not O(corpus state)
-          val r = GraphTables.writeDelta(spark, tablePath, snapshotId,
-            prior.get, spark.emptyDataset[graft.core.Triple].toDF(),
+          val (n0, h0, _) = GraphTables.writeDelta(spark, tablePath,
+            snapshotId, prior.get,
+            spark.emptyDataset[graft.core.Triple].toDF(),
             priorDocs.select(col("docId")).limit(0), 0L, 0L)
           writeStateDelta(spark, statePath, snapshotId, prior.get,
             priorCanon.limit(0), priorPairs.limit(0),
             priorDocs.limit(0), lastB)
-          r
+          (n0, h0)
         } else {
           val kept = GraphTables.readSnapshot(spark, tablePath, prior.get)
             .select(col("subj"), col("pred"), col("obj"), col("docId"),
@@ -1113,11 +1120,14 @@ object StreamingPipeline {
       val removedRows = if (remRow.isNullAt(0)) 0L else remRow.getLong(0)
       val removedHash = if (remRow.isNullAt(1)) 0L else remRow.getLong(1)
       val growChain = priorDepth + 1 <= maxChain
-      val (n, h, mode) =
+      // re-emitted docs' fingerprints come from the data actually
+      // written: an overlay hands back the stats of its one read-back
+      // (only the delta rows), a materialized snapshot is re-read whole
+      val (n, h, mode, ownStats) =
         if (growChain)
           GraphTables.writeDelta(spark, tablePath, snapshotId, prior.get,
             newTriples, reDocs, removedRows, removedHash) match {
-            case (n0, h0) => (n0, h0, "overlay")
+            case (n0, h0, st) => (n0, h0, "overlay", st)
           }
         else {
           val kept = GraphTables.readSnapshot(spark, tablePath, prior.get)
@@ -1129,18 +1139,18 @@ object StreamingPipeline {
           GraphTables.write(kept.unionByName(newTriples),
             tablePath, snapshotId) match {
             case (n0, h0) =>
-              (n0, h0, s"materialized at chain depth $priorDepth")
+              (n0, h0, s"materialized at chain depth $priorDepth",
+                graft.sources.ContentHash.perDoc(
+                  GraphTables.readOwnData(spark, tablePath, snapshotId)))
           }
         }
-      // re-emitted docs' fingerprints from the data actually written
-      // (overlay mode reads back only the delta rows); delta docs ride
-      // their new batchId, affected docs keep their prior one
+      // delta docs ride their new batchId, affected docs keep their
+      // prior one
       val touchedBatch = priorDocs
         .join(affected, Seq("docId"), "left_semi")
         .select(col("docId"), col("batchId"))
         .unionByName(deltaLatest)
-      val reStats = docsWithStats(touchedBatch, perDocStats(
-        GraphTables.readOwnData(spark, tablePath, snapshotId)))
+      val reStats = docsWithStats(touchedBatch, ownStats)
       if (growChain)
         // O(delta) state: only the relabeled entities' canon rows, the
         // touched pair refcounts, and the re-emitted docs' fingerprints

@@ -218,7 +218,7 @@ class GraphSinkSpec extends SparkSpec {
     // publish state supplies from per-doc fingerprints)
     val (remN, remH) = ContentHash.xorLong(
       base.filter(col("docId").isin("d2", "d4")), HashCols)
-    val (nB, hB) = GraphTables.writeDelta(spark, tmp, "ov-B", "ov-A",
+    val (nB, hB, _) = GraphTables.writeDelta(spark, tmp, "ov-B", "ov-A",
       rows(("b", "w", "d2"), ("e", "q", "d4"), ("e", "r", "d4")),
       Seq("d2", "d4").toDF("docId"), remN, remH)
     assert(nB == 6)
@@ -238,7 +238,7 @@ class GraphSinkSpec extends SparkSpec {
     assert(GraphTables.entityEdges(spark, tmp, "calls", "e").count() == 2)
 
     // pointer overlay C (empty delta): zero rows written, identical row
-    val (nC, hC) = GraphTables.writeDelta(spark, tmp, "ov-C", "ov-B",
+    val (nC, hC, _) = GraphTables.writeDelta(spark, tmp, "ov-C", "ov-B",
       base.limit(0), base.select(col("docId")).limit(0), 0L, 0L)
     assert((nC, hC) == ((nB, hB)))
     assert(GraphTables.readOwnData(spark, tmp, "ov-C").count() == 0)
@@ -248,7 +248,7 @@ class GraphSinkSpec extends SparkSpec {
     // removal-only overlay D: d3's content now yields no triples
     val (r3n, r3h) = ContentHash.xorLong(
       base.filter(col("docId") === "d3"), HashCols)
-    val (nD, _) = GraphTables.writeDelta(spark, tmp, "ov-D", "ov-C",
+    val (nD, _, _) = GraphTables.writeDelta(spark, tmp, "ov-D", "ov-C",
       base.limit(0), Seq("d3").toDF("docId"), r3n, r3h)
     assert(nD == 5 && GraphTables.chainDepth(spark, tmp, "ov-D") == 3)
     assert(!tset("ov-D").exists(_.contains("d3")))
@@ -292,7 +292,9 @@ class GraphSinkSpec extends SparkSpec {
     val (rN, rH) = graft.sources.ContentHash.xorLong(
       rows(("b", "y", "d2")), Seq("subj", "pred", "obj", "docId"))
     def pub() = GraphTables.writeDelta(spark, tmp, "r-B", "r-A",
-      rows(("b", "z", "d2")), Seq("d2").toDF("docId"), rN, rH)
+      rows(("b", "z", "d2")), Seq("d2").toDF("docId"), rN, rH) match {
+      case (n, h, _) => (n, h)
+    }
     val first = pub()
     // a crash-retry republish of the SAME overlay id replaces the
     // overlay wholesale and derives the identical manifest row
@@ -393,5 +395,97 @@ class GraphSinkSpec extends SparkSpec {
     assert(resumed.sameElements(direct))
     // fully committed -> no-op
     assert(ResumablePipeline.run(spark, corpus, out, man, nBuckets = 8) == 0)
+  }
+
+  // ---- one writer per partition dir -------------------------------
+
+  /** Parquet part files under `dir`, grouped by the partition dir that
+    * holds them; underscore dirs (the overlay sidecar) are skipped. */
+  private def partFiles(dir: String): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") &&
+        !root.relativize(p).iterator().asScala.exists(_.toString.startsWith("_")))
+      .toSeq.groupBy(p => root.relativize(p.getParent).toString)
+      .map { case (d, ps) => d -> ps.map(_.getFileName.toString) }
+    finally s.close()
+  }
+
+  /** Every pred=<p>/bucket=<b> dir holds exactly one part file, and the
+    * files come from at least two writer tasks (the `part-NNNNN` split
+    * index). */
+  private def assertOneFilePerDir(dir: String): Unit = {
+    val files = partFiles(dir)
+    assert(files.nonEmpty && files.keys.forall(
+      _.matches("pred=[^/]+/bucket=\\d+")), files.keys)
+    val multi = files.filter(_._2.size != 1)
+    assert(multi.isEmpty, s"dirs with more than one file: ${multi.take(3)}")
+    val tasks = files.values.flatten.map(_.split("-")(1)).toSet
+    assert(tasks.size >= 2, s"all dirs written by one task: $tasks")
+  }
+
+  /** A triple set over many subjects (hence many buckets), round-robin
+    * spread over 4 input partitions so every (pred, bucket) has rows in
+    * several of them. */
+  private def spreadTriples(nDocs: Int, tag: String) = {
+    import spark.implicits._
+    val preds = Seq("calls", "imports", "defines")
+    (0 until nDocs).flatMap { d =>
+      (0 until 6).map(i =>
+        (s"e${(d * 7 + i) % 97}", preds(i % 3), s"$tag-o$i", s"$tag-d$d", 1.0))
+    }.toDF("subj", "pred", "obj", "docId", "score").repartition(4)
+  }
+
+  test("write: one parquet file per pred/bucket dir, spread over tasks") {
+    val tmp = Files.createTempDirectory("graph1w").toString
+    val t = spreadTriples(120, "w")
+    assert(t.rdd.getNumPartitions == 4)
+    val (n, h) = GraphTables.write(t, tmp, "s1")
+    assertOneFilePerDir(s"$tmp/data/snap=s1")
+    assert((n, h) == graft.sources.ContentHash.hex(t,
+      graft.sources.ContentHash.TripleCols))
+  }
+
+  test("writeDelta and compactSnapshot: one parquet file per pred/bucket dir") {
+    import graft.sources.ContentHash
+    val tmp = Files.createTempDirectory("graph1d").toString
+    val base = spreadTriples(120, "b")
+    val added = spreadTriples(120, "a")
+    GraphTables.write(base, tmp, "d-A")
+    // docs new to the base: nothing removed
+    val (n, h, own) = GraphTables.writeDelta(spark, tmp, "d-B", "d-A",
+      added, added.select(col("docId")).distinct(), 0L, 0L)
+    assertOneFilePerDir(s"$tmp/data/snap=d-B")
+    val all = base.unionByName(added)
+    assert((n, h) == ContentHash.hex(all, ContentHash.TripleCols))
+    // the returned per-doc stats describe exactly the rows written
+    val (addN, addH) = ContentHash.xorLong(added, ContentHash.TripleCols)
+    val s = own.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
+    assert(own.count() == 120 && s.getLong(0) == addN && s.getLong(1) == addH)
+    // compaction rewrites base + overlay rows into one file per dir
+    assert(GraphTables.compactSnapshot(spark, tmp, "d-B"))
+    assertOneFilePerDir(s"$tmp/data/snap=d-B")
+    assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "d-B"),
+      ContentHash.TripleCols) == ((n, h)))
+  }
+
+  test("entity-index append adds at most one file per ebucket") {
+    val tmp = Files.createTempDirectory("entidx1w").toString
+    // big enough that AQE keeps several tasks after the distinct
+    val linked = spark.range(0, 200000, 1, 4)
+      .select(concat(lit("ent-"), xxhash64(col("id") % 5000)).as("entity"),
+        concat(lit("doc-"), xxhash64(col("id"))).as("docId"))
+    def counts() = partFiles(s"$tmp/entidx").map { case (d, fs) => d -> fs.size }
+    graft.streaming.StreamingPipeline.appendEntIdx(spark, tmp, linked)
+    val first = counts()
+    assert(first.nonEmpty && first.values.forall(_ == 1), first.filter(_._2 != 1))
+    graft.streaming.StreamingPipeline.appendEntIdx(spark, tmp, linked)
+    val second = counts()
+    assert(second.forall { case (d, c) => c - first.getOrElse(d, 0) <= 1 },
+      second.filter { case (d, c) => c - first.getOrElse(d, 0) > 1 })
+    assert(spark.read.parquet(s"$tmp/entidx").count() ==
+      2 * linked.distinct().count())
   }
 }

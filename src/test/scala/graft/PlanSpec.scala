@@ -393,6 +393,30 @@ class PipelinePlanSpec extends SparkSpec {
     assert(triples.collect().toSet == local.collect().toSet)
   }
 
+  test("streaming micro-batch: one hash exchange before the kernel") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("mbatch").toString
+    graft.extract.Extract.corpus(spark, 50).write.mode("overwrite").parquet(tmp)
+    import spark.implicits._
+    val batch = spark.read.parquet(tmp).as[graft.core.SourceFileHashed]
+    // the survivor window (by docId) and the kernel's skew control share
+    // one exchange of the file rows; with and without an ingest-time
+    // column in the window order
+    for ((ds, ts) <- Seq(batch -> None,
+        batch.withColumn("ingestTs", lit(1L))
+          .as[graft.core.SourceFileHashed] -> Some("ingestTs"))) {
+      val m = graft.streaming.StreamingPipeline.batchMentions(ds, ts).toDF()
+      val p = m.queryExecution.executedPlan.toString
+      assert(exchanges(m) == 1,
+        s"expected 1 shuffle, got ${exchanges(m)}:\n${p.take(3000)}")
+    }
+    // every doc lands whole in one partition: the emit rule's contiguity
+    val spread = graft.streaming.StreamingPipeline.batchMentions(batch, None)
+      .toDF().select(col("docId"), spark_partition_id().as("p")).distinct()
+      .groupBy("docId").count().filter(col("count") > 1).count()
+    assert(spread == 0)
+  }
+
   test("runFromTable prunes the parquet scan to the needed columns") {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("scan").toString
