@@ -81,13 +81,6 @@ object StreamingPipeline {
     } finally { cached.unpersist(); () }
   }
 
-  /** Streaming ingest -> triples: foreachBatch runs the SAME batch
-    * pipeline stages per micro-batch (north-star §2.9 extension:
-    * "idempotent per-partition writes + a manifest table, foreachBatch
-    * if a streaming ingest is later attached"). Each micro-batch
-    * commits its triples and one lineage row via [[commitBatch]]
-    * (idempotent per batchId); the checkpointLocation dedups batches,
-    * the manifest gives auditability. */
   /** Doc-roster side table of the mention accumulation: one row per
     * (docId, batchId) the batch TOUCHED — including docs that yielded
     * ZERO mentions. Last-writer-wins at publish time is resolved on
@@ -141,7 +134,15 @@ object StreamingPipeline {
     graft.extract.Extract.mentionsFused(survivors, repartitionByDoc = false)
   }
 
-  /** Canon contract: each micro-batch canonicalizes against the STATIC
+  /** Streaming ingest -> triples: foreachBatch runs the SAME batch
+    * pipeline stages per micro-batch (north-star §2.9 extension:
+    * "idempotent per-partition writes + a manifest table, foreachBatch
+    * if a streaming ingest is later attached"). Each micro-batch
+    * commits its triples and one lineage row via [[commitBatch]]
+    * (idempotent per batchId); the checkpointLocation dedups batches,
+    * the manifest gives auditability.
+    *
+    * Canon contract: each micro-batch canonicalizes against the STATIC
     * dictionary map — a batch sees only its own files, so it cannot
     * mine corpus-wide alias edges; its per-batch triples may keep a
     * novel surface-form alias self-canonical where the batch
@@ -258,11 +259,9 @@ object StreamingPipeline {
     // fail loudly instead.
     require(graft.sources.Fs.exists(spark, outPath),
       s"no streamed accumulation at $outPath — nothing was ever committed")
-    if (!graft.sources.Fs.hasPartitions(spark, outPath, "batchId=")) {
-      import spark.implicits._
-      return graft.sources.GraphTables.write(
-        spark.emptyDataset[graft.core.Triple].toDF(), tablePath, snapshotId)
-    }
+    if (!graft.sources.Fs.hasPartitions(spark, outPath, "batchId="))
+      return graft.sources.GraphTables.write(emptyTriples(spark), tablePath,
+        snapshotId)
     val all = spark.read.parquet(outPath)
     val latest = all.groupBy(col("docId"))
       .agg(max(col("batchId")).as("batchId"))
@@ -298,29 +297,46 @@ object StreamingPipeline {
     * alias evidence, and falls back to this full path (plus a state
     * rewrite) when evidence is retracted. */
   def publishSnapshotDynamic(spark: SparkSession, mentionsPath: String,
-      tablePath: String, snapshotId: String): (Long, String) = {
+      tablePath: String, snapshotId: String): (Long, String) =
+    withFullPlan(spark, mentionsPath) { plan =>
+      graft.sources.GraphTables.write(
+        plan.fold(emptyTriples(spark))(_.triples), tablePath, snapshotId)
+    }
+
+  private def emptyTriples(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // every batch yielded zero LINKED mentions -> no batchId=
-    // partitions under mentionsPath (just _SUCCESS); publish a
-    // legitimate empty snapshot instead of failing schema inference
-    // (same probe shape as publishSnapshot / GraphTables.write). A
-    // MISSING dir means no stream ever accumulated here — fail loudly
-    // rather than mask a typo'd path with an empty publish.
+    spark.emptyDataset[graft.core.Triple].toDF()
+  }
+
+  /** A full dynamic publish's plan: each doc's latest touch, its linked
+    * mentions (persisted), their mined canon map and emitted triples. */
+  private final case class FullPlan(latest: DataFrame, linked: DataFrame,
+      canonMap: DataFrame, triples: DataFrame)
+
+  /** THE O(corpus) body of both full dynamic publishes, handed to `f`
+    * while the linked mentions stay persisted. None when every batch
+    * yielded zero LINKED mentions (no batchId= partitions, just
+    * _SUCCESS): the caller publishes a legitimate empty snapshot
+    * instead of failing schema inference. A MISSING dir means no stream
+    * ever accumulated here — fail loudly rather than mask a typo'd path
+    * with an empty publish. */
+  private def withFullPlan[T](spark: SparkSession, mentionsPath: String)(
+      f: Option[FullPlan] => T): T = {
     require(graft.sources.Fs.exists(spark, mentionsPath),
       s"no mention accumulation at $mentionsPath — nothing was ever " +
         "committed (triplesStream needs mentionsPath=Some(...))")
     if (!graft.sources.Fs.hasPartitions(spark, mentionsPath, "batchId="))
-      return graft.sources.GraphTables.write(
-        spark.emptyDataset[graft.core.Triple].toDF(), tablePath, snapshotId)
+      return f(None)
     val all = spark.read.parquet(mentionsPath)
-    val latest = latestTouches(spark, mentionsPath, all)
+    val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
     val linked = all.join(latest, Seq("docId", "batchId"))
       .drop("batchId").persist()
     try {
+      val canon = graft.Pipeline.Canon.mined(linked)
       // parquet-read accumulation: not doc-contiguous, grouped emit
-      val (_, triples) = graft.Pipeline.canonEmit(linked,
-        graft.Pipeline.Canon.mined(linked), docContiguous = false)
-      graft.sources.GraphTables.write(triples, tablePath, snapshotId)
+      val (_, triples) =
+        graft.Pipeline.canonEmit(linked, canon, docContiguous = false)
+      f(Some(FullPlan(latest, linked, canon.map, triples)))
     } finally { linked.unpersist(); () }
   }
 
@@ -564,14 +580,9 @@ object StreamingPipeline {
     val fs = stateP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(stateP)) return Seq.empty
     val manP = s"$tablePath/manifest"
-    val committed: Seq[String] =
-      if (!graft.sources.Fs.exists(spark, manP)) Seq.empty
-      else spark.read.parquet(manP)
-        .groupBy(col("snapshotId"))
-        .agg(max(col("committedAt")).as("committedAt"))
-        .orderBy(col("committedAt").desc, col("snapshotId").desc)
-        .select(col("snapshotId"))
-        .collect().map(_.getString(0)).toSeq
+    val committed =
+      if (!graft.sources.Fs.exists(spark, manP)) Seq.empty[String]
+      else graft.sources.GraphTables.committedIds(spark.read.parquet(manP))
     // chain-safe: a kept snapshot's state may be a delta CHAIN whose
     // base dirs belong to older snapshots — those must survive too
     // (the state-side twin of expireSnapshots' base-chain keep)
@@ -607,41 +618,42 @@ object StreamingPipeline {
     *  - `meta`   — lastBatchId: the highest accumulated batch folded
     *    into this snapshot (the next publish's delta floor).
     *
+    * THE state writer. Without `base` the state is FLAT: all three
+    * tables whole, each growing with the CORPUS (canon map ~
+    * vocabulary, pair refcounts ~ vocabulary, per-doc fingerprints ~
+    * doc count). With `base` it is a DELTA over base's state — the
+    * O(delta) publish-time state I/O an overlay snapshot needs: only
+    * the CHANGED rows land, plus the base pointer in meta, and readers
+    * resolve the chain last-writer-wins ([[readState]]). No tombstones
+    * can occur by construction: under the adds-only invariant canon
+    * labels never revert to self (components only merge, minima only
+    * decrease), a touched pair's refcount stays positive (zero forces
+    * the full fallback, which rewrites flat state), and docs are never
+    * deleted (a superseded doc is re-emitted, never dropped).
+    *
     * Ordering vs the snapshot commit: the per-doc fingerprints are
     * computed from the data READ BACK off the committed snapshot, so
     * state lands AFTER the manifest row. A crash in between leaves a
     * committed snapshot with no state — `meta` is written last, the
-    * reader probes for it, and a missing/partial state simply routes
-    * the next publish through the full fallback, which rewrites fresh
-    * state. Nothing ever reads a half-written state. */
+    * reader probes for it, and a missing/partial state (a half-written
+    * delta included) simply routes the next publish through the full
+    * fallback, which rewrites fresh state. Nothing ever reads a
+    * half-written state. */
   private def writeState(spark: SparkSession, statePath: String,
-      snapshotId: String, canon: DataFrame, pairs: DataFrame,
-      docs: DataFrame, lastBatchId: Long): Unit = {
-    import spark.implicits._
+      snapshotId: String, base: Option[String], canon: DataFrame,
+      pairs: DataFrame, docs: DataFrame, lastBatchId: Long): Unit = {
     val d = stateDir(statePath, snapshotId)
-    canon.write.mode("overwrite").parquet(s"$d/canon")
-    pairs.write.mode("overwrite").parquet(s"$d/pairs")
+    canon.select(col("entity"), col("canonical"))
+      .write.mode("overwrite").parquet(s"$d/canon")
+    pairs.select(col("k"), col("entity"),
+        col("ndocs").cast("long").as("ndocs"))
+      .write.mode("overwrite").parquet(s"$d/pairs")
     docs.select(col("docId"), col("batchId").cast("long").as("batchId"),
         col("nTriples").cast("long").as("nTriples"),
         col("h64").cast("long").as("h64"))
       .write.mode("overwrite").parquet(s"$d/docs")
-    writeMeta(spark, d, lastBatchId, None)
+    writeMeta(spark, d, lastBatchId, base)
   }
-
-  // ---- CHAINED canon state: O(delta) publish-time state I/O ---------
-  //
-  // writeState above rewrites three tables that all grow with the
-  // CORPUS (canon map ~ vocabulary, pair refcounts ~ vocabulary, per-
-  // doc fingerprints ~ doc count) — with overlay snapshots making the
-  // DATA write O(delta), these state rewrites were the last O(corpus)
-  // I/O term left in an incremental publish. A delta publish now
-  // writes only the CHANGED state rows plus a base pointer in meta,
-  // and readers resolve the chain last-writer-wins. No tombstones can
-  // occur by construction: under the adds-only invariant canon labels
-  // never revert to self (components only merge, minima only
-  // decrease), a touched pair's refcount stays positive (zero forces
-  // the full fallback, which rewrites full state), and docs are never
-  // deleted (a superseded doc is re-emitted, never dropped).
 
   private def writeMeta(spark: SparkSession, dir: String,
       lastBatchId: Long, baseState: Option[String]): Unit = {
@@ -665,6 +677,10 @@ object StreamingPipeline {
     (last, base)
   }
 
+  /** Most state dirs [[stateChain]] walks. The depth gate keeps a chain
+    * at `maxChain + 1` dirs, so `maxChain` must stay below it. */
+  private val MaxStateChain = 64
+
   /** Base-first chain of state snapshot ids ending at `snapshotId`.
     * None when any link is missing or the chain is corrupt (expired
     * base, crashed write, cycle, over-deep) — the caller then takes
@@ -674,10 +690,10 @@ object StreamingPipeline {
     * throwing here would wedge every later incremental publish on a
     * state the contract says is simply "unreadable as a chain tip". */
   private def stateChain(spark: SparkSession, statePath: String,
-      snapshotId: String, maxWalk: Int = 64): Option[Seq[String]] = {
+      snapshotId: String): Option[Seq[String]] = {
     val acc = scala.collection.mutable.ListBuffer.empty[String]
     var cur = snapshotId
-    while (acc.size < maxWalk) {
+    while (acc.size < MaxStateChain) {
       val d = stateDir(statePath, cur)
       if (!graft.sources.Fs.exists(spark, s"$d/meta")) return None
       acc.prepend(cur)
@@ -743,29 +759,6 @@ object StreamingPipeline {
         chain.size))
     }
 
-  /** Delta state write — the O(delta) twin of [[writeState]]: only the
-    * rows that changed vs `baseSnapshotId`'s state land on disk, plus
-    * the base pointer in meta. Same crash contract as writeState: meta
-    * lands LAST, so a half-written delta is unreadable as a chain tip
-    * and the next publish takes the full fallback. */
-  private def writeStateDelta(spark: SparkSession, statePath: String,
-      snapshotId: String, baseSnapshotId: String, canonDelta: DataFrame,
-      pairsDelta: DataFrame, docsDelta: DataFrame,
-      lastBatchId: Long): Unit = {
-    val d = stateDir(statePath, snapshotId)
-    canonDelta.select(col("entity"), col("canonical"))
-      .write.mode("overwrite").parquet(s"$d/canon")
-    pairsDelta.select(col("k"), col("entity"),
-        col("ndocs").cast("long").as("ndocs"))
-      .write.mode("overwrite").parquet(s"$d/pairs")
-    docsDelta.select(col("docId"),
-        col("batchId").cast("long").as("batchId"),
-        col("nTriples").cast("long").as("nTriples"),
-        col("h64").cast("long").as("h64"))
-      .write.mode("overwrite").parquet(s"$d/docs")
-    writeMeta(spark, d, lastBatchId, Some(baseSnapshotId))
-  }
-
   /** Flatten a snapshot's state chain in place: rewrite the three
     * tables fully resolved (table swaps first, meta pointer-flip
     * LAST). Crash-safe: a fully-resolved table read as a chain tip
@@ -804,58 +797,44 @@ object StreamingPipeline {
 
   /** FULL dynamic publish that also writes canon state — the
     * incremental path's base case (first publish) and its fallback
-    * (alias evidence retracted). Same stages as
-    * [[publishSnapshotDynamic]] plus the state write. */
+    * (alias evidence retracted): the [[withFullPlan]] body, committed
+    * through [[graft.sources.GraphTables.writeDelta]] with no base, then
+    * flat state whose per-doc fingerprints come from that commit's one
+    * read-back — the data ACTUALLY WRITTEN, so the next overlay
+    * publish's removal algebra describes the durable base, not a
+    * recomputation of the input plan. */
   private def fullDynamicPublish(spark: SparkSession, mentionsPath: String,
       tablePath: String, snapshotId: String, statePath: String,
-      note: String): DynPublish = {
+      note: String): DynPublish = withFullPlan(spark, mentionsPath) { plan =>
     import spark.implicits._
-    if (!graft.sources.Fs.hasPartitions(spark, mentionsPath, "batchId=")) {
-      rebuildEntIdx(spark, statePath,
-        Seq.empty[(String, String)].toDF("entity", "docId"))
-      val (n, h) = graft.sources.GraphTables.write(
-        spark.emptyDataset[graft.core.Triple].toDF(), tablePath, snapshotId)
-      // the canon state must carry the DICTIONARY forest even with no
-      // accumulated mentions: a later incremental publish seeds CC from
-      // the prior state's forest alone, and an empty forest would lose
-      // the static-dictionary merges (divergence vs the full path)
-      writeState(spark, statePath, snapshotId,
-        graft.canon.ConnectedComponents.canonicalMap(
-          graft.link.Linker.aliasDf(spark)),
-        Seq.empty[(String, String, Long)].toDF("k", "entity", "ndocs"),
-        Seq.empty[(String, Long, Long, Long)]
-          .toDF("docId", "batchId", "nTriples", "h64"), -1L)
-      return DynPublish(n, h, incremental = false, note)
+    // index rebuild strictly BEFORE the manifest commit (crash in
+    // between = over-coverage, benign)
+    rebuildEntIdx(spark, statePath, plan.fold(
+      Seq.empty[(String, String)].toDF("entity", "docId"))(_.linked))
+    val (n, h, own) = graft.sources.GraphTables.writeDelta(spark, tablePath,
+      snapshotId, None, plan.fold(emptyTriples(spark))(_.triples),
+      spark.emptyDataFrame, 0L, 0L)
+    plan match {
+      case Some(p) =>
+        val lastB = p.latest.agg(max(col("batchId")).cast("long")).head()
+        writeState(spark, statePath, snapshotId, None, p.canonMap,
+          graft.canon.IncrementalCanon.pairCounts(
+            graft.canon.IncrementalCanon.docPairs(p.linked)),
+          docsWithStats(p.latest, own),
+          if (lastB.isNullAt(0)) -1L else lastB.getLong(0))
+      case None =>
+        // the canon state must carry the DICTIONARY forest even with no
+        // accumulated mentions: a later incremental publish seeds CC
+        // from the prior state's forest alone, and an empty forest would
+        // lose the static-dictionary merges (divergence vs the full path)
+        writeState(spark, statePath, snapshotId, None,
+          graft.canon.ConnectedComponents.canonicalMap(
+            graft.link.Linker.aliasDf(spark)),
+          Seq.empty[(String, String, Long)].toDF("k", "entity", "ndocs"),
+          Seq.empty[(String, Long, Long, Long)]
+            .toDF("docId", "batchId", "nTriples", "h64"), -1L)
     }
-    val all = spark.read.parquet(mentionsPath)
-    val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
-    val linked = all.join(latest, Seq("docId", "batchId"))
-      .drop("batchId").persist()
-    try {
-      val canon = graft.Pipeline.Canon.mined(linked)
-      val (_, triples) =
-        graft.Pipeline.canonEmit(linked, canon, docContiguous = false)
-      val lastB = latest.agg(max(col("batchId")).cast("long")).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
-      // index rebuild strictly BEFORE the manifest commit (crash in
-      // between = over-coverage, benign)
-      rebuildEntIdx(spark, statePath, linked)
-      val (n, h) =
-        graft.sources.GraphTables.write(triples, tablePath, snapshotId)
-      // per-doc fingerprints of the data ACTUALLY WRITTEN (read back),
-      // so the next overlay publish's removal algebra describes the
-      // durable base, not a recomputation of the input plan
-      writeState(spark, statePath, snapshotId, canon.map,
-        graft.canon.IncrementalCanon.pairCounts(
-          graft.canon.IncrementalCanon.docPairs(linked)),
-        docsWithStats(latest, graft.sources.ContentHash.perDoc(
-          graft.sources.GraphTables.readOwnData(spark, tablePath,
-            snapshotId))),
-        lastB)
-      DynPublish(n, h, incremental = false, note)
-    } finally { linked.unpersist(); () }
+    DynPublish(n, h, incremental = false, note)
   }
 
   /** Incremental dynamic-canon publish: identical OUTPUT to
@@ -891,13 +870,14 @@ object StreamingPipeline {
     *
     * The publish STATE rides the same pattern: canon map, pair
     * refcounts, and per-doc fingerprints all grow with the corpus, so
-    * rewriting them per publish ([[writeState]]) was the last
-    * O(corpus) I/O term. An overlay publish writes only the CHANGED
-    * state rows with a base pointer ([[writeStateDelta]]), readers
-    * resolve last-writer-wins ([[readState]] — sound without
-    * tombstones because adds-only canon labels never revert, touched
-    * refcounts stay positive, and docs are never deleted), and the
-    * same `maxChain` gate materializes state and data together.
+    * rewriting them flat per publish was the last O(corpus) I/O term.
+    * An overlay publish writes only the CHANGED state rows with a base
+    * pointer ([[writeState]] with a base), readers resolve
+    * last-writer-wins ([[readState]] — sound without tombstones
+    * because adds-only canon labels never revert, touched refcounts
+    * stay positive, and docs are never deleted), and the same
+    * `maxChain` gate materializes state and data together. `maxChain`
+    * must stay below the state chain the reader walks (64 dirs).
     *
     * Falls back to the full recompute — same output, corpus-sized
     * cost — when (a) no prior committed snapshot or no state for it
@@ -909,9 +889,11 @@ object StreamingPipeline {
   def publishSnapshotDynamicIncremental(spark: SparkSession,
       mentionsPath: String, tablePath: String, snapshotId: String,
       statePath: String, maxChain: Int = 8): DynPublish = {
-    import spark.implicits._
     import graft.canon.IncrementalCanon
     import graft.sources.{Fs, GraphTables}
+    require(maxChain < MaxStateChain, s"maxChain $maxChain: chains of " +
+      s"${maxChain + 1} state dirs exceed the $MaxStateChain the reader " +
+      "walks, so every publish past that depth would go full")
     require(Fs.exists(spark, mentionsPath),
       s"no mention accumulation at $mentionsPath — nothing was ever " +
         "committed (triplesStream needs mentionsPath=Some(...))")
@@ -965,32 +947,47 @@ object StreamingPipeline {
       case r if r.isNullAt(0) => lastB
       case r => math.max(lastB, r.getLong(0))
     }
+    val growChain = priorDepth + 1 <= maxChain
+    // THE snapshot-plus-state tail of both branches below. Below the
+    // depth gate: an OVERLAY over the prior snapshot holding only the
+    // re-emitted docs' triples, and a state DELTA (`canonDelta`,
+    // `pairsDelta`, the re-emitted docs' fingerprints). At it: the
+    // resolved content MATERIALIZED as a full snapshot with flat state
+    // — data and state chains flatten together. Either way every
+    // fingerprint written comes from the commit's one read-back.
+    def commit(reTriples: DataFrame, reDocs: DataFrame, removedRows: Long,
+        removedHash: Long, reTouches: DataFrame, canon: DataFrame,
+        canonDelta: DataFrame, pairs: DataFrame, pairsDelta: DataFrame,
+        lastBatchId: Long): (Long, String) = {
+      val base = if (growChain) prior else None
+      val data =
+        if (growChain) reTriples
+        else GraphTables.readSnapshot(spark, tablePath, prior.get)
+          .join(reDocs, Seq("docId"), "left_anti")
+          .select(col("subj"), col("pred"), col("obj"), col("docId"),
+            col("score"))
+          .unionByName(reTriples)
+      val (n, h, own) = GraphTables.writeDelta(spark, tablePath, snapshotId,
+        base, data, reDocs, removedRows, removedHash)
+      val touches =
+        if (growChain) reTouches
+        else priorDocs.join(reDocs, Seq("docId"), "left_anti")
+          .select(col("docId"), col("batchId")).unionByName(reTouches)
+      writeState(spark, statePath, snapshotId, base,
+        if (growChain) canonDelta else canon,
+        if (growChain) pairsDelta else pairs,
+        docsWithStats(touches, own), lastBatchId)
+      (n, h)
+    }
     if (deltaLatest.isEmpty) {
-      // nothing ingested since the prior publish: the new snapshot is
-      // a copy-forward of the prior one, state included — a pure
-      // POINTER overlay (zero rows written) below the depth gate, a
-      // materializing rewrite at it
-      val (n, h) =
-        if (priorDepth + 1 <= maxChain) {
-          // pure pointer forward in DATA and in STATE — an idle stream
-          // publishing on a schedule costs O(1), not O(corpus state)
-          val (n0, h0, _) = GraphTables.writeDelta(spark, tablePath,
-            snapshotId, prior.get,
-            spark.emptyDataset[graft.core.Triple].toDF(),
-            priorDocs.select(col("docId")).limit(0), 0L, 0L)
-          writeStateDelta(spark, statePath, snapshotId, prior.get,
-            priorCanon.limit(0), priorPairs.limit(0),
-            priorDocs.limit(0), lastB)
-          (n0, h0)
-        } else {
-          val kept = GraphTables.readSnapshot(spark, tablePath, prior.get)
-            .select(col("subj"), col("pred"), col("obj"), col("docId"),
-              col("score"))
-          val r = GraphTables.write(kept, tablePath, snapshotId)
-          writeState(spark, statePath, snapshotId, priorCanon, priorPairs,
-            priorDocs, lastB)
-          r
-        }
+      // nothing ingested since the prior publish: a copy-forward of the
+      // prior snapshot, state included — a pure POINTER forward in data
+      // and in state below the depth gate (an idle stream publishing on
+      // a schedule costs O(1), not O(corpus state)), a materializing
+      // rewrite at it
+      val (n, h) = commit(emptyTriples(spark),
+        deltaLatest.select(col("docId")), 0L, 0L, deltaLatest, priorCanon,
+        priorCanon.limit(0), priorPairs, priorPairs.limit(0), lastB)
       return DynPublish(n, h, incremental = true, "empty delta")
     }
     val deltaLinked = deltaM
@@ -1119,50 +1116,16 @@ object StreamingPipeline {
         .agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
       val removedRows = if (remRow.isNullAt(0)) 0L else remRow.getLong(0)
       val removedHash = if (remRow.isNullAt(1)) 0L else remRow.getLong(1)
-      val growChain = priorDepth + 1 <= maxChain
-      // re-emitted docs' fingerprints come from the data actually
-      // written: an overlay hands back the stats of its one read-back
-      // (only the delta rows), a materialized snapshot is re-read whole
-      val (n, h, mode, ownStats) =
-        if (growChain)
-          GraphTables.writeDelta(spark, tablePath, snapshotId, prior.get,
-            newTriples, reDocs, removedRows, removedHash) match {
-            case (n0, h0, st) => (n0, h0, "overlay", st)
-          }
-        else {
-          val kept = GraphTables.readSnapshot(spark, tablePath, prior.get)
-            .select(col("subj"), col("pred"), col("obj"), col("docId"),
-              col("score"))
-            .join(reDocs, Seq("docId"), "left_anti")
-            .select(col("subj"), col("pred"), col("obj"), col("docId"),
-              col("score"))
-          GraphTables.write(kept.unionByName(newTriples),
-            tablePath, snapshotId) match {
-            case (n0, h0) =>
-              (n0, h0, s"materialized at chain depth $priorDepth",
-                graft.sources.ContentHash.perDoc(
-                  GraphTables.readOwnData(spark, tablePath, snapshotId)))
-          }
-        }
       // delta docs ride their new batchId, affected docs keep their
-      // prior one
-      val touchedBatch = priorDocs
-        .join(affected, Seq("docId"), "left_semi")
-        .select(col("docId"), col("batchId"))
-        .unionByName(deltaLatest)
-      val reStats = docsWithStats(touchedBatch, ownStats)
-      if (growChain)
-        // O(delta) state: only the relabeled entities' canon rows, the
-        // touched pair refcounts, and the re-emitted docs' fingerprints
-        writeStateDelta(spark, statePath, snapshotId, prior.get,
-          newCanon.join(changed, Seq("entity"), "left_semi"),
-          pd.changed, reStats, newLastB)
-      else
-        writeState(spark, statePath, snapshotId, newCanon, pd.merged,
-          priorDocs.join(reDocs, Seq("docId"), "left_anti")
-            .select(col("docId"), col("batchId"), col("nTriples"),
-              col("h64"))
-            .unionByName(reStats), newLastB)
+      // prior one; the state delta is only the relabeled entities' canon
+      // rows and the touched pair refcounts
+      val (n, h) = commit(newTriples, reDocs, removedRows, removedHash,
+        priorDocs.join(affected, Seq("docId"), "left_semi")
+          .select(col("docId"), col("batchId")).unionByName(deltaLatest),
+        newCanon, newCanon.join(changed, Seq("entity"), "left_semi"),
+        pd.merged, pd.changed, newLastB)
+      val mode =
+        if (growChain) "overlay" else s"materialized at chain depth $priorDepth"
       DynPublish(n, h, incremental = true,
         s"incremental (adds-only alias delta, $mode)")
     } finally { deltaLinked.unpersist(); () }

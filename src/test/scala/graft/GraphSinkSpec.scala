@@ -218,7 +218,7 @@ class GraphSinkSpec extends SparkSpec {
     // publish state supplies from per-doc fingerprints)
     val (remN, remH) = ContentHash.xorLong(
       base.filter(col("docId").isin("d2", "d4")), HashCols)
-    val (nB, hB, _) = GraphTables.writeDelta(spark, tmp, "ov-B", "ov-A",
+    val (nB, hB, _) = GraphTables.writeDelta(spark, tmp, "ov-B", Some("ov-A"),
       rows(("b", "w", "d2"), ("e", "q", "d4"), ("e", "r", "d4")),
       Seq("d2", "d4").toDF("docId"), remN, remH)
     assert(nB == 6)
@@ -238,7 +238,7 @@ class GraphSinkSpec extends SparkSpec {
     assert(GraphTables.entityEdges(spark, tmp, "calls", "e").count() == 2)
 
     // pointer overlay C (empty delta): zero rows written, identical row
-    val (nC, hC, _) = GraphTables.writeDelta(spark, tmp, "ov-C", "ov-B",
+    val (nC, hC, _) = GraphTables.writeDelta(spark, tmp, "ov-C", Some("ov-B"),
       base.limit(0), base.select(col("docId")).limit(0), 0L, 0L)
     assert((nC, hC) == ((nB, hB)))
     assert(GraphTables.readOwnData(spark, tmp, "ov-C").count() == 0)
@@ -248,7 +248,7 @@ class GraphSinkSpec extends SparkSpec {
     // removal-only overlay D: d3's content now yields no triples
     val (r3n, r3h) = ContentHash.xorLong(
       base.filter(col("docId") === "d3"), HashCols)
-    val (nD, _, _) = GraphTables.writeDelta(spark, tmp, "ov-D", "ov-C",
+    val (nD, _, _) = GraphTables.writeDelta(spark, tmp, "ov-D", Some("ov-C"),
       base.limit(0), Seq("d3").toDF("docId"), r3n, r3h)
     assert(nD == 5 && GraphTables.chainDepth(spark, tmp, "ov-D") == 3)
     assert(!tset("ov-D").exists(_.contains("d3")))
@@ -261,7 +261,7 @@ class GraphSinkSpec extends SparkSpec {
 
     // an overlay on an uncommitted base fails loudly
     intercept[IllegalStateException] {
-      GraphTables.writeDelta(spark, tmp, "ov-X", "no-such-base",
+      GraphTables.writeDelta(spark, tmp, "ov-X", Some("no-such-base"),
         base.limit(0), base.select(col("docId")).limit(0), 0L, 0L)
     }
 
@@ -291,7 +291,7 @@ class GraphSinkSpec extends SparkSpec {
     GraphTables.write(rows(("a", "x", "d1"), ("b", "y", "d2")), tmp, "r-A")
     val (rN, rH) = graft.sources.ContentHash.xorLong(
       rows(("b", "y", "d2")), Seq("subj", "pred", "obj", "docId"))
-    def pub() = GraphTables.writeDelta(spark, tmp, "r-B", "r-A",
+    def pub() = GraphTables.writeDelta(spark, tmp, "r-B", Some("r-A"),
       rows(("b", "z", "d2")), Seq("d2").toDF("docId"), rN, rH) match {
       case (n, h, _) => (n, h)
     }
@@ -307,7 +307,7 @@ class GraphSinkSpec extends SparkSpec {
     // removal stats that cannot describe the base (more rows removed
     // than it has) must fail the publish, not commit a negative count
     intercept[IllegalArgumentException] {
-      GraphTables.writeDelta(spark, tmp, "r-X", "r-A",
+      GraphTables.writeDelta(spark, tmp, "r-X", Some("r-A"),
         rows(), Seq("d1").toDF("docId"), 999L, 0L)
     }
     // the failed publish left no manifest row
@@ -327,9 +327,9 @@ class GraphSinkSpec extends SparkSpec {
     GraphTables.write(base, table, "m-A")
     val (rN, rH) = ContentHash.xorLong(
       base.filter(col("docId") === "d2"), Seq("subj", "pred", "obj", "docId"))
-    GraphTables.writeDelta(spark, table, "m-B", "m-A",
+    GraphTables.writeDelta(spark, table, "m-B", Some("m-A"),
       rows(("b", "z", "d2")), Seq("d2").toDF("docId"), rN, rH)
-    GraphTables.writeDelta(spark, table, "m-C", "m-B",
+    GraphTables.writeDelta(spark, table, "m-C", Some("m-B"),
       rows(("c", "w", "d3")), Seq("d3").toDF("docId"), 0L, 0L)
     // per-snapshot state dirs as the publishes would leave them
     Seq("m-A", "m-B", "m-C").foreach { id =>
@@ -455,7 +455,7 @@ class GraphSinkSpec extends SparkSpec {
     val added = spreadTriples(120, "a")
     GraphTables.write(base, tmp, "d-A")
     // docs new to the base: nothing removed
-    val (n, h, own) = GraphTables.writeDelta(spark, tmp, "d-B", "d-A",
+    val (n, h, own) = GraphTables.writeDelta(spark, tmp, "d-B", Some("d-A"),
       added, added.select(col("docId")).distinct(), 0L, 0L)
     assertOneFilePerDir(s"$tmp/data/snap=d-B")
     val all = base.unionByName(added)
@@ -469,6 +469,39 @@ class GraphSinkSpec extends SparkSpec {
     assertOneFilePerDir(s"$tmp/data/snap=d-B")
     assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "d-B"),
       ContentHash.TripleCols) == ((n, h)))
+  }
+
+  test("writeDelta with no base commits a full snapshot from its one read-back") {
+    import graft.sources.ContentHash
+    val tmp = Files.createTempDirectory("graphfull").toString
+    val t = spreadTriples(120, "f")
+    val (n, h, own) = GraphTables.writeDelta(spark, tmp, "f-A", None, t,
+      spark.emptyDataFrame, 0L, 0L)
+    // the same (rows, hash) write commits for the same rows
+    assert((n, h) == ContentHash.hex(t, ContentHash.TripleCols))
+    assert((n, h) == GraphTables.write(t, s"$tmp/viaWrite", "w-A"))
+    val row = spark.read.parquet(s"$tmp/manifest")
+      .filter(col("snapshotId") === "f-A")
+      .select("rowCount", "contentHash").head()
+    assert((row.getLong(0), row.getString(1)) == ((n, h)))
+    // a full snapshot: no sidecar, depth 0, one file per dir
+    assert(GraphTables.baseOf(spark, tmp, "f-A").isEmpty)
+    assert(GraphTables.chainDepth(spark, tmp, "f-A") == 0)
+    assertOneFilePerDir(s"$tmp/data/snap=f-A")
+    // the per-doc stats describe exactly the rows written
+    val s = own.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
+    assert(own.count() == 120 && s.getLong(0) == n &&
+      "%016x".format(s.getLong(1)) == h)
+    // an overlay can build on it
+    val (nB, _, _) = GraphTables.writeDelta(spark, tmp, "f-B", Some("f-A"),
+      spreadTriples(10, "g"), spark.emptyDataFrame.select(lit("").as("docId"))
+        .limit(0), 0L, 0L)
+    assert(nB == n + 60 && GraphTables.read(spark, tmp).count() == nB)
+    // an empty full publish commits (0, zero hash) and reads back empty
+    val (n0, h0, own0) = GraphTables.writeDelta(spark, tmp, "f-0", None,
+      t.limit(0), spark.emptyDataFrame, 0L, 0L)
+    assert((n0, h0) == ((0L, "%016x".format(0L))) && own0.isEmpty)
+    assert(GraphTables.readSnapshot(spark, tmp, "f-0").isEmpty)
   }
 
   test("entity-index append adds at most one file per ebucket") {

@@ -675,6 +675,112 @@ class StreamingSpec extends SparkSpec {
     scenario("kept", keepPublished = true)
   }
 
+  /** A streamed mention accumulation published incrementally: `land`
+    * appends source files and runs the stream over them. */
+  private final class Accumulation(name: String) {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory(name).toString
+    val src = s"$tmp/src"; val ments = s"$tmp/ments"
+    val table = s"$tmp/graph"; val state = s"$tmp/state"
+    def land(files: org.apache.spark.sql.Dataset[graft.core.SourceFileHashed]): Unit = {
+      files.write.mode("append").parquet(src)
+      val q = StreamingPipeline.triplesStream(
+        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+          .as[graft.core.SourceFileHashed],
+        s"$tmp/out", s"$tmp/man", s"$tmp/ckpt", mentionsPath = Some(ments))
+      q.processAllAvailable(); q.stop()
+    }
+    def landFile(id: Long): Unit =
+      land(Seq(graft.core.CorpusGen.file(id).source).toDS())
+    def pub(id: String, maxChain: Int = 8) = StreamingPipeline
+      .publishSnapshotDynamicIncremental(spark, ments, table, id, state,
+        maxChain)
+  }
+
+  test("a maxChain deeper than the state reader walks fails loudly") {
+    val a = new Accumulation("stream-maxchain")
+    a.land(Extract.corpus(spark, 4))
+    // a 64-deep chain keeps 65 state dirs; the reader walks 64, so the
+    // next publish would silently fall back to a full recompute
+    val e = intercept[IllegalArgumentException](a.pub("m1", maxChain = 64))
+    assert(e.getMessage.contains("maxChain 64"), e.getMessage)
+    assert(!graft.sources.Fs.exists(spark, s"${a.table}/manifest"),
+      "a rejected publish must commit nothing")
+    assert(a.pub("m1", maxChain = 63).rows > 0)
+  }
+
+  test("full and materializing publishes read their new snapshot back once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import scala.jdk.CollectionConverters._
+    val a = new Accumulation("stream-readonce")
+    a.land(Extract.corpus(spark, 6))
+    // the scan roots of every executed plan, AQE stages and subqueries
+    // included
+    object Plans extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        scans.add(Plans.collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        }.flatten)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // listener delivery is async — drain the bus (private[spark], public
+    // in bytecode) before and after each counted publish
+    def drain(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+        .invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      ()
+    }
+    def executionsReading(id: String)(publish: => Unit): Int = {
+      drain(); scans.clear(); publish; drain()
+      scans.asScala.count(_.exists(_.endsWith(s"/data/snap=$id")))
+    }
+    spark.listenerManager.register(l)
+    try {
+      val full = executionsReading("r1") {
+        assert(!a.pub("r1").incremental)
+      }
+      assert(full == 1, s"first (full) publish read its snapshot in $full executions")
+      a.landFile(6)
+      val mat = executionsReading("r2") {
+        val p = a.pub("r2", maxChain = 0)
+        assert(p.note.contains("materialized"), p.note)
+      }
+      assert(mat == 1, s"materializing publish read its snapshot in $mat executions")
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("canon-state doc fingerprints equal the committed data (full, materialized, empty delta)") {
+    import graft.sources.{ContentHash, GraphTables}
+    val a = new Accumulation("stream-statefp")
+    a.land(Extract.corpus(spark, 6))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("docId", "nTriples", "h64").collect().map(_.toSeq).toSet
+    def stateMatchesData(id: String): Unit = {
+      assert(GraphTables.baseOf(spark, a.table, id).isEmpty)
+      val docs = spark.read.parquet(s"${a.state}/snap=$id/docs")
+      val data = rows(ContentHash.perDoc(
+        GraphTables.readOwnData(spark, a.table, id)))
+      assert(data.nonEmpty && rows(docs.filter(col("nTriples") > 0)) == data,
+        s"$id: state docs drifted from the committed data")
+      assert(docs.filter(col("nTriples") === 0 && col("h64") =!= 0).isEmpty)
+    }
+    assert(!a.pub("f1").incremental)
+    stateMatchesData("f1")
+    a.landFile(6)
+    val p2 = a.pub("f2", maxChain = 0)
+    assert(p2.note.contains("materialized"), p2.note)
+    stateMatchesData("f2")
+    val p3 = a.pub("f3", maxChain = 0)
+    assert(p3.note.contains("empty delta"), p3.note)
+    stateMatchesData("f3")
+  }
+
   test("dynamic publish of a LEGACY accumulation (no/partial roster) keeps every doc") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("stream-legacy").toString
