@@ -18,12 +18,14 @@ import org.apache.spark.sql.functions._
   *  - the prior snapshot's canon map, which IS a star forest (every
   *    entity points at its component minimum).
   *
-  * An ingest delta then updates canonicalization by seeding CC with
-  * the prior forest plus one connecting edge per ADDED pair
-  * ([[seededCanonMap]]) — a mostly-converged input that fixpoints in
-  * ~2 rounds (or the driver union-find under the size gate) — and the
-  * publish re-emits only docs whose mentions touch entities whose
-  * label CHANGED ([[changedEntities]]).
+  * An ingest delta updates both ON THE DRIVER, from delta-sized rows
+  * the publish collects: [[mergePairs]] merges the refcounts, [[seed]]
+  * connects each ADDED pair to its key's hub, and [[relabel]] runs
+  * [[UnionFind]] over the prior labels of the seed edges — a merged
+  * component is labeled by the least of its prior labels, so the
+  * relabeling maps prior ROOTS to new ones, and every entity a root
+  * labels moves with it. Past [[ConnectedComponents.DriverSolveMaxEdges]]
+  * collected rows the publish recomputes in full ([[oversize]]).
   *
   * Soundness: under pure alias ADDS the seeded graph has exactly the
   * full graph's components — the forest preserves every prior
@@ -43,122 +45,121 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalCanon {
 
-  /** Per-doc distinct alias pairs (k, entity, docId) of a linked
-    * mention table — the unit the refcounts count. Must match
-    * [[AliasMining.mentionAliasEdges]]'s pair definition exactly
-    * (identifier mentions, normalized surface key), or the
-    * incremental edge set drifts from the mined one. */
-  def docPairs(linked: DataFrame): DataFrame =
+  /** An alias pair (normalized surface key, entity). */
+  type Pair = (String, String)
+
+  /** Alias pairs (k, entity, docId) of a linked mention table, one row
+    * per mention. Must match [[AliasMining.mentionAliasEdges]]'s pair
+    * definition exactly (identifier mentions, normalized surface key),
+    * or the incremental edge set drifts from the mined one. */
+  def mentionPairs(linked: DataFrame): DataFrame =
     linked.filter(col("entType") === "identifier")
       .select(AliasMining.normKey(col("surface")).as("k"), col("entity"),
         col("docId"))
-      .distinct()
+
+  /** Per-doc distinct alias pairs (k, entity, docId) — the unit the
+    * refcounts count. */
+  def docPairs(linked: DataFrame): DataFrame = mentionPairs(linked).distinct()
 
   /** Refcounts (k, entity, ndocs) over per-doc pairs. */
   def pairCounts(pairs: DataFrame): DataFrame =
     pairs.groupBy(col("k"), col("entity"))
       .agg(count(lit(1)).as("ndocs"))
 
-  final case class PairDelta(
-      merged: DataFrame,  // (k, entity, ndocs) — the new state, ndocs > 0
-      added: DataFrame,   // (k, entity) — pairs absent before, present now
-      changed: DataFrame, // (k, entity, ndocs) — rows whose count CHANGED
-                          // (new or re-counted): merged == prior overridden
-                          // by changed, which is what lets the caller write
-                          // a delta-sized state instead of `merged`
-      removedCount: Long) // pairs whose evidence vanished (>0 => fallback)
+  /** (k, entity, inc, dec): distinct docs per alias pair among the pair
+    * rows `inc` (newly ingested doc VERSIONS) and `dec` (the superseded
+    * OLD versions of re-ingested docs). Set sizes count the docs behind
+    * one shuffle; a distinct count would plan two. */
+  def deltaCounts(inc: DataFrame, dec: DataFrame): DataFrame = {
+    def docs(side: String) =
+      size(collect_set(when(col("side") === side, col("docId")))).cast("long")
+    inc.select(col("k"), col("entity"), col("docId"), lit("inc").as("side"))
+      .unionByName(dec.select(col("k"), col("entity"), col("docId"),
+        lit("dec").as("side")))
+      .groupBy(col("k"), col("entity"))
+      .agg(docs("inc").as("inc"), docs("dec").as("dec"))
+  }
 
-  /** Merge prior refcounts with increments (per-doc pairs of newly
-    * ingested doc VERSIONS) and decrements (per-doc pairs of the
-    * superseded OLD versions of re-ingested docs). A net count below
-    * zero means the caller decremented something never counted —
-    * corrupted state — and fails loudly. */
-  def mergePairs(prior: DataFrame, incPairs: DataFrame,
-      decPairs: DataFrame): PairDelta = {
-    val i = pairCounts(incPairs).withColumnRenamed("ndocs", "inc")
-    val d = pairCounts(decPairs).withColumnRenamed("ndocs", "dec")
-    val key = Seq("k", "entity")
-    // materialize once: read for the corruption check, the removed
-    // count, the added set, and the new state
-    val merged0 = prior.withColumnRenamed("ndocs", "prior_n")
-      .join(i, key, "full_outer")
-      .join(d, key, "full_outer")
-      .select(col("k"), col("entity"),
-        coalesce(col("prior_n"), lit(0L)).as("prior_n"),
-        (coalesce(col("prior_n"), lit(0L)) + coalesce(col("inc"), lit(0L))
-          - coalesce(col("dec"), lit(0L))).as("ndocs"))
-      .localCheckpoint()
-    val r = merged0.agg(
-      sum(when(col("ndocs") < 0, 1L).otherwise(0L)),
-      sum(when(col("prior_n") > 0 && col("ndocs") <= 0, 1L).otherwise(0L)))
-      .head()
-    val negative = if (r.isNullAt(0)) 0L else r.getLong(0)
-    require(negative == 0L,
+  /** `counts(p) = (prior ndocs, new ndocs)` for every pair merged. */
+  final case class PairDelta(counts: Map[Pair, (Long, Long)]) {
+    def merged: Map[Pair, Long] = counts.collect { case (p, (_, n)) if n > 0 => p -> n }
+    /** Pairs absent before, present now. */
+    def added: Set[Pair] =
+      counts.iterator.collect { case (p, (0L, n)) if n > 0 => p }.toSet
+    /** Rows whose count changed: the prior state overridden by these is
+      * the new state, so the caller writes a delta-sized state. */
+    def changed: Map[Pair, Long] =
+      counts.collect { case (p, (o, n)) if n > 0 && n != o => p -> n }
+    /** Pairs whose evidence vanished (> 0 => full fallback). */
+    def removedCount: Long = counts.count { case (_, (o, n)) => o > 0 && n <= 0 }.toLong
+  }
+
+  /** Merge prior refcount rows `(k, entity, ndocs)` — at least every
+    * prior row of the touched pairs — with [[deltaCounts]] rows. A net
+    * count below zero means the caller decremented something never
+    * counted — corrupted state — and fails loudly. */
+  def mergePairs(prior: Iterable[(String, String, Long)],
+      delta: Iterable[(String, String, Long, Long)]): PairDelta = {
+    val before = prior.iterator.map(r => (r._1, r._2) -> r._3).toMap
+    val d = delta.iterator.map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
+    val counts = (before.keySet ++ d.keySet).iterator.map { p =>
+      val o = before.getOrElse(p, 0L)
+      val (inc, dec) = d.getOrElse(p, (0L, 0L))
+      p -> ((o, o + inc - dec))
+    }.toMap
+    val negative = counts.count(_._2._2 < 0)
+    require(negative == 0,
       s"pair-refcount state corrupted: $negative pairs went negative " +
         "(a decrement was never counted — state and accumulation diverged)")
-    PairDelta(
-      merged = merged0.filter(col("ndocs") > 0)
-        .select(col("k"), col("entity"), col("ndocs")),
-      added = merged0.filter(col("prior_n") === 0 && col("ndocs") > 0)
-        .select(col("k"), col("entity")),
-      changed = merged0
-        .filter(col("ndocs") > 0 && col("ndocs") =!= col("prior_n"))
-        .select(col("k"), col("entity"), col("ndocs")),
-      removedCount = if (r.isNullAt(1)) 0L else r.getLong(1))
+    PairDelta(counts)
   }
 
-  /** New canon map from the prior snapshot's map (a star forest) plus
-    * connecting edges for the ADDED pairs — valid ONLY when
-    * [[mergePairs]] reported zero removals. Each added pair's entity
-    * gets one edge to its key's hub: the key's prior minimum entity
-    * (already inside that key's prior component) or, for a novel key,
-    * the minimum ADDED entity of the key. CC over forest+edges then
-    * relabels; entities of neither table keep themselves (the same
-    * singles fallback as [[ConnectedComponents.canonicalMap]]). */
-  def seededCanonMap(priorCanon: DataFrame, priorPairs: DataFrame,
-      added: DataFrame): DataFrame = {
-    // uniform provably-non-null union children (the Catalyst 4.1
-    // constraint-rewrite bug — see ConnectedComponents.canonicalMap)
-    def nn(df: DataFrame): DataFrame = df.select(
-      coalesce(col("src"), lit("")).as("src"),
-      coalesce(col("dst"), lit("")).as("dst"))
-    val forest = priorCanon.filter(col("entity") =!= col("canonical"))
-      .select(col("canonical").as("src"), col("entity").as("dst"))
-    val hubs = priorPairs.groupBy(col("k")).agg(min(col("entity")).as("hub"))
-    val newHubs = added.groupBy(col("k")).agg(min(col("entity")).as("nhub"))
-    val edges = added
-      .join(hubs, Seq("k"), "left")
-      .join(newHubs, Seq("k"), "left")
-      .select(coalesce(col("hub"), col("nhub")).as("src"),
-        col("entity").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      // read by the node-set union below AND the CC loop
-      .localCheckpoint()
-    // node set: prior map entities, added entities, AND the edge
-    // endpoints — a hub can be a pair entity that was a SINGLETON for
-    // its key before (never an edge endpoint, so absent from the prior
-    // map); dropping it from the nodes would leave it self-canonical
-    // while its new neighbors relabel to the component minimum
-    val nodes = priorCanon.select(col("entity").as("node"))
-      .union(added.select(col("entity").as("node")))
-      .union(edges.select(col("src").as("node")))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-    val cc = ConnectedComponents.run(nn(forest).union(nn(edges)))
-    nodes.join(cc, Seq("node"), "left")
-      .select(col("node").as("entity"),
-        coalesce(col("component"), col("node")).as("canonical"))
+  /** Seed edges of the added pairs and the nodes they touch. */
+  final case class Seed(edges: Seq[(String, String)], nodes: Set[String])
+
+  /** Valid ONLY when [[mergePairs]] reported zero removals. Each added
+    * pair's entity gets one edge to its key's hub: the key's prior
+    * minimum entity (`priorPairs` must hold EVERY prior pair of each
+    * added key) or, for a novel key, its minimum ADDED entity. The
+    * nodes are the added entities and the edge endpoints — a hub can
+    * be a pair entity that was a SINGLETON for its key (absent from the
+    * prior map), and it must relabel with its new neighbors. */
+  def seed(priorPairs: Iterable[Pair], added: Set[Pair]): Seed = {
+    def hubs(ps: Iterable[Pair]) = ps.groupMapReduce(_._1)(_._2)((a, b) =>
+      if (a < b) a else b)
+    val (priorHub, newHub) = (hubs(priorPairs), hubs(added))
+    val edges = added.toSeq.flatMap { case (k, e) =>
+      val h = priorHub.getOrElse(k, newHub(k))
+      if (h == e) None else Some(h -> e)
+    }
+    Seed(edges, added.map(_._2) ++ edges.flatMap { case (a, b) => Seq(a, b) })
   }
 
-  /** Entities whose canonical label differs between two maps (an
-    * entity absent from a map is self-canonical there — the same
-    * fallback rule [[graft.Pipeline.canonicalize]] applies). Only
-    * docs mentioning these entities can have changed triples. */
-  def changedEntities(newMap: DataFrame, oldMap: DataFrame): DataFrame =
-    newMap
-      .join(oldMap.withColumnRenamed("canonical", "old_canonical"),
-        Seq("entity"), "full_outer")
-      .filter(coalesce(col("canonical"), col("entity")) =!=
-        coalesce(col("old_canonical"), col("entity")))
-      .select(col("entity"))
+  /** `roots`: prior label -> new label, for each label that changed;
+    * `fresh`: the label of each seed node absent from the prior map,
+    * self-labeled ones included (a full map lists every node). */
+  final case class Relabel(roots: Map[String, String], fresh: Map[String, String]) {
+    /** The new canon map, from the full `prior` map. */
+    def apply(prior: Map[String, String]): Map[String, String] =
+      prior.map { case (e, c) => e -> roots.getOrElse(c, c) } ++ fresh
+  }
+
+  /** Relabel by `s`, given `prior`: the prior label of each seed node
+    * that has one. Union-find over the edges' prior labels gives the
+    * labels CC over the prior forest plus the seed edges converges to. */
+  def relabel(s: Seed, prior: Map[String, String]): Relabel = {
+    def label(x: String) = prior.getOrElse(x, x)
+    val root = UnionFind.minLabels(
+      s.edges.iterator.map { case (a, b) => (label(a), label(b)) })
+    Relabel(root.filter { case (r, l) => r != l }.toMap,
+      s.nodes.filterNot(prior.contains).map(x => x -> root.getOrElse(x, x)).toMap)
+  }
+
+  /** None while `rows` collected rows fit the driver bound, else the
+    * note of the full publish the overlay algebra takes instead. */
+  def oversize(rows: Long): Option[String] =
+    if (rows <= ConnectedComponents.DriverSolveMaxEdges) None
+    else Some(s"delta algebra needs $rows driver rows, above the " +
+      s"${ConnectedComponents.DriverSolveMaxEdges}-row driver bound — " +
+      "full recanonicalization")
 }

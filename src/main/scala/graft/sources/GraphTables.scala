@@ -380,16 +380,18 @@ object GraphTables {
       if (!hasPartitions(spark, dir))
         (ContentHash.perDoc(readOwnData(spark, path, snapshotId)), 0L, 0L)
       else {
-        val st = ContentHash.perDoc(spark.read.parquet(dir)).localCheckpoint()
+        val st = ContentHash.perDoc(spark.read.schema(TableSchema).parquet(dir))
+          .localCheckpoint()
         val r = st.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
         (st, r.getLong(0), r.getLong(1))
       }
     val (n, h) = base.fold((addN, addH)) { case (baseId, (bN, bH)) =>
       val depth = chainDepth(spark, path, baseId) + 1
+      // one file: every read of the overlay opens the sidecar twice
       removedDocs.select(lit("removed").as("kind"), col("docId").as("value"))
         .unionByName(Seq(("base", baseId),
           ("depth", depth.toString)).toDF("kind", "value"))
-        .write.mode(SaveMode.Overwrite).parquet(baseMetaDir(dir))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(baseMetaDir(dir))
       val n0 = bN - removedRows + addN
       require(n0 >= 0, s"overlay row count went negative ($n0): removed " +
         s"$removedRows from a base of $bN — the removed-doc stats do not " +
@@ -502,20 +504,28 @@ object GraphTables {
     * [[readSnapshot]] on an expired id fails loudly via the
     * rowCount>0-but-no-data check. Returns the deleted snapshot dirs. */
   def expireSnapshots(spark: SparkSession, path: String, keepLast: Int,
-      orphanSafetyMs: Long = 6 * 3600 * 1000L): Seq[String] = {
-    val keep = math.max(1, keepLast)
-    val dataP = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = dataP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dataP)) return Seq.empty
-    val committed =
-      if (!Fs.exists(spark, s"$path/manifest")) Seq.empty[String]
-      else committedIds(spark.read.parquet(s"$path/manifest"))
+      orphanSafetyMs: Long = 6 * 3600 * 1000L): Seq[String] =
     // chain closure: an overlay's base must outlive it even when the
     // base itself is beyond the keepLast window (or manifest-pruned)
-    val keepIds = withBaseChains(spark, path, committed.take(keep).toSet)
+    sweepSnapDirs(spark, s"$path/data", path, keepLast, orphanSafetyMs)(
+      withBaseChains(spark, path, _))
+
+  /** THE `snap=<id>` dir sweep under `dir` of [[expireSnapshots]] and
+    * `StreamingPipeline.expireCanonState`, by the rule above; `closure`
+    * adds the chains the kept ids read through. */
+  private[graft] def sweepSnapDirs(spark: SparkSession, dir: String,
+      tablePath: String, keepLast: Int, orphanSafetyMs: Long)(
+      closure: Set[String] => Set[String]): Seq[String] = {
+    val dirP = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dirP)) return Seq.empty
+    val committed =
+      if (!Fs.exists(spark, s"$tablePath/manifest")) Seq.empty[String]
+      else committedIds(spark.read.parquet(s"$tablePath/manifest"))
+    val keepIds = closure(committed.take(math.max(1, keepLast)).toSet)
     val isCommitted = committed.toSet
     val now = System.currentTimeMillis()
-    fs.listStatus(dataP).toSeq
+    fs.listStatus(dirP).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap="))
       .flatMap { st =>
         val id = st.getPath.getName.stripPrefix("snap=")

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.core.{Mention, Sentence, SourceFileHashed}
 import graft.extract.Tokenizer
 import graft.kernel.{TriaffineScorer, Weights}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -557,53 +557,24 @@ object StreamingPipeline {
   }
 
   /** Canon-state GC — the state-side twin of
-    * [[graft.sources.GraphTables.expireSnapshots]]: every publish
-    * writes a `snap=` state dir (canon map + pair refcounts + per-doc
-    * fingerprints), and only the LATEST committed snapshot's state is
-    * ever read, so without expiry state storage grows with publish
-    * count × corpus vocabulary. Deletes state dirs that are
-    *  - for a COMMITTED snapshot beyond the `keepLast` most recent
-    *    (the latest is never deleted — same clamp and tie-break as
-    *    expireSnapshots, so the kept set always covers what
-    *    `latestSnapshot` resolves), or
-    *  - for NO committed snapshot (crashed publish) and older than
-    *    `orphanSafetyMs` — the age gate protects an in-flight publish
-    *    whose manifest append hasn't landed yet.
+    * [[graft.sources.GraphTables.expireSnapshots]], by the same keep and
+    * orphan rule ([[graft.sources.GraphTables.sweepSnapDirs]]): only the
+    * LATEST committed snapshot's state is ever read, so without expiry
+    * state storage grows with publish count × corpus vocabulary.
     * Expiring a state dir never breaks correctness: a later publish
     * finding no state for its prior snapshot falls back to the full
     * recompute and rewrites fresh state. Returns deleted ids. */
   def expireCanonState(spark: SparkSession, statePath: String,
       tablePath: String, keepLast: Int,
-      orphanSafetyMs: Long = 6 * 3600 * 1000L): Seq[String] = {
-    val keep = math.max(1, keepLast)
-    val stateP = new org.apache.hadoop.fs.Path(statePath)
-    val fs = stateP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(stateP)) return Seq.empty
-    val manP = s"$tablePath/manifest"
-    val committed =
-      if (!graft.sources.Fs.exists(spark, manP)) Seq.empty[String]
-      else graft.sources.GraphTables.committedIds(spark.read.parquet(manP))
+      orphanSafetyMs: Long = 6 * 3600 * 1000L): Seq[String] =
     // chain-safe: a kept snapshot's state may be a delta CHAIN whose
     // base dirs belong to older snapshots — those must survive too
     // (the state-side twin of expireSnapshots' base-chain keep)
-    val keepIds = {
-      val direct = committed.take(keep)
-      direct.toSet ++ direct.flatMap(id =>
-        stateChain(spark, statePath, id).getOrElse(Seq.empty))
+    graft.sources.GraphTables.sweepSnapDirs(spark, statePath, tablePath,
+        keepLast, orphanSafetyMs) { direct =>
+      direct ++ direct.flatMap(id =>
+        stateChain(spark, statePath, id).fold(Seq.empty[String])(_._1))
     }
-    val committedIds = committed.toSet
-    val now = System.currentTimeMillis()
-    fs.listStatus(stateP).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap="))
-      .flatMap { st =>
-        val id = st.getPath.getName.stripPrefix("snap=")
-        val expire =
-          if (keepIds.contains(id)) false
-          else if (committedIds.contains(id)) true
-          else now - st.getModificationTime > orphanSafetyMs
-        if (expire && fs.delete(st.getPath, true)) Some(id) else None
-      }
-  }
 
   /** Canon state written NEXT TO each published snapshot:
     *  - `canon`  — the snapshot's full mined canon map;
@@ -667,31 +638,33 @@ object StreamingPipeline {
     * (bare lastBatchId column, pre-chaining) reads as a FULL state. */
   private def readMeta(spark: SparkSession,
       dir: String): (Long, Option[String]) = {
-    val df = spark.read.parquet(s"$dir/meta")
-    val cols = df.columns
-    val r = df.head()
-    val last = r.getLong(cols.indexOf("lastBatchId"))
-    val base =
-      if (!cols.contains("baseState")) None
-      else Option(r.getString(cols.indexOf("baseState")))
-    (last, base)
+    val r = spark.read.schema(MetaSchema).parquet(s"$dir/meta").head()
+    (r.getLong(0), Option(r.getString(1)))
   }
+
+  /** [[writeState]]'s schemas: an inferred read runs a footer job.
+    * `docs` is inferred — pre-fingerprint state lacks its `h64`. */
+  private val MetaSchema = "lastBatchId BIGINT, baseState STRING"
+  private val CanonSchema = "entity STRING, canonical STRING"
+  private val PairsSchema = "k STRING, entity STRING, ndocs BIGINT"
 
   /** Most state dirs [[stateChain]] walks. The depth gate keeps a chain
     * at `maxChain + 1` dirs, so `maxChain` must stay below it. */
   private val MaxStateChain = 64
 
-  /** Base-first chain of state snapshot ids ending at `snapshotId`.
-    * None when any link is missing or the chain is corrupt (expired
-    * base, crashed write, cycle, over-deep) — the caller then takes
-    * the full publish, which rewrites fresh flat state. A meta dir
+  /** Base-first chain of state snapshot ids ending at `snapshotId`,
+    * with the tip's lastBatchId (one meta read per link, the tip's
+    * included). None when any link is missing or the chain is corrupt
+    * (expired base, crashed write, cycle, over-deep) — the caller then
+    * takes the full publish, which rewrites fresh flat state. A meta dir
     * that EXISTS but fails to read (a crash mid-meta-write left a
     * partial parquet, or an empty one) counts as corrupt too —
     * throwing here would wedge every later incremental publish on a
     * state the contract says is simply "unreadable as a chain tip". */
   private def stateChain(spark: SparkSession, statePath: String,
-      snapshotId: String): Option[Seq[String]] = {
+      snapshotId: String): Option[(Seq[String], Long)] = {
     val acc = scala.collection.mutable.ListBuffer.empty[String]
+    var tipLast = -1L
     var cur = snapshotId
     while (acc.size < MaxStateChain) {
       val d = stateDir(statePath, cur)
@@ -706,10 +679,11 @@ object StreamingPipeline {
           System.err.println(s"[publish] canon state meta unreadable " +
             s"at $d (treating as corrupt chain tip): ${e.getMessage}")
           return None
-        case scala.util.Success((_, None)) => return Some(acc.toList)
-        case scala.util.Success((_, Some(b))) =>
-          if (acc.contains(b)) return None // cycle: corrupt state
-          cur = b
+        case scala.util.Success((last, base)) =>
+          if (acc.size == 1) tipLast = last
+          if (base.isEmpty) return Some((acc.toList, tipLast))
+          if (acc.contains(base.get)) return None // cycle: corrupt state
+          cur = base.get
       }
     }
     None
@@ -743,20 +717,20 @@ object StreamingPipeline {
     * full publish. */
   private def readState(spark: SparkSession, statePath: String,
       snapshotId: String): Option[CanonState] =
-    stateChain(spark, statePath, snapshotId).flatMap { chain =>
+    stateChain(spark, statePath, snapshotId).flatMap { case (chain, last) =>
       val dirs = chain.map(id => stateDir(statePath, id))
       def whole(sub: String) = dirs.forall(d =>
         graft.sources.Fs.exists(spark, s"$d/$sub"))
       if (!whole("canon") || !whole("pairs") || !whole("docs")) None
       else Some(CanonState(
-        lwwResolve(dirs.map(d => spark.read.parquet(s"$d/canon")),
-          Seq("entity")),
-        lwwResolve(dirs.map(d => spark.read.parquet(s"$d/pairs")),
+        lwwResolve(dirs.map(d =>
+          spark.read.schema(CanonSchema).parquet(s"$d/canon")), Seq("entity")),
+        lwwResolve(dirs.map(d =>
+          spark.read.schema(PairsSchema).parquet(s"$d/pairs")),
           Seq("k", "entity")),
         lwwResolve(dirs.map(d => spark.read.parquet(s"$d/docs")),
           Seq("docId")),
-        readMeta(spark, dirs.last)._1,
-        chain.size))
+        last, chain.size))
     }
 
   /** Flatten a snapshot's state chain in place: rewrite the three
@@ -837,91 +811,118 @@ object StreamingPipeline {
     DynPublish(n, h, incremental = false, note)
   }
 
+  /** Rows of a `batchId`-partitioned accumulation at exactly the given
+    * (docId, batchId) versions, one per doc: pruned to their batch
+    * partitions, the version list riding the plan as a literal map (a
+    * filter, no join to broadcast). */
+  private def atVersions(df: DataFrame, versions: Seq[(String, Long)]): DataFrame =
+    df.filter(col("batchId").isin(versions.map(_._2).distinct: _*) &&
+      element_at(typedLit(versions.toMap), col("docId")) === col("batchId"))
+
+  /** The overlay algebra's collects, at most
+    * [[graft.canon.ConnectedComponents.DriverSolveMaxEdges]] rows in all;
+    * past it a collect throws [[DriverRowsOver]]. */
+  private final class DriverRows {
+    private var rows = 0L
+    def collect[T: Encoder](ds: Dataset[T]): Seq[T] = {
+      val room = graft.canon.ConnectedComponents.DriverSolveMaxEdges - rows + 1
+      // a per-partition cap bounds the rows in ONE job (a limit's take
+      // may rescan in several)
+      val got = ds.mapPartitions(_.take(room.toInt)).collect()
+      rows += got.length
+      graft.canon.IncrementalCanon.oversize(rows)
+        .foreach(note => throw DriverRowsOver(note))
+      got.toSeq
+    }
+
+    /** Rows of `df` whose `c` is one of `values` (no job for none). */
+    def where[T: Encoder](df: DataFrame, c: String, values: Iterable[String]): Seq[T] =
+      if (values.isEmpty) Seq.empty
+      else collect(df.filter(col(c).isin(values.toSeq: _*)).as[T])
+  }
+
+  private final case class DriverRowsOver(note: String) extends RuntimeException(note)
+
+  /** The algebra's result: re-emitted docs outside the delta (with
+    * prior batchIds; `affectedIds` keeps index hits the state lacks),
+    * the prior `(rows, xor hash)` of all re-emitted docs, and the state
+    * delta (`canonFresh`: self-labeled new nodes, full maps only). */
+  private final case class Overlay(affectedIds: Set[String],
+      affected: Seq[(String, Long)], removed: (Long, Long),
+      canonDelta: Seq[(String, String)], canonFresh: Seq[(String, String)],
+      pairsDelta: Seq[(String, String, Long)])
+
   /** Incremental dynamic-canon publish: identical OUTPUT to
     * [[publishSnapshotDynamic]] (asserted in StreamingSpec), with
     * publish COST — compute AND I/O — bounded by the ingest delta
     * instead of the accumulated corpus whenever the delta only ADDS
     * alias evidence.
     *
-    * Compute side: the delta's batch partitions (partition-pruned on
-    * `batchId > lastBatchId`), the superseded docs' old partitions
-    * (pruned to their recorded batchIds), the vocabulary-sized
-    * pair/canon state, a ~2-round seeded CC over the prior star
-    * forest, and the re-emit of CHANGED docs only. The changed-entity
-    * doc probe goes through the entity→doc index (entity-hash-bucketed
-    * pairs next to the state, appended per delta, rebuilt distinct on
-    * every full publish) pruned to the changed entities' buckets —
-    * with a corpus-scan fallback while the index's completeness
-    * marker is absent (legacy accumulation).
+    * Compute side: the canon algebra runs ON THE DRIVER
+    * ([[graft.canon.IncrementalCanon]]) over collected delta-sized
+    * frames: the delta's latest doc versions (partition-pruned on
+    * `batchId > lastBatchId`), the prior state's rows of its docs, the
+    * decrement evidence of superseded versions, the aggregated inc/dec
+    * pair counts, and the prior refcounts and canon labels of only the
+    * touched keys and entities. Spark runs four steps: expanding
+    * relabeled roots to their members, the changed-entity doc lookup,
+    * the re-emit of CHANGED docs only, and the writes; no frame is
+    * pinned or probed. The doc lookup goes through the entity→doc index
+    * (entity-hash-bucketed pairs next to the state, appended per delta,
+    * rebuilt distinct on every full publish) pruned to the changed
+    * entities' buckets — with a corpus-scan fallback while the index's
+    * completeness marker is absent (legacy accumulation).
     *
     * I/O side: the snapshot is published as an OVERLAY
     * ([[graft.sources.GraphTables.writeDelta]]) — only the re-emitted
     * docs' triples are written, the base's untouched rows are a
-    * pointer, and the manifest rowCount/contentHash are derived by
-    * xor algebra from the base's committed row plus per-doc
-    * fingerprints kept in the publish state. The prior path rewrote
-    * (and re-hashed) the ENTIRE corpus per publish, so "incremental"
-    * was O(delta) compute on top of O(corpus) I/O. Overlay chains are
-    * depth-bounded: once the prior chain reaches `maxChain`, this
-    * publish MATERIALIZES (full write of resolved content — the
-    * compaction), amortizing the corpus-sized write over `maxChain`
-    * deltas. Readers resolve chains transparently; GC keeps base
-    * chains of kept snapshots alive.
-    *
-    * The publish STATE rides the same pattern: canon map, pair
-    * refcounts, and per-doc fingerprints all grow with the corpus, so
-    * rewriting them flat per publish was the last O(corpus) I/O term.
-    * An overlay publish writes only the CHANGED state rows with a base
-    * pointer ([[writeState]] with a base), readers resolve
-    * last-writer-wins ([[readState]] — sound without tombstones
-    * because adds-only canon labels never revert, touched refcounts
-    * stay positive, and docs are never deleted), and the same
-    * `maxChain` gate materializes state and data together. `maxChain`
-    * must stay below the state chain the reader walks (64 dirs).
+    * pointer, and the manifest row is derived by xor algebra from the
+    * base's plus per-doc fingerprints kept in the publish state. The
+    * STATE rides the same pattern: only the CHANGED canon, refcount and
+    * doc rows land, with a base pointer ([[writeState]]), resolved
+    * last-writer-wins by [[readState]]. Once the prior chain reaches
+    * `maxChain`, the publish MATERIALIZES data and state (a full write
+    * of the resolved content, amortized over `maxChain` deltas);
+    * `maxChain` must stay below the state chain the reader walks (64
+    * dirs).
     *
     * Falls back to the full recompute — same output, corpus-sized
     * cost — when (a) no prior committed snapshot or no state for it
     * exists, (b) the prior state predates the per-doc-fingerprint
-    * layout, or (c) the delta RETRACTS alias evidence (a pair
-    * refcount hits zero: an edge removal can split a component,
-    * which seeding cannot express). The fallback rewrites fresh
-    * state, so one retraction never disables later incrementality. */
+    * layout, (c) the delta RETRACTS alias evidence (a pair refcount
+    * hits zero: an edge removal can split a component, which seeding
+    * cannot express), or (d) the collects pass the driver bound (the
+    * note gives the size). The fallback rewrites fresh state, so one
+    * retraction never disables later incrementality. */
   def publishSnapshotDynamicIncremental(spark: SparkSession,
       mentionsPath: String, tablePath: String, snapshotId: String,
       statePath: String, maxChain: Int = 8): DynPublish = {
     import graft.canon.IncrementalCanon
     import graft.sources.{Fs, GraphTables}
+    import spark.implicits._
     require(maxChain < MaxStateChain, s"maxChain $maxChain: chains of " +
       s"${maxChain + 1} state dirs exceed the $MaxStateChain the reader " +
       "walks, so every publish past that depth would go full")
     require(Fs.exists(spark, mentionsPath),
       s"no mention accumulation at $mentionsPath — nothing was ever " +
         "committed (triplesStream needs mentionsPath=Some(...))")
+    def full(note: String): DynPublish = fullDynamicPublish(spark,
+      mentionsPath, tablePath, snapshotId, statePath, note)
     val prior =
       if (Fs.exists(spark, s"$tablePath/manifest"))
         GraphTables.latestSnapshot(spark, tablePath)
       else None
     val priorState = prior.flatMap(id => readState(spark, statePath, id))
     if (prior.isEmpty || priorState.isEmpty)
-      return fullDynamicPublish(spark, mentionsPath, tablePath, snapshotId,
-        statePath,
+      return full(
         if (prior.isEmpty) "first publish — no prior snapshot"
         else s"no complete canon state chain for prior " +
           s"snapshot ${prior.get}")
     val pst = priorState.get
+    if (!pst.docs.columns.contains("h64"))
+      return full("prior state lacks per-doc content fingerprints " +
+        "(pre-overlay layout) — full republish refreshes it")
     val lastB = pst.lastBatchId
-    // a resolved chain is a union+group plan re-executed per action —
-    // pin the frames the branches below read more than once; a flat
-    // (depth-1) state is the raw parquet read and needs no pinning
-    def pin(df: DataFrame): DataFrame =
-      if (pst.depth > 1) df.localCheckpoint() else df
-    val priorCanon = pin(pst.canon)
-    val priorPairs = pin(pst.pairs)
-    val priorDocs = pin(pst.docs)
-    if (!priorDocs.columns.contains("h64"))
-      return fullDynamicPublish(spark, mentionsPath, tablePath, snapshotId,
-        statePath, "prior state lacks per-doc content fingerprints " +
-          "(pre-overlay layout) — full republish refreshes it")
     // depth gate decided UP FRONT: at maxChain the publish materializes
     // the resolved content (corpus write, amortized) instead of
     // growing the chain — this includes the empty-delta copy-forward.
@@ -929,206 +930,187 @@ object StreamingPipeline {
     // so both flatten together even if one was compacted externally.
     val priorDepth = math.max(
       GraphTables.chainDepth(spark, tablePath, prior.get), pst.depth - 1)
-    val all = spark.read.parquet(mentionsPath)
-    // the DELTA: batches after the prior publish's floor — partition-
-    // pruned reads on both the mention accumulation and the roster
-    val deltaM = all.filter(col("batchId") > lastB)
-    val rosterP = rosterPath(mentionsPath)
-    val deltaTouches0 = (
-      if (Fs.hasPartitions(spark, rosterP, "batchId="))
-        spark.read.parquet(rosterP).select(col("docId"), col("batchId"))
-          .filter(col("batchId") > lastB)
-          .unionByName(deltaM.select(col("docId"), col("batchId")))
-      else deltaM.select(col("docId"), col("batchId")))
-      .groupBy(col("docId"))
-      .agg(max(col("batchId")).cast("long").as("batchId"))
-    val deltaLatest = deltaTouches0.localCheckpoint()
-    val newLastB = deltaLatest.agg(max(col("batchId"))).head() match {
-      case r if r.isNullAt(0) => lastB
-      case r => math.max(lastB, r.getLong(0))
-    }
     val growChain = priorDepth + 1 <= maxChain
-    // THE snapshot-plus-state tail of both branches below. Below the
-    // depth gate: an OVERLAY over the prior snapshot holding only the
-    // re-emitted docs' triples, and a state DELTA (`canonDelta`,
-    // `pairsDelta`, the re-emitted docs' fingerprints). At it: the
-    // resolved content MATERIALIZED as a full snapshot with flat state
-    // — data and state chains flatten together. Either way every
-    // fingerprint written comes from the commit's one read-back.
-    def commit(reTriples: DataFrame, reDocs: DataFrame, removedRows: Long,
-        removedHash: Long, reTouches: DataFrame, canon: DataFrame,
-        canonDelta: DataFrame, pairs: DataFrame, pairsDelta: DataFrame,
-        lastBatchId: Long): (Long, String) = {
+    val all = spark.read.parquet(mentionsPath)
+    val rosterP = rosterPath(mentionsPath)
+    val roster =
+      if (Fs.hasPartitions(spark, rosterP, "batchId="))
+        Some(spark.read.schema("docId STRING, batchId BIGINT").parquet(rosterP))
+      else None
+    val driver = new DriverRows
+    // the DELTA: each doc's latest version after the prior publish's
+    // floor — partition-pruned reads on the accumulation and the roster
+    val delta = try {
+      val touched = all.filter(col("batchId") > lastB)
+        .select(col("docId"), col("batchId"))
+      driver.collect(roster.fold(touched)(
+          _.filter(col("batchId") > lastB).unionByName(touched))
+        .groupBy(col("docId"))
+        .agg(max(col("batchId")).cast("long").as("batchId"))
+        .as[(String, Long)]).toMap
+    } catch { case o: DriverRowsOver => return full(o.note) }
+    // THE snapshot-plus-state tail of every incremental publish: below
+    // the depth gate an OVERLAY of the re-emitted docs plus a state
+    // DELTA; at it the resolved content MATERIALIZED with flat state
+    // (the prior state overridden by the same rows). Every fingerprint
+    // written comes from the commit's one read-back.
+    def commit(reTriples: DataFrame, ov: Overlay): (Long, String) = {
       val base = if (growChain) prior else None
+      val reDocsDf = (delta.keys ++ ov.affectedIds).toSeq.distinct.toDF("docId")
       val data =
         if (growChain) reTriples
         else GraphTables.readSnapshot(spark, tablePath, prior.get)
-          .join(reDocs, Seq("docId"), "left_anti")
+          .join(reDocsDf, Seq("docId"), "left_anti")
           .select(col("subj"), col("pred"), col("obj"), col("docId"),
             col("score"))
           .unionByName(reTriples)
       val (n, h, own) = GraphTables.writeDelta(spark, tablePath, snapshotId,
-        base, data, reDocs, removedRows, removedHash)
-      val touches =
-        if (growChain) reTouches
-        else priorDocs.join(reDocs, Seq("docId"), "left_anti")
-          .select(col("docId"), col("batchId")).unionByName(reTouches)
-      writeState(spark, statePath, snapshotId, base,
-        if (growChain) canonDelta else canon,
-        if (growChain) pairsDelta else pairs,
-        docsWithStats(touches, own), lastBatchId)
+        base, data, reDocsDf, ov.removed._1, ov.removed._2)
+      // delta docs ride their new batchId, affected docs keep their
+      // prior one
+      val touches = (ov.affected ++ delta).toDF("docId", "batchId")
+      val canonRows = ov.canonDelta.toDF("entity", "canonical")
+      val pairRows = ov.pairsDelta.toDF("k", "entity", "ndocs")
+      val lastBatchId = (lastB +: delta.values.toSeq).max
+      if (growChain)
+        writeState(spark, statePath, snapshotId, base, canonRows, pairRows,
+          docsWithStats(touches, own), lastBatchId)
+      else
+        writeState(spark, statePath, snapshotId, None,
+          lwwResolve(Seq(pst.canon, canonRows.unionByName(
+            ov.canonFresh.toDF("entity", "canonical"))), Seq("entity")),
+          lwwResolve(Seq(pst.pairs, pairRows), Seq("k", "entity")),
+          docsWithStats(lwwResolve(Seq(pst.docs.select(col("docId"),
+            col("batchId")), touches), Seq("docId")), own), lastBatchId)
       (n, h)
     }
-    if (deltaLatest.isEmpty) {
+    if (delta.isEmpty) {
       // nothing ingested since the prior publish: a copy-forward of the
       // prior snapshot, state included — a pure POINTER forward in data
       // and in state below the depth gate (an idle stream publishing on
       // a schedule costs O(1), not O(corpus state)), a materializing
       // rewrite at it
-      val (n, h) = commit(emptyTriples(spark),
-        deltaLatest.select(col("docId")), 0L, 0L, deltaLatest, priorCanon,
-        priorCanon.limit(0), priorPairs, priorPairs.limit(0), lastB)
+      val (n, h) = commit(emptyTriples(spark), Overlay(Set.empty, Seq.empty,
+        (0L, 0L), Seq.empty, Seq.empty, Seq.empty))
       return DynPublish(n, h, incremental = true, "empty delta")
     }
-    val deltaLinked = deltaM
-      .join(deltaLatest, Seq("docId", "batchId")).drop("batchId").persist()
-    try {
-      // superseded docs: delta docs the prior state already knew —
-      // their OLD pairs are the refcount decrements. Their old rows
-      // live in the batch partitions the prior state recorded, so the
-      // read is pruned to exactly those batchIds.
-      val superseded = priorDocs
-        .join(deltaLatest.select(col("docId")), Seq("docId"), "left_semi")
-        .localCheckpoint()
-      val oldBatchIds = superseded.select(col("batchId")).distinct()
-        .collect().map(_.getLong(0))
-      // localCheckpoint: read twice below (the unevidenced probe and
-      // IncrementalCanon.docPairs) — uncached, each reference re-ran
-      // the pruned batch-partition scan + semi-join (round-5 ADVICE)
-      val oldMents =
-        if (oldBatchIds.isEmpty) deltaLinked.limit(0)
-        else all.filter(col("batchId").isin(oldBatchIds: _*))
-          .join(superseded, Seq("docId", "batchId"), "left_semi")
-          .localCheckpoint()
+    val deltaDocs = delta.keys.toSeq
+    val idxUsable = entIdxUsable(spark, statePath)
+    val deltaLinked = atVersions(all, delta.toSeq).drop("batchId")
+
+    // THE canon algebra, on the driver. It only reads, so a fallback
+    // leaves no trace.
+    def algebra(): Either[String, Overlay] = {
+      val docs = pst.docs.select(col("docId"), col("batchId").cast("long"),
+        col("nTriples"), col("h64"))
+      // superseded docs: delta docs the prior state knew — their OLD
+      // versions' pairs are the refcount decrements
+      val superseded =
+        driver.where[(String, Long, Long, Long)](docs, "docId", deltaDocs)
+      val oldVersions = superseded.map(s => (s._1, s._2))
+      val oldMents = atVersions(all, oldVersions)
       // decrement EVIDENCE must still exist: a compaction run while
-      // these re-ingests sat unpublished folds the superseded
-      // versions' rows away (mention rows AND roster touch alike —
-      // compactAccumulation keeps them only when passed
-      // publishedStateTouches), and the decrements would then read
-      // silently empty — refcounts stay high and a genuine retraction
-      // would pass as adds-only, publishing a STALE merged canon. A
-      // superseded version with neither a mention row nor a roster
-      // touch left is unverifiable: take the full publish, which
-      // needs no decrements and rewrites fresh state. A version that
-      // legitimately had zero linked mentions always kept its roster
-      // touch (or, pre-roster, could never have entered the prior
-      // state's doc table at all), so this never false-positives.
-      val unevidenced =
-        if (oldBatchIds.isEmpty) 0L
-        else {
-          val rosterOld =
-            if (Fs.hasPartitions(spark, rosterP, "batchId="))
-              spark.read.parquet(rosterP)
-                .select(col("docId"), col("batchId"))
-                .filter(col("batchId").isin(oldBatchIds: _*))
-                .join(superseded, Seq("docId", "batchId"), "left_semi")
-                .select(col("docId"))
-            else superseded.select(col("docId")).limit(0)
-          superseded.join(
-              oldMents.select(col("docId")).unionByName(rosterOld),
-              Seq("docId"), "left_anti")
-            .count()
-        }
-      if (unevidenced > 0)
-        return fullDynamicPublish(spark, mentionsPath, tablePath,
-          snapshotId, statePath,
-          s"$unevidenced superseded doc versions left no rows in the " +
-            "accumulation (compacted without publishedStateTouches?) — " +
-            "decrements unverifiable, full recanonicalization")
-      val pd = IncrementalCanon.mergePairs(priorPairs,
-        IncrementalCanon.docPairs(deltaLinked),
-        IncrementalCanon.docPairs(oldMents))
+      // these re-ingests sat unpublished folds the superseded versions'
+      // rows away (unless passed publishedStateTouches), the decrements
+      // would read silently empty, and a genuine retraction would pass
+      // as adds-only. A superseded version with neither a roster touch
+      // (asked first: one row per version) nor a mention row left is
+      // unverifiable: take the full publish. A version with zero linked
+      // mentions always kept its roster touch (or, pre-roster, never
+      // entered the prior state's docs), so this never false-positives.
+      if (superseded.nonEmpty) {
+        val rostered = roster.fold(Set.empty[String])(r => driver.collect(
+          atVersions(r, oldVersions).select(col("docId")).as[String]).toSet)
+        val rest = oldVersions.filterNot(v => rostered(v._1))
+        val evidenced = rostered ++ (if (rest.isEmpty) Nil
+          else driver.collect(atVersions(all, rest).select(col("docId"))
+            .distinct().as[String]))
+        val unevidenced = superseded.count(s => !evidenced(s._1))
+        if (unevidenced > 0)
+          return Left(s"$unevidenced superseded doc versions left no rows " +
+            "in the accumulation (compacted without " +
+            "publishedStateTouches?) — decrements unverifiable, full " +
+            "recanonicalization")
+      }
+      val counts = driver.collect(IncrementalCanon.deltaCounts(
+        IncrementalCanon.mentionPairs(deltaLinked),
+        IncrementalCanon.mentionPairs(oldMents))
+        .as[(String, String, Long, Long)])
+      // every prior pair of the touched keys: the merge's rows and the
+      // seed's hubs
+      val priorPairs = driver.where[(String, String, Long)](
+        pst.pairs.select(col("k"), col("entity"), col("ndocs").cast("long")),
+        "k", counts.map(_._1).distinct)
+      val pd = IncrementalCanon.mergePairs(priorPairs, counts)
       if (pd.removedCount > 0)
-        return fullDynamicPublish(spark, mentionsPath, tablePath,
-          snapshotId, statePath,
-          s"alias evidence retracted (${pd.removedCount} pairs) — " +
-            "full recanonicalization")
-      // keep the entity→doc index current for FUTURE publishes — an
-      // append of delta-sized pairs, strictly before this snapshot's
-      // manifest commit (crash in between = over-coverage, benign); a
-      // legacy index without the completeness marker stays untouched
-      // until the next full publish rebuilds it
-      val idxUsable = entIdxUsable(spark, statePath)
-      if (idxUsable) appendEntIdx(spark, statePath, deltaLinked)
-      // seeded CC from the prior star forest + added-pair edges
-      val newCanon = IncrementalCanon
-        .seededCanonMap(priorCanon, priorPairs, pd.added).localCheckpoint()
-      // materialize: a full-outer join over two vocabulary-sized maps,
-      // read by the isEmpty probe, the bucket collection, and three
-      // semi-joins — re-executing it per action pays the join 4×
-      val changed = IncrementalCanon.changedEntities(newCanon, priorCanon)
-        .localCheckpoint()
+        return Left(s"alias evidence retracted (${pd.removedCount} pairs) — " +
+          "full recanonicalization")
+      val seed = IncrementalCanon.seed(priorPairs.map(r => (r._1, r._2)),
+        pd.added)
+      val canon = pst.canon.select(col("entity"), col("canonical"))
+      val rl = IncrementalCanon.relabel(seed,
+        driver.where[(String, String)](canon, "entity", seed.nodes).toMap)
+      // every entity a relabeled root labels moves with it
+      val canonDelta =
+        driver.where[(String, String)](canon, "canonical", rl.roots.keys)
+          .map { case (e, c) => e -> rl.roots(c) } ++
+          rl.fresh.filter { case (e, l) => e != l }
       // docs OUTSIDE the delta whose triples the relabeling touches:
-      // the entity→doc index pruned to the changed entities' buckets
-      // (a ≤64-value driver-side isin — partition pruning needs no
-      // DPP), falling back to a two-column projection scan of the
-      // accumulation when the index is not (yet) complete. Stale pairs
-      // and stale accumulation rows alike may over-select a doc —
-      // harmless, re-emission from its latest version is correct
-      // either way. The common no-novel-alias delta changes NO labels
-      // — probe the tiny changed set first and skip the lookup
-      // entirely then.
-      val affected =
-        if (changed.isEmpty)
-          deltaLatest.select(col("docId")).limit(0).localCheckpoint()
+      // the entity→doc index pruned to the changed entities' buckets,
+      // or a scan of the accumulation while the index is incomplete.
+      // Stale rows may over-select a doc — harmless, re-emission from
+      // its latest version is correct either way.
+      val affectedIds =
+        if (canonDelta.isEmpty) Set.empty[String]
         else {
+          val ents = canonDelta.map(_._1)
+          // the buckets fold on the driver: a local relation's projection
+          val bks = ents.toDF("e").select(ebucket(col("e"))).as[Int].collect()
           val candidates =
-            if (idxUsable) {
-              val bks = changed.select(ebucket(col("entity")).as("b"))
-                .distinct().collect().map(_.getInt(0))
-              spark.read.parquet(entIdxDir(statePath))
-                .filter(col("ebucket").isin(bks.toSeq: _*))
-                .join(changed, Seq("entity"), "left_semi")
-            } else all.select(col("docId"), col("entity"))
-              .join(changed, Seq("entity"), "left_semi")
-          candidates
-            .select(col("docId")).distinct()
-            .join(deltaLatest.select(col("docId")), Seq("docId"),
-              "left_anti")
-            .localCheckpoint()
+            if (idxUsable) spark.read.parquet(entIdxDir(statePath))
+              .filter(col("ebucket").isin(bks.toSeq.distinct: _*))
+            else all
+          driver.collect(candidates.filter(col("entity").isin(ents: _*))
+            .select(col("docId")).distinct().as[String]).toSet -- deltaDocs
         }
-      val affLatest = priorDocs.join(affected, Seq("docId"), "left_semi")
-      val affMents = all.join(affLatest, Seq("docId", "batchId"))
-        .drop("batchId")
-      val reMents = deltaLinked
-        .unionByName(affMents.select(deltaLinked.columns.map(col): _*))
-      val newTriples = graft.Pipeline.canonEmit(reMents,
-          graft.Pipeline.Canon.gated(newCanon, newCanon.count()),
-          docContiguous = false)._2
-        .select(col("subj"), col("pred"), col("obj"), col("docId"),
-          col("score"))
-      val reDocs = deltaLatest.select(col("docId"))
-        .union(affected.select(col("docId"))).distinct()
-        .localCheckpoint()
-      // removal algebra over the STATE's per-doc fingerprints —
-      // O(#docs) slim rows, never a scan of the base snapshot's data
-      val remRow = priorDocs.join(reDocs, Seq("docId"), "left_semi")
-        .agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
-      val removedRows = if (remRow.isNullAt(0)) 0L else remRow.getLong(0)
-      val removedHash = if (remRow.isNullAt(1)) 0L else remRow.getLong(1)
-      // delta docs ride their new batchId, affected docs keep their
-      // prior one; the state delta is only the relabeled entities' canon
-      // rows and the touched pair refcounts
-      val (n, h) = commit(newTriples, reDocs, removedRows, removedHash,
-        priorDocs.join(affected, Seq("docId"), "left_semi")
-          .select(col("docId"), col("batchId")).unionByName(deltaLatest),
-        newCanon, newCanon.join(changed, Seq("entity"), "left_semi"),
-        pd.merged, pd.changed, newLastB)
-      val mode =
-        if (growChain) "overlay" else s"materialized at chain depth $priorDepth"
-      DynPublish(n, h, incremental = true,
-        s"incremental (adds-only alias delta, $mode)")
-    } finally { deltaLinked.unpersist(); () }
+      val affected =
+        driver.where[(String, Long, Long, Long)](docs, "docId", affectedIds)
+      // removal algebra over the STATE's per-doc fingerprints
+      val prev = superseded ++ affected
+      Right(Overlay(affectedIds, affected.map(a => (a._1, a._2)),
+        (prev.map(_._3).sum, prev.map(_._4).foldLeft(0L)(_ ^ _)),
+        canonDelta, rl.fresh.toSeq.filter { case (e, l) => e == l },
+        pd.changed.toSeq.map { case ((k, e), n) => (k, e, n) }))
+    }
+
+    val ov = (try algebra() catch { case o: DriverRowsOver => Left(o.note) })
+      match {
+        case Left(note) => return full(note)
+        case Right(o) => o
+      }
+    // the re-emit: delta docs at their new version, affected docs at the
+    // one the prior state recorded, against the prior map with the
+    // relabeled rows replaced — its size unknown here, the planner
+    // picks the join from statistics
+    val reMents = atVersions(all, delta.toSeq ++ ov.affected).drop("batchId")
+    val canonMap =
+      if (ov.canonDelta.isEmpty) pst.canon
+      else lwwResolve(Seq(pst.canon, ov.canonDelta.toDF("entity", "canonical")),
+        Seq("entity"))
+    val newTriples = graft.Pipeline.canonEmit(reMents,
+        graft.Pipeline.Canon(canonMap, broadcast = false),
+        docContiguous = false)._2
+      .select(col("subj"), col("pred"), col("obj"), col("docId"),
+        col("score"))
+    // the entity→doc index append, strictly before the manifest commit
+    // (a crash in between over-covers, benign); a legacy index without
+    // the completeness marker waits for the next full publish's rebuild
+    if (idxUsable) appendEntIdx(spark, statePath, deltaLinked)
+    val (n, h) = commit(newTriples, ov)
+    val mode =
+      if (growChain) "overlay" else s"materialized at chain depth $priorDepth"
+    DynPublish(n, h, incremental = true,
+      s"incremental (adds-only alias delta, $mode)")
   }
 
   /** Streaming exact-dedup by content fingerprint — the streaming

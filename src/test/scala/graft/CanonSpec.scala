@@ -1,6 +1,7 @@
 package graft
 
 import graft.canon.{AliasMining, ConnectedComponents}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Canonicalization at data scale: large/small-star CC convergence on
@@ -75,20 +76,18 @@ class CanonSpec extends SparkSpec {
   }
 
   test("seeded canon connects a new pair to a SINGLETON-key hub") {
-    import spark.implicits._
     // the key "zkey" had ONE pair entity "bbb" before — a singleton is
     // never an edge endpoint, so it is absent from the prior canon
     // map. When "aaa" arrives under the same key, the seeded map must
     // still relabel BOTH (node set includes edge endpoints, not just
     // prior-map entities): dropping the hub would leave "bbb"
     // self-canonical while "aaa" got the component minimum.
-    val priorCanon = Seq(("dictA", "dictA"), ("dictB", "dictA"))
-      .toDF("entity", "canonical")
-    val priorPairs = Seq(("zkey", "bbb", 1L)).toDF("k", "entity", "ndocs")
-    val added = Seq(("zkey", "aaa")).toDF("k", "entity")
-    val m = graft.canon.IncrementalCanon
-      .seededCanonMap(priorCanon, priorPairs, added)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val priorCanon = Map("dictA" -> "dictA", "dictB" -> "dictA")
+    val priorPairs = Seq(("zkey", "bbb", 1L))
+    val added = Set(("zkey", "aaa"))
+    val ic = graft.canon.IncrementalCanon
+    val seed = ic.seed(priorPairs.map(r => (r._1, r._2)), added)
+    val m = ic.relabel(seed, priorCanon.filter(kv => seed.nodes(kv._1)))(priorCanon)
     assert(m("bbb") == "aaa" && m("aaa") == "aaa", m.toString)
     // the prior forest is preserved untouched
     assert(m("dictA") == "dictA" && m("dictB") == "dictA")
@@ -96,6 +95,7 @@ class CanonSpec extends SparkSpec {
 
   test("pair-refcount merge: adds, net-zero re-ingest, retraction, corruption") {
     import spark.implicits._
+    val ic = graft.canon.IncrementalCanon
     val prior = Seq(("k1", "e1", 2L), ("k2", "e2", 1L))
       .toDF("k", "entity", "ndocs")
     // doc d9 re-ingested keeping (k1,e1): +1 here, -1 in dec = net zero;
@@ -104,26 +104,31 @@ class CanonSpec extends SparkSpec {
       .toDF("k", "entity", "docId")
     val dec = Seq(("k1", "e1", "d9"), ("k2", "e2", "d2"))
       .toDF("k", "entity", "docId")
-    val pd = graft.canon.IncrementalCanon.mergePairs(prior, inc, dec)
+    // the driver merge reads what the publish collects: the prior rows
+    // and the delta's aggregated (k, entity, inc, dec) counts
+    def merge(inc: DataFrame, dec: DataFrame) = ic.mergePairs(
+      prior.as[(String, String, Long)].collect().toSeq,
+      ic.deltaCounts(inc, dec).as[(String, String, Long, Long)].collect().toSeq)
+    val pd = merge(inc, dec)
     assert(pd.removedCount == 1L)
-    val merged = pd.merged.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(merged == Map(("k1", "e1") -> 2L, ("k3", "e3") -> 1L))
-    val added = pd.added.collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(added == Set(("k3", "e3")))
+    assert(pd.merged == Map(("k1", "e1") -> 2L, ("k3", "e3") -> 1L))
+    assert(pd.added == Set(("k3", "e3")))
     // a decrement that was never counted = corrupted state, fails loudly
     val badDec = Seq(("k9", "e9", "d1")).toDF("k", "entity", "docId")
-    val bad = intercept[Exception] {
-      graft.canon.IncrementalCanon.mergePairs(prior,
-        inc.limit(0), badDec).merged.collect()
-    }
+    val bad = intercept[Exception](merge(inc.limit(0), badDec))
     assert(bad.getMessage.contains("refcount"), bad.getMessage)
+  }
+
+  test("overlay algebra size route: the driver bound holds, one row above it goes full") {
+    val bound = ConnectedComponents.DriverSolveMaxEdges
+    assert(graft.canon.IncrementalCanon.oversize(bound).isEmpty)
+    val note = graft.canon.IncrementalCanon.oversize(bound + 1)
+    assert(note.exists(n => n.contains(s"${bound + 1} driver rows") &&
+      n.contains("full recanonicalization")), note)
   }
 
   test("randomized ingests: seeded incremental canon == plain-JVM union-find") {
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     val m = graft.canon.IncrementalCanon
 
     // full-recompute mirror of the production alias path: star edges
@@ -194,22 +199,22 @@ class CanonSpec extends SparkSpec {
       val priorPairs = m.pairCounts(pairsDf(priorDocs))
       val inc = pairsDf(newDocs ++ reVersions)
       val dec = pairsDf(priorDocs.filter(kv => reingested.contains(kv._1)))
-      val pd = m.mergePairs(priorPairs, inc, dec)
+      val priorRows = priorPairs.as[(String, String, Long)].collect().toSeq
+      val pd = m.mergePairs(priorRows,
+        m.deltaCounts(inc, dec).as[(String, String, Long, Long)].collect().toSeq)
 
       // ground-truth current state entirely in plain Scala
       val current = (priorDocs -- reingested) ++ newDocs ++ reVersions
       val curPairs = current.values.flatten.toSet
       val priorSet = priorDocs.values.flatten.toSet
-      val gotMerged = pd.merged.collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      val gotMerged = pd.merged
       val wantMerged = current.values.flatten.toSeq
         .groupBy(identity).map { case (p, xs) => p -> xs.size.toLong }
       assert(gotMerged == wantMerged, s"seed $seed: merged refcounts differ")
       val wantRemoved = (priorSet -- curPairs).size.toLong
       assert(pd.removedCount == wantRemoved,
         s"seed $seed: removedCount ${pd.removedCount} != $wantRemoved")
-      assert(pd.added.collect().map(r => (r.getString(0), r.getString(1)))
-        .toSet == curPairs -- priorSet, s"seed $seed: added set differs")
+      assert(pd.added == curPairs -- priorSet, s"seed $seed: added set differs")
 
       val want = expectedCanon(curPairs)
       // the production full path agrees with the plain-JVM truth —
@@ -218,8 +223,12 @@ class CanonSpec extends SparkSpec {
         s"seed $seed: full Spark canon != union-find truth")
       if (pd.removedCount == 0) {
         sawClean = true
-        val seeded = toMapDf(m.seededCanonMap(
-          fullCanon(priorPairs), priorPairs, pd.added))
+        // the driver algebra: seed edges from the prior rows, prior
+        // labels of the seed nodes only, then the relabeled prior map
+        val priorCanon = toMapDf(fullCanon(priorPairs))
+        val sd = m.seed(priorRows.map(r => (r._1, r._2)), pd.added)
+        val seeded = m.relabel(sd,
+          priorCanon.filter(kv => sd.nodes(kv._1)))(priorCanon)
         assert(seeded == want,
           s"seed $seed: seeded incremental canon != union-find truth")
       } else sawRetraction = true

@@ -709,13 +709,26 @@ class StreamingSpec extends SparkSpec {
     assert(a.pub("m1", maxChain = 63).rows > 0)
   }
 
-  test("full and materializing publishes read their new snapshot back once") {
+  /** Spark jobs of a depth-1 adds-only overlay publish and of an
+    * empty-delta publish of the small accumulation below (75 and 37 when
+    * the refcount/CC/changed-set algebra ran as DataFrame steps). */
+  private val OverlayJobs = 40
+  private val EmptyDeltaJobs = 28
+
+  /** Drain the listener bus: delivery is async (`listenerBus` is
+    * private[spark], public in bytecode). */
+  private def drainListeners(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    ()
+  }
+
+  /** The scan roots of every query `f` executes, one entry per
+    * execution (AQE stages and subqueries included). */
+  private def scanRootsDuring(f: => Unit): Seq[Seq[String]] = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
     import scala.jdk.CollectionConverters._
-    val a = new Accumulation("stream-readonce")
-    a.land(Extract.corpus(spark, 6))
-    // the scan roots of every executed plan, AQE stages and subqueries
-    // included
     object Plans extends org.apache.spark.sql.execution.adaptive
       .AdaptiveSparkPlanHelper
     val scans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
@@ -728,31 +741,77 @@ class StreamingSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
-    // listener delivery is async — drain the bus (private[spark], public
-    // in bytecode) before and after each counted publish
-    def drain(): Unit = {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      ()
-    }
-    def executionsReading(id: String)(publish: => Unit): Int = {
-      drain(); scans.clear(); publish; drain()
-      scans.asScala.count(_.exists(_.endsWith(s"/data/snap=$id")))
-    }
+    drainListeners()
     spark.listenerManager.register(l)
-    try {
-      val full = executionsReading("r1") {
-        assert(!a.pub("r1").incremental)
+    try { f; drainListeners() } finally spark.listenerManager.unregister(l)
+    scans.asScala.toSeq
+  }
+
+  /** Spark jobs `f` runs. */
+  private def jobsDuring(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
       }
-      assert(full == 1, s"first (full) publish read its snapshot in $full executions")
-      a.landFile(6)
-      val mat = executionsReading("r2") {
-        val p = a.pub("r2", maxChain = 0)
-        assert(p.note.contains("materialized"), p.note)
-      }
-      assert(mat == 1, s"materializing publish read its snapshot in $mat executions")
-    } finally spark.listenerManager.unregister(l)
+    }
+    drainListeners()
+    spark.sparkContext.addSparkListener(l)
+    try { f; drainListeners() } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("full and materializing publishes read their new snapshot back once") {
+    val a = new Accumulation("stream-readonce")
+    a.land(Extract.corpus(spark, 6))
+    def executionsReading(id: String)(publish: => Unit): Int =
+      scanRootsDuring(publish).count(_.exists(_.endsWith(s"/data/snap=$id")))
+    val full = executionsReading("r1") {
+      assert(!a.pub("r1").incremental)
+    }
+    assert(full == 1, s"first (full) publish read its snapshot in $full executions")
+    a.landFile(6)
+    val mat = executionsReading("r2") {
+      val p = a.pub("r2", maxChain = 0)
+      assert(p.note.contains("materialized"), p.note)
+    }
+    assert(mat == 1, s"materializing publish read its snapshot in $mat executions")
+  }
+
+  test("a publish reads each canon-state meta of the prior chain once") {
+    val a = new Accumulation("stream-metaonce")
+    a.land(Extract.corpus(spark, 4))
+    assert(!a.pub("m1").incremental)
+    def metasRead(publish: => Unit): Map[String, Int] =
+      scanRootsDuring(publish).flatten.filter(_.endsWith("/meta"))
+        .groupBy(p => p.split("/").dropRight(1).last).map { case (d, ps) => d -> ps.size }
+    a.landFile(4)
+    val flat = metasRead(assert(a.pub("m2").note.contains("overlay")))
+    assert(flat == Map("snap=m1" -> 1), s"flat prior state: $flat")
+    a.landFile(5)
+    val chained = metasRead(assert(a.pub("m3").note.contains("overlay")))
+    assert(chained == Map("snap=m2" -> 1, "snap=m1" -> 1),
+      s"two-link prior state chain: $chained")
+  }
+
+  test("an overlay publish runs tens of Spark jobs, an empty delta fewer") {
+    val a = new Accumulation("stream-jobs")
+    a.land(Extract.corpus(spark, 6))
+    assert(!a.pub("j1").incremental)
+    a.landFile(6); a.landFile(7)
+    // depth 1, adds only: the refcount/CC/changed-set algebra runs on
+    // the driver, so its jobs are the collects of delta-sized frames,
+    // the re-emit and the writes
+    val overlay = jobsDuring {
+      val p = a.pub("j2")
+      assert(p.incremental && p.note.contains("overlay"), p.note)
+    }
+    val empty = jobsDuring {
+      assert(a.pub("j3").note.contains("empty delta"))
+    }
+    assert(overlay <= OverlayJobs, s"depth-1 overlay publish ran $overlay jobs")
+    assert(empty <= EmptyDeltaJobs, s"empty-delta publish ran $empty jobs")
   }
 
   test("canon-state doc fingerprints equal the committed data (full, materialized, empty delta)") {
