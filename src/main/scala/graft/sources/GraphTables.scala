@@ -74,7 +74,7 @@ object Fs {
 
   /** Replace `path` with the freshly-written `tmpPath` (rename old
     * aside, rename tmp in, delete old) — the rewrite-compaction swap
-    * (accumulation compaction, manifest pruning). NOT atomic: a crash
+    * (accumulation, snapshot and state compaction). NOT atomic: a crash
     * between the two renames leaves `path` absent with the data intact
     * under `path__old` / `tmpPath` for manual recovery — acceptable for
     * maintenance jobs run at quiescent points; a transactional table
@@ -94,9 +94,9 @@ object Fs {
 }
 
 /** Iceberg-LAYOUT graph tables (no Iceberg jars on the classpath —
-  * SURVEY §7.0): partitioned parquet + a snapshot manifest table,
-  * matching the north-star's "partitioned Iceberg graph tables
-  * bucketed by canonical-entity hash".
+  * SURVEY §7.0): partitioned parquet + a snapshot commit log, matching
+  * the north-star's "partitioned Iceberg graph tables bucketed by
+  * canonical-entity hash".
   *
   * Layout: `path/data/snap=<id>/pred=<p>/bucket=<b>/`, one parquet
   * file per (pred, bucket) dir, written by one task ([[writePartitioned]])
@@ -106,12 +106,20 @@ object Fs {
   *  - `bucket` = hash(subj) % nBuckets: co-locates each canonical
   *    entity's out-edges, so entity-keyed reads touch one bucket and
   *    same-bucket joins between graph tables can skip the shuffle;
-  *  - `path/manifest`: one row per snapshot with row counts + content
-  *    hash — the read side can verify integrity and pick a snapshot.
+  *  - `path/_commits/`: one JSON commit record per commit with the
+  *    snapshot's row count + content hash ([[SnapshotMeta]]) — the read
+  *    side picks a snapshot and can verify integrity without a Spark
+  *    job.
+  *
+  * Commit discipline: everything a snapshot consists of (data, and for
+  * an overlay its sidecar and chain pointer) lands in its own snap dir
+  * first; creating its commit record, never overwriting, is the commit
+  * point. Every data read passes [[TableSchema]], which every writer
+  * writes exactly ([[conform]]), so no read infers a schema.
   *
   * Publish commits read what they wrote back exactly once. A full
   * snapshot of the state-keeping publish is [[writeDelta]] with no
-  * base; its per-doc read-back feeds the manifest row and the publish
+  * base; its per-doc read-back feeds the commit record and the publish
   * state. [[write]] keeps a global-hash read-back for callers needing
   * no per-doc stats: a per-doc one made graftbench `build` slower in
   * every variant tried (checkpoint + aggregate or RDD fold, observe).
@@ -121,9 +129,9 @@ object GraphTables {
   val NumBuckets = 16
 
   /** THE table schema (write layout after partition-column reordering:
-    * data columns first, then `pred`/`bucket` partition columns). The
-    * empty-snapshot read path returns a frame of exactly this type, so
-    * the two can never drift apart. */
+    * data columns first, then `pred`/`bucket` partition columns). Every
+    * writer writes exactly it and every read passes it, including the
+    * empty-snapshot frame, so the three can never drift apart. */
   val TableSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -139,6 +147,11 @@ object GraphTables {
   def bucketCol(subj: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(subj), lit(NumBuckets)).cast("int")
 
+  /** Triples as written: [[TableSchema]]'s columns, types and order. */
+  private def conform(triples: DataFrame): DataFrame =
+    triples.withColumn("bucket", bucketCol(col("subj")))
+      .select(TableSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+
   private def snapDir(path: String, snapshotId: String): String =
     s"$path/data/snap=$snapshotId"
 
@@ -147,6 +160,12 @@ object GraphTables {
     * non-empty snapshots on HDFS/S3 — see [[Fs]].) */
   private def hasPartitions(spark: SparkSession, dir: String): Boolean =
     Fs.hasPartitions(spark, dir, "pred=")
+
+  /** A snap dir's own rows; an empty frame when it holds no partition. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
+    if (hasPartitions(spark, dir)) spark.read.schema(TableSchema).parquet(dir)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSchema)
 
   /** THE partitioned parquet write of every graph-table-shaped dir
     * (snapshot data, overlays, compactions, the entity index): rows are
@@ -165,13 +184,12 @@ object GraphTables {
       .write.mode(mode).option("partitionOverwriteMode", "static")
       .partitionBy(partCols: _*).parquet(dir)
 
-  /** Publish one snapshot into its OWN directory, THEN append the
-    * manifest row. The previous snapshot's data is never touched, so a
-    * crash between the data write and the manifest append leaves
-    * readers on the old snapshot with a still-consistent manifest (an
-    * orphaned snap dir at worst) — publishing in place would destroy
-    * the committed snapshot before the new one commits. Readers
-    * resolve the snapshot via the manifest ([[read]] takes the
+  /** Publish one snapshot into its OWN directory, THEN commit its
+    * record. The previous snapshot's data is never touched, so a crash
+    * between the data write and the commit leaves readers on the old
+    * snapshot (an orphaned snap dir at worst) — publishing in place
+    * would destroy the committed snapshot before the new one commits.
+    * Readers resolve the snapshot via the commit log ([[read]] takes the
     * latest), which also gives time-travel reads ([[readSnapshot]]).
     * Returns (rowCount, contentHash) of the published data — callers
     * wanting the count must not re-scan the table they just wrote. */
@@ -181,74 +199,51 @@ object GraphTables {
     // STATIC overwrite of THIS snapshot's dir: a republish of the same
     // snapshotId replaces it wholesale, including (pred, bucket)
     // partitions absent from the new data
-    writePartitioned(triples.withColumn("bucket", bucketCol(col("subj"))),
-      snapDir(path, snapshotId), PartCols, SaveMode.Overwrite)
+    writePartitioned(conform(triples), snapDir(path, snapshotId), PartCols,
+      SaveMode.Overwrite)
     // fingerprint the data ACTUALLY WRITTEN (read back from disk), not
     // a recomputation of the input plan — recomputing would run the
     // whole upstream pipeline a second time and hash rows that were
-    // never made durable
-    // an EMPTY publish writes a snap dir with no pred=/bucket= subdirs
-    // and no data files — read.parquet on it fails schema inference, so
-    // probe first and commit (0, constant hash) like ResumableStage does
-    val hasData = hasPartitions(spark, snapDir(path, snapshotId))
+    // never made durable; an EMPTY publish (no partition dirs) commits
+    // (0, constant hash) like ResumableStage does
+    val dir = snapDir(path, snapshotId)
     val (n, h) =
-      if (!hasData) (0L, "%016x".format(0L))
-      else ContentHash.hex(
-        spark.read.parquet(snapDir(path, snapshotId)), ContentHash.TripleCols)
-    commitManifest(spark, path, snapshotId, n, h)
+      if (!hasPartitions(spark, dir)) (0L, "%016x".format(0L))
+      else ContentHash.hex(readDir(spark, dir), ContentHash.TripleCols)
+    SnapshotMeta.commit(spark, path, snapshotId, n, h)
     (n, h)
   }
 
-  /** THE commit point of every snapshot publish: append its manifest
-    * row, after everything the snapshot consists of is on disk. */
-  private def commitManifest(spark: SparkSession, path: String,
-      snapshotId: String, n: Long, h: String): Unit = {
-    import spark.implicits._
-    Seq((n, h, snapshotId, System.currentTimeMillis()))
-      .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
-      .write.mode(SaveMode.Append).parquet(s"$path/manifest")
-  }
-
-  /** (rowCount, contentHash) of a snapshot's latest manifest row. */
-  private def manifestRow(spark: SparkSession, path: String,
+  /** (rowCount, contentHash) of a snapshot's latest commit record. */
+  def commitRecord(spark: SparkSession, path: String,
       snapshotId: String): Option[(Long, String)] =
-    if (!Fs.exists(spark, s"$path/manifest")) None
-    else spark.read.parquet(s"$path/manifest")
-      .filter(col("snapshotId") === snapshotId)
-      .orderBy(col("committedAt").desc)
-      .select(col("rowCount"), col("contentHash")).limit(1)
-      .collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+    SnapshotMeta.commitOf(spark, path, snapshotId)
+      .map(c => (c.rowCount, c.contentHash))
 
-  /** The latest COMMITTED snapshot (manifest-resolved) — an
+  /** The latest COMMITTED snapshot (log-resolved) — an
     * uncommitted/partial publish is invisible here. */
   def read(spark: SparkSession, path: String): DataFrame =
     readSnapshot(spark, path, latestSnapshot(spark, path).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $path")))
 
-  /** Time-travel read of one committed snapshot. A legitimately-empty
-    * snapshot (rowCount=0 manifest row) has no data files to infer a
-    * schema from — return an explicit empty frame of [[TableSchema]]
-    * instead of a schema-inference failure. A snapshot whose manifest
-    * row says rowCount>0 but whose data dir is gone (expired by
-    * [[expireSnapshots]], or corrupted) FAILS instead of silently
-    * reading as empty; an id with no manifest row at all (uncommitted
-    * or unknown) fails likewise. */
+  /** Time-travel read of one committed snapshot, [[TableSchema]]-typed.
+    * An overlay resolves its chain (its pointer names the base; its
+    * sidecar the base docs it hides). A legitimately-empty snapshot
+    * (rowCount=0 record) has no data files and reads as an empty frame.
+    * A snapshot whose record says rowCount>0 but whose data dir is gone
+    * (expired by [[expireSnapshots]], or corrupted) FAILS instead of
+    * silently reading as empty; an id with no record at all
+    * (uncommitted or unknown) fails likewise. */
   def readSnapshot(spark: SparkSession, path: String,
       snapshotId: String): DataFrame = {
     val dir = snapDir(path, snapshotId)
-    if (Fs.exists(spark, baseMetaDir(dir))) resolveOverlay(spark, path, dir)
-    else if (hasPartitions(spark, dir)) spark.read.parquet(dir)
-    else {
-      // probe the manifest's existence first (Manifest.committed
-      // pattern): a consumer polling a fresh table must get the
-      // contract's "not committed" failure, not a PATH_NOT_FOUND
-      manifestRow(spark, path, snapshotId).map(_._1) match {
-        case Some(0L) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            TableSchema)
+    SnapshotMeta.chainOf(spark, dir) match {
+      case Some((baseId, _)) => resolveOverlay(spark, path, dir, baseId)
+      case None if hasPartitions(spark, dir) => readDir(spark, dir)
+      case None => commitRecord(spark, path, snapshotId).map(_._1) match {
+        case Some(0L) => readDir(spark, dir)
         case Some(n) => throw new IllegalStateException(
-          s"snapshot $snapshotId at $path has a committed manifest row " +
+          s"snapshot $snapshotId at $path has a committed record " +
             s"($n rows) but no data dir — expired or corrupted")
         case None => throw new IllegalStateException(
           s"snapshot $snapshotId at $path is not committed")
@@ -260,87 +255,55 @@ object GraphTables {
   // DELTA (overlay) snapshots — O(delta) publish I/O
   // ------------------------------------------------------------------
 
-  /** Sidecar dir marking a snapshot as an OVERLAY over a base
-    * snapshot. The underscore prefix keeps it invisible to the parquet
-    * reader's partition discovery over the same snap dir (the same
-    * rule that hides `_SUCCESS`/`_temporary`), so the overlay's own
-    * `pred=`/`bucket=` data and its chain metadata coexist in one dir
-    * and one GC unit. Rows: `('base', baseSnapshotId)` and
-    * `('depth', chainDepth)` exactly once each, plus
-    * `('removed', docId)` for every doc whose BASE rows this snapshot
-    * hides (always ≥ 1 row, so an empty-read probe is never
-    * needed). */
-  private def baseMetaDir(dir: String): String = s"$dir/_graft_base"
-
-  /** (baseSnapshotId, recorded depth) of an overlay's sidecar; None
-    * for a full snapshot. One read serves both fields. A sidecar
-    * without a 'depth' row (not written in practice — kept as a
-    * defensive fallback) reports depth -1, making [[chainDepth]] walk. */
-  private def sidecarMeta(spark: SparkSession, path: String,
-      snapshotId: String): Option[(String, Int)] = {
-    val meta = baseMetaDir(snapDir(path, snapshotId))
-    if (!Fs.exists(spark, meta)) None
-    else {
-      val rows = spark.read.parquet(meta)
-        .filter(col("kind").isin("base", "depth"))
-        .collect().map(r => (r.getString(0), r.getString(1))).toMap
-      Some((rows("base"), rows.get("depth").map(_.toInt).getOrElse(-1)))
-    }
-  }
-
   /** The base snapshot an overlay builds on; None for a full
     * (self-contained) snapshot. */
   def baseOf(spark: SparkSession, path: String,
       snapshotId: String): Option[String] =
-    sidecarMeta(spark, path, snapshotId).map(_._1)
+    SnapshotMeta.chainOf(spark, snapDir(path, snapshotId)).map(_._1)
 
-  /** Overlay-chain length above a snapshot (0 = full). The sidecar
-    * records its own depth, so the common case is ONE sidecar read —
-    * the publish-time depth gate must not pay a 2-reads-per-level
-    * walk. Falls back to walking the base pointers for a sidecar
-    * without the depth row; a cycle (corrupted sidecars) fails
-    * instead of looping. */
+  /** Overlay-chain length above a snapshot (0 = full). The chain pointer
+    * records its own depth, so the common case is ONE pointer read.
+    * Falls back to walking the base pointers for a pre-JSON sidecar
+    * without the depth row; a cycle (corrupted pointers) fails instead
+    * of looping. */
   def chainDepth(spark: SparkSession, path: String,
       snapshotId: String): Int = {
     var id = snapshotId; var d = 0; var seen = Set.empty[String]
-    var m = sidecarMeta(spark, path, id)
+    var m = SnapshotMeta.chainOf(spark, snapDir(path, id))
     while (m.isDefined) {
       if (m.get._2 >= 0) return d + m.get._2
       require(!seen.contains(id), s"overlay chain cycle at snapshot $id")
       seen += id; id = m.get._1; d += 1
-      m = sidecarMeta(spark, path, id)
+      m = SnapshotMeta.chainOf(spark, snapDir(path, id))
     }
     d
   }
 
+  /** The sidecar's parquet rows are data-sized (the hidden docs), so it
+    * stays parquet, read with its pinned schema; a pre-JSON sidecar's
+    * base/depth rows are filtered out. */
   private def resolveOverlay(spark: SparkSession, path: String,
-      dir: String): DataFrame = {
-    val meta = spark.read.parquet(baseMetaDir(dir))
-    val baseId = meta.filter(col("kind") === "base")
-      .select(col("value")).head().getString(0)
-    val removed = meta.filter(col("kind") === "removed")
-      .select(col("value").as("docId"))
-    val base = readSnapshot(spark,
-      path, baseId)
-    val overlay =
-      if (hasPartitions(spark, dir)) spark.read.parquet(dir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSchema)
+      dir: String, baseId: String): DataFrame = {
+    val removed = spark.read.schema(SnapshotMeta.SidecarSchema)
+      .parquet(SnapshotMeta.sidecarDir(dir))
+      .filter(col("kind") === "removed").select(col("value").as("docId"))
     val cols = TableSchema.fieldNames.map(col).toSeq
-    base.join(removed, Seq("docId"), "left_anti").select(cols: _*)
-      .unionByName(overlay.select(cols: _*))
+    readSnapshot(spark, path, baseId).join(removed, Seq("docId"), "left_anti")
+      .select(cols: _*)
+      .unionByName(readDir(spark, dir).select(cols: _*))
   }
 
   /** THE publish commit of the dynamic publish, which keeps per-doc
     * state: write `added`, read it back ONCE into its
-    * [[ContentHash.perDoc]] stats, and commit the manifest row.
+    * [[ContentHash.perDoc]] stats, and commit the snapshot's record.
     *
     * With a base it publishes an OVERLAY over `baseSnapshotId`: ONLY
-    * `added` (the re-emitted docs' triples) plus the sidecar naming the
-    * base and the hidden docs — publish I/O scales with the DELTA, not
-    * the corpus. The manifest row is exact nonetheless: the resolved
-    * snapshot's rowCount/contentHash derive from the base's committed
-    * row by xor algebra (see [[ContentHash.xorLong]]) — callers supply
+    * `added` (the re-emitted docs' triples), the sidecar listing the
+    * base docs it hides, and a chain pointer naming the base and the
+    * depth — publish I/O scales with the DELTA, not the corpus. The
+    * commit record is exact nonetheless: the resolved snapshot's
+    * rowCount/contentHash derive from the base's committed record by xor
+    * algebra (see [[ContentHash.xorLong]]) — callers supply
     * `(removedRows, removedHash)` over the base rows of exactly the
     * `removedDocs` set (the publish state keeps per-doc fingerprints
     * for this; GraphSinkSpec asserts the derived hash equals a
@@ -355,51 +318,50 @@ object GraphTables {
     * ignored): its (rowCount, contentHash) are the sum and xor of the
     * read-back's per-doc stats, the same values [[write]] commits.
     *
-    * Same commit discipline as [[write]]: data + sidecar land before
-    * the manifest row; a crash mid-publish leaves an orphan dir.
-    * Returns (rowCount, contentHash, ownStats): the snapshot's manifest
-    * row plus the per-doc stats of the rows this publish wrote,
-    * materialized from the same read-back. */
+    * Same commit discipline as [[write]]: data, sidecar and pointer
+    * land before the commit record; a crash mid-publish leaves an
+    * orphan dir. Returns (rowCount, contentHash, ownStats): the
+    * snapshot's commit record plus the per-doc stats of the rows this
+    * publish wrote, materialized from the same read-back. */
   def writeDelta(spark: SparkSession, path: String, snapshotId: String,
       baseSnapshotId: Option[String], added: DataFrame,
       removedDocs: DataFrame, removedRows: Long,
       removedHash: Long): (Long, String, DataFrame) = {
-    import spark.implicits._
-    val base = baseSnapshotId.map(b => (b, manifestRow(spark, path, b)
-      .getOrElse(throw new IllegalStateException(
-        s"overlay base $b at $path is not committed"))))
+    // the base's record and chain depth, looked up once, before any write
+    val base = baseSnapshotId.map { b =>
+      val (bN, bH) = commitRecord(spark, path, b).getOrElse(
+        throw new IllegalStateException(s"overlay base $b at $path is not committed"))
+      (b, bN, ContentHash.parseHex(bH), chainDepth(spark, path, b))
+    }
     val dir = snapDir(path, snapshotId)
-    // data FIRST (static Overwrite wipes the dir, sidecar included —
-    // a republish of the same snapshotId replaces the snapshot
-    // wholesale), sidecar second, manifest row last
-    writePartitioned(added.withColumn("bucket", bucketCol(col("subj"))),
-      dir, PartCols, SaveMode.Overwrite)
-    // ONE read-back serves both the manifest row (sum and xor of the
+    // data FIRST (static Overwrite wipes the dir, sidecar and pointer
+    // included — a republish of the same snapshotId replaces the
+    // snapshot wholesale), sidecar and pointer second, record last
+    writePartitioned(conform(added), dir, PartCols, SaveMode.Overwrite)
+    // ONE read-back serves both the commit record (sum and xor of the
     // per-doc stats) and the caller's per-doc publish state
     val (ownStats, addN, addH) =
       if (!hasPartitions(spark, dir))
-        (ContentHash.perDoc(readOwnData(spark, path, snapshotId)), 0L, 0L)
+        (ContentHash.perDoc(readDir(spark, dir)), 0L, 0L)
       else {
-        val st = ContentHash.perDoc(spark.read.schema(TableSchema).parquet(dir))
-          .localCheckpoint()
+        val st = ContentHash.perDoc(readDir(spark, dir)).localCheckpoint()
         val r = st.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
         (st, r.getLong(0), r.getLong(1))
       }
-    val (n, h) = base.fold((addN, addH)) { case (baseId, (bN, bH)) =>
-      val depth = chainDepth(spark, path, baseId) + 1
-      // one file: every read of the overlay opens the sidecar twice
-      removedDocs.select(lit("removed").as("kind"), col("docId").as("value"))
-        .unionByName(Seq(("base", baseId),
-          ("depth", depth.toString)).toDF("kind", "value"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(baseMetaDir(dir))
+    val (n, h) = base.fold((addN, addH)) { case (baseId, bN, bH, bDepth) =>
       val n0 = bN - removedRows + addN
       require(n0 >= 0, s"overlay row count went negative ($n0): removed " +
         s"$removedRows from a base of $bN — the removed-doc stats do not " +
         "describe this base")
-      (n0, ContentHash.parseHex(bH) ^ removedHash ^ addH)
+      // one file: every read of the overlay scans it
+      removedDocs.select(lit("removed").as("kind"), col("docId").as("value"))
+        .coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(SnapshotMeta.sidecarDir(dir))
+      SnapshotMeta.writeChain(spark, dir, baseId, bDepth + 1)
+      (n0, bH ^ removedHash ^ addH)
     }
     val hex = "%016x".format(h)
-    commitManifest(spark, path, snapshotId, n, hex)
+    SnapshotMeta.commit(spark, path, snapshotId, n, hex)
     (n, hex, ownStats)
   }
 
@@ -409,29 +371,24 @@ object GraphTables {
     * snapshot it is the whole thing. Empty-typed frame when the dir
     * holds no data. */
   def readOwnData(spark: SparkSession, path: String,
-      snapshotId: String): DataFrame = {
-    val dir = snapDir(path, snapshotId)
-    if (hasPartitions(spark, dir)) spark.read.parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSchema)
-  }
+      snapshotId: String): DataFrame =
+    readDir(spark, snapDir(path, snapshotId))
 
   /** Flatten one overlay snapshot in place: resolve its chain and
-    * rewrite it as a FULL snapshot (manifest untouched — rowCount and
-    * contentHash are invariants of the resolved content, which is
-    * exactly what the overlay's manifest row already records; asserted
-    * in GraphSinkSpec). Frees its base for [[expireSnapshots]] and
-    * caps the read-side chain cost. No-op on a full snapshot. Goes
-    * through a tmp dir + [[Fs.swapInto]] — like the other maintenance
-    * rewrites, run at a quiescent point. */
+    * rewrite it as a FULL snapshot (commit record untouched — rowCount
+    * and contentHash are invariants of the resolved content, which is
+    * exactly what the overlay's record already holds; asserted in
+    * GraphSinkSpec). Frees its base for [[expireSnapshots]] and caps the
+    * read-side chain cost. No-op on a full snapshot. Goes through a tmp
+    * dir + [[Fs.swapInto]] — like the other maintenance rewrites, run at
+    * a quiescent point. */
   def compactSnapshot(spark: SparkSession, path: String,
       snapshotId: String): Boolean = {
     val dir = snapDir(path, snapshotId)
-    if (!Fs.exists(spark, baseMetaDir(dir))) return false
+    if (SnapshotMeta.chainOf(spark, dir).isEmpty) return false
     val tmp = s"${dir}__compact"
-    writePartitioned(readSnapshot(spark, path, snapshotId)
-      .select(col("subj"), col("obj"), col("docId"), col("score"),
-        col("pred"), col("bucket")), tmp, PartCols, SaveMode.Overwrite)
+    writePartitioned(readSnapshot(spark, path, snapshotId), tmp, PartCols,
+      SaveMode.Overwrite)
     Fs.swapInto(spark, tmp, dir)
     true
   }
@@ -462,29 +419,13 @@ object GraphTables {
         col("bucket") === bucketCol(lit(subj)) &&
         col("subj") === subj)
 
-  /** Tie-break on snapshotId: two publishes can commit within one
-    * clock millisecond, and [[expireSnapshots]] must agree with this
-    * resolution on which snapshot is "latest" — an un-tied sort here
-    * and an independent sort there could disagree and GC the dir this
-    * method resolves. */
-  def latestSnapshot(spark: SparkSession, path: String): Option[String] = {
-    val m = spark.read.parquet(s"$path/manifest")
-    m.orderBy(col("committedAt").desc, col("snapshotId").desc)
-      .select(col("snapshotId"))
-      .limit(1).collect().headOption.map(_.getString(0))
-  }
-
-  /** Committed snapshot ids of a manifest frame, most recent first: an
-    * id republished under the same snapshotId counts once, at its
-    * latest commit time. Same tie-break as [[latestSnapshot]], so a GC
-    * keep-set taken from the front contains whatever readers resolve
-    * as latest even on equal timestamps. */
-  private[graft] def committedIds(manifest: DataFrame): Seq[String] =
-    manifest.groupBy(col("snapshotId"))
-      .agg(max(col("committedAt")).as("committedAt"))
-      .orderBy(col("committedAt").desc, col("snapshotId").desc)
-      .select(col("snapshotId"))
-      .collect().map(_.getString(0)).toSeq
+  /** The latest committed snapshot; None for a table with none. Same
+    * `(committedAt desc, snapshotId desc)` order as the GC sweeps
+    * ([[SnapshotMeta]]): two publishes can commit within one clock
+    * millisecond, and [[expireSnapshots]] must agree with this
+    * resolution on which snapshot is "latest". */
+  def latestSnapshot(spark: SparkSession, path: String): Option[String] =
+    SnapshotMeta.latest(spark, path).map(_.snapshotId)
 
   /** Snapshot GC — without it, every crashed publish (orphan snap dir,
     * never committed) and every superseded snapshot stays on disk
@@ -495,18 +436,18 @@ object GraphTables {
     *    snapshots (time travel within the last `keepLast` stays intact;
     *    the latest committed snapshot is never deleted — `keepLast` is
     *    clamped to >= 1), or
-    *  - UNCOMMITTED (no manifest row) and older than `orphanSafetyMs`
+    *  - UNCOMMITTED (no commit record) and older than `orphanSafetyMs`
     *    by dir modification time — the age gate keeps an in-flight
-    *    publish (data written, manifest append pending) from being
-    *    swept by a concurrent GC.
+    *    publish (data written, commit pending) from being swept by a
+    *    concurrent GC.
     *
-    * Manifest rows of expired snapshots are kept (cheap lineage);
+    * Records of expired snapshots are kept (cheap lineage);
     * [[readSnapshot]] on an expired id fails loudly via the
     * rowCount>0-but-no-data check. Returns the deleted snapshot dirs. */
   def expireSnapshots(spark: SparkSession, path: String, keepLast: Int,
       orphanSafetyMs: Long = 6 * 3600 * 1000L): Seq[String] =
     // chain closure: an overlay's base must outlive it even when the
-    // base itself is beyond the keepLast window (or manifest-pruned)
+    // base itself is beyond the keepLast window (or its record pruned)
     sweepSnapDirs(spark, s"$path/data", path, keepLast, orphanSafetyMs)(
       withBaseChains(spark, path, _))
 
@@ -519,9 +460,7 @@ object GraphTables {
     val dirP = new org.apache.hadoop.fs.Path(dir)
     val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dirP)) return Seq.empty
-    val committed =
-      if (!Fs.exists(spark, s"$tablePath/manifest")) Seq.empty[String]
-      else committedIds(spark.read.parquet(s"$tablePath/manifest"))
+    val committed = SnapshotMeta.committedIds(spark, tablePath)
     val keepIds = closure(committed.take(math.max(1, keepLast)).toSet)
     val isCommitted = committed.toSet
     val now = System.currentTimeMillis()
@@ -537,40 +476,29 @@ object GraphTables {
       }
   }
 
-  /** Manifest pruning — the storage-hygiene twin of
-    * [[expireSnapshots]]: [[expireSnapshots]] deletes data dirs but
-    * appends nothing to the manifest, so at a snapshot per ingest the
-    * manifest grows one row per publish forever. This rewrites the
-    * manifest keeping every row of the `keepLast` most recently
-    * committed snapshotIds (same ordering and tie-break as
+  /** Commit-log pruning — the storage-hygiene twin of
+    * [[expireSnapshots]], which deletes data dirs but keeps every record,
+    * so at a snapshot per ingest the log grows one record per publish
+    * forever. This deletes the records of every id outside the
+    * `keepLast` most recently committed (same ordering and tie-break as
     * [[latestSnapshot]]/[[expireSnapshots]], so the kept window is
     * exactly the readable one — run it AFTER expireSnapshots with the
-    * same `keepLast`). Returns the pruned snapshot ids. A pruned id
-    * whose data dir still exists remains time-travel READABLE
-    * ([[readSnapshot]] probes the data dir first) but is now invisible
-    * to [[latestSnapshot]] and, being manifest-less, will be swept as
-    * an orphan by a later expireSnapshots once past the safety age.
-    * The rewrite goes through a tmp dir + [[Fs.swapInto]]. */
+    * same `keepLast`) and outside their base chains. Returns the pruned
+    * snapshot ids. A pruned id whose data dir still exists remains
+    * time-travel READABLE ([[readSnapshot]] probes the data dir first)
+    * but is now invisible to [[latestSnapshot]] and, being record-less,
+    * will be swept as an orphan by a later expireSnapshots once past
+    * the safety age. */
   def pruneManifest(spark: SparkSession, path: String,
       keepLast: Int): Seq[String] = {
-    val keep = math.max(1, keepLast)
-    val manPath = s"$path/manifest"
-    if (!Fs.exists(spark, manPath)) return Seq.empty
-    // materialize BEFORE the rewrite — the plan reads the dir the swap
-    // replaces
-    val m = spark.read.parquet(manPath).localCheckpoint()
-    val committed = committedIds(m)
-    // keep the base chains of kept overlays: a base manifest row is
-    // load-bearing for an empty base snapshot's read AND keeps the
-    // base dir from being swept as an orphan by a later GC
+    val committed = SnapshotMeta.committedIds(spark, path)
+    // keep the base chains of kept overlays: a base record is
+    // load-bearing for an empty base snapshot's read AND keeps the base
+    // dir from being swept as an orphan by a later GC
     val keepIds = withBaseChains(spark, path,
-      committed.take(keep).toSet).toSeq
+      committed.take(math.max(1, keepLast)).toSet)
     val dropIds = committed.filterNot(keepIds.contains)
-    if (dropIds.isEmpty) return Seq.empty
-    val tmp = s"${manPath}__prune"
-    m.filter(col("snapshotId").isin(keepIds: _*))
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    Fs.swapInto(spark, tmp, manPath)
+    if (dropIds.nonEmpty) SnapshotMeta.drop(spark, path, dropIds.toSet)
     dropIds
   }
 }

@@ -90,6 +90,19 @@ object StreamingPipeline {
     * again. */
   def rosterPath(mentionsPath: String): String = s"${mentionsPath}_docs"
 
+  /** The accumulation's reads, with the schemas [[triplesStream]] writes
+    * (an inferred read runs a footer job): the linked mentions, and the
+    * roster's docIds, each with its `batchId` partition. */
+  private val MentionsSchema = org.apache.spark.sql.Encoders
+    .product[graft.core.LinkedMention].schema
+    .add("batchId", org.apache.spark.sql.types.LongType)
+
+  private def readMentions(spark: SparkSession, mentionsPath: String): DataFrame =
+    spark.read.schema(MentionsSchema).parquet(mentionsPath)
+
+  private def readRoster(spark: SparkSession, rosterP: String): DataFrame =
+    spark.read.schema("docId STRING, batchId BIGINT").parquet(rosterP)
+
   /** One micro-batch's files -> mentions, behind ONE hash exchange.
     *
     * ONE version per doc per batch: with maxFilesPerTrigger > 1 a doc
@@ -245,7 +258,7 @@ object StreamingPipeline {
     * [[triplesStream]] with `mentionsPath` and publish via
     * [[publishSnapshotDynamic]] (doc roster) when that matters.
     * Snapshot isolation comes from GraphTables.write (own snap dir,
-    * manifest append LAST), so a crash mid-publish leaves readers on
+    * commit record LAST), so a crash mid-publish leaves readers on
     * the previous snapshot. Returns (rowCount, contentHash) of the
     * published snapshot. */
   def publishSnapshot(spark: SparkSession, outPath: String,
@@ -327,7 +340,7 @@ object StreamingPipeline {
         "committed (triplesStream needs mentionsPath=Some(...))")
     if (!graft.sources.Fs.hasPartitions(spark, mentionsPath, "batchId="))
       return f(None)
-    val all = spark.read.parquet(mentionsPath)
+    val all = readMentions(spark, mentionsPath)
     val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
     val linked = all.join(latest, Seq("docId", "batchId"))
       .drop("batchId").persist()
@@ -361,8 +374,7 @@ object StreamingPipeline {
     val rosterP = rosterPath(mentionsPath)
     val touched =
       if (graft.sources.Fs.hasPartitions(spark, rosterP, "batchId="))
-        spark.read.parquet(rosterP).select(col("docId"), col("batchId"))
-          .unionByName(mentionTouches)
+        readRoster(spark, rosterP).unionByName(mentionTouches)
       else mentionTouches
     touched.groupBy(col("docId")).agg(max(col("batchId")).as("batchId"))
   }
@@ -403,13 +415,10 @@ object StreamingPipeline {
       keepTouches: Option[DataFrame] = None): Unit = {
     import graft.sources.Fs
     if (!Fs.hasPartitions(spark, mentionsPath, "batchId=")) return
-    val all = spark.read.parquet(mentionsPath)
+    val all = readMentions(spark, mentionsPath)
     // materialize: read by both rewrites, and it must be computed
-    // before the swap replaces the dir it reads. Cast batchId to long
-    // on BOTH branches: the partition column reads back as int when
-    // every value fits, while state-derived keepTouches carry longs.
+    // before the swap replaces the dir it reads
     val latest0 = latestTouches(spark, mentionsPath, all)
-      .select(col("docId"), col("batchId").cast("long").as("batchId"))
     val latest = keepTouches.fold(latest0)(k =>
         latest0.unionByName(k.select(col("docId"),
           col("batchId").cast("long").as("batchId"))).distinct())
@@ -421,7 +430,7 @@ object StreamingPipeline {
     val doRoster = Fs.hasPartitions(spark, rosterP, "batchId=")
     if (doRoster) {
       // written BEFORE either swap — this plan reads rosterP
-      spark.read.parquet(rosterP)
+      readRoster(spark, rosterP)
         .join(latest, Seq("docId", "batchId"), "left_semi")
         .write.mode("overwrite").partitionBy("batchId")
         .parquet(s"${rosterP}__compact")
@@ -443,9 +452,7 @@ object StreamingPipeline {
     * rows, so a latest-only fold is already safe. */
   def publishedStateTouches(spark: SparkSession, tablePath: String,
       statePath: String): Option[DataFrame] =
-    (if (graft.sources.Fs.exists(spark, s"$tablePath/manifest"))
-       graft.sources.GraphTables.latestSnapshot(spark, tablePath)
-     else None)
+    graft.sources.GraphTables.latestSnapshot(spark, tablePath)
       .flatMap(id => readState(spark, statePath, id))
       .map(_.docs.select(col("docId"), col("batchId")))
 
@@ -490,7 +497,7 @@ object StreamingPipeline {
     graft.sources.Fs.exists(spark, entIdxMarker(statePath)) &&
       graft.sources.Fs.hasPartitions(spark, entIdxDir(statePath), "ebucket=")
 
-  /** Delta append — MUST run before the snapshot's manifest commit: a
+  /** Delta append — MUST run before the snapshot's commit: a
     * crash in between leaves over-coverage (benign), never a committed
     * snapshot whose docs the index misses. */
   private[graft] def appendEntIdx(spark: SparkSession, statePath: String,
@@ -529,10 +536,10 @@ object StreamingPipeline {
     *  2. expire snapshot data dirs ([[graft.sources.GraphTables
     *     .expireSnapshots]], chain-safe);
     *  3. expire superseded canon state ([[expireCanonState]] — while
-    *     the manifest still lists the superseded ids as committed; run
+    *     the commit log still lists the superseded ids as committed; run
     *     after the prune and they'd read as "uncommitted" and escape
     *     deletion until the orphan age gate);
-    *  4. prune manifest rows to the SAME window ([[graft.sources
+    *  4. prune commit records to the SAME window ([[graft.sources
     *     .GraphTables.pruneManifest]] — last, so every earlier step
     *     agrees on the keep set).
     * `flatten=false` (default) keeps maintenance O(metadata): the
@@ -541,7 +548,7 @@ object StreamingPipeline {
       statePath: String, keepLast: Int,
       flatten: Boolean = false): Maintenance = {
     import graft.sources.GraphTables
-    // resolve the latest snapshot ONCE — two manifest reads could
+    // resolve the latest snapshot ONCE — two log reads could
     // disagree if a publish raced the quiescent window
     val latestId =
       if (flatten) GraphTables.latestSnapshot(spark, tablePath) else None
@@ -573,7 +580,7 @@ object StreamingPipeline {
     graft.sources.GraphTables.sweepSnapDirs(spark, statePath, tablePath,
         keepLast, orphanSafetyMs) { direct =>
       direct ++ direct.flatMap(id =>
-        stateChain(spark, statePath, id).fold(Seq.empty[String])(_._1))
+        stateChain(spark, statePath, id).fold(Seq.empty[String])(_.ids))
     }
 
   /** Canon state written NEXT TO each published snapshot:
@@ -587,7 +594,8 @@ object StreamingPipeline {
     *    overlay publish derive the removed-rows hash of its re-emitted
     *    docs from state instead of scanning the base snapshot;
     *  - `meta`   — lastBatchId: the highest accumulated batch folded
-    *    into this snapshot (the next publish's delta floor).
+    *    into this snapshot (the next publish's delta floor), and the
+    *    base state's id; a JSON record ([[graft.sources.SnapshotMeta]]).
     *
     * THE state writer. Without `base` the state is FLAT: all three
     * tables whole, each growing with the CORPUS (canon map ~
@@ -604,7 +612,7 @@ object StreamingPipeline {
     *
     * Ordering vs the snapshot commit: the per-doc fingerprints are
     * computed from the data READ BACK off the committed snapshot, so
-    * state lands AFTER the manifest row. A crash in between leaves a
+    * state lands AFTER the commit record. A crash in between leaves a
     * committed snapshot with no state — `meta` is written last, the
     * reader probes for it, and a missing/partial state (a half-written
     * delta included) simply routes the next publish through the full
@@ -623,54 +631,46 @@ object StreamingPipeline {
         col("nTriples").cast("long").as("nTriples"),
         col("h64").cast("long").as("h64"))
       .write.mode("overwrite").parquet(s"$d/docs")
-    writeMeta(spark, d, lastBatchId, base)
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String,
-      lastBatchId: Long, baseState: Option[String]): Unit = {
-    import spark.implicits._
-    Seq((lastBatchId, baseState.orNull))
-      .toDF("lastBatchId", "baseState")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** meta of one state dir: (lastBatchId, baseState). A legacy layout
-    * (bare lastBatchId column, pre-chaining) reads as a FULL state. */
-  private def readMeta(spark: SparkSession,
-      dir: String): (Long, Option[String]) = {
-    val r = spark.read.schema(MetaSchema).parquet(s"$dir/meta").head()
-    (r.getLong(0), Option(r.getString(1)))
+    graft.sources.SnapshotMeta.writeStateMeta(spark, d, lastBatchId, base)
   }
 
   /** [[writeState]]'s schemas: an inferred read runs a footer job.
-    * `docs` is inferred — pre-fingerprint state lacks its `h64`. */
-  private val MetaSchema = "lastBatchId BIGINT, baseState STRING"
+    * `docs` is inferred only under a pre-JSON parquet `meta`, whose
+    * state may predate the fingerprint (no `h64`); a JSON meta is only
+    * ever written next to fingerprinted docs. */
   private val CanonSchema = "entity STRING, canonical STRING"
   private val PairsSchema = "k STRING, entity STRING, ndocs BIGINT"
+  private val DocsSchema = "docId STRING, batchId BIGINT, nTriples BIGINT, h64 BIGINT"
 
   /** Most state dirs [[stateChain]] walks. The depth gate keeps a chain
     * at `maxChain + 1` dirs, so `maxChain` must stay below it. */
   private val MaxStateChain = 64
 
-  /** Base-first chain of state snapshot ids ending at `snapshotId`,
-    * with the tip's lastBatchId (one meta read per link, the tip's
-    * included). None when any link is missing or the chain is corrupt
-    * (expired base, crashed write, cycle, over-deep) — the caller then
-    * takes the full publish, which rewrites fresh flat state. A meta dir
-    * that EXISTS but fails to read (a crash mid-meta-write left a
-    * partial parquet, or an empty one) counts as corrupt too —
-    * throwing here would wedge every later incremental publish on a
-    * state the contract says is simply "unreadable as a chain tip". */
+  /** A state chain: base-first state snapshot ids, the tip's
+    * lastBatchId, and whether any link has a pre-JSON `meta`. */
+  private final case class Chain(ids: Seq[String], lastBatchId: Long,
+      legacy: Boolean)
+
+  /** The chain of state snapshots ending at `snapshotId` (one meta read
+    * per link, the tip's included). None when any link is missing or
+    * the chain is corrupt (expired base, crashed write, cycle,
+    * over-deep) — the caller then takes the full publish, which rewrites
+    * fresh flat state. A meta that EXISTS but fails to read (a crash
+    * mid-write left a torn record) counts as corrupt too — throwing here
+    * would wedge every later incremental publish on a state the
+    * contract says is simply "unreadable as a chain tip". */
   private def stateChain(spark: SparkSession, statePath: String,
-      snapshotId: String): Option[(Seq[String], Long)] = {
+      snapshotId: String): Option[Chain] = {
     val acc = scala.collection.mutable.ListBuffer.empty[String]
     var tipLast = -1L
+    var legacy = false
     var cur = snapshotId
     while (acc.size < MaxStateChain) {
       val d = stateDir(statePath, cur)
-      if (!graft.sources.Fs.exists(spark, s"$d/meta")) return None
+      val meta = graft.sources.SnapshotMeta.stateMeta(spark, d)
+      if (meta.isEmpty) return None
       acc.prepend(cur)
-      scala.util.Try(readMeta(spark, d)) match {
+      meta.get match {
         case scala.util.Failure(e) =>
           // log the CAUSE: a persistent environmental failure (FS/IO,
           // permissions) must be distinguishable from a genuinely
@@ -679,11 +679,12 @@ object StreamingPipeline {
           System.err.println(s"[publish] canon state meta unreadable " +
             s"at $d (treating as corrupt chain tip): ${e.getMessage}")
           return None
-        case scala.util.Success((last, base)) =>
-          if (acc.size == 1) tipLast = last
-          if (base.isEmpty) return Some((acc.toList, tipLast))
-          if (acc.contains(base.get)) return None // cycle: corrupt state
-          cur = base.get
+        case scala.util.Success(m) =>
+          if (acc.size == 1) tipLast = m.lastBatchId
+          legacy ||= m.legacy
+          if (m.baseState.isEmpty) return Some(Chain(acc.toList, tipLast, legacy))
+          if (acc.contains(m.baseState.get)) return None // cycle: corrupt state
+          cur = m.baseState.get
       }
     }
     None
@@ -717,8 +718,8 @@ object StreamingPipeline {
     * full publish. */
   private def readState(spark: SparkSession, statePath: String,
       snapshotId: String): Option[CanonState] =
-    stateChain(spark, statePath, snapshotId).flatMap { case (chain, last) =>
-      val dirs = chain.map(id => stateDir(statePath, id))
+    stateChain(spark, statePath, snapshotId).flatMap { chain =>
+      val dirs = chain.ids.map(id => stateDir(statePath, id))
       def whole(sub: String) = dirs.forall(d =>
         graft.sources.Fs.exists(spark, s"$d/$sub"))
       if (!whole("canon") || !whole("pairs") || !whole("docs")) None
@@ -728,9 +729,10 @@ object StreamingPipeline {
         lwwResolve(dirs.map(d =>
           spark.read.schema(PairsSchema).parquet(s"$d/pairs")),
           Seq("k", "entity")),
-        lwwResolve(dirs.map(d => spark.read.parquet(s"$d/docs")),
-          Seq("docId")),
-        last, chain.size))
+        lwwResolve(dirs.map(d =>
+          (if (chain.legacy) spark.read else spark.read.schema(DocsSchema))
+            .parquet(s"$d/docs")), Seq("docId")),
+        chain.lastBatchId, chain.ids.size))
     }
 
   /** Flatten a snapshot's state chain in place: rewrite the three
@@ -744,7 +746,9 @@ object StreamingPipeline {
   def compactState(spark: SparkSession, statePath: String,
       snapshotId: String): Boolean =
     readState(spark, statePath, snapshotId) match {
-      case Some(st) if st.depth > 1 =>
+      // a JSON meta only ever sits next to fingerprinted docs, so a
+      // pre-fingerprint state keeps its legacy meta
+      case Some(st) if st.depth > 1 && st.docs.columns.contains("h64") =>
         val d = stateDir(statePath, snapshotId)
         def swap(sub: String, df: DataFrame): Unit = {
           val tmp = s"$d/${sub}__compact"
@@ -756,7 +760,7 @@ object StreamingPipeline {
         swap("canon", st.canon.localCheckpoint())
         swap("pairs", st.pairs.localCheckpoint())
         swap("docs", st.docs.localCheckpoint())
-        writeMeta(spark, d, st.lastBatchId, None)
+        graft.sources.SnapshotMeta.writeStateMeta(spark, d, st.lastBatchId, None)
         true
       case _ => false
     }
@@ -781,7 +785,7 @@ object StreamingPipeline {
       tablePath: String, snapshotId: String, statePath: String,
       note: String): DynPublish = withFullPlan(spark, mentionsPath) { plan =>
     import spark.implicits._
-    // index rebuild strictly BEFORE the manifest commit (crash in
+    // index rebuild strictly BEFORE the snapshot commit (crash in
     // between = over-coverage, benign)
     rebuildEntIdx(spark, statePath, plan.fold(
       Seq.empty[(String, String)].toDF("entity", "docId"))(_.linked))
@@ -876,7 +880,7 @@ object StreamingPipeline {
     * I/O side: the snapshot is published as an OVERLAY
     * ([[graft.sources.GraphTables.writeDelta]]) — only the re-emitted
     * docs' triples are written, the base's untouched rows are a
-    * pointer, and the manifest row is derived by xor algebra from the
+    * pointer, and the commit record is derived by xor algebra from the
     * base's plus per-doc fingerprints kept in the publish state. The
     * STATE rides the same pattern: only the CHANGED canon, refcount and
     * doc rows land, with a base pointer ([[writeState]]), resolved
@@ -908,10 +912,7 @@ object StreamingPipeline {
         "committed (triplesStream needs mentionsPath=Some(...))")
     def full(note: String): DynPublish = fullDynamicPublish(spark,
       mentionsPath, tablePath, snapshotId, statePath, note)
-    val prior =
-      if (Fs.exists(spark, s"$tablePath/manifest"))
-        GraphTables.latestSnapshot(spark, tablePath)
-      else None
+    val prior = GraphTables.latestSnapshot(spark, tablePath)
     val priorState = prior.flatMap(id => readState(spark, statePath, id))
     if (prior.isEmpty || priorState.isEmpty)
       return full(
@@ -931,11 +932,11 @@ object StreamingPipeline {
     val priorDepth = math.max(
       GraphTables.chainDepth(spark, tablePath, prior.get), pst.depth - 1)
     val growChain = priorDepth + 1 <= maxChain
-    val all = spark.read.parquet(mentionsPath)
+    val all = readMentions(spark, mentionsPath)
     val rosterP = rosterPath(mentionsPath)
     val roster =
       if (Fs.hasPartitions(spark, rosterP, "batchId="))
-        Some(spark.read.schema("docId STRING, batchId BIGINT").parquet(rosterP))
+        Some(readRoster(spark, rosterP))
       else None
     val driver = new DriverRows
     // the DELTA: each doc's latest version after the prior publish's
@@ -1067,7 +1068,8 @@ object StreamingPipeline {
           // the buckets fold on the driver: a local relation's projection
           val bks = ents.toDF("e").select(ebucket(col("e"))).as[Int].collect()
           val candidates =
-            if (idxUsable) spark.read.parquet(entIdxDir(statePath))
+            if (idxUsable) spark.read.schema("entity STRING, docId STRING, ebucket INT")
+              .parquet(entIdxDir(statePath))
               .filter(col("ebucket").isin(bks.toSeq.distinct: _*))
             else all
           driver.collect(candidates.filter(col("entity").isin(ents: _*))
@@ -1102,7 +1104,7 @@ object StreamingPipeline {
         docContiguous = false)._2
       .select(col("subj"), col("pred"), col("obj"), col("docId"),
         col("score"))
-    // the entity→doc index append, strictly before the manifest commit
+    // the entity→doc index append, strictly before the snapshot commit
     // (a crash in between over-covers, benign); a legacy index without
     // the completeness marker waits for the next full publish's rebuild
     if (idxUsable) appendEntIdx(spark, statePath, deltaLinked)

@@ -194,10 +194,7 @@ class GraphSinkSpec extends SparkSpec {
         .toDF("subj", "pred", "obj", "docId", "score")
     def tset(id: String) = GraphTables.readSnapshot(spark, tmp, id)
       .select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
-    def manifestRow(id: String) = spark.read.parquet(s"$tmp/manifest")
-      .filter(col("snapshotId") === id)
-      .orderBy(col("committedAt").desc).select("rowCount", "contentHash")
-      .head() match { case r => (r.getLong(0), r.getString(1)) }
+    def manifestRow(id: String) = GraphTables.commitRecord(spark, tmp, id).get
     // the invariant every overlay must preserve: the manifest row
     // DERIVED by xor algebra equals a from-scratch fingerprint of the
     // chain-resolved content
@@ -311,8 +308,7 @@ class GraphSinkSpec extends SparkSpec {
         rows(), Seq("d1").toDF("docId"), 999L, 0L)
     }
     // the failed publish left no manifest row
-    assert(!spark.read.parquet(s"$tmp/manifest")
-      .filter(col("snapshotId") === "r-X").collect().nonEmpty)
+    assert(GraphTables.commitRecord(spark, tmp, "r-X").isEmpty)
   }
 
   test("maintainGraph: flatten + chain GC + state expiry + manifest prune, one pass") {
@@ -480,10 +476,7 @@ class GraphSinkSpec extends SparkSpec {
     // the same (rows, hash) write commits for the same rows
     assert((n, h) == ContentHash.hex(t, ContentHash.TripleCols))
     assert((n, h) == GraphTables.write(t, s"$tmp/viaWrite", "w-A"))
-    val row = spark.read.parquet(s"$tmp/manifest")
-      .filter(col("snapshotId") === "f-A")
-      .select("rowCount", "contentHash").head()
-    assert((row.getLong(0), row.getString(1)) == ((n, h)))
+    assert(GraphTables.commitRecord(spark, tmp, "f-A").contains((n, h)))
     // a full snapshot: no sidecar, depth 0, one file per dir
     assert(GraphTables.baseOf(spark, tmp, "f-A").isEmpty)
     assert(GraphTables.chainDepth(spark, tmp, "f-A") == 0)

@@ -448,12 +448,7 @@ class StreamingSpec extends SparkSpec {
     Seq("inc-4", "inc-6", "inc-7").foreach { id =>
       val want = ContentHash.hex(
         GraphTables.readSnapshot(spark, table, id), HashCols)
-      val got = spark.read.parquet(s"$table/manifest")
-        .filter(col("snapshotId") === id)
-        .orderBy(col("committedAt").desc)
-        .select("rowCount", "contentHash").head() match {
-        case r => (r.getLong(0), r.getString(1))
-      }
+      val got = GraphTables.commitRecord(spark, table, id).get
       assert(got == want, s"derived manifest of $id drifted")
     }
 
@@ -462,10 +457,8 @@ class StreamingSpec extends SparkSpec {
     // rewrites of canon map / pair refcounts / per-doc fingerprints
     def stRows(id: String, sub: String) =
       spark.read.parquet(s"$state/snap=$id/$sub").count()
-    def baseSt(id: String) = {
-      val df = spark.read.parquet(s"$state/snap=$id/meta")
-      Option(df.head().getString(df.columns.indexOf("baseState")))
-    }
+    def baseSt(id: String) =
+      graft.sources.SnapshotMeta.stateMeta(spark, s"$state/snap=$id").get.get.baseState
     assert(baseSt("inc-3").isEmpty) // retraction fallback → flat state
     assert(baseSt("inc-4").contains("inc-3") &&
       baseSt("inc-5").contains("inc-4") &&
@@ -654,10 +647,10 @@ class StreamingSpec extends SparkSpec {
         // a crash mid-meta-write leaves a PRESENT but unreadable meta:
         // the contract routes the next publish to the full fallback —
         // it must not throw and wedge the stream's publish schedule
-        val metaDir = new java.io.File(s"$state/snap=p3/meta")
-        metaDir.listFiles().foreach(_.delete())
-        java.nio.file.Files.write(metaDir.toPath.resolve("part-corrupt.parquet"),
-          "not parquet".getBytes)
+        val metaFile = new java.io.File(s"$state/snap=p3/meta.json")
+        assert(metaFile.exists)
+        new java.io.File(s"$state/snap=p3/.meta.json.crc").delete()
+        java.nio.file.Files.write(metaFile.toPath, "{\"lastBatchId\": 4".getBytes)
         val c1 = doc("C.scala", "c0",
           "def runC(a: Row): Txn = {", "val unrelated_thing = 9")
         Seq(c1).toDS().write.mode("append").parquet(src)
@@ -704,16 +697,20 @@ class StreamingSpec extends SparkSpec {
     // next publish would silently fall back to a full recompute
     val e = intercept[IllegalArgumentException](a.pub("m1", maxChain = 64))
     assert(e.getMessage.contains("maxChain 64"), e.getMessage)
-    assert(!graft.sources.Fs.exists(spark, s"${a.table}/manifest"),
+    assert(graft.sources.GraphTables.latestSnapshot(spark, a.table).isEmpty,
       "a rejected publish must commit nothing")
     assert(a.pub("m1", maxChain = 63).rows > 0)
   }
 
   /** Spark jobs of a depth-1 adds-only overlay publish and of an
     * empty-delta publish of the small accumulation below (75 and 37 when
-    * the refcount/CC/changed-set algebra ran as DataFrame steps). */
-  private val OverlayJobs = 40
-  private val EmptyDeltaJobs = 28
+    * the refcount/CC/changed-set algebra ran as DataFrame steps, 32 and
+    * 21 while snapshot and state metadata were parquet tables). */
+  private val OverlayJobs = 23
+  private val EmptyDeltaJobs = 6
+
+  /** Spark jobs of `readSnapshot(...).count()` of a depth-1 overlay. */
+  private val OverlayReadJobs = 3
 
   /** Drain the listener bus: delivery is async (`listenerBus` is
     * private[spark], public in bytecode). */
@@ -779,12 +776,20 @@ class StreamingSpec extends SparkSpec {
     assert(mat == 1, s"materializing publish read its snapshot in $mat executions")
   }
 
+  /** The snapshot-metadata records `f` opens, by path. */
+  private def recordReadsDuring(f: => Unit): Seq[String] = {
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    graft.sources.SnapshotMeta.onRecordRead = p => { reads.add(p); () }
+    try f finally graft.sources.SnapshotMeta.onRecordRead = _ => ()
+    scala.jdk.CollectionConverters.CollectionHasAsScala(reads).asScala.toSeq
+  }
+
   test("a publish reads each canon-state meta of the prior chain once") {
     val a = new Accumulation("stream-metaonce")
     a.land(Extract.corpus(spark, 4))
     assert(!a.pub("m1").incremental)
     def metasRead(publish: => Unit): Map[String, Int] =
-      scanRootsDuring(publish).flatten.filter(_.endsWith("/meta"))
+      recordReadsDuring(publish).filter(_.endsWith("/meta.json"))
         .groupBy(p => p.split("/").dropRight(1).last).map { case (d, ps) => d -> ps.size }
     a.landFile(4)
     val flat = metasRead(assert(a.pub("m2").note.contains("overlay")))
@@ -812,6 +817,106 @@ class StreamingSpec extends SparkSpec {
     }
     assert(overlay <= OverlayJobs, s"depth-1 overlay publish ran $overlay jobs")
     assert(empty <= EmptyDeltaJobs, s"empty-delta publish ran $empty jobs")
+  }
+
+  test("reading a depth-1 overlay runs no Spark job outside its scan") {
+    import graft.sources.GraphTables
+    val a = new Accumulation("stream-readjobs")
+    a.land(Extract.corpus(spark, 4))
+    assert(!a.pub("o0").incremental)
+    a.landFile(4)
+    assert(a.pub("o1").note.contains("overlay"))
+    assert(GraphTables.chainDepth(spark, a.table, "o1") == 1)
+    var n = -1L
+    val jobs = jobsDuring {
+      n = GraphTables.readSnapshot(spark, a.table, "o1").count()
+    }
+    assert(GraphTables.commitRecord(spark, a.table, "o1").map(_._1).contains(n))
+    // the count query's own jobs only (7 while the chain pointer, the
+    // commit log and the data schemas were read as parquet)
+    assert(jobs <= OverlayReadJobs, s"depth-1 overlay read ran $jobs jobs")
+  }
+
+  test("a table and state in the parquet-metadata layout read, sweep and publish on") {
+    import graft.sources.{ContentHash, GraphTables}
+    import org.apache.commons.io.FileUtils
+    import spark.implicits._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val a = new Accumulation("stream-legacy-meta")
+    a.land(Extract.corpus(spark, 6))
+    assert(!a.pub("l1").incremental)
+    a.landFile(6)
+    assert(a.pub("l2").note.contains("overlay"))
+    a.landFile(7)
+    assert(a.pub("l3", maxChain = 1).note.contains("materialized"))
+    /** A copy of the table and state, its metadata rewritten in the
+      * parquet layout: manifest rows, `_graft_base` base/depth rows next
+      * to the removed docs, and a parquet state `meta`. */
+    def parquetLayout(name: String): (String, String) = {
+      val t = s"${a.tmp}/$name/graph"; val st = s"${a.tmp}/$name/state"
+      FileUtils.copyDirectory(new java.io.File(a.table), new java.io.File(t))
+      FileUtils.copyDirectory(new java.io.File(a.state), new java.io.File(st))
+      def take(f: java.io.File) = {
+        val n = json.readTree(f)
+        f.delete(); new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+        n
+      }
+      val commits = new java.io.File(s"$t/_commits")
+      commits.listFiles().filter(_.getName.endsWith(".json")).toSeq.map(take)
+        .map(n => (n.get("rowCount").asLong, n.get("contentHash").asText,
+          n.get("snapshotId").asText, n.get("committedAt").asLong))
+        .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
+        .write.parquet(s"$t/manifest")
+      FileUtils.deleteDirectory(commits)
+      new java.io.File(s"$t/data").listFiles().foreach { d =>
+        val ptr = new java.io.File(d, "_graft_chain.json")
+        if (ptr.exists) {
+          val n = take(ptr)
+          Seq(("base", n.get("base").asText), ("depth", n.get("depth").asInt.toString))
+            .toDF("kind", "value").write.mode("append").parquet(s"$d/_graft_base")
+        }
+      }
+      new java.io.File(st).listFiles().filter(_.getName.startsWith("snap=")).foreach { d =>
+        val n = take(new java.io.File(d, "meta.json"))
+        val b = n.get("baseState")
+        Seq((n.get("lastBatchId").asLong, if (b.isNull) null else b.asText))
+          .toDF("lastBatchId", "baseState").write.parquet(s"$d/meta")
+      }
+      (t, st)
+    }
+    val (t0, s0) = parquetLayout("reads")
+    assert(!new java.io.File(s"$t0/_commits").exists)
+    for (id <- Seq("l1", "l2", "l3")) {
+      val got = GraphTables.readSnapshot(spark, t0, id)
+      val want = GraphTables.readSnapshot(spark, a.table, id)
+      assert(got.collect().toSet == want.collect().toSet, id)
+      assert(ContentHash.hex(got, ContentHash.TripleCols) ==
+        GraphTables.commitRecord(spark, a.table, id).get)
+      assert(GraphTables.commitRecord(spark, t0, id) ==
+        GraphTables.commitRecord(spark, a.table, id))
+      assert(GraphTables.chainDepth(spark, t0, id) ==
+        GraphTables.chainDepth(spark, a.table, id))
+    }
+    assert(GraphTables.chainDepth(spark, t0, "l2") == 1)
+    assert(GraphTables.latestSnapshot(spark, t0).contains("l3"))
+    // the sweeps: l3 is full, so keepLast=1 frees l1 and l2 everywhere
+    assert(GraphTables.expireSnapshots(spark, t0, keepLast = 1).toSet ==
+      Set("l1", "l2"))
+    assert(StreamingPipeline.expireCanonState(spark, s0, t0, keepLast = 1).toSet ==
+      Set("l1", "l2"))
+    assert(GraphTables.pruneManifest(spark, t0, keepLast = 1).toSet ==
+      Set("l1", "l2"))
+    assert(GraphTables.latestSnapshot(spark, t0).contains("l3"))
+    // the next publish over the parquet layout == over the fresh one
+    val (t1, s1) = parquetLayout("publish")
+    a.landFile(8)
+    val legacy = StreamingPipeline.publishSnapshotDynamicIncremental(
+      spark, a.ments, t1, "l4", s1)
+    assert(legacy.incremental && legacy.note.contains("overlay"), legacy.note)
+    assert(legacy == a.pub("l4"))
+    assert(GraphTables.latestSnapshot(spark, t1).contains("l4"))
+    assert(GraphTables.readSnapshot(spark, t1, "l4").collect().toSet ==
+      GraphTables.readSnapshot(spark, a.table, "l4").collect().toSet)
   }
 
   test("canon-state doc fingerprints equal the committed data (full, materialized, empty delta)") {
