@@ -53,16 +53,27 @@ object Fs {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Does `dir` hold any `prefix`-named partition subdir? A parquet
-    * write whose data had zero rows leaves a dir (just _SUCCESS) that
-    * fails schema inference on read — callers probe before reading and
-    * substitute an explicit empty frame. */
-  def hasPartitions(spark: SparkSession, dir: String,
-      prefix: String): Boolean = {
+  /** Does `dir` hold data: a `prefix`-named partition subdir, or a
+    * visible file (one Spark reads: not `_`- or `.`-prefixed)? A
+    * partitioned parquet write whose data had zero rows leaves a dir
+    * (just _SUCCESS) that fails schema inference on read — callers probe
+    * before reading and substitute an explicit empty frame. A flat write
+    * leaves at least one file, a 0-row one included. */
+  def hasData(spark: SparkSession, dir: String, prefix: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p)
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory) n.startsWith(prefix)
+      else !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
+  /** Delete `path`, recursively; a missing path is no error. */
+  def delete(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
   }
 
   /** Create (or truncate) an empty marker file. */
@@ -98,8 +109,11 @@ object Fs {
   * the north-star's "partitioned Iceberg graph tables bucketed by
   * canonical-entity hash".
   *
-  * Layout: `path/data/snap=<id>/pred=<p>/bucket=<b>/`, one parquet
-  * file per (pred, bucket) dir, written by one task ([[writePartitioned]])
+  * Layout: a full snapshot is `path/data/snap=<id>/pred=<p>/bucket=<b>/`,
+  * one parquet file per (pred, bucket) dir, written by one task
+  * ([[writePartitioned]]); an overlay ([[writeDelta]]) is FLAT, its
+  * delta-sized rows in as many plain files as the last stage of its
+  * input has tasks, `pred` and `bucket` ordinary columns
   *  - partition column `pred`: per-predicate partition PRUNING — a
   *    query over `calls` edges never touches `documented_as` files
   *    (asserted in PlanSpec);
@@ -129,7 +143,8 @@ object GraphTables {
   val NumBuckets = 16
 
   /** THE table schema (write layout after partition-column reordering:
-    * data columns first, then `pred`/`bucket` partition columns). Every
+    * data columns first, then `pred`/`bucket` partition columns; a flat
+    * overlay file holds the same columns in the same order). Every
     * writer writes exactly it and every read passes it, including the
     * empty-snapshot frame, so the three can never drift apart. */
   val TableSchema: org.apache.spark.sql.types.StructType = {
@@ -155,20 +170,25 @@ object GraphTables {
   private def snapDir(path: String, snapshotId: String): String =
     s"$path/data/snap=$snapshotId"
 
-  /** Does this snapshot dir hold any written partition? (A bare probe
-    * would commit rowCount=0 fingerprints and fabricate empty reads for
-    * non-empty snapshots on HDFS/S3 — see [[Fs]].) */
-  private def hasPartitions(spark: SparkSession, dir: String): Boolean =
-    Fs.hasPartitions(spark, dir, "pred=")
+  /** Does this snapshot dir hold written data: `pred=` partitions (a
+    * full snapshot, or an overlay in the older partitioned layout) or
+    * flat files (an overlay)? (A bare probe would commit rowCount=0
+    * fingerprints and fabricate empty reads for non-empty snapshots on
+    * HDFS/S3 — see [[Fs]].) */
+  private def hasData(spark: SparkSession, dir: String): Boolean =
+    Fs.hasData(spark, dir, "pred=")
 
-  /** A snap dir's own rows; an empty frame when it holds no partition. */
+  /** A snap dir's own rows; an empty frame when it holds no data. One
+    * read serves both layouts: under `pred=` dirs partition discovery
+    * supplies `pred`/`bucket`, in flat files they are stored columns,
+    * and the pinned [[TableSchema]] orders them the same either way. */
   private def readDir(spark: SparkSession, dir: String): DataFrame =
-    if (hasPartitions(spark, dir)) spark.read.schema(TableSchema).parquet(dir)
+    if (hasData(spark, dir)) spark.read.schema(TableSchema).parquet(dir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSchema)
 
-  /** THE partitioned parquet write of every graph-table-shaped dir
-    * (snapshot data, overlays, compactions, the entity index): rows are
+  /** THE partitioned parquet write of every corpus-sized graph-table
+    * dir (full snapshots, compactions, the entity-index rebuild): rows are
     * hash-repartitioned by `partCols` into one partition per task slot
     * before `partitionBy`, so each partition dir is written by exactly
     * one task — one file per dir instead of one per (writer task, dir)
@@ -208,7 +228,7 @@ object GraphTables {
     // (0, constant hash) like ResumableStage does
     val dir = snapDir(path, snapshotId)
     val (n, h) =
-      if (!hasPartitions(spark, dir)) (0L, "%016x".format(0L))
+      if (!hasData(spark, dir)) (0L, "%016x".format(0L))
       else ContentHash.hex(readDir(spark, dir), ContentHash.TripleCols)
     SnapshotMeta.commit(spark, path, snapshotId, n, h)
     (n, h)
@@ -239,7 +259,7 @@ object GraphTables {
     val dir = snapDir(path, snapshotId)
     SnapshotMeta.chainOf(spark, dir) match {
       case Some((baseId, _)) => resolveOverlay(spark, path, dir, baseId)
-      case None if hasPartitions(spark, dir) => readDir(spark, dir)
+      case None if hasData(spark, dir) => readDir(spark, dir)
       case None => commitRecord(spark, path, snapshotId).map(_._1) match {
         case Some(0L) => readDir(spark, dir)
         case Some(n) => throw new IllegalStateException(
@@ -298,9 +318,11 @@ object GraphTables {
     * [[ContentHash.perDoc]] stats, and commit the snapshot's record.
     *
     * With a base it publishes an OVERLAY over `baseSnapshotId`: ONLY
-    * `added` (the re-emitted docs' triples), the sidecar listing the
-    * base docs it hides, and a chain pointer naming the base and the
-    * depth — publish I/O scales with the DELTA, not the corpus. The
+    * `added` (the re-emitted docs' triples, in flat files — see the
+    * layout note on [[GraphTables]]), the sidecar listing the base docs
+    * it hides, and a chain pointer naming the base and the depth —
+    * publish I/O, file count included, scales with the DELTA, not the
+    * corpus. The
     * commit record is exact nonetheless: the resolved snapshot's
     * rowCount/contentHash derive from the base's committed record by xor
     * algebra (see [[ContentHash.xorLong]]) — callers supply
@@ -313,7 +335,8 @@ object GraphTables {
     * snapshots alive; a chain is flattened by [[compactSnapshot]] or by
     * the caller publishing full once depth exceeds its bound.
     *
-    * With no base it publishes a FULL snapshot of `added` (no sidecar;
+    * With no base it publishes a FULL snapshot of `added` in the
+    * partitioned layout ([[writePartitioned]]; no sidecar;
     * a full snapshot hides nothing, so the removal arguments are
     * ignored): its (rowCount, contentHash) are the sum and xor of the
     * read-back's per-doc stats, the same values [[write]] commits.
@@ -334,18 +357,30 @@ object GraphTables {
       (b, bN, ContentHash.parseHex(bH), chainDepth(spark, path, b))
     }
     val dir = snapDir(path, snapshotId)
-    // data FIRST (static Overwrite wipes the dir, sidecar and pointer
-    // included — a republish of the same snapshotId replaces the
-    // snapshot wholesale), sidecar and pointer second, record last
-    writePartitioned(conform(added), dir, PartCols, SaveMode.Overwrite)
+    // data FIRST (Overwrite wipes the dir, sidecar and pointer included
+    // — a republish of the same snapshotId replaces the snapshot
+    // wholesale), sidecar and pointer second, record last. An overlay's
+    // delta-sized rows are written FLAT, not shuffled out to a partition
+    // grain sized for the corpus: one file per task of the input's last
+    // (AQE-coalesced) stage, one 0-row file for a delta found empty as
+    // it runs. A delta empty by construction (the empty-delta
+    // copy-forward: its analyzed plan caps it at 0 rows) writes no file
+    // and runs no job for its data.
+    if (base.isEmpty)
+      writePartitioned(conform(added), dir, PartCols, SaveMode.Overwrite)
+    else if (added.queryExecution.analyzed.maxRows.contains(0L))
+      Fs.delete(spark, dir)
+    else conform(added).write.mode(SaveMode.Overwrite).parquet(dir)
     // ONE read-back serves both the commit record (sum and xor of the
     // per-doc stats) and the caller's per-doc publish state
     val (ownStats, addN, addH) =
-      if (!hasPartitions(spark, dir))
+      if (!hasData(spark, dir))
         (ContentHash.perDoc(readDir(spark, dir)), 0L, 0L)
       else {
         val st = ContentHash.perDoc(readDir(spark, dir)).localCheckpoint()
-        val r = st.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
+        // over no rows (an empty overlay's file) sum and bit_xor are null
+        val r = st.agg(coalesce(sum(col("nTriples")), lit(0L)),
+          coalesce(expr("bit_xor(h64)"), lit(0L))).head()
         (st, r.getLong(0), r.getLong(1))
       }
     val (n, h) = base.fold((addN, addH)) { case (baseId, bN, bH, bDepth) =>
@@ -375,7 +410,8 @@ object GraphTables {
     readDir(spark, snapDir(path, snapshotId))
 
   /** Flatten one overlay snapshot in place: resolve its chain and
-    * rewrite it as a FULL snapshot (commit record untouched — rowCount
+    * rewrite it as a FULL snapshot in the partitioned layout, whatever
+    * the layout of its overlays (commit record untouched — rowCount
     * and contentHash are invariants of the resolved content, which is
     * exactly what the overlay's record already holds; asserted in
     * GraphSinkSpec). Frees its base for [[expireSnapshots]] and caps the

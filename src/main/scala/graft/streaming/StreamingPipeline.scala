@@ -272,7 +272,7 @@ object StreamingPipeline {
     // fail loudly instead.
     require(graft.sources.Fs.exists(spark, outPath),
       s"no streamed accumulation at $outPath — nothing was ever committed")
-    if (!graft.sources.Fs.hasPartitions(spark, outPath, "batchId="))
+    if (!graft.sources.Fs.hasData(spark, outPath, "batchId="))
       return graft.sources.GraphTables.write(emptyTriples(spark), tablePath,
         snapshotId)
     val all = spark.read.parquet(outPath)
@@ -338,7 +338,7 @@ object StreamingPipeline {
     require(graft.sources.Fs.exists(spark, mentionsPath),
       s"no mention accumulation at $mentionsPath — nothing was ever " +
         "committed (triplesStream needs mentionsPath=Some(...))")
-    if (!graft.sources.Fs.hasPartitions(spark, mentionsPath, "batchId="))
+    if (!graft.sources.Fs.hasData(spark, mentionsPath, "batchId="))
       return f(None)
     val all = readMentions(spark, mentionsPath)
     val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
@@ -373,7 +373,7 @@ object StreamingPipeline {
     val mentionTouches = all.select(col("docId"), col("batchId"))
     val rosterP = rosterPath(mentionsPath)
     val touched =
-      if (graft.sources.Fs.hasPartitions(spark, rosterP, "batchId="))
+      if (graft.sources.Fs.hasData(spark, rosterP, "batchId="))
         readRoster(spark, rosterP).unionByName(mentionTouches)
       else mentionTouches
     touched.groupBy(col("docId")).agg(max(col("batchId")).as("batchId"))
@@ -414,7 +414,7 @@ object StreamingPipeline {
   def compactAccumulation(spark: SparkSession, mentionsPath: String,
       keepTouches: Option[DataFrame] = None): Unit = {
     import graft.sources.Fs
-    if (!Fs.hasPartitions(spark, mentionsPath, "batchId=")) return
+    if (!Fs.hasData(spark, mentionsPath, "batchId=")) return
     val all = readMentions(spark, mentionsPath)
     // materialize: read by both rewrites, and it must be computed
     // before the swap replaces the dir it reads
@@ -427,7 +427,7 @@ object StreamingPipeline {
     all.join(latest, Seq("docId", "batchId"), "left_semi")
       .write.mode("overwrite").partitionBy("batchId").parquet(tmpM)
     val rosterP = rosterPath(mentionsPath)
-    val doRoster = Fs.hasPartitions(spark, rosterP, "batchId=")
+    val doRoster = Fs.hasData(spark, rosterP, "batchId=")
     if (doRoster) {
       // written BEFORE either swap — this plan reads rosterP
       readRoster(spark, rosterP)
@@ -475,49 +475,73 @@ object StreamingPipeline {
 
   /** Shared across snapshots (next to the per-snapshot state dirs).
     * Rows (entity, docId, ebucket): every doc that EVER mentioned the
-    * entity, partitioned by entity-hash bucket so a changed-entity
-    * lookup prunes to the touched buckets. Over-coverage is BENIGN by
-    * the same argument as the stale-row over-selection it replaces —
-    * re-emitting a doc from its latest version is always correct — so
-    * the index is append-only per delta (stale pairs and duplicates
-    * never hurt) and is rebuilt distinct on every full publish. The
-    * `_complete` marker gates reads: it lands atomically with a full
-    * rebuild (inside the swap) and is required before the incremental
-    * path trusts the index — a legacy accumulation without it keeps
-    * the corpus-scan fallback until its next full publish. */
+    * entity. A full publish rebuilds it distinct into `ebucket=` dirs
+    * (entity-hash buckets, so a changed-entity lookup prunes to the
+    * touched buckets); each overlay publish appends its delta's pairs,
+    * unpartitioned, to the hidden `_log` dir inside it — a delta-sized
+    * append costs one file per task, not one per touched bucket, and the
+    * rebuild's swap clears the log with the buckets. A lookup reads both
+    * ([[readEntIdx]]). Over-coverage is BENIGN by the same argument as
+    * the stale-row over-selection it replaces — re-emitting a doc from
+    * its latest version is always correct — so stale pairs and
+    * duplicates never hurt. The `_complete` marker gates reads: it lands
+    * atomically with a full rebuild (inside the swap) and is required
+    * before the incremental path trusts the index — a legacy
+    * accumulation without it keeps the corpus-scan fallback until its
+    * next full publish. An index whose appends went into the buckets
+    * (no log) reads the same way. */
   private def entIdxDir(statePath: String): String = s"$statePath/entidx"
+
+  private def entIdxLog(statePath: String): String =
+    s"${entIdxDir(statePath)}/_log"
 
   private def entIdxMarker(statePath: String): String =
     s"${entIdxDir(statePath)}/_complete"
+
+  private val EntIdxSchema = "entity STRING, docId STRING, ebucket INT"
 
   private def ebucket(c: org.apache.spark.sql.Column) =
     pmod(xxhash64(c), lit(EntIdxBuckets)).cast("int")
 
   private def entIdxUsable(spark: SparkSession, statePath: String): Boolean =
     graft.sources.Fs.exists(spark, entIdxMarker(statePath)) &&
-      graft.sources.Fs.hasPartitions(spark, entIdxDir(statePath), "ebucket=")
+      graft.sources.Fs.hasData(spark, entIdxDir(statePath), "ebucket=")
+
+  /** The distinct delta pairs, bucketed. */
+  private def entIdxRows(linked: DataFrame): DataFrame =
+    linked.select(col("entity"), col("docId")).distinct()
+      .withColumn("ebucket", ebucket(col("entity")))
 
   /** Delta append — MUST run before the snapshot's commit: a
     * crash in between leaves over-coverage (benign), never a committed
     * snapshot whose docs the index misses. */
   private[graft] def appendEntIdx(spark: SparkSession, statePath: String,
       linked: DataFrame): Unit =
-    graft.sources.GraphTables.writePartitioned(
-      linked.select(col("entity"), col("docId")).distinct()
-        .withColumn("ebucket", ebucket(col("entity"))),
-      entIdxDir(statePath), Seq("ebucket"), SaveMode.Append)
+    entIdxRows(linked).write.mode(SaveMode.Append).parquet(entIdxLog(statePath))
+
+  /** The whole index: the rebuilt buckets plus the append log, each
+    * read only where it exists (an index with neither fails). A filter
+    * on `ebucket` prunes the buckets to partition dirs and the log to
+    * its matching row groups. */
+  private[graft] def readEntIdx(spark: SparkSession,
+      statePath: String): DataFrame = {
+    import graft.sources.Fs
+    val d = entIdxDir(statePath); val log = entIdxLog(statePath)
+    Seq(d -> Fs.hasData(spark, d, "ebucket="), log -> Fs.exists(spark, log))
+      .collect { case (p, true) => spark.read.schema(EntIdxSchema).parquet(p) }
+      .reduce(_.unionByName(_))
+  }
 
   /** Full rebuild (full-publish path): distinct pairs through a tmp
     * dir + swap, the completeness marker written INTO the tmp so data
     * and marker land together; also the dedup that bounds the
-    * append-only growth between full publishes. */
+    * append log's growth between full publishes (the swap replaces the
+    * whole dir, log included). */
   private def rebuildEntIdx(spark: SparkSession, statePath: String,
       linked: DataFrame): Unit = {
     val d = entIdxDir(statePath); val tmp = s"${d}__rebuild"
-    graft.sources.GraphTables.writePartitioned(
-      linked.select(col("entity"), col("docId")).distinct()
-        .withColumn("ebucket", ebucket(col("entity"))),
-      tmp, Seq("ebucket"), SaveMode.Overwrite)
+    graft.sources.GraphTables.writePartitioned(entIdxRows(linked), tmp,
+      Seq("ebucket"), SaveMode.Overwrite)
     graft.sources.Fs.touch(spark, s"$tmp/_complete")
     graft.sources.Fs.swapInto(spark, tmp, d)
   }
@@ -602,7 +626,8 @@ object StreamingPipeline {
     * vocabulary, pair refcounts ~ vocabulary, per-doc fingerprints ~
     * doc count). With `base` it is a DELTA over base's state — the
     * O(delta) publish-time state I/O an overlay snapshot needs: only
-    * the CHANGED rows land, plus the base pointer in meta, and readers
+    * the CHANGED rows land, one file per table, plus the base pointer
+    * in meta, and readers
     * resolve the chain last-writer-wins ([[readState]]). No tombstones
     * can occur by construction: under the adds-only invariant canon
     * labels never revert to self (components only merge, minima only
@@ -622,15 +647,16 @@ object StreamingPipeline {
       snapshotId: String, base: Option[String], canon: DataFrame,
       pairs: DataFrame, docs: DataFrame, lastBatchId: Long): Unit = {
     val d = stateDir(statePath, snapshotId)
-    canon.select(col("entity"), col("canonical"))
-      .write.mode("overwrite").parquet(s"$d/canon")
-    pairs.select(col("k"), col("entity"),
-        col("ndocs").cast("long").as("ndocs"))
-      .write.mode("overwrite").parquet(s"$d/pairs")
-    docs.select(col("docId"), col("batchId").cast("long").as("batchId"),
-        col("nTriples").cast("long").as("nTriples"),
-        col("h64").cast("long").as("h64"))
-      .write.mode("overwrite").parquet(s"$d/docs")
+    // a delta's rows are few: one file per table, not one per task
+    def put(df: DataFrame, sub: String): Unit =
+      (if (base.isDefined) df.coalesce(1) else df)
+        .write.mode("overwrite").parquet(s"$d/$sub")
+    put(canon.select(col("entity"), col("canonical")), "canon")
+    put(pairs.select(col("k"), col("entity"),
+      col("ndocs").cast("long").as("ndocs")), "pairs")
+    put(docs.select(col("docId"), col("batchId").cast("long").as("batchId"),
+      col("nTriples").cast("long").as("nTriples"),
+      col("h64").cast("long").as("h64")), "docs")
     graft.sources.SnapshotMeta.writeStateMeta(spark, d, lastBatchId, base)
   }
 
@@ -872,10 +898,10 @@ object StreamingPipeline {
     * relabeled roots to their members, the changed-entity doc lookup,
     * the re-emit of CHANGED docs only, and the writes; no frame is
     * pinned or probed. The doc lookup goes through the entity→doc index
-    * (entity-hash-bucketed pairs next to the state, appended per delta,
-    * rebuilt distinct on every full publish) pruned to the changed
-    * entities' buckets — with a corpus-scan fallback while the index's
-    * completeness marker is absent (legacy accumulation).
+    * (entity-hash-bucketed pairs next to the state, rebuilt distinct on
+    * every full publish, a flat log appended per delta) pruned to the
+    * changed entities' buckets — with a corpus-scan fallback while the
+    * index's completeness marker is absent (legacy accumulation).
     *
     * I/O side: the snapshot is published as an OVERLAY
     * ([[graft.sources.GraphTables.writeDelta]]) — only the re-emitted
@@ -935,7 +961,7 @@ object StreamingPipeline {
     val all = readMentions(spark, mentionsPath)
     val rosterP = rosterPath(mentionsPath)
     val roster =
-      if (Fs.hasPartitions(spark, rosterP, "batchId="))
+      if (Fs.hasData(spark, rosterP, "batchId="))
         Some(readRoster(spark, rosterP))
       else None
     val driver = new DriverRows
@@ -1068,8 +1094,7 @@ object StreamingPipeline {
           // the buckets fold on the driver: a local relation's projection
           val bks = ents.toDF("e").select(ebucket(col("e"))).as[Int].collect()
           val candidates =
-            if (idxUsable) spark.read.schema("entity STRING, docId STRING, ebucket INT")
-              .parquet(entIdxDir(statePath))
+            if (idxUsable) readEntIdx(spark, statePath)
               .filter(col("ebucket").isin(bks.toSeq.distinct: _*))
             else all
           driver.collect(candidates.filter(col("entity").isin(ents: _*))

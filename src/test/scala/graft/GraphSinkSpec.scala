@@ -444,7 +444,14 @@ class GraphSinkSpec extends SparkSpec {
       graft.sources.ContentHash.TripleCols))
   }
 
-  test("writeDelta and compactSnapshot: one parquet file per pred/bucket dir") {
+  /** Parquet files directly in `dir`, and whether it has `pred=` dirs. */
+  private def flatLayout(dir: String): (Seq[String], Boolean) = {
+    val fs = new java.io.File(dir).listFiles().toSeq
+    (fs.map(_.getName).filter(_.endsWith(".parquet")),
+      fs.exists(f => f.isDirectory && f.getName.startsWith("pred=")))
+  }
+
+  test("writeDelta: an overlay is flat; compactSnapshot: one file per pred/bucket dir") {
     import graft.sources.ContentHash
     val tmp = Files.createTempDirectory("graph1d").toString
     val base = spreadTriples(120, "b")
@@ -453,18 +460,80 @@ class GraphSinkSpec extends SparkSpec {
     // docs new to the base: nothing removed
     val (n, h, own) = GraphTables.writeDelta(spark, tmp, "d-B", Some("d-A"),
       added, added.select(col("docId")).distinct(), 0L, 0L)
-    assertOneFilePerDir(s"$tmp/data/snap=d-B")
+    // an overlay is flat: no partition dir, no more files than the
+    // input has partitions (the corpus-grain layout wrote one per
+    // pred/bucket dir, 48 here)
+    val (files, partitioned) = flatLayout(s"$tmp/data/snap=d-B")
+    assert(!partitioned && files.nonEmpty &&
+      files.size <= added.rdd.getNumPartitions, files)
     val all = base.unionByName(added)
     assert((n, h) == ContentHash.hex(all, ContentHash.TripleCols))
     // the returned per-doc stats describe exactly the rows written
     val (addN, addH) = ContentHash.xorLong(added, ContentHash.TripleCols)
     val s = own.agg(sum(col("nTriples")), expr("bit_xor(h64)")).head()
     assert(own.count() == 120 && s.getLong(0) == addN && s.getLong(1) == addH)
+    // a delta found empty only as it runs leaves one 0-row file, which
+    // adds (0 rows, zero hash) to its base's record
+    val (nE, hE, ownE) = GraphTables.writeDelta(spark, tmp, "d-E", Some("d-B"),
+      added.filter(col("docId") === "no-such-doc"),
+      added.select(col("docId")).filter(col("docId") === "no-such-doc"), 0L, 0L)
+    assert(flatLayout(s"$tmp/data/snap=d-E")._1.size == 1)
+    assert((nE, hE) == ((n, h)) && ownE.isEmpty)
     // compaction rewrites base + overlay rows into one file per dir
     assert(GraphTables.compactSnapshot(spark, tmp, "d-B"))
     assertOneFilePerDir(s"$tmp/data/snap=d-B")
     assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "d-B"),
       ContentHash.TripleCols) == ((n, h)))
+  }
+
+  test("an overlay in the partitioned layout reads, bases a flat overlay, compacts") {
+    import graft.sources.ContentHash
+    import org.apache.commons.io.FileUtils
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graphlegacyov").toString
+    val base = spreadTriples(120, "b")
+    GraphTables.write(base, tmp, "p-A")
+    // p-B re-emits 20 base docs with new content and adds 20 new ones
+    val reDocs = (0 until 20).map(d => s"b-d$d")
+    val (remN, remH) = ContentHash.xorLong(
+      base.filter(col("docId").isin(reDocs: _*)), ContentHash.TripleCols)
+    val addedB = spreadTriples(40, "b").filter(col("docId").isin(reDocs: _*))
+      .withColumn("obj", concat(col("obj"), lit("'")))
+      .unionByName(spreadTriples(20, "n"))
+    val (nB, hB, _) = GraphTables.writeDelta(spark, tmp, "p-B", Some("p-A"),
+      addedB, reDocs.toDF("docId"), remN, remH)
+    val want = GraphTables.readSnapshot(spark, tmp, "p-B").collect().toSet
+    // rewrite p-B's data in the partitioned overlay layout, its sidecar
+    // and chain pointer kept
+    val dir = s"$tmp/data/snap=p-B"; val part = s"$tmp/p-B-partitioned"
+    GraphTables.writePartitioned(GraphTables.readOwnData(spark, tmp, "p-B"),
+      part, Seq("pred", "bucket"), org.apache.spark.sql.SaveMode.Overwrite)
+    new java.io.File(dir).listFiles()
+      .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".parquet.crc"))
+      .foreach(f => assert(f.delete()))
+    new java.io.File(part).listFiles().filter(_.getName.startsWith("pred="))
+      .foreach(d => FileUtils.moveDirectoryToDirectory(d, new java.io.File(dir), false))
+    assert(flatLayout(dir) match { case (fs, p) => fs.isEmpty && p })
+    // it reads back with the same rows and hash
+    assert(GraphTables.readSnapshot(spark, tmp, "p-B").collect().toSet == want)
+    assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "p-B"),
+      ContentHash.TripleCols) == ((nB, hB)))
+    assert(GraphTables.readOwnData(spark, tmp, "p-B").count() == addedB.count())
+    // a flat overlay on it derives the from-scratch hash
+    val addedC = spreadTriples(10, "c")
+    val (nC, hC, _) = GraphTables.writeDelta(spark, tmp, "p-C", Some("p-B"),
+      addedC, addedC.select(col("docId")).distinct(), 0L, 0L)
+    assert(!flatLayout(s"$tmp/data/snap=p-C")._2)
+    assert(GraphTables.chainDepth(spark, tmp, "p-C") == 2)
+    assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "p-C"),
+      ContentHash.TripleCols) == ((nC, hC)))
+    // compaction flattens it to a full snapshot of the same content
+    assert(GraphTables.compactSnapshot(spark, tmp, "p-B"))
+    assert(GraphTables.baseOf(spark, tmp, "p-B").isEmpty)
+    assertOneFilePerDir(dir)
+    assert(GraphTables.readSnapshot(spark, tmp, "p-B").collect().toSet == want)
+    assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "p-C"),
+      ContentHash.TripleCols) == ((nC, hC)))
   }
 
   test("writeDelta with no base commits a full snapshot from its one read-back") {
@@ -497,21 +566,23 @@ class GraphSinkSpec extends SparkSpec {
     assert(GraphTables.readSnapshot(spark, tmp, "f-0").isEmpty)
   }
 
-  test("entity-index append adds at most one file per ebucket") {
+  test("entity-index append: no ebucket= file, at most defaultParallelism log files") {
     val tmp = Files.createTempDirectory("entidx1w").toString
     // big enough that AQE keeps several tasks after the distinct
     val linked = spark.range(0, 200000, 1, 4)
       .select(concat(lit("ent-"), xxhash64(col("id") % 5000)).as("entity"),
         concat(lit("doc-"), xxhash64(col("id"))).as("docId"))
-    def counts() = partFiles(s"$tmp/entidx").map { case (d, fs) => d -> fs.size }
+    def logFiles() = Option(new java.io.File(s"$tmp/entidx/_log").listFiles())
+      .fold(0)(_.count(_.getName.endsWith(".parquet")))
+    val slots = spark.sparkContext.defaultParallelism
     graft.streaming.StreamingPipeline.appendEntIdx(spark, tmp, linked)
-    val first = counts()
-    assert(first.nonEmpty && first.values.forall(_ == 1), first.filter(_._2 != 1))
+    val first = logFiles()
+    assert(first >= 1 && first <= slots, s"$first log files")
     graft.streaming.StreamingPipeline.appendEntIdx(spark, tmp, linked)
-    val second = counts()
-    assert(second.forall { case (d, c) => c - first.getOrElse(d, 0) <= 1 },
-      second.filter { case (d, c) => c - first.getOrElse(d, 0) > 1 })
-    assert(spark.read.parquet(s"$tmp/entidx").count() ==
+    assert(logFiles() - first <= slots, s"${logFiles() - first} log files")
+    // the appends wrote no bucket dir: every file is in the log
+    assert(partFiles(s"$tmp/entidx").isEmpty, partFiles(s"$tmp/entidx").keys)
+    assert(graft.streaming.StreamingPipeline.readEntIdx(spark, tmp).count() ==
       2 * linked.distinct().count())
   }
 }

@@ -705,9 +705,10 @@ class StreamingSpec extends SparkSpec {
   /** Spark jobs of a depth-1 adds-only overlay publish and of an
     * empty-delta publish of the small accumulation below (75 and 37 when
     * the refcount/CC/changed-set algebra ran as DataFrame steps, 32 and
-    * 21 while snapshot and state metadata were parquet tables). */
-  private val OverlayJobs = 23
-  private val EmptyDeltaJobs = 6
+    * 21 while snapshot and state metadata were parquet tables, 23 and 6
+    * while overlays and index appends were written partitioned). */
+  private val OverlayJobs = 21
+  private val EmptyDeltaJobs = 5
 
   /** Spark jobs of `readSnapshot(...).count()` of a depth-1 overlay. */
   private val OverlayReadJobs = 3
@@ -917,6 +918,56 @@ class StreamingSpec extends SparkSpec {
     assert(GraphTables.latestSnapshot(spark, t1).contains("l4"))
     assert(GraphTables.readSnapshot(spark, t1, "l4").collect().toSet ==
       GraphTables.readSnapshot(spark, a.table, "l4").collect().toSet)
+  }
+
+  test("the affected-docs lookup reads the entity-index log; a log-less index agrees") {
+    import graft.sources.GraphTables
+    import org.apache.commons.io.FileUtils
+    import spark.implicits._
+    def tset(df: org.apache.spark.sql.DataFrame) =
+      df.select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
+    def doc(path: String, lines: String*) = {
+      val c = lines.mkString("\n")
+      graft.core.SourceFileHashed("logrepo", path, "c0", "scala", c,
+        graft.core.CorpusGen.sha256Hex(c))
+    }
+    val a = new Accumulation("stream-entidx-log")
+    a.land(Extract.corpus(spark, 6))
+    assert(!a.pub("x1").incremental) // rebuilds the index buckets
+    // A's snake form lands after the rebuild: its (entity, doc) pair
+    // reaches the index through the append log alone
+    a.land(Seq(doc("A.scala", "def runLogA(a: Row): Txn = {",
+      "y = sigma_log_tt(x)")).toDS())
+    assert(a.pub("x2").note.contains("overlay"))
+    val docA = col("docId") === "logrepo/A.scala"
+    assert(spark.read.schema("entity STRING, docId STRING, ebucket INT")
+      .parquet(s"${a.state}/entidx").filter(docA).isEmpty)
+    assert(!StreamingPipeline.readEntIdx(spark, a.state).filter(docA).isEmpty)
+    // a copy whose index is in the log-less layout: the log's rows
+    // appended into the buckets
+    val t1 = s"${a.tmp}/logless/graph"; val s1 = s"${a.tmp}/logless/state"
+    FileUtils.copyDirectory(new java.io.File(a.table), new java.io.File(t1))
+    FileUtils.copyDirectory(new java.io.File(a.state), new java.io.File(s1))
+    GraphTables.writePartitioned(spark.read.parquet(s"$s1/entidx/_log"),
+      s"$s1/entidx", Seq("ebucket"), org.apache.spark.sql.SaveMode.Append)
+    FileUtils.deleteDirectory(new java.io.File(s"$s1/entidx/_log"))
+    // B's camel twin relabels A's entity: A, outside the delta, must be
+    // re-emitted, which only the log tells the lookup
+    a.land(Seq(doc("B.scala", "def runLogB(a: Row): Txn = {",
+      "val sigmaLogTt = 1")).toDS())
+    val logless = StreamingPipeline.publishSnapshotDynamicIncremental(
+      spark, a.ments, t1, "x3", s1)
+    val p3 = a.pub("x3")
+    assert(p3.incremental && p3.note.contains("overlay"), p3.note)
+    val got = tset(GraphTables.read(spark, a.table))
+    assert(got.exists(r => r.contains("sigmaLogTt") && r.contains("logrepo/A.scala")),
+      "the relabeled doc A was not re-emitted")
+    StreamingPipeline.publishSnapshotDynamic(spark, a.ments,
+      s"${a.tmp}/full", "full-3")
+    val full = tset(GraphTables.read(spark, s"${a.tmp}/full"))
+    assert(got == full, s"+${(got -- full).take(3)} -${(full -- got).take(3)}")
+    assert(logless == p3)
+    assert(tset(GraphTables.read(spark, t1)) == got)
   }
 
   test("canon-state doc fingerprints equal the committed data (full, materialized, empty delta)") {
