@@ -345,11 +345,35 @@ object GraphTables {
     * land before the commit record; a crash mid-publish leaves an
     * orphan dir. Returns (rowCount, contentHash, ownStats): the
     * snapshot's commit record plus the per-doc stats of the rows this
-    * publish wrote, materialized from the same read-back. */
+    * publish wrote, materialized from the same read-back. It is
+    * [[stageDelta]] followed by its commit record. The state-keeping
+    * publish calls the two itself: it stages the snapshot while its
+    * entity index and its state's `canon` and `pairs` are written
+    * concurrently, and commits only after all of them have ended, so
+    * a crash before the record leaves an orphan snap dir next to a
+    * state dir without `meta.json` (see
+    * `StreamingPipeline.publishTail`). */
   def writeDelta(spark: SparkSession, path: String, snapshotId: String,
       baseSnapshotId: Option[String], added: DataFrame,
       removedDocs: DataFrame, removedRows: Long,
       removedHash: Long): (Long, String, DataFrame) = {
+    val s = stageDelta(spark, path, snapshotId, baseSnapshotId, added,
+      removedDocs, removedRows, removedHash)
+    SnapshotMeta.commit(spark, path, snapshotId, s.rows, s.hash)
+    (s.rows, s.hash, s.own)
+  }
+
+  /** A snapshot written into its snap dir but not committed: the
+    * (rowCount, contentHash) its commit record will carry, and the
+    * per-doc stats of its own rows. */
+  private[graft] final case class Staged(rows: Long, hash: String, own: DataFrame)
+
+  /** [[writeDelta]] up to its commit point: the data write, the
+    * read-back, and an overlay's sidecar and chain pointer. Nothing is
+    * visible to readers until its commit record. */
+  private[graft] def stageDelta(spark: SparkSession, path: String,
+      snapshotId: String, baseSnapshotId: Option[String], added: DataFrame,
+      removedDocs: DataFrame, removedRows: Long, removedHash: Long): Staged = {
     // the base's record and chain depth, looked up once, before any write
     val base = baseSnapshotId.map { b =>
       val (bN, bH) = commitRecord(spark, path, b).getOrElse(
@@ -395,9 +419,7 @@ object GraphTables {
       SnapshotMeta.writeChain(spark, dir, baseId, bDepth + 1)
       (n0, bH ^ removedHash ^ addH)
     }
-    val hex = "%016x".format(h)
-    SnapshotMeta.commit(spark, path, snapshotId, n, hex)
-    (n, hex, ownStats)
+    Staged(n, "%016x".format(h), ownStats)
   }
 
   /** A snapshot's OWN written rows, no chain resolution — for an

@@ -227,6 +227,13 @@ object SnapshotMeta {
       "lastBatchId" -> lastBatchId, "baseState" -> baseState.orNull)
   }
 
+  /** Delete a state dir's meta: the dir then reads as no state. */
+  def dropStateMeta(spark: SparkSession, stateDir: String): Unit = {
+    val p = metaFile(stateDir)
+    fsOf(spark, p).delete(p, false)
+    ()
+  }
+
   /** A state dir's meta: None when absent, a Failure when present but
     * unreadable. A pre-JSON parquet `meta` (the pre-chaining layout has
     * a bare lastBatchId, read as a flat state) is marked `legacy`. */

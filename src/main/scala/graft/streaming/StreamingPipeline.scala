@@ -147,24 +147,27 @@ object StreamingPipeline {
     graft.extract.Extract.mentionsFused(survivors, repartitionByDoc = false)
   }
 
-  /** Streaming ingest -> triples: foreachBatch runs the SAME batch
-    * pipeline stages per micro-batch (north-star §2.9 extension:
-    * "idempotent per-partition writes + a manifest table, foreachBatch
-    * if a streaming ingest is later attached"). Each micro-batch
-    * commits its triples and one lineage row via [[commitBatch]]
-    * (idempotent per batchId); the checkpointLocation dedups batches,
-    * the manifest gives auditability.
-    *
-    * Canon contract: each micro-batch canonicalizes against the STATIC
-    * dictionary map — a batch sees only its own files, so it cannot
-    * mine corpus-wide alias edges; its per-batch triples may keep a
-    * novel surface-form alias self-canonical where the batch
-    * dynamic-canon pipeline would merge it. Pass `mentionsPath` to also
-    * accumulate the LINKED mention table per batch (plus the
-    * [[rosterPath]] doc roster; same idempotent batchId-partition
-    * protocol) — [[publishSnapshotDynamic]] then restores EXACT
-    * dynamic-canon parity at publish time by re-running the shared
-    * canon+emit stages over the accumulated union.
+  /** Streaming ingest: foreachBatch runs the SAME batch pipeline
+    * stages per micro-batch (north-star §2.9 extension: "idempotent
+    * per-partition writes + a manifest table, foreachBatch if a
+    * streaming ingest is later attached"); the checkpointLocation
+    * dedups batches. One of two products, by `mentionsPath`:
+    *  - None (static mode): each micro-batch canonicalizes against the
+    *    STATIC dictionary map and commits its triples to `outPath` and
+    *    one lineage row to `manifestPath` via [[commitBatch]]
+    *    (idempotent per batchId). A batch sees only its own files, so
+    *    it cannot mine corpus-wide alias edges; its triples may keep a
+    *    novel surface-form alias self-canonical where the batch
+    *    dynamic-canon pipeline would merge it. [[publishSnapshot]]
+    *    publishes them.
+    *  - Some (mentions mode): each micro-batch writes ONLY the LINKED
+    *    mention table and the [[rosterPath]] doc roster (same
+    *    idempotent batchId-partition protocol); `outPath` and
+    *    `manifestPath` are not written. [[publishSnapshotDynamic]] and
+    *    [[publishSnapshotDynamicIncremental]] then publish EXACT
+    *    dynamic-canon parity by running the shared canon+emit stages
+    *    over the accumulation — nothing reads a per-batch static-canon
+    *    product there, so the micro-batch does not make one.
     *
     * `ingestTsCol` (explicit OPT-IN — never inferred from a column
     * name, so a source that happens to carry a similarly-named column
@@ -205,15 +208,11 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: Dataset[SourceFileHashed], batchId: Long) =>
         val spark = batch0.sparkSession
-        val ments = batchMentions(batch0, ingestTsCol)
-        // persist when two actions read it (the mentions write + the
-        // canon->triples commit): unpersisted, each would re-run the
-        // extraction kernel — the dominant stage — once over
-        val linked0 = graft.link.Linker.link(ments).toDF()
-        val linked =
-          if (mentionsPath.isDefined) linked0.persist() else linked0
-        try {
-          mentionsPath.foreach { mp =>
+        val linked = graft.link.Linker.link(
+          batchMentions(batch0, ingestTsCol)).toDF()
+        mentionsPath match {
+          case Some(mp) =>
+            // the one action over the linked mentions: no cache
             linked.withColumn("batchId", lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
@@ -227,15 +226,12 @@ object StreamingPipeline {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batchId").parquet(rosterPath(mp))
-          }
-          // straight from batchMentions (the cache keeps its layout):
-          // doc-contiguous, so the static map's broadcast join emits
-          // partition-locally
-          val (_, triples) = graft.Pipeline.canonEmit(linked,
-            graft.Pipeline.Canon.static(spark), docContiguous = true)
-          commitBatch(triples, batchId, outPath, manifestPath)
-        } finally {
-          if (mentionsPath.isDefined) { linked.unpersist(); () }
+          case None =>
+            // straight from batchMentions: doc-contiguous, so the static
+            // map's broadcast join emits partition-locally
+            val (_, triples) = graft.Pipeline.canonEmit(linked,
+              graft.Pipeline.Canon.static(spark), docContiguous = true)
+            commitBatch(triples, batchId, outPath, manifestPath)
         }
       }
       .start()
@@ -479,8 +475,10 @@ object StreamingPipeline {
     * (entity-hash buckets, so a changed-entity lookup prunes to the
     * touched buckets); each overlay publish appends its delta's pairs,
     * unpartitioned, to the hidden `_log` dir inside it — a delta-sized
-    * append costs one file per task, not one per touched bucket, and the
-    * rebuild's swap clears the log with the buckets. A lookup reads both
+    * append costs one file per task, not one per touched bucket — and
+    * each materializing publish folds the log and its delta into the
+    * buckets, so the log holds at most `maxChain` appends. A rebuild's
+    * swap clears the log with the buckets. A lookup reads both
     * ([[readEntIdx]]). Over-coverage is BENIGN by the same argument as
     * the stale-row over-selection it replaces — re-emitting a doc from
     * its latest version is always correct — so stale pairs and
@@ -532,19 +530,27 @@ object StreamingPipeline {
       .reduce(_.unionByName(_))
   }
 
-  /** Full rebuild (full-publish path): distinct pairs through a tmp
-    * dir + swap, the completeness marker written INTO the tmp so data
-    * and marker land together; also the dedup that bounds the
-    * append log's growth between full publishes (the swap replaces the
-    * whole dir, log included). */
+  /** Rebuild from the distinct `rows` (the full publish's pairs, or a
+    * materializing publish's [[foldEntIdx]]) through a tmp dir + swap,
+    * the completeness marker written INTO the tmp so data and marker
+    * land together; the swap replaces the whole dir, log included,
+    * which is what bounds the log. */
   private def rebuildEntIdx(spark: SparkSession, statePath: String,
-      linked: DataFrame): Unit = {
+      rows: DataFrame): Unit = {
     val d = entIdxDir(statePath); val tmp = s"${d}__rebuild"
-    graft.sources.GraphTables.writePartitioned(entIdxRows(linked), tmp,
+    graft.sources.GraphTables.writePartitioned(rows, tmp,
       Seq("ebucket"), SaveMode.Overwrite)
     graft.sources.Fs.touch(spark, s"$tmp/_complete")
     graft.sources.Fs.swapInto(spark, tmp, d)
   }
+
+  /** The whole index plus the delta's pairs, distinct: a materializing
+    * publish's rebuild rows. The tmp write reads the index before the
+    * swap replaces it. */
+  private def foldEntIdx(spark: SparkSession, statePath: String,
+      linked: Option[DataFrame]): DataFrame =
+    linked.map(entIdxRows).foldLeft(readEntIdx(spark, statePath))(
+      _.unionByName(_)).distinct()
 
   final case class Maintenance(flattened: Boolean,
       expiredSnapshots: Seq[String], prunedManifest: Seq[String],
@@ -621,46 +627,112 @@ object StreamingPipeline {
     *    into this snapshot (the next publish's delta floor), and the
     *    base state's id; a JSON record ([[graft.sources.SnapshotMeta]]).
     *
-    * THE state writer. Without `base` the state is FLAT: all three
-    * tables whole, each growing with the CORPUS (canon map ~
-    * vocabulary, pair refcounts ~ vocabulary, per-doc fingerprints ~
-    * doc count). With `base` it is a DELTA over base's state — the
-    * O(delta) publish-time state I/O an overlay snapshot needs: only
-    * the CHANGED rows land, one file per table, plus the base pointer
-    * in meta, and readers
-    * resolve the chain last-writer-wins ([[readState]]). No tombstones
-    * can occur by construction: under the adds-only invariant canon
-    * labels never revert to self (components only merge, minima only
-    * decrease), a touched pair's refcount stays positive (zero forces
-    * the full fallback, which rewrites flat state), and docs are never
-    * deleted (a superseded doc is re-emitted, never dropped).
+    * Without `base` the state is FLAT: all three tables whole, each
+    * growing with the CORPUS (canon map ~ vocabulary, pair refcounts ~
+    * vocabulary, per-doc fingerprints ~ doc count). With `base` it is a
+    * DELTA over base's state — the O(delta) publish-time state I/O an
+    * overlay snapshot needs: only the CHANGED rows land, one file per
+    * table, plus the base pointer in meta, and readers resolve the
+    * chain last-writer-wins ([[readState]]). No tombstones can occur by
+    * construction: under the adds-only invariant canon labels never
+    * revert to self (components only merge, minima only decrease), a
+    * touched pair's refcount stays positive (zero forces the full
+    * fallback, which rewrites flat state), and docs are never deleted
+    * (a superseded doc is re-emitted, never dropped). `docs` is a
+    * function of the commit's per-doc read-back stats. [[publishTail]]
+    * is the one writer, and its scaladoc gives the crash order. */
+  private final case class StateWrite(base: Option[String], canon: DataFrame,
+      pairs: DataFrame, docs: DataFrame => DataFrame, lastBatchId: Long)
+
+  /** Called with each publish-tail lane's name ("index", "data",
+    * "state") once its writes are done; a throw fails that lane. The
+    * fault-injection specs set it. */
+  @volatile private[graft] var onLaneDone: String => Unit = _ => ()
+
+  /** Run the lanes, each on a thread started here, and join every one
+    * before rethrowing the first failure (later ones suppressed into
+    * it): no lane's write outlives the call. An interrupt does not cut
+    * the wait short; it is re-asserted afterwards. */
+  private def runLanes(lanes: (String, () => Unit)*): Unit = {
+    val failed = new Array[Throwable](lanes.size)
+    val threads = lanes.zipWithIndex.map { case ((name, body), i) =>
+      val t = new Thread(() =>
+        try { body(); onLaneDone(name) } catch { case e: Throwable => failed(i) = e },
+        s"graft-publish-$name")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failed.filter(_ != null) match {
+      case Array() => ()
+      case fs => fs.tail.foreach(fs.head.addSuppressed); throw fs.head
+    }
+  }
+
+  /** THE write tail of every state-keeping publish (full, materializing,
+    * overlay, empty delta), run after its canon algebra. Three
+    * independent lanes run concurrently:
+    *  - index: the entity→doc index append or rebuild (`index`);
+    *  - data: the snapshot's data, read-back, sidecar and chain pointer
+    *    (`data`, a [[graft.sources.GraphTables.stageDelta]]);
+    *  - state: the [[StateWrite]]'s `canon` and `pairs`, which depend
+    *    only on the algebra.
+    * After every lane has ended: the commit record, then the state's
+    * `docs` (their fingerprints come from the data lane's read-back),
+    * then its `meta` LAST. Returns the committed (rowCount, hash).
     *
-    * Ordering vs the snapshot commit: the per-doc fingerprints are
-    * computed from the data READ BACK off the committed snapshot, so
-    * state lands AFTER the commit record. A crash in between leaves a
-    * committed snapshot with no state — `meta` is written last, the
-    * reader probes for it, and a missing/partial state (a half-written
-    * delta included) simply routes the next publish through the full
-    * fallback, which rewrites fresh state. Nothing ever reads a
+    * The lane threads are started per publish, so they inherit the
+    * caller's Spark local properties (job group, description, pool) —
+    * a pool built earlier would not. Callers finish every canon
+    * computation first: the distributed CC loop sets session conf,
+    * which a concurrent lane's queries would plan under.
+    *
+    * Crash order: the index lands before the record (over-coverage is
+    * benign). Data, sidecar and pointer sit in an uncommitted snap dir
+    * until the record. `canon` and `pairs` land before the record, with
+    * the state dir's meta deleted first (a republished id's old meta
+    * must not vouch for new tables), so a crash before the record leaves
+    * a state dir with no `meta.json`: [[readState]] never resolves it,
+    * and the GC sweeps reclaim it as an orphan. A crash after the
+    * record but before `meta` leaves a committed snapshot without
+    * readable state, which routes the next publish through the full
+    * fallback; that rewrites fresh state. Nothing ever reads a
     * half-written state. */
-  private def writeState(spark: SparkSession, statePath: String,
-      snapshotId: String, base: Option[String], canon: DataFrame,
-      pairs: DataFrame, docs: DataFrame, lastBatchId: Long): Unit = {
+  private def publishTail(spark: SparkSession, tablePath: String,
+      snapshotId: String, statePath: String, index: () => Unit,
+      data: () => graft.sources.GraphTables.Staged, st: StateWrite): (Long, String) = {
     val d = stateDir(statePath, snapshotId)
     // a delta's rows are few: one file per table, not one per task
     def put(df: DataFrame, sub: String): Unit =
-      (if (base.isDefined) df.coalesce(1) else df)
+      (if (st.base.isDefined) df.coalesce(1) else df)
         .write.mode("overwrite").parquet(s"$d/$sub")
-    put(canon.select(col("entity"), col("canonical")), "canon")
-    put(pairs.select(col("k"), col("entity"),
-      col("ndocs").cast("long").as("ndocs")), "pairs")
-    put(docs.select(col("docId"), col("batchId").cast("long").as("batchId"),
+    var staged: graft.sources.GraphTables.Staged = null
+    runLanes(
+      "index" -> index,
+      "data" -> (() => staged = data()),
+      "state" -> { () =>
+        graft.sources.SnapshotMeta.dropStateMeta(spark, d)
+        put(st.canon.select(col("entity"), col("canonical")), "canon")
+        put(st.pairs.select(col("k"), col("entity"),
+          col("ndocs").cast("long").as("ndocs")), "pairs")
+      })
+    graft.sources.SnapshotMeta.commit(spark, tablePath, snapshotId,
+      staged.rows, staged.hash)
+    put(st.docs(staged.own).select(col("docId"),
+      col("batchId").cast("long").as("batchId"),
       col("nTriples").cast("long").as("nTriples"),
       col("h64").cast("long").as("h64")), "docs")
-    graft.sources.SnapshotMeta.writeStateMeta(spark, d, lastBatchId, base)
+    graft.sources.SnapshotMeta.writeStateMeta(spark, d, st.lastBatchId, st.base)
+    (staged.rows, staged.hash)
   }
 
-  /** [[writeState]]'s schemas: an inferred read runs a footer job.
+  /** The state tables' schemas: an inferred read runs a footer job.
     * `docs` is inferred only under a pre-JSON parquet `meta`, whose
     * state may predate the fingerprint (no `h64`); a JSON meta is only
     * ever written next to fingerprinted docs. */
@@ -801,43 +873,42 @@ object StreamingPipeline {
 
   /** FULL dynamic publish that also writes canon state — the
     * incremental path's base case (first publish) and its fallback
-    * (alias evidence retracted): the [[withFullPlan]] body, committed
-    * through [[graft.sources.GraphTables.writeDelta]] with no base, then
-    * flat state whose per-doc fingerprints come from that commit's one
-    * read-back — the data ACTUALLY WRITTEN, so the next overlay
-    * publish's removal algebra describes the durable base, not a
-    * recomputation of the input plan. */
+    * (alias evidence retracted): the [[withFullPlan]] body through
+    * [[publishTail]] — the index rebuilt, the snapshot staged with no
+    * base, flat state whose per-doc fingerprints come from that
+    * commit's one read-back (the data ACTUALLY WRITTEN, so the next
+    * overlay publish's removal algebra describes the durable base, not
+    * a recomputation of the input plan). */
   private def fullDynamicPublish(spark: SparkSession, mentionsPath: String,
       tablePath: String, snapshotId: String, statePath: String,
       note: String): DynPublish = withFullPlan(spark, mentionsPath) { plan =>
     import spark.implicits._
-    // index rebuild strictly BEFORE the snapshot commit (crash in
-    // between = over-coverage, benign)
-    rebuildEntIdx(spark, statePath, plan.fold(
-      Seq.empty[(String, String)].toDF("entity", "docId"))(_.linked))
-    val (n, h, own) = graft.sources.GraphTables.writeDelta(spark, tablePath,
-      snapshotId, None, plan.fold(emptyTriples(spark))(_.triples),
-      spark.emptyDataFrame, 0L, 0L)
-    plan match {
+    val st = plan match {
       case Some(p) =>
         val lastB = p.latest.agg(max(col("batchId")).cast("long")).head()
-        writeState(spark, statePath, snapshotId, None, p.canonMap,
+        StateWrite(None, p.canonMap,
           graft.canon.IncrementalCanon.pairCounts(
             graft.canon.IncrementalCanon.docPairs(p.linked)),
-          docsWithStats(p.latest, own),
+          docsWithStats(p.latest, _),
           if (lastB.isNullAt(0)) -1L else lastB.getLong(0))
       case None =>
         // the canon state must carry the DICTIONARY forest even with no
         // accumulated mentions: a later incremental publish seeds CC
         // from the prior state's forest alone, and an empty forest would
         // lose the static-dictionary merges (divergence vs the full path)
-        writeState(spark, statePath, snapshotId, None,
-          graft.canon.ConnectedComponents.canonicalMap(
+        StateWrite(None, graft.canon.ConnectedComponents.canonicalMap(
             graft.link.Linker.aliasDf(spark)),
           Seq.empty[(String, String, Long)].toDF("k", "entity", "ndocs"),
-          Seq.empty[(String, Long, Long, Long)]
+          _ => Seq.empty[(String, Long, Long, Long)]
             .toDF("docId", "batchId", "nTriples", "h64"), -1L)
     }
+    val (n, h) = publishTail(spark, tablePath, snapshotId, statePath,
+      () => rebuildEntIdx(spark, statePath, entIdxRows(plan.fold(
+        Seq.empty[(String, String)].toDF("entity", "docId"))(_.linked))),
+      () => graft.sources.GraphTables.stageDelta(spark, tablePath, snapshotId,
+        None, plan.fold(emptyTriples(spark))(_.triples),
+        spark.emptyDataFrame, 0L, 0L),
+      st)
     DynPublish(n, h, incremental = false, note)
   }
 
@@ -896,7 +967,8 @@ object StreamingPipeline {
     * pair counts, and the prior refcounts and canon labels of only the
     * touched keys and entities. Spark runs four steps: expanding
     * relabeled roots to their members, the changed-entity doc lookup,
-    * the re-emit of CHANGED docs only, and the writes; no frame is
+    * the re-emit of CHANGED docs only, and the writes, whose
+    * independent parts run concurrently ([[publishTail]]); no frame is
     * pinned or probed. The doc lookup goes through the entity→doc index
     * (entity-hash-bucketed pairs next to the state, rebuilt distinct on
     * every full publish, a flat log appended per delta) pruned to the
@@ -912,7 +984,8 @@ object StreamingPipeline {
     * doc rows land, with a base pointer ([[writeState]]), resolved
     * last-writer-wins by [[readState]]. Once the prior chain reaches
     * `maxChain`, the publish MATERIALIZES data and state (a full write
-    * of the resolved content, amortized over `maxChain` deltas);
+    * of the resolved content, amortized over `maxChain` deltas) and
+    * folds the entity-index log into the index's buckets;
     * `maxChain` must stay below the state chain the reader walks (64
     * dirs).
     *
@@ -976,40 +1049,53 @@ object StreamingPipeline {
         .agg(max(col("batchId")).cast("long").as("batchId"))
         .as[(String, Long)]).toMap
     } catch { case o: DriverRowsOver => return full(o.note) }
-    // THE snapshot-plus-state tail of every incremental publish: below
-    // the depth gate an OVERLAY of the re-emitted docs plus a state
-    // DELTA; at it the resolved content MATERIALIZED with flat state
-    // (the prior state overridden by the same rows). Every fingerprint
-    // written comes from the commit's one read-back.
-    def commit(reTriples: DataFrame, ov: Overlay): (Long, String) = {
+    val idxUsable = entIdxUsable(spark, statePath)
+    // THE snapshot-plus-state tail of every incremental publish, through
+    // [[publishTail]]: below the depth gate an OVERLAY of the re-emitted
+    // docs plus a state DELTA and an index append; at it the resolved
+    // content MATERIALIZED with flat state (the prior state overridden
+    // by the same rows) and the index log folded into its buckets. Every
+    // fingerprint written comes from the commit's one read-back. A
+    // legacy index without the completeness marker waits for the next
+    // full publish's rebuild.
+    def commit(reTriples: DataFrame, ov: Overlay,
+        deltaLinked: Option[DataFrame]): (Long, String) = {
       val base = if (growChain) prior else None
       val reDocsDf = (delta.keys ++ ov.affectedIds).toSeq.distinct.toDF("docId")
-      val data =
+      def data: DataFrame =
         if (growChain) reTriples
         else GraphTables.readSnapshot(spark, tablePath, prior.get)
           .join(reDocsDf, Seq("docId"), "left_anti")
           .select(col("subj"), col("pred"), col("obj"), col("docId"),
             col("score"))
           .unionByName(reTriples)
-      val (n, h, own) = GraphTables.writeDelta(spark, tablePath, snapshotId,
-        base, data, reDocsDf, ov.removed._1, ov.removed._2)
+      val index: () => Unit = () =>
+        if (idxUsable) {
+          if (!growChain) rebuildEntIdx(spark, statePath,
+            foldEntIdx(spark, statePath, deltaLinked))
+          else deltaLinked.foreach(appendEntIdx(spark, statePath, _))
+        }
       // delta docs ride their new batchId, affected docs keep their
       // prior one
       val touches = (ov.affected ++ delta).toDF("docId", "batchId")
       val canonRows = ov.canonDelta.toDF("entity", "canonical")
       val pairRows = ov.pairsDelta.toDF("k", "entity", "ndocs")
       val lastBatchId = (lastB +: delta.values.toSeq).max
-      if (growChain)
-        writeState(spark, statePath, snapshotId, base, canonRows, pairRows,
-          docsWithStats(touches, own), lastBatchId)
-      else
-        writeState(spark, statePath, snapshotId, None,
-          lwwResolve(Seq(pst.canon, canonRows.unionByName(
-            ov.canonFresh.toDF("entity", "canonical"))), Seq("entity")),
-          lwwResolve(Seq(pst.pairs, pairRows), Seq("k", "entity")),
-          docsWithStats(lwwResolve(Seq(pst.docs.select(col("docId"),
-            col("batchId")), touches), Seq("docId")), own), lastBatchId)
-      (n, h)
+      val st =
+        if (growChain)
+          StateWrite(base, canonRows, pairRows, docsWithStats(touches, _),
+            lastBatchId)
+        else
+          StateWrite(None,
+            lwwResolve(Seq(pst.canon, canonRows.unionByName(
+              ov.canonFresh.toDF("entity", "canonical"))), Seq("entity")),
+            lwwResolve(Seq(pst.pairs, pairRows), Seq("k", "entity")),
+            docsWithStats(lwwResolve(Seq(pst.docs.select(col("docId"),
+              col("batchId")), touches), Seq("docId")), _), lastBatchId)
+      publishTail(spark, tablePath, snapshotId, statePath, index,
+        () => GraphTables.stageDelta(spark, tablePath, snapshotId, base, data,
+          reDocsDf, ov.removed._1, ov.removed._2),
+        st)
     }
     if (delta.isEmpty) {
       // nothing ingested since the prior publish: a copy-forward of the
@@ -1018,11 +1104,10 @@ object StreamingPipeline {
       // a schedule costs O(1), not O(corpus state)), a materializing
       // rewrite at it
       val (n, h) = commit(emptyTriples(spark), Overlay(Set.empty, Seq.empty,
-        (0L, 0L), Seq.empty, Seq.empty, Seq.empty))
+        (0L, 0L), Seq.empty, Seq.empty, Seq.empty), None)
       return DynPublish(n, h, incremental = true, "empty delta")
     }
     val deltaDocs = delta.keys.toSeq
-    val idxUsable = entIdxUsable(spark, statePath)
     val deltaLinked = atVersions(all, delta.toSeq).drop("batchId")
 
     // THE canon algebra, on the driver. It only reads, so a fallback
@@ -1129,11 +1214,7 @@ object StreamingPipeline {
         docContiguous = false)._2
       .select(col("subj"), col("pred"), col("obj"), col("docId"),
         col("score"))
-    // the entity→doc index append, strictly before the snapshot commit
-    // (a crash in between over-covers, benign); a legacy index without
-    // the completeness marker waits for the next full publish's rebuild
-    if (idxUsable) appendEntIdx(spark, statePath, deltaLinked)
-    val (n, h) = commit(newTriples, ov)
+    val (n, h) = commit(newTriples, ov, Some(deltaLinked))
     val mode =
       if (growChain) "overlay" else s"materialized at chain depth $priorDepth"
     DynPublish(n, h, incremental = true,

@@ -273,12 +273,12 @@ class StreamingSpec extends SparkSpec {
     assert(published == batchDyn && batchDyn.nonEmpty,
       s"+${(published -- batchDyn).take(3)} -${(batchDyn -- published).take(3)}")
     assert(nPub == published.size.toLong)
-    // and the divergence this path exists to close is real: per-batch
-    // static triples keep the novel snake alias; the dynamic publish
-    // canonicalizes it onto its camel twin
-    val streamedStatic = tset(spark.read.parquet(out))
-    assert(streamedStatic.exists(_.contains("depot_matrix_zz")),
-      "static per-batch canon should keep the novel alias self-canonical")
+    // and the divergence this path exists to close is real: static
+    // canon over the same files keeps the novel snake alias; the dynamic
+    // publish canonicalizes it onto its camel twin
+    val batchStatic = tset(Pipeline.stagesFor(files).triples)
+    assert(batchStatic.exists(_.contains("depot_matrix_zz")),
+      "static canon should keep the novel alias self-canonical")
     assert(published.exists(_.contains("depotMatrixZz")) &&
       !published.exists(_.contains("depot_matrix_zz")),
       "dynamic publish must canonicalize the novel alias")
@@ -677,6 +677,10 @@ class StreamingSpec extends SparkSpec {
     val table = s"$tmp/graph"; val state = s"$tmp/state"
     def land(files: org.apache.spark.sql.Dataset[graft.core.SourceFileHashed]): Unit = {
       files.write.mode("append").parquet(src)
+      stream()
+    }
+    /** Run the stream over everything landed. */
+    def stream(): Unit = {
       val q = StreamingPipeline.triplesStream(
         spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
           .as[graft.core.SourceFileHashed],
@@ -758,6 +762,97 @@ class StreamingSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try { f; drainListeners() } finally spark.sparkContext.removeSparkListener(l)
     jobs.get
+  }
+
+  /** Spark jobs of one mentions-mode micro-batch over 6 files (20 while
+    * it also emitted and committed static-canon triples). */
+  private val MicroBatchJobs = 6
+
+  test("a mentions-mode micro-batch writes only the mentions and the roster") {
+    import graft.sources.Fs
+    val a = new Accumulation("stream-onebatch")
+    Extract.corpus(spark, 6).write.parquet(a.src)
+    val jobs = jobsDuring(a.stream())
+    for (p <- Seq("out", "man"))
+      assert(!Fs.exists(spark, s"${a.tmp}/$p"), s"$p written in mentions mode")
+    assert(Fs.hasData(spark, a.ments, "batchId=") &&
+      Fs.hasData(spark, StreamingPipeline.rosterPath(a.ments), "batchId="))
+    assert(jobs <= MicroBatchJobs, s"the micro-batch ran $jobs jobs")
+  }
+
+  test("a materializing publish folds the entity-index log into its buckets") {
+    import graft.sources.GraphTables
+    val a = new Accumulation("stream-entidx-fold")
+    a.land(Extract.corpus(spark, 4))
+    assert(!a.pub("g0").incremental)
+    val maxChain = 2
+    val log = new java.io.File(s"${a.state}/entidx/_log")
+    def logFiles = Option(log.listFiles()).fold(0)(_.count(f =>
+      f.getName.endsWith(".parquet")))
+    def pairs = StreamingPipeline.readEntIdx(spark, a.state)
+      .select("entity", "docId").distinct().collect().toSet
+    val seen = (1 to 2 * maxChain + 2).map { i =>
+      a.landFile(3 + i)
+      val before = pairs
+      val p = a.pub(s"g$i", maxChain)
+      assert(p.incremental, p.note)
+      assert(logFiles <= maxChain, s"g$i (${p.note}): $logFiles log files")
+      // the fold keeps every pair the log held
+      assert(before.subsetOf(pairs), s"g$i dropped index pairs")
+      (logFiles, p.note.contains("materialized"))
+    }
+    assert(seen.exists(_._1 == maxChain) && seen.exists(_._2) &&
+      seen.filter(_._2).forall(_._1 == 0), s"(log files, materialized): $seen")
+    // files 0..3, then one per publish
+    assert(GraphTables.read(spark, a.table).select("subj", "pred", "obj", "docId")
+      .collect().toSet == Pipeline.stagesFor(Extract.corpus(spark, 4 + seen.size),
+        minedCanon = true).triples.select("subj", "pred", "obj", "docId")
+      .collect().toSet)
+  }
+
+  test("a failed publish-tail lane commits nothing, after every lane ends") {
+    import graft.sources.GraphTables
+    val lanes = Seq("index", "data", "state")
+    val a = new Accumulation("stream-lanefault")
+    a.land(Extract.corpus(spark, 4))
+    assert(!a.pub("o0").incremental)
+    def tset(df: org.apache.spark.sql.DataFrame) =
+      df.select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
+    /** Publish with `lane` failing once its writes are done, while the
+      * other lanes finish late; then assert the failure left nothing
+      * committed, and that a retry equals the batch pipeline. */
+    def faulted(lane: String, table: String, state: String, id: String,
+        nFiles: Int, incremental: Boolean): Unit = {
+      val prior = GraphTables.latestSnapshot(spark, table)
+      val done = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      StreamingPipeline.onLaneDone = l =>
+        if (l == lane) throw new IllegalStateException(s"injected $l fault")
+        else { Thread.sleep(300); done.add(l); () }
+      def pub() = StreamingPipeline.publishSnapshotDynamicIncremental(
+        spark, a.ments, table, id, state)
+      val e = try intercept[IllegalStateException](pub())
+        finally StreamingPipeline.onLaneDone = _ => ()
+      assert(e.getMessage == s"injected $lane fault", e.getMessage)
+      assert(scala.jdk.CollectionConverters.CollectionHasAsScala(done).asScala
+        .toSet == lanes.filterNot(_ == lane).toSet, s"$id/$lane: $done")
+      assert(GraphTables.commitRecord(spark, table, id).isEmpty, s"$id/$lane")
+      assert(GraphTables.latestSnapshot(spark, table) == prior, s"$id/$lane")
+      assert(!new java.io.File(s"$state/snap=$id/meta.json").exists, s"$id/$lane")
+      val p = pub()
+      assert(p.incremental == incremental, s"$id/$lane: ${p.note}")
+      val want = tset(Pipeline.stagesFor(Extract.corpus(spark, nFiles),
+        minedCanon = true).triples)
+      assert(tset(GraphTables.read(spark, table)) == want && p.rows == want.size,
+        s"$id/$lane: the retried publish diverged from the batch pipeline")
+    }
+    lanes.zipWithIndex.foreach { case (lane, i) =>
+      // full: a first publish into a fresh table and state
+      faulted(lane, s"${a.tmp}/full-$lane/graph", s"${a.tmp}/full-$lane/state",
+        s"f-$lane", 4 + i, incremental = false)
+      // overlay: the next delta onto the main table
+      a.landFile(4 + i)
+      faulted(lane, a.table, a.state, s"o${i + 1}", 5 + i, incremental = true)
+    }
   }
 
   test("full and materializing publishes read their new snapshot back once") {
