@@ -58,7 +58,7 @@ object EncodingCache {
     val spark = sents.sparkSession
     import spark.implicits._
     val bw = spark.sparkContext.broadcast(Weights.default)
-    sents.repartition(spark.sessionState.conf.numShufflePartitions)
+    val rows = sents.repartition(spark.sessionState.conf.numShufflePartitions)
       .mapPartitions { it =>
       val w = bw.value
       it.map { s =>
@@ -69,7 +69,8 @@ object EncodingCache {
             s.rtokens.toIndexedSeq, s.rpos.toIndexedSeq, w)),
           s.tokens)
       }
-    }.write.mode("overwrite").parquet(path)
+    }
+    graft.sources.Fs.parquet(rows, path)(_.mode("overwrite"))
   }
 
   /** Warm re-score from the cache ALONE: one narrow scan of the

@@ -109,7 +109,7 @@ object ResumableStage {
     // back, fingerprinted, and COMMITTED as this snapshot's data.
     // (outPath is one stage's output dir by contract.)
     val outP = new org.apache.hadoop.fs.Path(outPath)
-    val outFs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val outFs = graft.sources.Fs.fsOf(spark, outP)
     if (outFs.exists(outP)) outFs.listStatus(outP).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("bucket=")) {
@@ -121,9 +121,8 @@ object ResumableStage {
     // per-WRITE dynamic overwrite (writer option, not a session conf —
     // a session-wide set would silently turn every later Overwrite
     // write in the same session into a partial overwrite)
-    pending.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(outPath)
+    graft.sources.Fs.parquet(pending, outPath)(_.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic").partitionBy("bucket"))
     // per-bucket stats come from the data ACTUALLY WRITTEN (read back
     // from outPath) — the pipeline executes exactly once per run, and
     // the manifest fingerprints what is durable, not a recomputation.
@@ -159,8 +158,8 @@ object ResumableStage {
         st.map(_.getString(2)).getOrElse("0"),
         metricsJson, now)
     }
-    spark.createDataFrame(rows).write.mode(SaveMode.Append)
-      .parquet(manifestPath)
+    graft.sources.Fs.parquet(spark.createDataFrame(rows), manifestPath)(
+      _.mode(SaveMode.Append))
     todo.size
   }
 }

@@ -42,68 +42,6 @@ object ContentHash {
   def parseHex(h: String): Long = java.lang.Long.parseUnsignedLong(h, 16)
 }
 
-/** THE Hadoop-FS existence probes for manifest/snapshot path checks
-  * (ResumableStage, GraphTables, StreamingPipeline). java.io.File on
-  * HDFS/S3 always answers "missing", which turns restart/read guards
-  * into silent recomputes or fabricated empty reads — probe via the
-  * FileSystem resolved from the path itself. */
-object Fs {
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Does `dir` hold data: a `prefix`-named partition subdir, or a
-    * visible file (one Spark reads: not `_`- or `.`-prefixed)? A
-    * partitioned parquet write whose data had zero rows leaves a dir
-    * (just _SUCCESS) that fails schema inference on read — callers probe
-    * before reading and substitute an explicit empty frame. A flat write
-    * leaves at least one file, a 0-row one included. */
-  def hasData(spark: SparkSession, dir: String, prefix: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory) n.startsWith(prefix)
-      else !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Delete `path`, recursively; a missing path is no error. */
-  def delete(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
-
-  /** Create (or truncate) an empty marker file. */
-  def touch(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true).close()
-  }
-
-  /** Replace `path` with the freshly-written `tmpPath` (rename old
-    * aside, rename tmp in, delete old) — the rewrite-compaction swap
-    * (accumulation, snapshot and state compaction). NOT atomic: a crash
-    * between the two renames leaves `path` absent with the data intact
-    * under `path__old` / `tmpPath` for manual recovery — acceptable for
-    * maintenance jobs run at quiescent points; a transactional table
-    * format owns this swap in production. */
-  def swapInto(spark: SparkSession, tmpPath: String, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmpPath)
-    val o = new org.apache.hadoop.fs.Path(path + "__old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(t), s"swapInto: missing tmp dir $tmpPath")
-    fs.delete(o, true)
-    if (fs.exists(p)) require(fs.rename(p, o), s"swapInto: cannot move $path aside")
-    require(fs.rename(t, p), s"swapInto: cannot move $tmpPath into place")
-    fs.delete(o, true)
-    ()
-  }
-}
-
 /** Iceberg-LAYOUT graph tables (no Iceberg jars on the classpath —
   * SURVEY §7.0): partitioned parquet + a snapshot commit log, matching
   * the north-star's "partitioned Iceberg graph tables bucketed by
@@ -129,7 +67,11 @@ object Fs {
   * an overlay its sidecar and chain pointer) lands in its own snap dir
   * first; creating its commit record, never overwriting, is the commit
   * point. Every data read passes [[TableSchema]], which every writer
-  * writes exactly ([[conform]]), so no read infers a schema.
+  * writes exactly ([[conform]]), so no read infers a schema. Every
+  * write goes through [[Fs.parquet]] and every metadata file through
+  * [[Fs.fsOf]], so a local table is written by graft's local
+  * FileSystem, which starts no `chmod` process per file and dir (the
+  * stock one does without the native Hadoop library — see [[Fs]]).
   *
   * Publish commits read what they wrote back exactly once. A full
   * snapshot of the state-keeping publish is [[writeDelta]] with no
@@ -199,10 +141,9 @@ object GraphTables {
     * session conf set elsewhere. */
   private[graft] def writePartitioned(df: DataFrame, dir: String, partCols: Seq[String],
       mode: SaveMode): Unit =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-        partCols.map(col): _*)
-      .write.mode(mode).option("partitionOverwriteMode", "static")
-      .partitionBy(partCols: _*).parquet(dir)
+    Fs.parquet(df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        partCols.map(col): _*), dir)(
+      _.mode(mode).option("partitionOverwriteMode", "static").partitionBy(partCols: _*))
 
   /** Publish one snapshot into its OWN directory, THEN commit its
     * record. The previous snapshot's data is never touched, so a crash
@@ -394,7 +335,7 @@ object GraphTables {
       writePartitioned(conform(added), dir, PartCols, SaveMode.Overwrite)
     else if (added.queryExecution.analyzed.maxRows.contains(0L))
       Fs.delete(spark, dir)
-    else conform(added).write.mode(SaveMode.Overwrite).parquet(dir)
+    else Fs.parquet(conform(added), dir)(_.mode(SaveMode.Overwrite))
     // ONE read-back serves both the commit record (sum and xor of the
     // per-doc stats) and the caller's per-doc publish state
     val (ownStats, addN, addH) =
@@ -413,9 +354,9 @@ object GraphTables {
         s"$removedRows from a base of $bN — the removed-doc stats do not " +
         "describe this base")
       // one file: every read of the overlay scans it
-      removedDocs.select(lit("removed").as("kind"), col("docId").as("value"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(SnapshotMeta.sidecarDir(dir))
+      Fs.parquet(removedDocs.select(lit("removed").as("kind"),
+          col("docId").as("value")).coalesce(1),
+        SnapshotMeta.sidecarDir(dir))(_.mode(SaveMode.Overwrite))
       SnapshotMeta.writeChain(spark, dir, baseId, bDepth + 1)
       (n0, bH ^ removedHash ^ addH)
     }
@@ -516,7 +457,7 @@ object GraphTables {
       tablePath: String, keepLast: Int, orphanSafetyMs: Long)(
       closure: Set[String] => Set[String]): Seq[String] = {
     val dirP = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.fsOf(spark, dirP)
     if (!fs.exists(dirP)) return Seq.empty
     val committed = SnapshotMeta.committedIds(spark, tablePath)
     val keepIds = closure(committed.take(math.max(1, keepLast)).toSet)

@@ -39,9 +39,6 @@ object SnapshotMeta {
 
   private val Json = new ObjectMapper()
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def put(fs: FileSystem, p: Path, overwrite: Boolean,
       fields: (String, Any)*): Unit = {
     val out = fs.create(p, overwrite)
@@ -53,7 +50,7 @@ object SnapshotMeta {
   /** The JSON object at `p`: None when absent, a Failure when present
     * but unreadable (a torn write). */
   private def get(spark: SparkSession, p: Path): Option[Try[JsonNode]] = {
-    val fs = fsOf(spark, p)
+    val fs = Fs.fsOf(spark, p)
     val in = try Some(fs.open(p)) catch {
       case _: java.io.FileNotFoundException => None
     }
@@ -92,7 +89,7 @@ object SnapshotMeta {
 
   private def log(spark: SparkSession, table: String): Seq[Entry] = {
     val dir = commitsDir(table)
-    val fs = fsOf(spark, dir)
+    val fs = Fs.fsOf(spark, dir)
     if (fs.exists(dir))
       fs.listStatus(dir).toSeq.flatMap(st => nameKey(st.getPath.getName)
           .map(k => Entry(k, () => readCommit(spark, st.getPath, k))))
@@ -134,20 +131,22 @@ object SnapshotMeta {
   def committedIds(spark: SparkSession, table: String): Seq[String] =
     log(spark, table).flatMap(_.record()).map(_.snapshotId).distinct
 
-  /** THE commit point: create the record, never overwriting. A second
-    * commit of one id within a clock millisecond takes the next one, so
-    * the latest record still wins. */
+  /** THE commit point: create the record, never overwriting. The
+    * create is exclusive on HDFS and, through [[Fs.RawFs]], on a local
+    * table, so of two commits of one id within a clock millisecond
+    * exactly one creates the record; the other takes the next
+    * millisecond, so the latest record still wins. */
   def commit(spark: SparkSession, table: String, snapshotId: String,
       rowCount: Long, contentHash: String): Unit = {
     val dir = commitsDir(table)
-    val fs = fsOf(spark, dir)
+    val fs = Fs.fsOf(spark, dir)
     migrate(spark, table, fs)
     var at = System.currentTimeMillis()
     while (!create(fs, dir, Commit(snapshotId, rowCount, contentHash, at))) at += 1
   }
 
   /** Create `c`'s record in `dir`; false when one of its name exists. */
-  private def create(fs: FileSystem, dir: Path, c: Commit): Boolean =
+  private[graft] def create(fs: FileSystem, dir: Path, c: Commit): Boolean =
     try {
       put(fs, new Path(dir, recordName(c.committedAt, c.snapshotId)),
         overwrite = false, "snapshotId" -> c.snapshotId, "rowCount" -> c.rowCount,
@@ -158,7 +157,7 @@ object SnapshotMeta {
   /** Delete every record of `ids` (manifest pruning). */
   def drop(spark: SparkSession, table: String, ids: Set[String]): Unit = {
     val dir = commitsDir(table)
-    val fs = fsOf(spark, dir)
+    val fs = Fs.fsOf(spark, dir)
     migrate(spark, table, fs)
     if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
       if (nameKey(st.getPath.getName).exists(k => ids(k._2)))
@@ -196,7 +195,7 @@ object SnapshotMeta {
   def writeChain(spark: SparkSession, snapDir: String, base: String,
       depth: Int): Unit = {
     val p = chainFile(snapDir)
-    put(fsOf(spark, p), p, overwrite = true, "base" -> base, "depth" -> depth)
+    put(Fs.fsOf(spark, p), p, overwrite = true, "base" -> base, "depth" -> depth)
   }
 
   /** (base snapshot id, recorded depth) of an overlay; None for a full
@@ -223,14 +222,14 @@ object SnapshotMeta {
   def writeStateMeta(spark: SparkSession, stateDir: String, lastBatchId: Long,
       baseState: Option[String]): Unit = {
     val p = metaFile(stateDir)
-    put(fsOf(spark, p), p, overwrite = true,
+    put(Fs.fsOf(spark, p), p, overwrite = true,
       "lastBatchId" -> lastBatchId, "baseState" -> baseState.orNull)
   }
 
   /** Delete a state dir's meta: the dir then reads as no state. */
   def dropStateMeta(spark: SparkSession, stateDir: String): Unit = {
     val p = metaFile(stateDir)
-    fsOf(spark, p).delete(p, false)
+    Fs.fsOf(spark, p).delete(p, false)
     ()
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.core.{Mention, Sentence, SourceFileHashed}
 import graft.extract.Tokenizer
 import graft.kernel.{TriaffineScorer, Weights}
+import graft.sources.Fs
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -66,18 +67,16 @@ object StreamingPipeline {
     try {
       // per-WRITE dynamic overwrite (writer option, not a session conf
       // — see ResumableStage.runWith)
-      cached.withColumn("batchId", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batchId").parquet(outPath)
+      Fs.parquet(cached.withColumn("batchId", lit(batchId)), outPath)(
+        _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batchId"))
       val (nRows, cHash) = graft.sources.ContentHash.hex(cached,
         graft.sources.ContentHash.TripleCols)
-      Seq((f"batch$batchId%05d", nRows, cHash,
-        System.currentTimeMillis(), batchId))
-        .toDF("stage", "rowCount", "contentHash", "committedAt", "batchId")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batchId").parquet(manifestPath)
+      Fs.parquet(Seq((f"batch$batchId%05d", nRows, cHash,
+          System.currentTimeMillis(), batchId))
+        .toDF("stage", "rowCount", "contentHash", "committedAt", "batchId"),
+        manifestPath)(_.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").partitionBy("batchId"))
     } finally { cached.unpersist(); () }
   }
 
@@ -213,19 +212,17 @@ object StreamingPipeline {
         mentionsPath match {
           case Some(mp) =>
             // the one action over the linked mentions: no cache
-            linked.withColumn("batchId", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batchId").parquet(mp)
+            Fs.parquet(linked.withColumn("batchId", lit(batchId)), mp)(
+              _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batchId"))
             // every doc of the batch keeps exactly one version, so the
             // roster reads the docIds straight off the raw batch
-            batch0.toDF()
-              .select(graft.core.DocId.column.as("docId"))
-              .distinct()
-              .withColumn("batchId", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batchId").parquet(rosterPath(mp))
+            Fs.parquet(batch0.toDF()
+                .select(graft.core.DocId.column.as("docId"))
+                .distinct()
+                .withColumn("batchId", lit(batchId)), rosterPath(mp))(
+              _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batchId"))
           case None =>
             // straight from batchMentions: doc-contiguous, so the static
             // map's broadcast join emits partition-locally
@@ -266,9 +263,9 @@ object StreamingPipeline {
     // readSnapshot). A MISSING dir is different: no stream ever
     // committed there, so publishing "empty" would mask a typo'd path —
     // fail loudly instead.
-    require(graft.sources.Fs.exists(spark, outPath),
+    require(Fs.exists(spark, outPath),
       s"no streamed accumulation at $outPath — nothing was ever committed")
-    if (!graft.sources.Fs.hasData(spark, outPath, "batchId="))
+    if (!Fs.hasData(spark, outPath, "batchId="))
       return graft.sources.GraphTables.write(emptyTriples(spark), tablePath,
         snapshotId)
     val all = spark.read.parquet(outPath)
@@ -331,10 +328,10 @@ object StreamingPipeline {
     * with an empty publish. */
   private def withFullPlan[T](spark: SparkSession, mentionsPath: String)(
       f: Option[FullPlan] => T): T = {
-    require(graft.sources.Fs.exists(spark, mentionsPath),
+    require(Fs.exists(spark, mentionsPath),
       s"no mention accumulation at $mentionsPath — nothing was ever " +
         "committed (triplesStream needs mentionsPath=Some(...))")
-    if (!graft.sources.Fs.hasData(spark, mentionsPath, "batchId="))
+    if (!Fs.hasData(spark, mentionsPath, "batchId="))
       return f(None)
     val all = readMentions(spark, mentionsPath)
     val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
@@ -369,7 +366,7 @@ object StreamingPipeline {
     val mentionTouches = all.select(col("docId"), col("batchId"))
     val rosterP = rosterPath(mentionsPath)
     val touched =
-      if (graft.sources.Fs.hasData(spark, rosterP, "batchId="))
+      if (Fs.hasData(spark, rosterP, "batchId="))
         readRoster(spark, rosterP).unionByName(mentionTouches)
       else mentionTouches
     touched.groupBy(col("docId")).agg(max(col("batchId")).as("batchId"))
@@ -409,7 +406,6 @@ object StreamingPipeline {
     * incremental. */
   def compactAccumulation(spark: SparkSession, mentionsPath: String,
       keepTouches: Option[DataFrame] = None): Unit = {
-    import graft.sources.Fs
     if (!Fs.hasData(spark, mentionsPath, "batchId=")) return
     val all = readMentions(spark, mentionsPath)
     // materialize: read by both rewrites, and it must be computed
@@ -420,16 +416,15 @@ object StreamingPipeline {
           col("batchId").cast("long").as("batchId"))).distinct())
       .localCheckpoint()
     val tmpM = s"${mentionsPath}__compact"
-    all.join(latest, Seq("docId", "batchId"), "left_semi")
-      .write.mode("overwrite").partitionBy("batchId").parquet(tmpM)
+    Fs.parquet(all.join(latest, Seq("docId", "batchId"), "left_semi"), tmpM)(
+      _.mode("overwrite").partitionBy("batchId"))
     val rosterP = rosterPath(mentionsPath)
     val doRoster = Fs.hasData(spark, rosterP, "batchId=")
     if (doRoster) {
       // written BEFORE either swap — this plan reads rosterP
-      readRoster(spark, rosterP)
-        .join(latest, Seq("docId", "batchId"), "left_semi")
-        .write.mode("overwrite").partitionBy("batchId")
-        .parquet(s"${rosterP}__compact")
+      Fs.parquet(readRoster(spark, rosterP)
+          .join(latest, Seq("docId", "batchId"), "left_semi"),
+        s"${rosterP}__compact")(_.mode("overwrite").partitionBy("batchId"))
     }
     // roster FIRST: a crash between the swaps must leave the mention
     // table OVER-evidenced (stale mentions with a compacted roster are
@@ -502,8 +497,8 @@ object StreamingPipeline {
     pmod(xxhash64(c), lit(EntIdxBuckets)).cast("int")
 
   private def entIdxUsable(spark: SparkSession, statePath: String): Boolean =
-    graft.sources.Fs.exists(spark, entIdxMarker(statePath)) &&
-      graft.sources.Fs.hasData(spark, entIdxDir(statePath), "ebucket=")
+    Fs.exists(spark, entIdxMarker(statePath)) &&
+      Fs.hasData(spark, entIdxDir(statePath), "ebucket=")
 
   /** The distinct delta pairs, bucketed. */
   private def entIdxRows(linked: DataFrame): DataFrame =
@@ -515,7 +510,8 @@ object StreamingPipeline {
     * snapshot whose docs the index misses. */
   private[graft] def appendEntIdx(spark: SparkSession, statePath: String,
       linked: DataFrame): Unit =
-    entIdxRows(linked).write.mode(SaveMode.Append).parquet(entIdxLog(statePath))
+    Fs.parquet(entIdxRows(linked), entIdxLog(statePath))(
+      _.mode(SaveMode.Append))
 
   /** The whole index: the rebuilt buckets plus the append log, each
     * read only where it exists (an index with neither fails). A filter
@@ -523,7 +519,6 @@ object StreamingPipeline {
     * its matching row groups. */
   private[graft] def readEntIdx(spark: SparkSession,
       statePath: String): DataFrame = {
-    import graft.sources.Fs
     val d = entIdxDir(statePath); val log = entIdxLog(statePath)
     Seq(d -> Fs.hasData(spark, d, "ebucket="), log -> Fs.exists(spark, log))
       .collect { case (p, true) => spark.read.schema(EntIdxSchema).parquet(p) }
@@ -540,8 +535,8 @@ object StreamingPipeline {
     val d = entIdxDir(statePath); val tmp = s"${d}__rebuild"
     graft.sources.GraphTables.writePartitioned(rows, tmp,
       Seq("ebucket"), SaveMode.Overwrite)
-    graft.sources.Fs.touch(spark, s"$tmp/_complete")
-    graft.sources.Fs.swapInto(spark, tmp, d)
+    Fs.touch(spark, s"$tmp/_complete")
+    Fs.swapInto(spark, tmp, d)
   }
 
   /** The whole index plus the delta's pairs, distinct: a materializing
@@ -710,8 +705,8 @@ object StreamingPipeline {
     val d = stateDir(statePath, snapshotId)
     // a delta's rows are few: one file per table, not one per task
     def put(df: DataFrame, sub: String): Unit =
-      (if (st.base.isDefined) df.coalesce(1) else df)
-        .write.mode("overwrite").parquet(s"$d/$sub")
+      Fs.parquet(if (st.base.isDefined) df.coalesce(1) else df,
+        s"$d/$sub")(_.mode("overwrite"))
     var staged: graft.sources.GraphTables.Staged = null
     runLanes(
       "index" -> index,
@@ -819,7 +814,7 @@ object StreamingPipeline {
     stateChain(spark, statePath, snapshotId).flatMap { chain =>
       val dirs = chain.ids.map(id => stateDir(statePath, id))
       def whole(sub: String) = dirs.forall(d =>
-        graft.sources.Fs.exists(spark, s"$d/$sub"))
+        Fs.exists(spark, s"$d/$sub"))
       if (!whole("canon") || !whole("pairs") || !whole("docs")) None
       else Some(CanonState(
         lwwResolve(dirs.map(d =>
@@ -850,8 +845,8 @@ object StreamingPipeline {
         val d = stateDir(statePath, snapshotId)
         def swap(sub: String, df: DataFrame): Unit = {
           val tmp = s"$d/${sub}__compact"
-          df.write.mode("overwrite").parquet(tmp)
-          graft.sources.Fs.swapInto(spark, tmp, s"$d/$sub")
+          Fs.parquet(df, tmp)(_.mode("overwrite"))
+          Fs.swapInto(spark, tmp, s"$d/$sub")
         }
         // materialize BEFORE swapping: the lazy plans read the very
         // dirs being replaced
@@ -1001,7 +996,7 @@ object StreamingPipeline {
       mentionsPath: String, tablePath: String, snapshotId: String,
       statePath: String, maxChain: Int = 8): DynPublish = {
     import graft.canon.IncrementalCanon
-    import graft.sources.{Fs, GraphTables}
+    import graft.sources.GraphTables
     import spark.implicits._
     require(maxChain < MaxStateChain, s"maxChain $maxChain: chains of " +
       s"${maxChain + 1} state dirs exceed the $MaxStateChain the reader " +

@@ -585,4 +585,158 @@ class GraphSinkSpec extends SparkSpec {
     assert(graft.streaming.StreamingPipeline.readEntIdx(spark, tmp).count() ==
       2 * linked.distinct().count())
   }
+
+  /** Every file and dir under `root` (root excluded) by its path with
+    * run-specific parts blanked (task UUIDs, commit times) -> its full
+    * POSIX mode, setuid/setgid/sticky bits included. */
+  private def modes(root: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val s = Files.walk(r)
+    try s.iterator().asScala.filter(_ != r).map { p =>
+      r.relativize(p).toString
+        .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "U")
+        .replaceAll("[0-9]{20}-", "T-") ->
+        (Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+    }.toMap
+    finally s.close()
+  }
+
+  /** Run `body` with the session's `file` scheme set to [[StockLocalFs]]
+    * (uncached, so every FileSystem.get makes one), conf restored after. */
+  private def withSessionFileFs[T](body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[StockLocalFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** Counts of [[graft.sources.Fs.onPermission]] calls while `body` runs:
+    * (set in-process, fell back to the stock call). */
+  private def permissionCounts(body: => Unit): (Int, Int) = {
+    val in = new java.util.concurrent.atomic.AtomicInteger
+    val out = new java.util.concurrent.atomic.AtomicInteger
+    graft.sources.Fs.onPermission = b => (if (b) in else out).incrementAndGet()
+    try body finally graft.sources.Fs.onPermission = _ => ()
+    (in.get, out.get)
+  }
+
+  test("local writes set modes in-process, the modes the stock local FS sets") {
+    import spark.implicits._
+    import graft.streaming.StreamingPipeline
+    val tmp = Files.createTempDirectory("graphmode").toString
+    // one mention accumulation feeds both twins' state-keeping publish
+    val src = s"$tmp/src"; val ments = s"$tmp/ments"
+    graft.extract.Extract.corpus(spark, 4).write.parquet(src)
+    val q = StreamingPipeline.triplesStream(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        .as[graft.core.SourceFileHashed],
+      s"$tmp/out", s"$tmp/man", s"$tmp/ckpt", mentionsPath = Some(ments))
+    q.processAllAvailable(); q.stop()
+    val base = spreadTriples(40, "b"); val added = spreadTriples(10, "a")
+    // a snapshot, a flat overlay on it, and a state-keeping publish
+    def writeAll(root: String): Unit = {
+      GraphTables.write(base, s"$root/graph", "m-A")
+      GraphTables.writeDelta(spark, s"$root/graph", "m-B", Some("m-A"), added,
+        Seq.empty[String].toDF("docId"), 0L, 0L)
+      assert(StreamingPipeline.publishSnapshotDynamicIncremental(spark, ments,
+        s"$root/pub", "p-1", s"$root/state").rows > 0)
+    }
+    def twins(parent: String): (Int, Int) = {
+      val counts = permissionCounts(writeAll(s"$parent/graft"))
+      // the twin: the session's own local FS class, the stock code
+      val stockCounts = permissionCounts(withSessionFileFs(writeAll(s"$parent/stock")))
+      assert(stockCounts == ((0, 0)), "a session-configured FS must serve its writes")
+      val (g, st) = (modes(s"$parent/graft"), modes(s"$parent/stock"))
+      Seq(".parquet", ".crc", "_SUCCESS", ".json").foreach(k =>
+        assert(g.keys.exists(_.endsWith(k)), s"no $k file written"))
+      assert(g == st, s"graft ${(g.toSet -- st.toSet).take(5)} " +
+        s"stock ${(st.toSet -- g.toSet).take(5)}")
+      counts
+    }
+    val (in, out) = twins(s"$tmp/plain")
+    assert(in > 0 && out == 0, s"in-process $in, stock fallbacks $out")
+    // under a setgid dir every new dir inherits the bit, which GNU chmod
+    // keeps: graft's FS falls back for dirs and keeps it the same way
+    val sg = java.nio.file.Paths.get(s"$tmp/setgid")
+    Files.createDirectory(sg)
+    val setgid = Integer.parseInt("2000", 8)
+    Files.setAttribute(sg, "unix:mode", Integer.valueOf(setgid | Integer.parseInt("755", 8)))
+    val (sgIn, sgOut) = twins(sg.toString)
+    assert(sgIn > 0 && sgOut > 0, s"in-process $sgIn, stock fallbacks $sgOut")
+    val dirs = modes(sg.toString).filter { case (p, _) =>
+      Files.isDirectory(sg.resolve(p)) }
+    assert(dirs.nonEmpty && dirs.values.forall(m => (m & setgid) != 0),
+      dirs.filter(m => (m._2 & setgid) == 0).take(5))
+  }
+
+  test("graft's local FS serves only file: paths of a stock-FS session") {
+    val tmp = Files.createTempDirectory("graphscope").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = (conf.get("fs.file.impl"), conf.get("fs.file.impl.disable.cache"))
+    val opts = graft.sources.Fs.writerOptions(spark, s"$tmp/t")
+    assert(opts.get("fs.file.impl").contains(classOf[graft.sources.Fs.LocalFs].getName))
+    assert(graft.sources.Fs.writerOptions(spark, s"file://$tmp/t").nonEmpty)
+    // another scheme keeps its own FS: no options, no cluster needed
+    assert(graft.sources.Fs.writerOptions(spark, "hdfs://nn/x").isEmpty)
+    // a session that configured its own file class keeps it
+    StockLocalFs.created.set(0)
+    val (in, out) = permissionCounts(withSessionFileFs {
+      assert(graft.sources.Fs.writerOptions(spark, s"$tmp/t").isEmpty)
+      assert(graft.sources.Fs.fsOf(spark, new org.apache.hadoop.fs.Path(tmp))
+        .isInstanceOf[StockLocalFs])
+      GraphTables.write(spreadTriples(10, "s"), s"$tmp/t", "s-1")
+    })
+    assert(StockLocalFs.created.get > 0 && in == 0 && out == 0,
+      s"${StockLocalFs.created.get} session FS instances, graft FS $in/$out")
+    assert(GraphTables.read(spark, s"$tmp/t").count() == 60)
+    assert((conf.get("fs.file.impl"), conf.get("fs.file.impl.disable.cache")) == before)
+  }
+
+  test("a commit record is created once: one winner among racing creators") {
+    import org.apache.hadoop.fs.Path
+    val tmp = Files.createTempDirectory("graphrace").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    /** Rounds (of `rounds`) in which more than one of 8 threads created
+      * the same record through `fs`; asserts at least one winner each. */
+    def race(fs: org.apache.hadoop.fs.FileSystem, dir: String, rounds: Int): Int =
+      (0 until rounds).count { r =>
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val c = graft.sources.SnapshotMeta.Commit(s"r$r", 1L, "00", 1L)
+        val tries = (0 until 8).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              go.await()
+              graft.sources.SnapshotMeta.create(fs, new Path(dir), c)
+            }
+          }))
+        go.countDown()
+        val wins = tries.count(_.get())
+        assert(wins >= 1, s"round $r: no winner")
+        wins > 1
+      }
+    try {
+      val graftFs = graft.sources.Fs.fsOf(spark, new Path(tmp))
+      assert(graftFs.isInstanceOf[graft.sources.Fs.LocalFs])
+      assert(race(graftFs, s"$tmp/graft", 200) == 0)
+      val stock = race(new Path(tmp).getFileSystem(
+        spark.sparkContext.hadoopConfiguration), s"$tmp/stock", 200)
+      info(s"session (stock) local FS: more than one winner in $stock of 200 rounds")
+    } finally pool.shutdown()
+  }
+}
+
+/** A session-configured `file` FileSystem: the stock LocalFileSystem
+  * under another class name, counting its instances. */
+class StockLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  StockLocalFs.created.incrementAndGet()
+}
+object StockLocalFs {
+  val created = new java.util.concurrent.atomic.AtomicInteger
 }
