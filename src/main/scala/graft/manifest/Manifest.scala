@@ -72,22 +72,12 @@ object ResumableStage {
     // resuming with a DIFFERENT bucket count or run config than this
     // (stage, snapshotId) was started with would splice incompatible
     // buckets into one snapshot. Fail fast instead.
-    // legacy rows ({"buckets":N}, written before the config field
-    // existed) carry no fingerprint to compare — a missing config is a
-    // wildcard when the bucket count matches, so fully-committed
-    // pre-change snapshots stay READABLE-resumable (no-op). COMPUTING
-    // under a legacy row is refused below: the legacy buckets' config
-    // is unknown, so splicing fresh buckets next to them could mix
-    // weight bundles silently — the inconsistency F9 exists to prevent.
-    val legacyJson = s"""{"buckets":$nBuckets}"""
-    var hasLegacy = false
     if (graft.sources.Fs.exists(spark, manifestPath)) {
       spark.read.parquet(manifestPath)
         .filter($"stage" === stage && $"snapshotId" === snapshotId)
         .select($"metricsJson").distinct().as[String].collect()
         .foreach { mj =>
-          if (mj == legacyJson) hasLegacy = true
-          else require(mj == metricsJson,
+          require(mj == metricsJson,
             s"manifest for ($stage, $snapshotId) was written with $mj " +
               s"but this run has $metricsJson — resume with the " +
               "original bucket count and run config, or use a fresh " +
@@ -96,11 +86,6 @@ object ResumableStage {
     }
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return 0
-    require(!hasLegacy,
-      s"manifest for ($stage, $snapshotId) has pre-config legacy rows " +
-        s"and ${todo.size} uncommitted bucket(s) — the legacy buckets' " +
-        "run config is unknown, so completing the snapshot could splice " +
-        "mixed-config data. Recompute under a fresh snapshotId + outPath")
     val pending = compute(todo)
     // purge every bucket dir NOT committed for this (stage, snapshotId)
     // before writing: dynamic overwrite only replaces partitions present

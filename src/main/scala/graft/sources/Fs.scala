@@ -165,12 +165,6 @@ object Fs {
     ()
   }
 
-  /** Create (or truncate) an empty marker file. */
-  def touch(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    fsOf(spark, p).create(p, true).close()
-  }
-
   /** Replace `path` with the freshly-written `tmpPath` (rename old
     * aside, rename tmp in, delete old) — the rewrite-compaction swap
     * (accumulation, snapshot and state compaction). NOT atomic: a crash

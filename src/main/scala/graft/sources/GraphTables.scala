@@ -3,10 +3,10 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Row-set fingerprint shared by the graph-table publish and the
-  * streaming batch commit: xxhash64 over the named columns,
-  * xor-combined (order-independent), hex. (ResumableStage keeps its own
-  * per-bucket variant over struct(sorted cols) — see Manifest.scala.) */
+/** Row-set fingerprint of the graph-table publishes: xxhash64 over
+  * the named columns, xor-combined (order-independent), hex.
+  * (ResumableStage keeps its own per-bucket variant over
+  * struct(sorted cols) — see Manifest.scala.) */
 object ContentHash {
   /** (rowCount, xor-combined xxhash64) as a raw Long — the form the
     * DELTA-snapshot math needs: xor is order-independent AND
@@ -113,17 +113,17 @@ object GraphTables {
     s"$path/data/snap=$snapshotId"
 
   /** Does this snapshot dir hold written data: `pred=` partitions (a
-    * full snapshot, or an overlay in the older partitioned layout) or
-    * flat files (an overlay)? (A bare probe would commit rowCount=0
-    * fingerprints and fabricate empty reads for non-empty snapshots on
-    * HDFS/S3 — see [[Fs]].) */
+    * full snapshot) or flat files (an overlay)? (A bare probe would
+    * commit rowCount=0 fingerprints and fabricate empty reads for
+    * non-empty snapshots on HDFS/S3 — see [[Fs]].) */
   private def hasData(spark: SparkSession, dir: String): Boolean =
     Fs.hasData(spark, dir, "pred=")
 
   /** A snap dir's own rows; an empty frame when it holds no data. One
-    * read serves both layouts: under `pred=` dirs partition discovery
-    * supplies `pred`/`bucket`, in flat files they are stored columns,
-    * and the pinned [[TableSchema]] orders them the same either way. */
+    * read serves full snapshots and overlays: under `pred=` dirs
+    * partition discovery supplies `pred`/`bucket`, in an overlay's flat
+    * files they are stored columns, and the pinned [[TableSchema]]
+    * orders them the same either way. */
   private def readDir(spark: SparkSession, dir: String): DataFrame =
     if (hasData(spark, dir)) spark.read.schema(TableSchema).parquet(dir)
     else spark.createDataFrame(
@@ -222,32 +222,18 @@ object GraphTables {
       snapshotId: String): Option[String] =
     SnapshotMeta.chainOf(spark, snapDir(path, snapshotId)).map(_._1)
 
-  /** Overlay-chain length above a snapshot (0 = full). The chain pointer
-    * records its own depth, so the common case is ONE pointer read.
-    * Falls back to walking the base pointers for a pre-JSON sidecar
-    * without the depth row; a cycle (corrupted pointers) fails instead
-    * of looping. */
+  /** Overlay-chain length above a snapshot (0 = full): ONE pointer
+    * read, since the chain pointer records its own depth. */
   def chainDepth(spark: SparkSession, path: String,
-      snapshotId: String): Int = {
-    var id = snapshotId; var d = 0; var seen = Set.empty[String]
-    var m = SnapshotMeta.chainOf(spark, snapDir(path, id))
-    while (m.isDefined) {
-      if (m.get._2 >= 0) return d + m.get._2
-      require(!seen.contains(id), s"overlay chain cycle at snapshot $id")
-      seen += id; id = m.get._1; d += 1
-      m = SnapshotMeta.chainOf(spark, snapDir(path, id))
-    }
-    d
-  }
+      snapshotId: String): Int =
+    SnapshotMeta.chainOf(spark, snapDir(path, snapshotId)).fold(0)(_._2)
 
   /** The sidecar's parquet rows are data-sized (the hidden docs), so it
-    * stays parquet, read with its pinned schema; a pre-JSON sidecar's
-    * base/depth rows are filtered out. */
+    * stays parquet, read with its pinned schema. */
   private def resolveOverlay(spark: SparkSession, path: String,
       dir: String, baseId: String): DataFrame = {
     val removed = spark.read.schema(SnapshotMeta.SidecarSchema)
-      .parquet(SnapshotMeta.sidecarDir(dir))
-      .filter(col("kind") === "removed").select(col("value").as("docId"))
+      .parquet(SnapshotMeta.sidecarDir(dir)).select(col("value").as("docId"))
     val cols = TableSchema.fieldNames.map(col).toSeq
     readSnapshot(spark, path, baseId).join(removed, Seq("docId"), "left_anti")
       .select(cols: _*)

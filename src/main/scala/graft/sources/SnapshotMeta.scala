@@ -21,17 +21,20 @@ import scala.util.Try
   *    until its dir is swept.
   *  - STATE META: a canon-state dir's `{lastBatchId, baseState}`.
   *
-  * Tables and state written before this layout — a parquet `manifest`,
-  * `_graft_base` base/depth rows, a parquet `meta` — are read (by Spark,
-  * with pinned schemas) only where the JSON is absent; the first write
-  * to such a table's log migrates its manifest ([[migrate]]). */
+  * The parquet metadata of the layout before this one is not read. A
+  * table with a parquet `manifest` and no log, and an overlay with a
+  * `_graft_base` sidecar and no chain pointer, are refused loudly: read
+  * as "nothing committed" and "a full snapshot", the first would be
+  * republished in full and its snap dirs swept as orphans, the second
+  * would read as its delta rows alone. A parquet state `meta` reads as
+  * no state, which routes the next publish to the full path, and that
+  * is exact. */
 object SnapshotMeta {
 
   final case class Commit(snapshotId: String, rowCount: Long,
       contentHash: String, committedAt: Long)
 
-  final case class StateMeta(lastBatchId: Long, baseState: Option[String],
-      legacy: Boolean)
+  final case class StateMeta(lastBatchId: Long, baseState: Option[String])
 
   /** Called with the path of every JSON record opened — the read
     * counts specs assert. */
@@ -65,7 +68,13 @@ object SnapshotMeta {
   // ---- commit log ---------------------------------------------------
 
   private def commitsDir(table: String) = new Path(s"$table/_commits")
-  private def legacyManifest(table: String) = new Path(s"$table/manifest")
+
+  /** Called where a table has no log: refuse it if its parquet manifest
+    * is there, a layout that is no longer read. */
+  private def refuseManifest(fs: FileSystem, table: String): Unit =
+    if (fs.exists(new Path(s"$table/manifest")))
+      throw new IllegalStateException(s"graph table $table keeps its commits " +
+        "in a parquet manifest, a layout that is no longer read")
 
   private def recordName(at: Long, id: String) = f"$at%020d-$id.json"
 
@@ -94,10 +103,7 @@ object SnapshotMeta {
       fs.listStatus(dir).toSeq.flatMap(st => nameKey(st.getPath.getName)
           .map(k => Entry(k, () => readCommit(spark, st.getPath, k))))
         .sortBy(_.key)(Latest)
-    else if (fs.exists(legacyManifest(table)))
-      legacyCommits(spark, table).map(c =>
-        Entry((c.committedAt, c.snapshotId), () => Some(c)))
-    else Seq.empty
+    else { refuseManifest(fs, table); Seq.empty }
   }
 
   private def readCommit(spark: SparkSession, p: Path,
@@ -106,14 +112,6 @@ object SnapshotMeta {
         n.get("snapshotId").asText, n.get("rowCount").asLong,
         n.get("contentHash").asText, n.get("committedAt").asLong)).toOption)
       .filter(c => (c.committedAt, c.snapshotId) == key)
-
-  /** The rows of a pre-JSON parquet manifest, latest first. */
-  private def legacyCommits(spark: SparkSession, table: String): Seq[Commit] =
-    spark.read
-      .schema("rowCount BIGINT, contentHash STRING, snapshotId STRING, committedAt BIGINT")
-      .parquet(legacyManifest(table).toString).collect().toSeq
-      .map(r => Commit(r.getString(2), r.getLong(0), r.getString(1), r.getLong(3)))
-      .sortBy(c => (c.committedAt, c.snapshotId))(Latest)
 
   /** The latest committed record of the table. */
   def latest(spark: SparkSession, table: String): Option[Commit] =
@@ -140,7 +138,7 @@ object SnapshotMeta {
       rowCount: Long, contentHash: String): Unit = {
     val dir = commitsDir(table)
     val fs = Fs.fsOf(spark, dir)
-    migrate(spark, table, fs)
+    if (!fs.exists(dir)) refuseManifest(fs, table)
     var at = System.currentTimeMillis()
     while (!create(fs, dir, Commit(snapshotId, rowCount, contentHash, at))) at += 1
   }
@@ -158,27 +156,9 @@ object SnapshotMeta {
   def drop(spark: SparkSession, table: String, ids: Set[String]): Unit = {
     val dir = commitsDir(table)
     val fs = Fs.fsOf(spark, dir)
-    migrate(spark, table, fs)
     if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
       if (nameKey(st.getPath.getName).exists(k => ids(k._2)))
         fs.delete(st.getPath, false)
-    }
-  }
-
-  /** One-shot migration of a pre-JSON table's parquet manifest: every
-    * row becomes a record (same keys, so the same resolution), written
-    * into a tmp dir renamed into place, then the manifest is deleted. A
-    * crash before the rename leaves the manifest authoritative; after
-    * it, the log. */
-  private def migrate(spark: SparkSession, table: String, fs: FileSystem): Unit = {
-    val dir = commitsDir(table)
-    if (!fs.exists(dir) && fs.exists(legacyManifest(table))) {
-      val tmp = new Path(s"$dir.migrate")
-      fs.delete(tmp, true)
-      fs.mkdirs(tmp)
-      legacyCommits(spark, table).foreach(create(fs, tmp, _))
-      require(fs.rename(tmp, dir), s"cannot move $tmp into place")
-      fs.delete(legacyManifest(table), true)
     }
   }
 
@@ -186,8 +166,7 @@ object SnapshotMeta {
 
   private def chainFile(snapDir: String) = new Path(s"$snapDir/_graft_chain.json")
 
-  /** The parquet sidecar of an overlay: its `removed` doc list, and in
-    * the pre-JSON layout also its `base` and `depth` rows. */
+  /** The parquet sidecar of an overlay: its `removed` doc list. */
   private[graft] def sidecarDir(snapDir: String): String = s"$snapDir/_graft_base"
 
   private[graft] val SidecarSchema = "kind STRING, value STRING"
@@ -198,20 +177,19 @@ object SnapshotMeta {
     put(Fs.fsOf(spark, p), p, overwrite = true, "base" -> base, "depth" -> depth)
   }
 
-  /** (base snapshot id, recorded depth) of an overlay; None for a full
-    * snapshot. A pre-JSON sidecar without a depth row reports -1. */
+  /** (base snapshot id, depth) of an overlay; None for a full snapshot.
+    * A sidecar with no pointer next to it is refused: an overlay of the
+    * parquet-pointer layout, which is no longer read, or one whose
+    * publish stopped before its pointer and never committed. */
   def chainOf(spark: SparkSession, snapDir: String): Option[(String, Int)] =
     get(spark, chainFile(snapDir)) match {
       case Some(t) =>
         val n = t.get
         Some((n.get("base").asText, n.get("depth").asInt))
       case None if Fs.exists(spark, sidecarDir(snapDir)) =>
-        val rows = spark.read.schema(SidecarSchema).parquet(sidecarDir(snapDir))
-          .filter(org.apache.spark.sql.functions.col("kind").isin("base", "depth"))
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        Some((rows.getOrElse("base", throw new IllegalStateException(
-            s"overlay sidecar at $snapDir names no base")),
-          rows.get("depth").map(_.toInt).getOrElse(-1)))
+        throw new IllegalStateException(s"overlay at $snapDir has a sidecar " +
+          "but no chain pointer: a parquet-pointer overlay (no longer read) " +
+          "or an uncommitted one")
       case None => None
     }
 
@@ -234,20 +212,11 @@ object SnapshotMeta {
   }
 
   /** A state dir's meta: None when absent, a Failure when present but
-    * unreadable. A pre-JSON parquet `meta` (the pre-chaining layout has
-    * a bare lastBatchId, read as a flat state) is marked `legacy`. */
+    * unreadable. */
   def stateMeta(spark: SparkSession, stateDir: String): Option[Try[StateMeta]] =
     get(spark, metaFile(stateDir)).map(_.flatMap(n => Try {
       val b = n.get("baseState")
       StateMeta(n.get("lastBatchId").asLong,
-        if (b == null || b.isNull) None else Some(b.asText), legacy = false)
-    })).orElse {
-      val legacy = s"$stateDir/meta"
-      if (!Fs.exists(spark, legacy)) None
-      else Some(Try {
-        val r = spark.read.schema("lastBatchId BIGINT, baseState STRING")
-          .parquet(legacy).head()
-        StateMeta(r.getLong(0), Option(r.getString(1)), legacy = true)
-      })
-    }
+        if (b == null || b.isNull) None else Some(b.asText))
+    }))
 }

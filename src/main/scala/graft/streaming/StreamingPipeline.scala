@@ -53,43 +53,16 @@ object StreamingPipeline {
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Idempotent per-batch commit: triples AND the manifest row are
-    * written into a `batchId=<id>` partition with dynamic partition
-    * overwrite, so a RETRIED micro-batch (crash between the data write
-    * and the streaming checkpoint commit) REPLACES its own partition
-    * instead of appending duplicates — the write is exactly-once per
-    * batchId even though foreachBatch is at-least-once. */
-  def commitBatch(triples: DataFrame, batchId: Long, outPath: String,
-      manifestPath: String): Unit = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val cached = triples.cache()
-    try {
-      // per-WRITE dynamic overwrite (writer option, not a session conf
-      // — see ResumableStage.runWith)
-      Fs.parquet(cached.withColumn("batchId", lit(batchId)), outPath)(
-        _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batchId"))
-      val (nRows, cHash) = graft.sources.ContentHash.hex(cached,
-        graft.sources.ContentHash.TripleCols)
-      Fs.parquet(Seq((f"batch$batchId%05d", nRows, cHash,
-          System.currentTimeMillis(), batchId))
-        .toDF("stage", "rowCount", "contentHash", "committedAt", "batchId"),
-        manifestPath)(_.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").partitionBy("batchId"))
-    } finally { cached.unpersist(); () }
-  }
-
   /** Doc-roster side table of the mention accumulation: one row per
     * (docId, batchId) the batch TOUCHED — including docs that yielded
-    * ZERO mentions. Last-writer-wins at publish time is resolved on
-    * this roster, not on the mention rows themselves: a re-ingested doc
-    * whose new content has no linked mentions must suppress its old
-    * mentions, and the mention table alone cannot say the doc was seen
-    * again. */
+    * ZERO mentions. It is THE record of which docs each batch touched:
+    * last-writer-wins at publish time is resolved on it, not on the
+    * mention rows themselves, since a re-ingested doc whose new content
+    * has no linked mentions must suppress its old mentions, and the
+    * mention table alone cannot say the doc was seen again. */
   def rosterPath(mentionsPath: String): String = s"${mentionsPath}_docs"
 
-  /** The accumulation's reads, with the schemas [[triplesStream]] writes
+  /** The accumulation's reads, with the schemas [[commitBatch]] writes
     * (an inferred read runs a footer job): the linked mentions, and the
     * roster's docIds, each with its `batchId` partition. */
   private val MentionsSchema = org.apache.spark.sql.Encoders
@@ -99,8 +72,18 @@ object StreamingPipeline {
   private def readMentions(spark: SparkSession, mentionsPath: String): DataFrame =
     spark.read.schema(MentionsSchema).parquet(mentionsPath)
 
-  private def readRoster(spark: SparkSession, rosterP: String): DataFrame =
-    spark.read.schema("docId STRING, batchId BIGINT").parquet(rosterP)
+  /** The roster; empty when it holds no data. An accumulation with
+    * mention data but no roster data is refused: it predates the roster,
+    * and publishing it would silently drop its docs. */
+  private def readRoster(spark: SparkSession, mentionsPath: String): DataFrame = {
+    val r = rosterPath(mentionsPath)
+    val schema = "docId STRING, batchId BIGINT"
+    if (Fs.hasData(spark, r, "batchId=")) spark.read.schema(schema).parquet(r)
+    else if (Fs.hasData(spark, mentionsPath, "batchId="))
+      throw new IllegalStateException(s"the mention accumulation at " +
+        s"$mentionsPath has no doc roster at $r, a layout that is no longer read")
+    else { import spark.implicits._; Seq.empty[(String, Long)].toDF("docId", "batchId") }
+  }
 
   /** One micro-batch's files -> mentions, behind ONE hash exchange.
     *
@@ -146,27 +129,40 @@ object StreamingPipeline {
     graft.extract.Extract.mentionsFused(survivors, repartitionByDoc = false)
   }
 
+  /** One micro-batch's commit: its LINKED mentions to `mentionsPath`
+    * and its doc roster to [[rosterPath]], each into a `batchId=<id>`
+    * partition with dynamic partition overwrite (a per-write option, not
+    * a session conf), so a RETRIED micro-batch (crash between the data
+    * write and the streaming checkpoint commit) REPLACES its own
+    * partitions instead of appending duplicates — the write is
+    * exactly-once per batchId even though foreachBatch is
+    * at-least-once. */
+  private[graft] def commitBatch(batch: Dataset[SourceFileHashed], batchId: Long,
+      mentionsPath: String, ingestTsCol: Option[String]): Unit = {
+    def write(df: DataFrame, path: String): Unit =
+      Fs.parquet(df.withColumn("batchId", lit(batchId)), path)(
+        _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batchId"))
+    // the one action over the linked mentions: no cache
+    write(graft.link.Linker.link(batchMentions(batch, ingestTsCol)).toDF(),
+      mentionsPath)
+    // every doc of the batch keeps exactly one version, so the roster
+    // reads the docIds straight off the raw batch
+    write(batch.toDF().select(graft.core.DocId.column.as("docId")).distinct(),
+      rosterPath(mentionsPath))
+  }
+
   /** Streaming ingest: foreachBatch runs the SAME batch pipeline
     * stages per micro-batch (north-star §2.9 extension: "idempotent
     * per-partition writes + a manifest table, foreachBatch if a
     * streaming ingest is later attached"); the checkpointLocation
-    * dedups batches. One of two products, by `mentionsPath`:
-    *  - None (static mode): each micro-batch canonicalizes against the
-    *    STATIC dictionary map and commits its triples to `outPath` and
-    *    one lineage row to `manifestPath` via [[commitBatch]]
-    *    (idempotent per batchId). A batch sees only its own files, so
-    *    it cannot mine corpus-wide alias edges; its triples may keep a
-    *    novel surface-form alias self-canonical where the batch
-    *    dynamic-canon pipeline would merge it. [[publishSnapshot]]
-    *    publishes them.
-    *  - Some (mentions mode): each micro-batch writes ONLY the LINKED
-    *    mention table and the [[rosterPath]] doc roster (same
-    *    idempotent batchId-partition protocol); `outPath` and
-    *    `manifestPath` are not written. [[publishSnapshotDynamic]] and
-    *    [[publishSnapshotDynamicIncremental]] then publish EXACT
-    *    dynamic-canon parity by running the shared canon+emit stages
-    *    over the accumulation — nothing reads a per-batch static-canon
-    *    product there, so the micro-batch does not make one.
+    * dedups batches. Each micro-batch writes ONLY the linked mentions
+    * and the doc roster ([[commitBatch]]) under `mentionsPath`, which
+    * is required: a `None` fails before the query starts. `outPath` and
+    * `manifestPath` are not written. [[publishSnapshotDynamic]] and
+    * [[publishSnapshotDynamicIncremental]] then publish EXACT
+    * dynamic-canon parity by running the shared canon+emit stages over
+    * the accumulation.
     *
     * `ingestTsCol` (explicit OPT-IN — never inferred from a column
     * name, so a source that happens to carry a similarly-named column
@@ -183,6 +179,9 @@ object StreamingPipeline {
       mentionsPath: Option[String] = None,
       ingestTsCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val mp = mentionsPath.getOrElse(throw new IllegalArgumentException(
+      "triplesStream needs mentionsPath: the streamed product is the " +
+        "mention accumulation the dynamic publishes read"))
     // validate the opt-in once, against the STREAM schema, before any
     // batch runs — a typo'd or mistyped column fails at start(), not
     // silently mid-stream
@@ -205,79 +204,10 @@ object StreamingPipeline {
     }
     files.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: Dataset[SourceFileHashed], batchId: Long) =>
-        val spark = batch0.sparkSession
-        val linked = graft.link.Linker.link(
-          batchMentions(batch0, ingestTsCol)).toDF()
-        mentionsPath match {
-          case Some(mp) =>
-            // the one action over the linked mentions: no cache
-            Fs.parquet(linked.withColumn("batchId", lit(batchId)), mp)(
-              _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batchId"))
-            // every doc of the batch keeps exactly one version, so the
-            // roster reads the docIds straight off the raw batch
-            Fs.parquet(batch0.toDF()
-                .select(graft.core.DocId.column.as("docId"))
-                .distinct()
-                .withColumn("batchId", lit(batchId)), rosterPath(mp))(
-              _.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batchId"))
-          case None =>
-            // straight from batchMentions: doc-contiguous, so the static
-            // map's broadcast join emits partition-locally
-            val (_, triples) = graft.Pipeline.canonEmit(linked,
-              graft.Pipeline.Canon.static(spark), docContiguous = true)
-            commitBatch(triples, batchId, outPath, manifestPath)
-        }
+      .foreachBatch { (batch: Dataset[SourceFileHashed], batchId: Long) =>
+        commitBatch(batch, batchId, mp, ingestTsCol)
       }
       .start()
-  }
-
-  /** Publish the union of all COMMITTED streamed batches as one
-    * [[graft.sources.GraphTables]] snapshot — the step that turns a
-    * streamed backfill into a consumable graph table (round 2 committed
-    * per-batch parquet but never published a snapshot). A docId
-    * re-ingested across batches contributes only its LATEST batch's
-    * triples (last-writer-wins per doc, the same rule as
-    * [[publishSnapshotDynamic]]; within one micro-batch
-    * [[triplesStream]] keeps a single version per doc — by its
-    * caller's `ingestTsCol` chronology when opted in, else by the
-    * deterministic (commit, sha256) rule — so batchId granularity
-    * suffices) — a bare union would keep stale
-    * triples whose facts vanished from the newer content. The one case
-    * this path cannot resolve is a re-ingest whose new content yields
-    * ZERO triples (no row records the doc was seen again); run
-    * [[triplesStream]] with `mentionsPath` and publish via
-    * [[publishSnapshotDynamic]] (doc roster) when that matters.
-    * Snapshot isolation comes from GraphTables.write (own snap dir,
-    * commit record LAST), so a crash mid-publish leaves readers on
-    * the previous snapshot. Returns (rowCount, contentHash) of the
-    * published snapshot. */
-  def publishSnapshot(spark: SparkSession, outPath: String,
-      tablePath: String, snapshotId: String): (Long, String) = {
-    // an accumulation whose EVERY batch committed zero triples wrote no
-    // batchId= partitions (just _SUCCESS) — read.parquet on the bare
-    // dir fails schema inference; the correct publish is a legitimate
-    // EMPTY snapshot (same probe-then-empty shape as GraphTables.write/
-    // readSnapshot). A MISSING dir is different: no stream ever
-    // committed there, so publishing "empty" would mask a typo'd path —
-    // fail loudly instead.
-    require(Fs.exists(spark, outPath),
-      s"no streamed accumulation at $outPath — nothing was ever committed")
-    if (!Fs.hasData(spark, outPath, "batchId="))
-      return graft.sources.GraphTables.write(emptyTriples(spark), tablePath,
-        snapshotId)
-    val all = spark.read.parquet(outPath)
-    val latest = all.groupBy(col("docId"))
-      .agg(max(col("batchId")).as("batchId"))
-    val t = all.join(latest, Seq("docId", "batchId"))
-      // collapse a retried batch's identical rows (idempotent commit
-      // already overwrites the partition; the agg is belt-and-braces
-      // and drops the batchId column from the published schema)
-      .groupBy(col("subj"), col("pred"), col("obj"), col("docId"))
-      .agg(max(col("score")).as("score"))
-    graft.sources.GraphTables.write(t, tablePath, snapshotId)
   }
 
   /** DYNAMIC-canon snapshot publish: re-runs the shared downstream
@@ -286,12 +216,13 @@ object StreamingPipeline {
     * streamed backfill of a corpus with NOVEL surface-form aliases
     * publishes exactly what the batch dynamic pipeline
     * ([[graft.Pipeline.stagesFor]] with `minedCanon`) emits
-    * (parity by shared code path, asserted in StreamingSpec), where the
-    * per-batch static-canon triples cannot mine cross-corpus alias
-    * edges. Extraction is NOT re-run — only canon+emit, over already-
-    * linked mentions. A docId re-ingested across batches contributes
-    * only its LATEST batch's mentions (last-writer-wins), matching a
-    * batch run over the current corpus state; within ONE micro-batch
+    * (parity by shared code path, asserted in StreamingSpec), where a
+    * canonicalization of each micro-batch on its own could not mine
+    * cross-batch alias edges. Extraction is NOT re-run — only
+    * canon+emit, over already-linked mentions. A docId re-ingested
+    * across batches contributes only its LATEST batch's mentions
+    * (last-writer-wins), matching a batch run over the current corpus
+    * state; within ONE micro-batch
     * [[triplesStream]] keeps a single version per doc (`ingestTsCol`
     * chronology when opted in, else the deterministic (commit,
     * sha256) rule), so batchId granularity is sufficient here.
@@ -329,12 +260,11 @@ object StreamingPipeline {
   private def withFullPlan[T](spark: SparkSession, mentionsPath: String)(
       f: Option[FullPlan] => T): T = {
     require(Fs.exists(spark, mentionsPath),
-      s"no mention accumulation at $mentionsPath — nothing was ever " +
-        "committed (triplesStream needs mentionsPath=Some(...))")
+      s"no mention accumulation at $mentionsPath — nothing was ever committed")
     if (!Fs.hasData(spark, mentionsPath, "batchId="))
       return f(None)
     val all = readMentions(spark, mentionsPath)
-    val latest = latestTouches(spark, mentionsPath, all).localCheckpoint()
+    val latest = latestTouches(spark, mentionsPath).localCheckpoint()
     val linked = all.join(latest, Seq("docId", "batchId"))
       .drop("batchId").persist()
     try {
@@ -347,30 +277,13 @@ object StreamingPipeline {
   }
 
   /** Latest (docId, batchId) touch per doc — last-writer-wins resolved
-    * on the union of the DOC ROSTER and the mention rows' own
-    * (docId, batchId) projection:
-    *  - the roster records every doc a batch TOUCHED, including a
-    *    re-ingest whose new content has zero linked mentions — mention
-    *    rows alone cannot say the doc was seen again, so max(batchId)
-    *    over mentions alone would keep the stale batch's mentions;
-    *  - mention rows cover batches accumulated BEFORE the roster
-    *    existed (a legacy accumulation resumed under this code has no
-    *    roster rows for those batches — joining against the roster
-    *    alone would silently drop every pre-roster doc; with no roster
-    *    dir at all the read itself would fail).
-    * The max over the union is the true latest touch in every case
-    * except a PRE-roster zero-mention re-ingest, which left no record
-    * of itself anywhere and is unknowable by construction. */
-  private def latestTouches(spark: SparkSession, mentionsPath: String,
-      all: DataFrame): DataFrame = {
-    val mentionTouches = all.select(col("docId"), col("batchId"))
-    val rosterP = rosterPath(mentionsPath)
-    val touched =
-      if (Fs.hasData(spark, rosterP, "batchId="))
-        readRoster(spark, rosterP).unionByName(mentionTouches)
-      else mentionTouches
-    touched.groupBy(col("docId")).agg(max(col("batchId")).as("batchId"))
-  }
+    * on the DOC ROSTER, which records every doc a batch TOUCHED,
+    * including a re-ingest whose new content has zero linked mentions
+    * (max(batchId) over the mention rows would keep the stale batch's
+    * mentions). */
+  private def latestTouches(spark: SparkSession, mentionsPath: String): DataFrame =
+    readRoster(spark, mentionsPath)
+      .groupBy(col("docId")).agg(max(col("batchId")).as("batchId"))
 
   /** Accumulation compaction — the storage-hygiene half of the
     * streamed mention table: every re-ingest leaves the doc's OLD
@@ -382,13 +295,11 @@ object StreamingPipeline {
     * PRESERVING each surviving row's batchId partition value, so the
     * publish delta floor (`lastBatchId`), the canon state's
     * (docId -> batchId) pointers, and future last-writer-wins all stay
-    * valid. The roster is compacted the same way (a doc whose latest
-    * touch predates the roster keeps no roster row — its mention rows
-    * still record it, the legacy rule). Publish before == publish
-    * after (StreamingSpec). Runs through a tmp dir + [[graft.sources
-    * .Fs.swapInto]]; NOT concurrency-safe with a live stream writing
-    * new batches — run at a quiescent point (between triggers, after
-    * a backfill), like any table-maintenance job.
+    * valid. The roster is compacted the same way. Publish before ==
+    * publish after (StreamingSpec). Runs through a tmp dir +
+    * [[graft.sources.Fs.swapInto]]; NOT concurrency-safe with a live
+    * stream writing new batches — run at a quiescent point (between
+    * triggers, after a backfill), like any table-maintenance job.
     *
     * `keepTouches`: extra (docId, batchId) versions to PRESERVE beyond
     * each doc's latest — pass [[publishedStateTouches]] whenever the
@@ -407,32 +318,27 @@ object StreamingPipeline {
   def compactAccumulation(spark: SparkSession, mentionsPath: String,
       keepTouches: Option[DataFrame] = None): Unit = {
     if (!Fs.hasData(spark, mentionsPath, "batchId=")) return
-    val all = readMentions(spark, mentionsPath)
     // materialize: read by both rewrites, and it must be computed
     // before the swap replaces the dir it reads
-    val latest0 = latestTouches(spark, mentionsPath, all)
+    val latest0 = latestTouches(spark, mentionsPath)
     val latest = keepTouches.fold(latest0)(k =>
         latest0.unionByName(k.select(col("docId"),
           col("batchId").cast("long").as("batchId"))).distinct())
       .localCheckpoint()
-    val tmpM = s"${mentionsPath}__compact"
-    Fs.parquet(all.join(latest, Seq("docId", "batchId"), "left_semi"), tmpM)(
-      _.mode("overwrite").partitionBy("batchId"))
+    def compact(df: DataFrame, path: String): Unit =
+      Fs.parquet(df.join(latest, Seq("docId", "batchId"), "left_semi"),
+        s"${path}__compact")(_.mode("overwrite").partitionBy("batchId"))
+    // both written BEFORE either swap — each plan reads its own dir
     val rosterP = rosterPath(mentionsPath)
-    val doRoster = Fs.hasData(spark, rosterP, "batchId=")
-    if (doRoster) {
-      // written BEFORE either swap — this plan reads rosterP
-      Fs.parquet(readRoster(spark, rosterP)
-          .join(latest, Seq("docId", "batchId"), "left_semi"),
-        s"${rosterP}__compact")(_.mode("overwrite").partitionBy("batchId"))
-    }
+    compact(readMentions(spark, mentionsPath), mentionsPath)
+    compact(readRoster(spark, mentionsPath), rosterP)
     // roster FIRST: a crash between the swaps must leave the mention
     // table OVER-evidenced (stale mentions with a compacted roster are
-    // superseded by latestTouches and keep decrements computable); the
-    // reverse order would leave superseded versions roster-evidenced
-    // but mention-row-less, silently defeating the retraction detector
-    if (doRoster) Fs.swapInto(spark, s"${rosterP}__compact", rosterP)
-    Fs.swapInto(spark, tmpM, mentionsPath)
+    // superseded by latestTouches); the reverse order would leave
+    // superseded versions roster-evidenced but mention-row-less,
+    // silently defeating the retraction detector
+    Fs.swapInto(spark, s"${rosterP}__compact", rosterP)
+    Fs.swapInto(spark, s"${mentionsPath}__compact", mentionsPath)
   }
 
   /** The (docId, batchId) versions the latest COMMITTED snapshot's
@@ -477,19 +383,17 @@ object StreamingPipeline {
     * ([[readEntIdx]]). Over-coverage is BENIGN by the same argument as
     * the stale-row over-selection it replaces — re-emitting a doc from
     * its latest version is always correct — so stale pairs and
-    * duplicates never hurt. The `_complete` marker gates reads: it lands
-    * atomically with a full rebuild (inside the swap) and is required
-    * before the incremental path trusts the index — a legacy
-    * accumulation without it keeps the corpus-scan fallback until its
-    * next full publish. An index whose appends went into the buckets
-    * (no log) reads the same way. */
+    * duplicates never hurt. The incremental path trusts the index when
+    * its buckets hold data: a rebuild lands whole through its tmp-dir
+    * swap, so an index is either complete or absent (a crash inside the
+    * swap, or a full publish with no linked mentions), and an absent
+    * one keeps the corpus-scan fallback until the next full publish.
+    * An index whose appends went into the buckets (no log) reads the
+    * same way. */
   private def entIdxDir(statePath: String): String = s"$statePath/entidx"
 
   private def entIdxLog(statePath: String): String =
     s"${entIdxDir(statePath)}/_log"
-
-  private def entIdxMarker(statePath: String): String =
-    s"${entIdxDir(statePath)}/_complete"
 
   private val EntIdxSchema = "entity STRING, docId STRING, ebucket INT"
 
@@ -497,8 +401,7 @@ object StreamingPipeline {
     pmod(xxhash64(c), lit(EntIdxBuckets)).cast("int")
 
   private def entIdxUsable(spark: SparkSession, statePath: String): Boolean =
-    Fs.exists(spark, entIdxMarker(statePath)) &&
-      Fs.hasData(spark, entIdxDir(statePath), "ebucket=")
+    Fs.hasData(spark, entIdxDir(statePath), "ebucket=")
 
   /** The distinct delta pairs, bucketed. */
   private def entIdxRows(linked: DataFrame): DataFrame =
@@ -526,16 +429,14 @@ object StreamingPipeline {
   }
 
   /** Rebuild from the distinct `rows` (the full publish's pairs, or a
-    * materializing publish's [[foldEntIdx]]) through a tmp dir + swap,
-    * the completeness marker written INTO the tmp so data and marker
-    * land together; the swap replaces the whole dir, log included,
-    * which is what bounds the log. */
+    * materializing publish's [[foldEntIdx]]) through a tmp dir + swap;
+    * the swap replaces the whole dir, log included, which is what
+    * bounds the log. */
   private def rebuildEntIdx(spark: SparkSession, statePath: String,
       rows: DataFrame): Unit = {
     val d = entIdxDir(statePath); val tmp = s"${d}__rebuild"
     graft.sources.GraphTables.writePartitioned(rows, tmp,
       Seq("ebucket"), SaveMode.Overwrite)
-    Fs.touch(spark, s"$tmp/_complete")
     Fs.swapInto(spark, tmp, d)
   }
 
@@ -727,10 +628,7 @@ object StreamingPipeline {
     (staged.rows, staged.hash)
   }
 
-  /** The state tables' schemas: an inferred read runs a footer job.
-    * `docs` is inferred only under a pre-JSON parquet `meta`, whose
-    * state may predate the fingerprint (no `h64`); a JSON meta is only
-    * ever written next to fingerprinted docs. */
+  /** The state tables' schemas: an inferred read runs a footer job. */
   private val CanonSchema = "entity STRING, canonical STRING"
   private val PairsSchema = "k STRING, entity STRING, ndocs BIGINT"
   private val DocsSchema = "docId STRING, batchId BIGINT, nTriples BIGINT, h64 BIGINT"
@@ -739,10 +637,9 @@ object StreamingPipeline {
     * at `maxChain + 1` dirs, so `maxChain` must stay below it. */
   private val MaxStateChain = 64
 
-  /** A state chain: base-first state snapshot ids, the tip's
-    * lastBatchId, and whether any link has a pre-JSON `meta`. */
-  private final case class Chain(ids: Seq[String], lastBatchId: Long,
-      legacy: Boolean)
+  /** A state chain: base-first state snapshot ids and the tip's
+    * lastBatchId. */
+  private final case class Chain(ids: Seq[String], lastBatchId: Long)
 
   /** The chain of state snapshots ending at `snapshotId` (one meta read
     * per link, the tip's included). None when any link is missing or
@@ -756,7 +653,6 @@ object StreamingPipeline {
       snapshotId: String): Option[Chain] = {
     val acc = scala.collection.mutable.ListBuffer.empty[String]
     var tipLast = -1L
-    var legacy = false
     var cur = snapshotId
     while (acc.size < MaxStateChain) {
       val d = stateDir(statePath, cur)
@@ -774,8 +670,7 @@ object StreamingPipeline {
           return None
         case scala.util.Success(m) =>
           if (acc.size == 1) tipLast = m.lastBatchId
-          legacy ||= m.legacy
-          if (m.baseState.isEmpty) return Some(Chain(acc.toList, tipLast, legacy))
+          if (m.baseState.isEmpty) return Some(Chain(acc.toList, tipLast))
           if (acc.contains(m.baseState.get)) return None // cycle: corrupt state
           cur = m.baseState.get
       }
@@ -823,8 +718,7 @@ object StreamingPipeline {
           spark.read.schema(PairsSchema).parquet(s"$d/pairs")),
           Seq("k", "entity")),
         lwwResolve(dirs.map(d =>
-          (if (chain.legacy) spark.read else spark.read.schema(DocsSchema))
-            .parquet(s"$d/docs")), Seq("docId")),
+          spark.read.schema(DocsSchema).parquet(s"$d/docs")), Seq("docId")),
         chain.lastBatchId, chain.ids.size))
     }
 
@@ -835,13 +729,11 @@ object StreamingPipeline {
     * resolution exact; a crash INSIDE a swap's rename window leaves
     * that sub-table missing, which [[readState]] detects and routes
     * to the full publish. Returns false when the state is already
-    * flat, legacy, or unreadable. */
+    * flat or unreadable. */
   def compactState(spark: SparkSession, statePath: String,
       snapshotId: String): Boolean =
     readState(spark, statePath, snapshotId) match {
-      // a JSON meta only ever sits next to fingerprinted docs, so a
-      // pre-fingerprint state keeps its legacy meta
-      case Some(st) if st.depth > 1 && st.docs.columns.contains("h64") =>
+      case Some(st) if st.depth > 1 =>
         val d = stateDir(statePath, snapshotId)
         def swap(sub: String, df: DataFrame): Unit = {
           val tmp = s"$d/${sub}__compact"
@@ -968,7 +860,7 @@ object StreamingPipeline {
     * (entity-hash-bucketed pairs next to the state, rebuilt distinct on
     * every full publish, a flat log appended per delta) pruned to the
     * changed entities' buckets — with a corpus-scan fallback while the
-    * index's completeness marker is absent (legacy accumulation).
+    * index is absent.
     *
     * I/O side: the snapshot is published as an OVERLAY
     * ([[graft.sources.GraphTables.writeDelta]]) — only the re-emitted
@@ -986,12 +878,12 @@ object StreamingPipeline {
     *
     * Falls back to the full recompute — same output, corpus-sized
     * cost — when (a) no prior committed snapshot or no state for it
-    * exists, (b) the prior state predates the per-doc-fingerprint
-    * layout, (c) the delta RETRACTS alias evidence (a pair refcount
+    * exists, (b) the delta RETRACTS alias evidence (a pair refcount
     * hits zero: an edge removal can split a component, which seeding
-    * cannot express), or (d) the collects pass the driver bound (the
-    * note gives the size). The fallback rewrites fresh state, so one
-    * retraction never disables later incrementality. */
+    * cannot express) or its superseded versions left no roster touch,
+    * or (c) the collects pass the driver bound (the note gives the
+    * size). The fallback rewrites fresh state, so one retraction never
+    * disables later incrementality. */
   def publishSnapshotDynamicIncremental(spark: SparkSession,
       mentionsPath: String, tablePath: String, snapshotId: String,
       statePath: String, maxChain: Int = 8): DynPublish = {
@@ -1002,8 +894,7 @@ object StreamingPipeline {
       s"${maxChain + 1} state dirs exceed the $MaxStateChain the reader " +
       "walks, so every publish past that depth would go full")
     require(Fs.exists(spark, mentionsPath),
-      s"no mention accumulation at $mentionsPath — nothing was ever " +
-        "committed (triplesStream needs mentionsPath=Some(...))")
+      s"no mention accumulation at $mentionsPath — nothing was ever committed")
     def full(note: String): DynPublish = fullDynamicPublish(spark,
       mentionsPath, tablePath, snapshotId, statePath, note)
     val prior = GraphTables.latestSnapshot(spark, tablePath)
@@ -1014,9 +905,6 @@ object StreamingPipeline {
         else s"no complete canon state chain for prior " +
           s"snapshot ${prior.get}")
     val pst = priorState.get
-    if (!pst.docs.columns.contains("h64"))
-      return full("prior state lacks per-doc content fingerprints " +
-        "(pre-overlay layout) — full republish refreshes it")
     val lastB = pst.lastBatchId
     // depth gate decided UP FRONT: at maxChain the publish materializes
     // the resolved content (corpus write, amortized) instead of
@@ -1027,19 +915,12 @@ object StreamingPipeline {
       GraphTables.chainDepth(spark, tablePath, prior.get), pst.depth - 1)
     val growChain = priorDepth + 1 <= maxChain
     val all = readMentions(spark, mentionsPath)
-    val rosterP = rosterPath(mentionsPath)
-    val roster =
-      if (Fs.hasData(spark, rosterP, "batchId="))
-        Some(readRoster(spark, rosterP))
-      else None
+    val roster = readRoster(spark, mentionsPath)
     val driver = new DriverRows
     // the DELTA: each doc's latest version after the prior publish's
-    // floor — partition-pruned reads on the accumulation and the roster
+    // floor — a partition-pruned read of the roster
     val delta = try {
-      val touched = all.filter(col("batchId") > lastB)
-        .select(col("docId"), col("batchId"))
-      driver.collect(roster.fold(touched)(
-          _.filter(col("batchId") > lastB).unionByName(touched))
+      driver.collect(roster.filter(col("batchId") > lastB)
         .groupBy(col("docId"))
         .agg(max(col("batchId")).cast("long").as("batchId"))
         .as[(String, Long)]).toMap
@@ -1050,9 +931,8 @@ object StreamingPipeline {
     // docs plus a state DELTA and an index append; at it the resolved
     // content MATERIALIZED with flat state (the prior state overridden
     // by the same rows) and the index log folded into its buckets. Every
-    // fingerprint written comes from the commit's one read-back. A
-    // legacy index without the completeness marker waits for the next
-    // full publish's rebuild.
+    // fingerprint written comes from the commit's one read-back. An
+    // absent index waits for the next full publish's rebuild.
     def commit(reTriples: DataFrame, ov: Overlay,
         deltaLinked: Option[DataFrame]): (Long, String) = {
       val base = if (growChain) prior else None
@@ -1120,18 +1000,12 @@ object StreamingPipeline {
       // these re-ingests sat unpublished folds the superseded versions'
       // rows away (unless passed publishedStateTouches), the decrements
       // would read silently empty, and a genuine retraction would pass
-      // as adds-only. A superseded version with neither a roster touch
-      // (asked first: one row per version) nor a mention row left is
-      // unverifiable: take the full publish. A version with zero linked
-      // mentions always kept its roster touch (or, pre-roster, never
-      // entered the prior state's docs), so this never false-positives.
+      // as adds-only. A superseded version without its roster touch
+      // (one row per version; compaction drops it with the version's
+      // mention rows) is unverifiable: take the full publish.
       if (superseded.nonEmpty) {
-        val rostered = roster.fold(Set.empty[String])(r => driver.collect(
-          atVersions(r, oldVersions).select(col("docId")).as[String]).toSet)
-        val rest = oldVersions.filterNot(v => rostered(v._1))
-        val evidenced = rostered ++ (if (rest.isEmpty) Nil
-          else driver.collect(atVersions(all, rest).select(col("docId"))
-            .distinct().as[String]))
+        val evidenced = driver.collect(atVersions(roster, oldVersions)
+          .select(col("docId")).as[String]).toSet
         val unevidenced = superseded.count(s => !evidenced(s._1))
         if (unevidenced > 0)
           return Left(s"$unevidenced superseded doc versions left no rows " +

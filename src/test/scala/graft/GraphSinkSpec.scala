@@ -329,7 +329,7 @@ class GraphSinkSpec extends SparkSpec {
       rows(("c", "w", "d3")), Seq("d3").toDF("docId"), 0L, 0L)
     // per-snapshot state dirs as the publishes would leave them
     Seq("m-A", "m-B", "m-C").foreach { id =>
-      Seq(0L).toDF("lastBatchId").write.parquet(s"$state/snap=$id/meta")
+      graft.sources.SnapshotMeta.writeStateMeta(spark, s"$state/snap=$id", 0L, None)
     }
     val want = GraphTables.readSnapshot(spark, table, "m-C")
       .select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet

@@ -154,44 +154,6 @@ class ResumeSpec extends SparkSpec {
       todo => d.filter(col("bucket").isin(todo: _*))) == 2)
   }
 
-  test("legacy manifest rows (pre-config format) stay resumable") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("resume-legacy").toString
-    val out = s"$tmp/out"; val man = s"$tmp/manifest"
-    val d = Seq((0, "a"), (1, "b")).toDF("bucket", "v")
-    val fp = graft.kernel.Weights.default.fingerprint
-    ResumableStage.runWith(spark, "s", "snap-0", 2, out, man,
-      config = fp)(todo => d.filter(col("bucket").isin(todo: _*)))
-    // rewrite the manifest as the pre-config format ({"buckets":N})
-    val legacy = spark.read.parquet(man)
-      .withColumn("metricsJson", lit("""{"buckets":2}"""))
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(man))
-    legacy.write.parquet(man)
-    // missing config field = wildcard when the bucket count matches:
-    // fully committed -> no-op, NOT a spurious config-mismatch failure
-    assert(ResumableStage.runWith(spark, "s", "snap-0", 2, out, man,
-      config = fp)(todo => d.filter(col("bucket").isin(todo: _*))) == 0)
-    // a legacy row with a DIFFERENT bucket count still fails fast
-    intercept[IllegalArgumentException] {
-      ResumableStage.runWith(spark, "s", "snap-0", 4, out, man,
-        config = fp)(todo => d.filter(col("bucket").isin(todo: _*)))
-    }
-    // a PARTIALLY-committed legacy snapshot must refuse to COMPUTE: the
-    // legacy buckets' config is unknown, and completing the snapshot
-    // under the current weights could splice mixed-bundle data — the
-    // wildcard is only safe when there is nothing left to compute
-    val partial = spark.read.parquet(man).filter(col("bucket") === 0)
-      .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(man))
-    partial.write.parquet(man)
-    val ex = intercept[IllegalArgumentException] {
-      ResumableStage.runWith(spark, "s", "snap-0", 2, out, man,
-        config = fp)(todo => d.filter(col("bucket").isin(todo: _*)))
-    }
-    assert(ex.getMessage.contains("legacy"))
-  }
-
   test("a fully-empty first run commits 0-row buckets without crashing") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("resume-empty").toString

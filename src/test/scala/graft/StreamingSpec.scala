@@ -34,6 +34,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = Files.createTempDirectory("stream-1batch").toString
     val src = s"$tmp/src"; val out = s"$tmp/out"; val man = s"$tmp/man"
+    val ments = s"$tmp/ments"
     Extract.corpus(spark, 10).write.mode("overwrite").parquet(src)
     // two NEW versions of file 0's doc; no maxFilesPerTrigger, so the
     // whole source (original + both re-ingests) lands in ONE batch and
@@ -51,19 +52,19 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingPipeline.triplesStream(
       spark.readStream.schema(schema).parquet(src)
         .as[graft.core.SourceFileHashed],
-      out, man, s"$tmp/ckpt")
+      out, man, s"$tmp/ckpt", mentionsPath = Some(ments))
     q.processAllAvailable(); q.stop()
     val table = s"$tmp/graph"
-    StreamingPipeline.publishSnapshot(spark, out, table, "s0")
+    StreamingPipeline.publishSnapshotDynamic(spark, ments, table, "s0")
     val pub = graft.sources.GraphTables.read(spark, table)
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
     // the deterministic survivor is max (commit, sha256) = "zzz-b"
     def batchOver(survivor: graft.core.SourceFileHashed) =
-      Pipeline.triplesFor(
+      Pipeline.stagesFor(
         Extract.corpus(spark, 10)
           .filter(f => !(f.repo == f0.repo && f.path == f0.path))
-          .union(Seq(survivor).toDS()))
+          .union(Seq(survivor).toDS()), minedCanon = true).triples
         .select("subj", "pred", "obj", "docId")
         .collect().map(_.toSeq).toSet
     val want = batchOver(vB)
@@ -82,6 +83,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = Files.createTempDirectory("stream-ts").toString
     val src = s"$tmp/src"; val out = s"$tmp/out"; val man = s"$tmp/man"
+    val ments = s"$tmp/ments"
     Extract.corpus(spark, 10).write.mode("overwrite").parquet(src)
     val f0 = graft.core.CorpusGen.file(0).source
     def ver(commit: String, contentFrom: Long) = {
@@ -111,7 +113,7 @@ class StreamingSpec extends SparkSpec {
     // name and a lexicographically-ordering string epoch both fail
     val miss = intercept[IllegalArgumentException] {
       StreamingPipeline.triplesStream(stream, out, man, s"$tmp/ckptX",
-        ingestTsCol = Some("ingest_time"))
+        mentionsPath = Some(ments), ingestTsCol = Some("ingest_time"))
     }
     assert(miss.getMessage.contains("not found"), miss.getMessage)
     val str = intercept[IllegalArgumentException] {
@@ -119,22 +121,30 @@ class StreamingSpec extends SparkSpec {
         spark.readStream.schema(schema).parquet(src)
           .withColumn("tsStr", col("commit"))
           .as[graft.core.SourceFileHashed],
-        out, man, s"$tmp/ckptY", ingestTsCol = Some("tsStr"))
+        out, man, s"$tmp/ckptY", mentionsPath = Some(ments),
+        ingestTsCol = Some("tsStr"))
     }
     assert(str.getMessage.contains("timestamp or numeric"), str.getMessage)
-    val q = StreamingPipeline.triplesStream(
-      stream, out, man, s"$tmp/ckpt", ingestTsCol = Some("ingestTs"))
+    // the streamed product is the mention accumulation: no mentionsPath,
+    // no query
+    val none = intercept[IllegalArgumentException] {
+      StreamingPipeline.triplesStream(stream, out, man, s"$tmp/ckptZ")
+    }
+    assert(none.getMessage.contains("mentionsPath") &&
+      !new java.io.File(s"$tmp/ckptZ").exists, none.getMessage)
+    val q = StreamingPipeline.triplesStream(stream, out, man, s"$tmp/ckpt",
+      mentionsPath = Some(ments), ingestTsCol = Some("ingestTs"))
     q.processAllAvailable(); q.stop()
     val table = s"$tmp/graph"
-    StreamingPipeline.publishSnapshot(spark, out, table, "s0")
+    StreamingPipeline.publishSnapshotDynamic(spark, ments, table, "s0")
     val pub = graft.sources.GraphTables.read(spark, table)
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
     def batchOver(survivor: graft.core.SourceFileHashed) =
-      Pipeline.triplesFor(
+      Pipeline.stagesFor(
         Extract.corpus(spark, 10)
           .filter(f => !(f.repo == f0.repo && f.path == f0.path))
-          .union(Seq(survivor).toDS()))
+          .union(Seq(survivor).toDS()), minedCanon = true).triples
         .select("subj", "pred", "obj", "docId")
         .collect().map(_.toSeq).toSet
     val want = batchOver(newer)
@@ -178,6 +188,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = Files.createTempDirectory("stream-kg").toString
     val src = s"$tmp/src"; val out = s"$tmp/out"; val man = s"$tmp/man"
+    val ments = s"$tmp/ments"
     // two chunks arriving as separate files
     Extract.corpus(spark, 40).write.mode("overwrite").parquet(src)
     spark.range(40, 80).map(id => graft.core.CorpusGen.file(id).source)
@@ -185,31 +196,26 @@ class StreamingSpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     val stream = spark.readStream.option("maxFilesPerTrigger", "3")
       .schema(schema).parquet(src).as[graft.core.SourceFileHashed]
-    val q = StreamingPipeline.triplesStream(stream, out, man, s"$tmp/ckpt")
+    val q = StreamingPipeline.triplesStream(stream, out, man, s"$tmp/ckpt",
+      mentionsPath = Some(ments))
     q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(out)
+    // several micro-batches, each committed under its own batchId
+    assert(new java.io.File(ments).listFiles()
+      .count(_.getName.startsWith("batchId=")) >= 2)
+    val batch = Pipeline.stagesFor(Extract.corpus(spark, 80),
+        minedCanon = true).triples
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
-    val batch = Pipeline.run(spark, 80).triples
-      .select("subj", "pred", "obj", "docId")
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch && batch.nonEmpty)
-    // one manifest row per micro-batch; counts add up
-    val m = spark.read.parquet(man)
-    assert(m.count() >= 2)
-    assert(m.agg(org.apache.spark.sql.functions.sum("rowCount"))
-      .head().getLong(0) == spark.read.parquet(out).count())
     // publish the streamed backfill as a graph-table snapshot: the
     // LATEST COMMITTED snapshot must read back equal to the batch
-    // pipeline's triple set (round 2 committed batches but never
-    // published a consumable snapshot)
+    // pipeline's triple set
     val table = s"$tmp/graph"
-    val (nPub, _) = StreamingPipeline.publishSnapshot(spark, out, table,
-      "snap-000")
+    val (nPub, _) = StreamingPipeline.publishSnapshotDynamic(spark, ments,
+      table, "snap-000")
     val published = graft.sources.GraphTables.read(spark, table)
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
-    assert(published == batch)
+    assert(published == batch && batch.nonEmpty)
     assert(nPub == published.size.toLong)
     // RE-INGEST file 0 under the same docId with DIFFERENT content
     // (file 97's source text): the next publish must carry only the
@@ -223,16 +229,16 @@ class StreamingSpec extends SparkSpec {
     val q2 = StreamingPipeline.triplesStream(
       spark.readStream.option("maxFilesPerTrigger", "3")
         .schema(schema).parquet(src).as[graft.core.SourceFileHashed],
-      out, man, s"$tmp/ckpt")
+      out, man, s"$tmp/ckpt", mentionsPath = Some(ments))
     q2.processAllAvailable(); q2.stop()
-    StreamingPipeline.publishSnapshot(spark, out, table, "snap-001")
+    StreamingPipeline.publishSnapshotDynamic(spark, ments, table, "snap-001")
     val pub2 = graft.sources.GraphTables.read(spark, table)
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
     val curFiles = Extract.corpus(spark, 80)
       .filter(f => !(f.repo == f0.repo && f.path == f0.path))
       .union(Seq(re).toDS())
-    val batch2 = Pipeline.triplesFor(curFiles)
+    val batch2 = Pipeline.stagesFor(curFiles, minedCanon = true).triples
       .select("subj", "pred", "obj", "docId")
       .collect().map(_.toSeq).toSet
     assert(pub2 == batch2 && pub2 != batch,
@@ -358,8 +364,8 @@ class StreamingSpec extends SparkSpec {
     val p2 = pub("inc-2")
     assert(p2.incremental, s"expected incremental, got: ${p2.note}")
     // the cross-batch relabeling below went through the entity→doc
-    // INDEX (p1's full publish rebuilt it with the completeness marker)
-    assert(graft.sources.Fs.exists(spark, s"$state/entidx/_complete"))
+    // INDEX (p1's full publish rebuilt its buckets)
+    assert(graft.sources.Fs.hasData(spark, s"$state/entidx", "ebucket="))
     val files2 = Extract.corpus(spark, 31).union(Seq(a1, b).toDS())
     val full2 = tset(Pipeline.stagesFor(files2, minedCanon = true).triples)
     assert(published() == full2,
@@ -511,16 +517,17 @@ class StreamingSpec extends SparkSpec {
     assert(published() == tset(Pipeline.stagesFor(files7, minedCanon = true).triples))
 
     // phase 11: index FALLBACK — plant a fresh snake form, delete the
-    // completeness marker, then land its camel twin: the relabeling of
-    // the phase-11a doc (outside the delta) must come out exact through
-    // the corpus-scan fallback
+    // whole index, then land its camel twin: the relabeling of the
+    // phase-11a doc (outside the delta) must come out exact through the
+    // corpus-scan fallback
     val g = doc("G.scala", "c0",
       "def runExtraA(a: Row): Txn = {", "y = tail_omega_rr(x)")
     Seq(g).toDS().write.mode("append").parquet(src)
     runStream()
     val p11a = pub("inc-11a")
     assert(p11a.incremental, p11a.note)
-    assert(new java.io.File(s"$state/entidx/_complete").delete())
+    assert(org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(s"$state/entidx")))
     val hh = doc("H.scala", "c0",
       "def runExtraB(a: Row): Txn = {", "val tailOmegaRr = 7")
     Seq(hh).toDS().write.mode("append").parquet(src)
@@ -546,15 +553,15 @@ class StreamingSpec extends SparkSpec {
     assert(baseSt("inc-11b").isEmpty)
     assert(!StreamingPipeline.compactState(spark, state, "inc-11b"),
       "an already-flat state must not re-compact")
-    // a retraction-triggered FULL publish rebuilds the index + marker
+    // a retraction-triggered FULL publish rebuilds the index
     val g2 = doc("G.scala", "c1",
       "def runExtraA(a: Row): Txn = {", "z = unrelated_call(x)")
     Seq(g2).toDS().write.mode("append").parquet(src)
     runStream()
     val p12 = pub("inc-12")
     assert(!p12.incremental && p12.note.contains("retracted"), p12.note)
-    assert(graft.sources.Fs.exists(spark, s"$state/entidx/_complete"),
-      "full publish must rebuild the index with its marker")
+    assert(graft.sources.Fs.hasData(spark, s"$state/entidx", "ebucket="),
+      "full publish must rebuild the index")
     val files10 = files7.union(Seq(g2, hh).toDS())
     assert(published() == tset(Pipeline.stagesFor(files10, minedCanon = true).triples))
   }
@@ -933,22 +940,21 @@ class StreamingSpec extends SparkSpec {
     assert(jobs <= OverlayReadJobs, s"depth-1 overlay read ran $jobs jobs")
   }
 
-  test("a table and state in the parquet-metadata layout read, sweep and publish on") {
-    import graft.sources.{ContentHash, GraphTables}
+  test("a table, state or accumulation in a removed layout is refused, or read as no state") {
+    import graft.sources.{GraphTables, SnapshotMeta}
     import org.apache.commons.io.FileUtils
     import spark.implicits._
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    val a = new Accumulation("stream-legacy-meta")
+    val a = new Accumulation("stream-removed-layout")
     a.land(Extract.corpus(spark, 6))
     assert(!a.pub("l1").incremental)
     a.landFile(6)
     assert(a.pub("l2").note.contains("overlay"))
-    a.landFile(7)
-    assert(a.pub("l3", maxChain = 1).note.contains("materialized"))
     /** A copy of the table and state, its metadata rewritten in the
-      * parquet layout: manifest rows, `_graft_base` base/depth rows next
-      * to the removed docs, and a parquet state `meta`. */
-    def parquetLayout(name: String): (String, String) = {
+      * parquet layout: with `table`, manifest rows and `_graft_base`
+      * base/depth rows next to the removed docs; with `state`, a parquet
+      * state `meta`. */
+    def parquetLayout(name: String, table: Boolean, state: Boolean): (String, String) = {
       val t = s"${a.tmp}/$name/graph"; val st = s"${a.tmp}/$name/state"
       FileUtils.copyDirectory(new java.io.File(a.table), new java.io.File(t))
       FileUtils.copyDirectory(new java.io.File(a.state), new java.io.File(st))
@@ -957,62 +963,76 @@ class StreamingSpec extends SparkSpec {
         f.delete(); new java.io.File(f.getParent, s".${f.getName}.crc").delete()
         n
       }
-      val commits = new java.io.File(s"$t/_commits")
-      commits.listFiles().filter(_.getName.endsWith(".json")).toSeq.map(take)
-        .map(n => (n.get("rowCount").asLong, n.get("contentHash").asText,
-          n.get("snapshotId").asText, n.get("committedAt").asLong))
-        .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
-        .write.parquet(s"$t/manifest")
-      FileUtils.deleteDirectory(commits)
-      new java.io.File(s"$t/data").listFiles().foreach { d =>
-        val ptr = new java.io.File(d, "_graft_chain.json")
-        if (ptr.exists) {
-          val n = take(ptr)
-          Seq(("base", n.get("base").asText), ("depth", n.get("depth").asInt.toString))
-            .toDF("kind", "value").write.mode("append").parquet(s"$d/_graft_base")
+      if (table) {
+        val commits = new java.io.File(s"$t/_commits")
+        commits.listFiles().filter(_.getName.endsWith(".json")).toSeq.map(take)
+          .map(n => (n.get("rowCount").asLong, n.get("contentHash").asText,
+            n.get("snapshotId").asText, n.get("committedAt").asLong))
+          .toDF("rowCount", "contentHash", "snapshotId", "committedAt")
+          .write.parquet(s"$t/manifest")
+        FileUtils.deleteDirectory(commits)
+        new java.io.File(s"$t/data").listFiles().foreach { d =>
+          val ptr = new java.io.File(d, "_graft_chain.json")
+          if (ptr.exists) {
+            val n = take(ptr)
+            Seq(("base", n.get("base").asText), ("depth", n.get("depth").asInt.toString))
+              .toDF("kind", "value").write.mode("append").parquet(s"$d/_graft_base")
+          }
         }
       }
-      new java.io.File(st).listFiles().filter(_.getName.startsWith("snap=")).foreach { d =>
-        val n = take(new java.io.File(d, "meta.json"))
-        val b = n.get("baseState")
-        Seq((n.get("lastBatchId").asLong, if (b.isNull) null else b.asText))
-          .toDF("lastBatchId", "baseState").write.parquet(s"$d/meta")
-      }
+      if (state) new java.io.File(st).listFiles()
+        .filter(_.getName.startsWith("snap=")).foreach { d =>
+          val n = take(new java.io.File(d, "meta.json"))
+          val b = n.get("baseState")
+          Seq((n.get("lastBatchId").asLong, if (b.isNull) null else b.asText))
+            .toDF("lastBatchId", "baseState").write.parquet(s"$d/meta")
+        }
       (t, st)
     }
-    val (t0, s0) = parquetLayout("reads")
-    assert(!new java.io.File(s"$t0/_commits").exists)
-    for (id <- Seq("l1", "l2", "l3")) {
-      val got = GraphTables.readSnapshot(spark, t0, id)
-      val want = GraphTables.readSnapshot(spark, a.table, id)
-      assert(got.collect().toSet == want.collect().toSet, id)
-      assert(ContentHash.hex(got, ContentHash.TripleCols) ==
-        GraphTables.commitRecord(spark, a.table, id).get)
-      assert(GraphTables.commitRecord(spark, t0, id) ==
-        GraphTables.commitRecord(spark, a.table, id))
-      assert(GraphTables.chainDepth(spark, t0, id) ==
-        GraphTables.chainDepth(spark, a.table, id))
-    }
-    assert(GraphTables.chainDepth(spark, t0, "l2") == 1)
-    assert(GraphTables.latestSnapshot(spark, t0).contains("l3"))
-    // the sweeps: l3 is full, so keepLast=1 frees l1 and l2 everywhere
-    assert(GraphTables.expireSnapshots(spark, t0, keepLast = 1).toSet ==
-      Set("l1", "l2"))
-    assert(StreamingPipeline.expireCanonState(spark, s0, t0, keepLast = 1).toSet ==
-      Set("l1", "l2"))
-    assert(GraphTables.pruneManifest(spark, t0, keepLast = 1).toSet ==
-      Set("l1", "l2"))
-    assert(GraphTables.latestSnapshot(spark, t0).contains("l3"))
-    // the next publish over the parquet layout == over the fresh one
-    val (t1, s1) = parquetLayout("publish")
-    a.landFile(8)
-    val legacy = StreamingPipeline.publishSnapshotDynamicIncremental(
-      spark, a.ments, t1, "l4", s1)
-    assert(legacy.incremental && legacy.note.contains("overlay"), legacy.note)
-    assert(legacy == a.pub("l4"))
-    assert(GraphTables.latestSnapshot(spark, t1).contains("l4"))
-    assert(GraphTables.readSnapshot(spark, t1, "l4").collect().toSet ==
-      GraphTables.readSnapshot(spark, a.table, "l4").collect().toSet)
+    def refused(f: => Any): String = intercept[IllegalStateException](f).getMessage
+    // a parquet manifest with no log: read as "nothing committed", a
+    // publish would go full and the sweeps would delete every snap dir
+    val (t0, s0) = parquetLayout("table", table = true, state = false)
+    assert(refused(GraphTables.latestSnapshot(spark, t0)).contains("parquet manifest"))
+    assert(refused(StreamingPipeline.publishSnapshotDynamicIncremental(
+      spark, a.ments, t0, "l3", s0)).contains("parquet manifest"))
+    assert(refused(GraphTables.expireSnapshots(spark, t0, keepLast = 1,
+      orphanSafetyMs = 0L)).contains("parquet manifest"))
+    assert(refused(SnapshotMeta.commit(spark, t0, "l3", 0L, "0"))
+      .contains("parquet manifest"))
+    assert(new java.io.File(s"$t0/data").list().toSet == Set("snap=l1", "snap=l2") &&
+      !new java.io.File(s"$t0/_commits").exists)
+    // a sidecar with no chain pointer: read as a full snapshot, the
+    // overlay would be its delta rows alone
+    assert(refused(GraphTables.chainDepth(spark, t0, "l2")).contains("chain pointer"))
+    assert(refused(GraphTables.readSnapshot(spark, t0, "l2")).contains("chain pointer"))
+    assert(GraphTables.chainDepth(spark, t0, "l1") == 0)
+    // a parquet state meta reads as no state: the next publish takes the
+    // full path, which is exact
+    val (t1, s1) = parquetLayout("state", table = false, state = true)
+    a.landFile(7)
+    val p3 = StreamingPipeline.publishSnapshotDynamicIncremental(
+      spark, a.ments, t1, "l3", s1)
+    assert(!p3.incremental && p3.note.contains("no complete canon state chain"),
+      p3.note)
+    val fresh = a.pub("l3")
+    assert(fresh.incremental && (p3.rows, p3.hash) == ((fresh.rows, fresh.hash)))
+    def tset(df: org.apache.spark.sql.DataFrame) =
+      df.select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
+    assert(tset(GraphTables.read(spark, t1)) == tset(Pipeline.stagesFor(
+      Extract.corpus(spark, 8), minedCanon = true).triples))
+    // mention data with no roster data: its docs would silently drop out
+    val m2 = s"${a.tmp}/noroster/ments"
+    FileUtils.copyDirectory(new java.io.File(a.ments), new java.io.File(m2))
+    assert(!new java.io.File(StreamingPipeline.rosterPath(m2)).exists)
+    Seq(
+      () => StreamingPipeline.publishSnapshotDynamic(spark, m2,
+        s"${a.tmp}/noroster/full", "n1"),
+      () => StreamingPipeline.publishSnapshotDynamicIncremental(spark, m2,
+        s"${a.tmp}/noroster/graph", "n1", s"${a.tmp}/noroster/state"),
+      () => StreamingPipeline.compactAccumulation(spark, m2)
+    ).foreach(f => assert(refused(f()).contains("no doc roster")))
+    assert(GraphTables.latestSnapshot(spark, s"${a.tmp}/noroster/graph").isEmpty)
   }
 
   test("the affected-docs lookup reads the entity-index log; a log-less index agrees") {
@@ -1091,52 +1111,10 @@ class StreamingSpec extends SparkSpec {
     stateMatchesData("f3")
   }
 
-  test("dynamic publish of a LEGACY accumulation (no/partial roster) keeps every doc") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("stream-legacy").toString
-    val ments = s"$tmp/ments"; val table = s"$tmp/graph"
-    // batch 0 accumulated under pre-roster code: mention rows only, NO
-    // roster dir — the publish must fall back to the mention rows' own
-    // (docId, batchId) projection instead of crashing or dropping docs
-    def files0 = Extract.corpus(spark, 20)
-    val linked0 = graft.link.Linker.link(Extract.mentionsFused(files0)).toDF()
-    linked0.withColumn("batchId", lit(0L))
-      .write.mode("overwrite").partitionBy("batchId").parquet(ments)
-    def tset(df: org.apache.spark.sql.DataFrame) =
-      df.select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
-    val (n0, _) = StreamingPipeline.publishSnapshotDynamic(spark, ments,
-      table, "legacy-0")
-    val pub0 = tset(graft.sources.GraphTables.read(spark, table))
-    assert(pub0 == tset(Pipeline.stagesFor(files0, minedCanon = true).triples) &&
-      pub0.nonEmpty && n0 == pub0.size.toLong,
-      "no-roster legacy accumulation must publish == batch dynamic")
-    // batch 1 lands AFTER the roster upgrade (roster rows exist for it
-    // alone): pre-roster docs must still contribute their mentions
-    val extraSrc = "def legacyKeeper(b: Int): Int = {\nval keeperValZz = 2"
-    val extra = graft.core.SourceFileHashed("legacyrepo", "L.scala", "c9",
-      "scala", extraSrc, graft.core.CorpusGen.sha256Hex(extraSrc))
-    val linked1 = graft.link.Linker.link(
-      Extract.mentionsFused(Seq(extra).toDS())).toDF()
-    linked1.withColumn("batchId", lit(1L))
-      .write.mode("append").partitionBy("batchId").parquet(ments)
-    Seq(extra).toDS().toDF()
-      .select(graft.core.DocId.column.as("docId"))
-      .distinct().withColumn("batchId", lit(1L))
-      .write.mode("overwrite").partitionBy("batchId")
-      .parquet(StreamingPipeline.rosterPath(ments))
-    StreamingPipeline.publishSnapshotDynamic(spark, ments, table, "legacy-1")
-    val pub1 = tset(graft.sources.GraphTables.read(spark, table))
-    assert(pub1 == tset(Pipeline.stagesFor(
-      files0.union(Seq(extra).toDS()), minedCanon = true).triples),
-      "partial-roster accumulation must keep pre-roster docs AND the new batch")
-    assert(pub1.exists(_.contains("legacyrepo/L.scala")) &&
-      pub1.size > pub0.size)
-  }
-
   test("publish of an all-zero-mention accumulation is a legitimate empty snapshot") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("stream-empty").toString
-    val ments = s"$tmp/ments"; val out = s"$tmp/out"
+    val ments = s"$tmp/ments"
     // the exact on-disk shape a stream of zero-yield batches leaves:
     // parquet commit of an empty frame -> dir with _SUCCESS only
     val linked = graft.link.Linker.link(
@@ -1149,17 +1127,16 @@ class StreamingSpec extends SparkSpec {
     val readBack = graft.sources.GraphTables.read(spark, s"$tmp/graphDyn")
     assert(readBack.count() == 0 &&
       readBack.schema == graft.sources.GraphTables.TableSchema)
-    // static publish path: same empty-accumulation shape on the
-    // per-batch TRIPLES dir
-    linked.filter(lit(false))
-      .select(lit("s").as("subj"), lit("p").as("pred"), lit("o").as("obj"),
-        lit("d").as("docId"), lit(0.0).as("score"))
-      .withColumn("batchId", lit(0L))
-      .write.mode("overwrite").partitionBy("batchId").parquet(out)
-    val (nStat, _) = StreamingPipeline.publishSnapshot(spark, out,
-      s"$tmp/graphStat", "empty-stat")
-    assert(nStat == 0L &&
-      graft.sources.GraphTables.read(spark, s"$tmp/graphStat").count() == 0)
+    // the state-keeping publish: the same empty snapshot, whose state
+    // carries the next publish as an empty delta
+    val p1 = StreamingPipeline.publishSnapshotDynamicIncremental(spark, ments,
+      s"$tmp/graphInc", "empty-inc", s"$tmp/state")
+    assert(!p1.incremental && p1.rows == 0L &&
+      graft.sources.GraphTables.read(spark, s"$tmp/graphInc").count() == 0)
+    val p2 = StreamingPipeline.publishSnapshotDynamicIncremental(spark, ments,
+      s"$tmp/graphInc", "empty-inc2", s"$tmp/state")
+    assert(p2.incremental && p2.note.contains("empty delta") && p2.rows == 0L,
+      p2.note)
     // a MISSING accumulation dir is a caller bug (typo'd path / stream
     // never ran), not a legitimate empty publish — both paths fail loudly
     intercept[IllegalArgumentException] {
@@ -1167,29 +1144,32 @@ class StreamingSpec extends SparkSpec {
         s"$tmp/graphX", "x")
     }
     intercept[IllegalArgumentException] {
-      StreamingPipeline.publishSnapshot(spark, s"$tmp/nope2",
-        s"$tmp/graphY", "y")
+      StreamingPipeline.publishSnapshotDynamicIncremental(spark, s"$tmp/nope2",
+        s"$tmp/graphY", "y", s"$tmp/stateY")
     }
   }
 
   test("a retried micro-batch commit is idempotent (no duplicate triples)") {
-    import spark.implicits._
     val tmp = Files.createTempDirectory("stream-retry").toString
-    val out = s"$tmp/out"; val man = s"$tmp/man"
-    val triples = Seq(("a", "calls", "b", "d1", 1.0), ("c", "imports", "d", "d1", 1.0))
-      .toDF("subj", "pred", "obj", "docId", "score")
-    StreamingPipeline.commitBatch(triples, 0L, out, man)
-    val once = spark.read.parquet(out).collect().map(_.toSeq).toSet
+    val ments = s"$tmp/ments"; val roster = StreamingPipeline.rosterPath(ments)
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSeq
+    def commit(nFiles: Long, batchId: Long): Unit =
+      StreamingPipeline.commitBatch(Extract.corpus(spark, nFiles), batchId,
+        ments, None)
+    commit(3, 0L)
+    val (m1, r1) = (rows(ments), rows(roster))
+    assert(m1.nonEmpty && r1.size == 3)
     // simulate the at-least-once retry: same batchId commits again
-    StreamingPipeline.commitBatch(triples, 0L, out, man)
-    val twice = spark.read.parquet(out).collect().map(_.toSeq).toSet
-    assert(twice == once && spark.read.parquet(out).count() == 2)
-    assert(spark.read.parquet(man).count() == 1, "manifest row duplicated")
-    // a NEW batch appends its own partition without touching batch 0
-    StreamingPipeline.commitBatch(triples
-      .withColumn("docId", lit("d2")), 1L, out, man)
-    assert(spark.read.parquet(out).count() == 4)
-    assert(spark.read.parquet(man).count() == 2)
+    commit(3, 0L)
+    assert(rows(ments).sortBy(_.toString) == m1.sortBy(_.toString) &&
+      rows(roster).sortBy(_.toString) == r1.sortBy(_.toString),
+      "a retried batch duplicated its rows")
+    // a NEW batch adds its own partition without touching batch 0
+    commit(4, 1L)
+    assert(new java.io.File(ments).list().count(_.startsWith("batchId=")) == 2)
+    assert(spark.read.parquet(ments).filter(col("batchId") === 0L).count() == m1.size)
+    assert(spark.read.parquet(roster).filter(col("batchId") === 1L).count() == 4 &&
+      rows(roster).size == 7)
   }
 
   test("streaming fingerprint dedup == batch exact-dedup group count") {
